@@ -19,14 +19,15 @@ import org.apache.spark.sql.SparkSession
   * reader beats that" argument into a measured rows/s figure on the
   * same machine the operator bench runs on.
   *
-  * Env: SPARK_GRAFT_EXPORT_ROWS (default 300000), SPARK_GRAFT_CPUS.
+  * Env: SPARK_GRAFT_EXPORT_ROWS (default 300000). Like the CLI, it runs
+  * `local[nproc]` and the partitioned scan opens one connection per core.
   * Output: one JSON line, schema {"metric":"export_rows_per_sec",
   * "single":N,"partitioned":N,"rows":N}.
   */
 object ExportBench {
   def main(args: Array[String]): Unit = {
     val n = sys.env.getOrElse("SPARK_GRAFT_EXPORT_ROWS", "300000").toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
+    val cpus = Runtime.getRuntime.availableProcessors
     val url = "jdbc:derby:memory:exportbench"
 
     val c = DriverManager.getConnection(url + ";create=true;user=root")
@@ -70,9 +71,9 @@ object ExportBench {
     val single = Mysql2Parquet.Config(
       password = "pw", database = "memory:exportbench",
       query = "SELECT * FROM t", parquet = out(), url = Some(url))
-    // Scale path: 8-way partitioned scan of the same query.
+    // Scale path: the same query over one partition per core.
     val parted = single.copy(parquet = out(),
-      partitionColumn = Some("ID"), numPartitions = 8,
+      partitionColumn = Some("ID"), numPartitions = cpus,
       lowerBound = 0L, upperBound = n.toLong)
 
     // warm (JIT, codegen, parquet committers), then measure best-of-2

@@ -16,13 +16,18 @@ import org.apache.spark.sql.functions._
   *  schema inference (main.go:112-163)      | JDBC source ResultSetMetaData (see [[TypeMap]])
   *  row stringify + NULL→"" (main.go:175-195)| opt-in [[compatProjection]]
   *  single local parquet file (main.go:165) | [[write]] (coalesce(1) in compat, partitioned otherwise)
+  *  one row loop (main.go:175-195)          | fetch | mapping | encode overlapped per scan task ([[Pipeline]])
   *
   * Where the reference reads on ONE connection and one thread
   * (main.go:106,175), [[reader]] accepts partitionColumn/num-partitions
   * so the scan fans out across executors — the structural upgrade that
-  * makes the same export viable at 100 TB. No MySQL server exists in the
-  * test sandbox (zero egress), so the live path is exercised end-to-end
-  * against embedded Derby (JdbcDerbySpec: real connections, schema from
+  * makes the same export viable at 100 TB. Inside each scan task the
+  * layers overlap too: the JDBC fetch runs on a producer thread, the
+  * compat mapping (when on) on a second, and the Parquet encode on the
+  * task thread, joined by bounded FIFO queues of copied row batches, so
+  * memory in flight is fixed and row order is kept. The test suite has
+  * no MySQL server, so the live path is exercised end-to-end against
+  * embedded Derby (JdbcDerbySpec: real connections, schema from
   * ResultSetMetaData, sessionInitStatement, partitioned scans, NULLs),
   * with the MySQL DSN as the default URL construction.
   */
@@ -171,10 +176,13 @@ object Mysql2Parquet {
 
   /** Whole pipeline over an already-loaded source frame (used by tests
     * and by the parquet-backed harness; the JDBC path plugs in the same
-    * way: reader(spark, c).load()).
+    * way: reader(spark, c).load()). Every thread boundary of the export
+    * is placed here: with compat on, the fetch runs one thread ahead of
+    * the mapping, and whatever feeds [[write]] runs one thread ahead of
+    * the encode.
     */
   def run(source: DataFrame, c: Config): Unit = {
-    val projected = if (c.compat) compatProjection(source) else source
-    write(projected, c)
+    val projected = if (c.compat) compatProjection(Pipeline.prefetch(source)) else source
+    write(Pipeline.prefetch(projected), c)
   }
 }

@@ -33,14 +33,6 @@ object StreamingOps {
       .select(col("window.start").as("hour_bucket"), col("event_type"),
               col("n"), col("total_value"))
 
-  /** Sliding windows: 1-hour span every 15 minutes. */
-  def slidingCounts(events: DataFrame, watermark: String = "2 hours"): DataFrame =
-    events
-      .withWatermark("ts", watermark)
-      .groupBy(window(col("ts"), "1 hour", "15 minutes"))
-      .agg(count(lit(1)).as("n"))
-      .select(col("window.start").as("w_start"), col("n"))
-
   /** Session windows with a 30-minute gap, per user — the streaming
     * form of EventOps.q74_sessionize.
     */
