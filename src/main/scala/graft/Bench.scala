@@ -25,18 +25,7 @@ object Bench {
         sys.error(s"SPARK_GRAFT_BENCH_RECYCLE must be a positive integer, got '$v'")))
       .getOrElse(32)
     def newSession(): SparkSession = {
-      val s = SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        // Adaptive hash-build threshold (see Verify.scala) — the
-        // scale-safe replacement for static shuffle_hash hints.
-        .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "16m")
-        .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold", "16m")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
+      val s = Sessions.local(cpus.toInt)
       s.sparkContext.setLogLevel("WARN")
       // Warm the session (codegen, parquet footers, shuffle machinery)
       // so the first timed query doesn't absorb startup cost.
@@ -117,9 +106,10 @@ object Bench {
     //   2. the per-query map split into independently-parseable ≤1 KB
     //      {"metric":"queries_part",...} lines — any chunk that
     //      survives the tail cut parses on its own;
-    //   3. the FULL JSON written to BENCH_FULL.json next to the repo,
-    //      and a tiny totals-only JSON as the very last line (< 200 B,
-    //      whole under any plausible tail window) pointing at it.
+    //   3. the FULL JSON written to BENCH_FULL_c<cpus>.json next to
+    //      the repo, and a tiny totals-only JSON as the very last line
+    //      (< 200 B, whole under any plausible tail window) pointing at
+    //      it.
     // Locale.ROOT: an f-interpolator uses the JVM default locale, so a
     // comma-decimal locale (de_DE) would emit "1,234" and corrupt every
     // machine-parsed number here.
@@ -264,7 +254,9 @@ object Bench {
     val total = if (results.nonEmpty) results.values.sum else 0.0
     val fullJson =
       s"""{"metric":"total","value":${r3(total)},"unit":"sec","queries":${entries.mkString("{", ",", "}")},"isolated":${isoEntries.mkString("{", ",", "}")},"isolated_runs":${isoRunEntries.mkString("{", ",", "}")},"isolated_canary":${isoCanaryEntries.mkString("{", ",", "}")},"isolated_truncated":$isolatedTruncated,"sf":"$sfDir"}"""
-    val outFile = new java.io.File("BENCH_FULL.json").getAbsoluteFile
+    // per-config name: a second run under another cpus config must not
+    // overwrite this run's per-query map
+    val outFile = new java.io.File(s"BENCH_FULL_c$cpus.json").getAbsoluteFile
     java.nio.file.Files.write(outFile.toPath,
       (fullJson + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
     // ≤1 KB chunks: ~25 entries of ≤40 B each per line.

@@ -1,7 +1,6 @@
 package graft
 
 import java.sql.DriverManager
-import org.apache.spark.sql.SparkSession
 
 /** Throughput benchmark for the export surface itself — the
   * reference's actual workload (one SQL statement → parquet,
@@ -51,12 +50,7 @@ object ExportBench {
     }
     ps.executeBatch(); c.commit(); ps.close(); st.close(); c.close()
 
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Sessions.local(cpus)
     spark.sparkContext.setLogLevel("WARN")
 
     def export(c: Mysql2Parquet.Config): Double = {

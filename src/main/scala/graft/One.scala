@@ -1,19 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object One {
   def main(args: Array[String]): Unit = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // Same env contract as Bench so per-query scaling (sf0.01 vs sf0.1)
     // is measurable with one tool (round-2 verdict item 7).
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "16m")
-      .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold", "16m")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = Sessions.local(cpus.toInt)
     spark.sparkContext.setLogLevel("ERROR")
     SparkEntry.entry(spark).count()
     for (q <- args; i <- 1 to 2) {

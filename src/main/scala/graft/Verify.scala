@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -10,30 +9,7 @@ object Verify {
     // iteration speedup; the driver passes exactly two args)
     val only = args.drop(2).toSet
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // Scale posture: no operator forces a hash build (a static
-      // shuffle_hash hint OOM'd at 100× sf0.1 — DESIGN); instead AQE
-      // converts sort-merge→shuffled-hash from real map stats when
-      // every partition's build side fits under the threshold. The
-      // threshold compares COMPRESSED map bytes while the build needs
-      // raw heap (~4-6× that, hash-table overhead included), so it is
-      // sized to the per-task execution-memory share — 8g heap / 32
-      // tasks ≈ 145 MB ÷ 6 ≈ 16m — not to the naive "what fits in an
-      // executor". 128m (first attempt) still OOM'd at 100× data.
-      // advisoryPartitionSizeInBytes rides along because Spark only
-      // honors a threshold ≥ advisory; 16m targets also split big
-      // post-shuffle work finer, which local[32]'s thin per-core
-      // memory wants anyway.
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "16m")
-      .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold", "16m")
-      .config("spark.sql.session.timeZone", "UTC")
-      // events.parquet carries TIMESTAMP(NANOS) which the Spark reader
-      // rejects by default; read as long and convert in T.events.
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Sessions.local(cpus.toInt)
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries

@@ -2,7 +2,7 @@ package graft.ops
 
 import graft.T
 import graft.functions.{Components, TextSim}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -149,18 +149,10 @@ object Dedup {
         coalesce(col("rep_canon"), col("rep_id")).as("canonical_id"))
   }
 
-  /** Per-JVM registry of built canonicalization state dirs (sf dir →
-    * state root) — the [[graft.ops.VectorOps.ensureIvfadcIndex]]
-    * discipline applied to the incremental-dedup family (round-15,
-    * r14 verdict item 1): q213 proves the quotient-graph algebra but
-    * rebuilds "yesterday's state" inline, so its measured cost is
-    * dominated by audit scaffolding a production nightly never pays.
-    * This build persists that state once per JVM; q299 SERVES from it.
-    */
-  private val canonState = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** BUILD tier of the stored canonicalization state — the three
-    * relations a nightly near-dup ingest keeps between runs:
+  /** BUILD tier of the stored canonicalization state — the relations
+    * a nightly near-dup ingest keeps between runs, so q299/q302/q303
+    * SERVE from them instead of rebuilding "yesterday's state" inline
+    * as q213 does:
     *
     *  - `meta/`   — the ingest cut (yesterday's max doc_id; here the
     *    q213 convention, oldest 80% by id);
@@ -169,39 +161,17 @@ object Dedup {
     *    corpus;
     *  - `bands/`  — yesterday's LSH band index (doc_id, band, bh) —
     *    MinHash(128)+LSH(32×4) over the old corpus, so tonight's
-    *    ingest sketches ONLY its delta and probes these rows.
+    *    ingest sketches ONLY its delta and probes these rows;
+    *  - the q303 containment index: `grams/`, `gsizes/`, `vocab/`,
+    *    `vmeta/`, `gramsid/`, `gprefix/` (see below).
     *
-    * Root/staging/sweep discipline is ensureIvfadcIndex's verbatim:
-    * (abs-path-hash, pid)-keyed root under java.io.tmpdir, staged
-    * build atomically renamed into place, dead-pid siblings swept
-    * with a regex-quoted prefix. The bits are deterministic (md5
-    * minhash, exact verify), so rebuilds are idempotent and the
-    * DuckDB oracle can replay the stored chains from the raw tables —
-    * the q262 store discipline.
+    * Root, memo, sweep and publish are [[graft.StateRoot]]'s. The bits
+    * are deterministic (md5 minhash, exact verify), so rebuilds are
+    * idempotent and the DuckDB oracle can replay the stored chains
+    * from the raw tables — the q262 store discipline.
     */
   def ensureCanonState(s: SparkSession, d: String): String =
-    canonState.computeIfAbsent(d, _ => {
-      val abs = new java.io.File(d).getAbsolutePath
-      val pathTag = java.security.MessageDigest.getInstance("MD5")
-        .digest(abs.getBytes("UTF-8")).take(4).map(b => f"${b & 0xff}%02x").mkString
-      val root = new java.io.File(sys.props("java.io.tmpdir"),
-        s"graft_canon_${new java.io.File(d).getName}_${pathTag}_p${ProcessHandle.current.pid}")
-      val stage = new java.io.File(root.getParentFile, root.getName + ".build")
-      def rmTree(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rmTree)); f.delete(); ()
-      }
-      val sibling = (java.util.regex.Pattern.quote(
-        s"graft_canon_${new java.io.File(d).getName}_${pathTag}_") +
-        "p(\\d+)(\\.build)?").r
-      Option(root.getParentFile.listFiles()).foreach(_.foreach { f =>
-        f.getName match {
-          case sibling(pid, _) if pid.toLong != ProcessHandle.current.pid &&
-            ProcessHandle.of(pid.toLong).isEmpty =>
-            rmTree(f)
-          case _ => ()
-        }
-      })
-      val sp = stage.getAbsolutePath
+    graft.StateRoot.ensure("canon", d) { sp =>
       val docs = T.documents(s, d)
       val cutDf = docs.agg(expr("(4 * max(doc_id)) div 5").as("cut"))
         .localCheckpoint(true)
@@ -215,46 +185,29 @@ object Dedup {
       // containment-audit state (q303): the old corpus's gram index,
       // per-doc sizes, gram dfs, and df-ranked prefixes at q140's 9/10
       // threshold. The written grams file doubles as the checkpoint
-      // for its two derivations (sizes, prefixes) — reading state we
-      // are writing anyway beats re-exploding the corpus. The stored
-      // prefix order is the OLD corpus's df order; tonight's delta
-      // shifts dfs, but the prefix-filter lemma holds for ANY fixed
-      // per-doc order (if the container misses all L prefix grams,
-      // overlap ≤ sz − L < t — pigeonhole, order-free), so stale
-      // prefixes stay COMPLETE and only affect candidate cost, which
-      // the exact verify absorbs.
+      // for its derivations (sizes, vocabulary) — reading state we
+      // are writing anyway beats re-exploding the corpus; no serve
+      // reads it. The stored prefix order is the OLD corpus's df
+      // order; tonight's delta shifts dfs, but the prefix-filter lemma
+      // holds for ANY fixed per-doc order (if the container misses all
+      // L prefix grams, overlap ≤ sz − L < t — pigeonhole, order-free),
+      // so stale prefixes stay COMPLETE and only affect candidate
+      // cost, which the exact verify absorbs.
       TextSim.shingles(oldDocs, 3)
         .write.mode("overwrite").parquet(s"$sp/grams")
       val shOldW = s.read.parquet(s"$sp/grams")
       shOldW.groupBy(col("doc_id")).agg(count(lit(1)).as("sz"))
         .write.mode("overwrite").parquet(s"$sp/gsizes")
       val szOldW = s.read.parquet(s"$sp/gsizes")
-      // Round-16 (r15 verdict item 1): the gram dfs are STATE, not a
-      // per-serve derivation — persist them so the nightly serve
-      // merges delta counts into stored dfs (a delta-sized update)
-      // instead of re-aggregating the entire gram index.
-      // Round-17 (guide §2.3 "narrower types"): the stored index is
-      // DICTIONARY-ENCODED. vocab/ carries (g, gdf, gid) where gid is
-      // the dense (df asc, gram asc) rank over the old corpus —
-      // simultaneously the stored prefix ORDER and a 4-byte join key —
-      // so the serve's candidate and verify joins (its dominant cost,
-      // measured) shuffle ints instead of ~25-byte gram strings. The
-      // gramIds discipline: ScalableRank (never a one-task global
-      // window), loud overflow guard, bijection preserves every
-      // intersection count. gramsid/ and gprefix/ store (doc_id, gid);
-      // the string grams/ file above remains only as the build's
-      // explode checkpoint (read-what-we-write), never read by serves.
-      val gdfOldB = shOldW.groupBy(col("g")).agg(count(lit(1)).as("gdf"))
-      val pB = s.conf.get("spark.sql.shuffle.partitions").toInt
-      graft.functions.ScalableRank
-        .withRanks(gdfOldB, Seq.empty, Seq(col("gdf"), col("g")),
-          Seq(col("gdf"), col("g")), pB)
-        .select(col("g"), col("gdf"),
-          when(col("rn") > Int.MaxValue.toLong, raise_error(lit(
-            "ensureCanonState: gram vocabulary exceeds Int.MaxValue " +
-              "ranks — the int gid dictionary would wrap; widen gid")))
-            .otherwise(col("rn")).cast("int").as("gid"))
-        .write.mode("overwrite").parquet(s"$sp/vocab")
+      // The gram dfs are STATE, so the nightly serve merges
+      // delta counts into stored dfs instead of re-aggregating the
+      // whole index. vocab/ is the [[gramVocab]] dictionary (g, gdf,
+      // gid) over the old corpus — the same function the inline tiers
+      // encode with, so stored ≡ inline by construction. gid is the
+      // (df asc, gram asc) rank: the stored prefix ORDER and a 4-byte
+      // join key at once, so gramsid/ and gprefix/ store
+      // (doc_id, gid) and the serve's joins shuffle ints.
+      gramVocab(shOldW).write.mode("overwrite").parquet(s"$sp/vocab")
       val vocabW = s.read.parquet(s"$sp/vocab")
       // 1-row dictionary high-water mark: the serve extends the
       // dictionary for unseen delta grams from maxgid without scanning
@@ -274,11 +227,7 @@ object Dedup {
         .filter(col("rk") <= col("sz") - expr("(9 * sz + 9) div 10") + 1)
         .select(col("doc_id"), col("gid"))
         .write.mode("overwrite").parquet(s"$sp/gprefix")
-      if (root.exists()) rmTree(root)
-      java.nio.file.Files.move(stage.toPath, root.toPath,
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-      root.getAbsolutePath
-    })
+    }
 
   /** The delta-touching verified near-dup pair relation served from
     * the STORED band index (shared by q299's components tail and
@@ -510,36 +459,49 @@ object Dedup {
     * long/long→double division, so the rounded digit can never
     * disagree with [[TextSim.jaccardPairs]].
     */
-  /** The dictionary-encoded distinct-shingle relation (doc_id, gid):
-    * vocabulary ranked by the (df asc, gram asc) global order — gid is
-    * simultaneously the prefix order AND a dense int id, so the verify
-    * arrays carry 4-byte ints instead of ~25-byte gram strings
-    * (measured: the string-array verify shuffle was the q61 10×
-    * bottleneck). The vocab relation is Heaps-sublinear in the corpus;
-    * ranking it rides ScalableRank (range-partitioned, never a
-    * one-task global window), and ScalableRank's internal checkpoint
-    * makes the ids consistent across every consumer. Intersection
-    * counts are invariant under the g↔gid bijection, so exactness is
-    * untouched.
+  /** The one int-gid dictionary rank: `df`'s columns plus `gid` =
+    * `offset` + the 1-based row number over `order` (a unique total
+    * order). Ranking rides ScalableRank (range-partitioned, never a
+    * one-task global window), and its internal checkpoint makes the
+    * ids consistent across every consumer. `offset` may reference
+    * `df`'s columns (q303 extends a stored dictionary above its
+    * maxgid). Past 2^31 ids (plausible at the 100 TB posture) a
+    * silent non-ANSI long→int cast would wrap, corrupting the prefix
+    * order and every intersection count with no error, so the guard
+    * fails loudly instead: a codegen'd per-row branch (no extra pass,
+    * no action) that only an overflowing row ever takes.
     */
-  private[graft] def gramIds(sh: DataFrame): DataFrame = {
-    val p = sh.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
-    val gdf = sh.groupBy(col("g")).agg(count(lit(1)).as("gdf"))
-    // r13 ADVICE: with >2^31 distinct shingles (plausible at the 100 TB
-    // posture) a silent non-ANSI long→int cast wraps, corrupting the
-    // prefix order and every array_intersect count with no error. Fail
-    // loudly instead: the guard is a codegen'd per-row branch (no extra
-    // pass, no action) that only the overflowing row ever takes.
-    val gids = graft.functions.ScalableRank
-      .withRanks(gdf, Seq.empty, Seq(col("gdf"), col("g")),
-        Seq(col("gdf"), col("g")), p)
-      .select(col("g"),
-        when(col("rn") > Int.MaxValue.toLong, raise_error(lit(
-          "gramIds: shingle vocabulary exceeds Int.MaxValue ranks — " +
-            "the int gid dictionary would wrap; widen gid to long")))
-          .otherwise(col("rn")).cast("int").as("gid"))
-    sh.join(gids, "g").select(col("doc_id"), col("gid"))
+  private[graft] def rankedGid(df: DataFrame, order: Seq[Column],
+                               offset: Column): DataFrame = {
+    val p = df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
+    val gid = col("rn") + offset
+    graft.functions.ScalableRank.withRanks(df, Seq.empty, order, order, p)
+      .select(df.columns.map(col) :+
+        when(gid > Int.MaxValue.toLong, raise_error(lit(
+          "gram dictionary overflows the int gid (more than 2^31-1 " +
+            "ids) — widen gid to long")))
+          .otherwise(gid).cast("int").as("gid"): _*)
   }
+
+  /** The gram dictionary (g, gdf, gid) of a distinct-shingle relation:
+    * gid ranks the vocabulary by the (df asc, gram asc) global order,
+    * so it is simultaneously the prefix order AND a dense int id — the
+    * verify arrays and join keys carry 4-byte ints instead of ~25-byte
+    * gram strings (measured: the string-array verify shuffle was the
+    * q61 10× bottleneck). Shared by the inline tiers ([[gramIds]]) and
+    * the stored `vocab/` of [[ensureCanonState]].
+    */
+  private[graft] def gramVocab(sh: DataFrame): DataFrame =
+    rankedGid(sh.groupBy(col("g")).agg(count(lit(1)).as("gdf")),
+      Seq(col("gdf"), col("g")), lit(0L))
+
+  /** The dictionary-encoded distinct-shingle relation (doc_id, gid).
+    * Intersection counts are invariant under the g↔gid bijection, so
+    * exactness is untouched.
+    */
+  private[graft] def gramIds(sh: DataFrame): DataFrame =
+    sh.join(gramVocab(sh).select(col("g"), col("gid")), "g")
+      .select(col("doc_id"), col("gid"))
 
   /** PPJoin candidate pairs for Jaccard ≥ thrNum/thrDen over the
     * dictionary-encoded shingles: symmetric prefix⋈prefix + length
@@ -1041,7 +1003,7 @@ object Dedup {
       // Round-17 (guide §2.3 "narrower types"): the same merge now
       // also DICTIONARY-ENCODES the delta against the stored vocab —
       // seen grams take their stored gid, unseen grams extend the
-      // dictionary above the stored maxgid (ScalableRank over the
+      // dictionary above the stored maxgid ([[rankedGid]] over the
       // unseen delta vocabulary; deterministic, loudly int-guarded) —
       // so every candidate and verify join below shuffles 4-byte gids
       // instead of ~25-byte gram strings. Intersection counts are
@@ -1070,17 +1032,10 @@ object Dedup {
         .select(col("g"),
           (coalesce(col("gdf"), lit(0L)) + col("dfd")).as("gdf"),
           col("gid"))
-      val pSrv = s.conf.get("spark.sql.shuffle.partitions").toInt
-      val unseen = graft.functions.ScalableRank
-        .withRanks(dj.filter(col("gid").isNull).drop("gid"),
-          Seq.empty, Seq(col("g")), Seq(col("g")), pSrv)
-        .crossJoin(broadcast(vmeta))
-        .select(col("g"), col("gdf"),
-          when(col("rn") + col("maxgid") > Int.MaxValue.toLong,
-            raise_error(lit(
-              "q303 serve: extended gram dictionary exceeds " +
-                "Int.MaxValue — widen gid")))
-            .otherwise(col("rn") + col("maxgid")).cast("int").as("gid"))
+      // an empty stored vocabulary has a NULL maxgid: extend from 0
+      val unseen = rankedGid(
+        dj.filter(col("gid").isNull).drop("gid").crossJoin(broadcast(vmeta)),
+        Seq(col("g")), coalesce(col("maxgid"), lit(0L))).drop("maxgid")
       // (g, gdf, gid) for every delta gram; eagerly checkpointed so
       // its consumers (the encode, and through it the prefix,
       // candidate and verify sides) reuse one deterministic
@@ -1418,33 +1373,14 @@ object Dedup {
     "q136_containment_sketch" -> ((s, d) =>
       containmentSketch(T.documents(s, d), 3, k = 64, gateBp = 8500)),
 
-    // Exact near-dup at 0.8 via prefix filtering — PPJoin applied to
-    // the SYMMETRIC threshold, the sketch-free exact production tier
-    // beside minhash (q62) and simhash (q63): J ≥ t forces overlap
-    // ≥ ⌈t·|X|⌉ in the worst direction (I·(1+t) ≥ t(|X|+|Y|) and
-    // |Y| ≥ I give I ≥ t·|X|), so prefixCandidates at 8/10 is a
-    // COMPLETE candidate set by the same pigeonhole as q135 and the
-    // exact verify reproduces the q62/q63 oracle relation with zero
-    // probabilistic recall argument. Candidate volume rides rare-gram
-    // collisions (the stop-gram Σ m_g² term never pairs).
-    // PPJoin's second pruning rule rides along: J ≥ t also forces
-    // min(|X|,|Y|) ≥ t·max(|X|,|Y|), so the size filter drops
-    // length-incompatible candidates before the exact verify ever
-    // explodes their gram sets (integer-exact, broadcastable sizes).
-    "q138_neardup_prefix" -> ((s, d) => {
-      val sh = TextSim.shingles(T.documents(s, d), 3)
-      val sizes = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("sz"))
-      val sym = prefixCandidates(sh, sizes, 8, 10)
-        .select(least(col("id_a"), col("id_b")).as("id1"),
-          greatest(col("id_a"), col("id_b")).as("id2"))
-        .distinct()
-        .join(sizes.select(col("doc_id").as("id1"), col("sz").as("sz1")), "id1")
-        .join(sizes.select(col("doc_id").as("id2"), col("sz").as("sz2")), "id2")
-        .filter(least(col("sz1"), col("sz2")) * 10 >=
-          greatest(col("sz1"), col("sz2")) * 8)
-        .select(col("id1"), col("id2"))
-      TextSim.verifyJaccard(sym, sh, 0.8)
-    }),
+    // Exact near-dup at 0.8 via prefix filtering — the sketch-free
+    // exact production tier beside minhash (q62) and simhash (q63):
+    // jaccardPairsPrefix's PPJoin candidates are complete by
+    // pigeonhole, so the exact verify reproduces the q62/q63 oracle
+    // relation with zero probabilistic recall argument. It is q67's
+    // pair feed, published as a relation.
+    "q138_neardup_prefix" -> ((s, d) =>
+      jaccardPairsPrefix(TextSim.shingles(T.documents(s, d), 3), 8, 10)),
 
     // Cross-language near-dup pairs — the bitext/translation-pair
     // mining proxy (and the "same content re-tagged under another

@@ -450,19 +450,6 @@ object VectorOps {
       .agg(cs.head, cs.tail: _*)
   }
 
-  /** Per-JVM registry of built IVFADC indexes (sf dir → index root).
-    * Each process builds the index exactly once on first touch into a
-    * root that is unique to (data-dir absolute path, pid) — so a stale
-    * on-disk index can never leak across test-data regenerations, two
-    * data dirs that share a basename can never share a root, and two
-    * concurrent processes (Verify and Bench on the same SF) can never
-    * overwrite an index the other is mid-read. Every later touch in
-    * the same JVM (the query tier, a second bench run) reuses the
-    * stored files. The bits are deterministic (md5-coin kmeans), so
-    * rebuilds are idempotent.
-    */
-  private val ivfadcIdx = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** BUILD tier of the stored IVFADC index (q262) — materializes the
     * layout q261's composition previously only documented:
     *
@@ -489,61 +476,21 @@ object VectorOps {
     * only shuffle is the cell-partitioned sink. Returns the index
     * root.
     *
+    * Root, memo, sweep and publish are [[graft.StateRoot]]'s. The bits
+    * are deterministic (md5-coin kmeans), so rebuilds are idempotent.
     * The root lives under java.io.tmpdir in local mode; the layout is
     * filesystem-agnostic (plain parquet + directory partitioning), so
     * on a cluster the same three relations land on the object store /
     * HDFS and every property the plan audits pin (partition pruning,
     * broadcast dq tables, id-fetch re-rank) carries over unchanged.
     */
-  def ensureIvfadcIndex(s: SparkSession, d: String): String =
-    ivfadcIdx.computeIfAbsent(d, _ => {
+  def ensureIvfadcIndex(s: SparkSession, d: String): String = {
+    lazy val nVecs = T.embeddings(s, d).count()
+    // nlist from the corpus size and the two-level dial both
+    // change the stored bits, so both are part of the root's identity
+    lazy val nlist = ivfNlist(nVecs)
+    graft.StateRoot.ensure("ivfadc", d, s"k$nlist${if (ivfTwoLevel) "t2" else ""}") { sp =>
       graft.functions.VectorKernels.ensureRegistered(s)
-      // Root is keyed by a hash of the ABSOLUTE data-dir path (two
-      // dirs sharing a basename get distinct roots) and by pid (two
-      // concurrent processes never clobber each other's files), and
-      // the three relations land in a staging dir that is atomically
-      // renamed into place — a crash mid-build leaves only a .build
-      // dir that no reader ever resolves, never a mixed-generation
-      // root (round-9 advisor ask).
-      val abs = new java.io.File(d).getAbsolutePath
-      val pathTag = java.security.MessageDigest.getInstance("MD5")
-        .digest(abs.getBytes("UTF-8")).take(4).map(b => f"${b & 0xff}%02x").mkString
-      // nlist from the corpus size (round-12): the index regenerates
-      // per dial, so the dial is part of the root's identity.
-      val nVecs = T.embeddings(s, d).count()
-      val nlist = ivfNlist(nVecs)
-      // the two-level dial changes the stored cell assignment, so it
-      // is part of the root's identity like the nlist dial
-      val t2 = if (ivfTwoLevel) "t2" else ""
-      val root = new java.io.File(sys.props("java.io.tmpdir"),
-        s"graft_ivfadc_${new java.io.File(d).getName}_${pathTag}_k${nlist}${t2}_p${ProcessHandle.current.pid}")
-      val stage = new java.io.File(root.getParentFile, root.getName + ".build")
-      def rmTree(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rmTree)); f.delete(); ()
-      }
-      // Round-11 (advisor): pid-keyed roots made concurrent processes
-      // safe but turned every JVM exit into a leaked index directory
-      // (plus any crash-orphaned .build stage). Sweep siblings of this
-      // index whose owning pid is gone before staging the new one —
-      // a LIVE pid's root is never touched, so the concurrency
-      // guarantee is unchanged. The literal prefix is regex-QUOTED
-      // (round-11 advisor: '.' in names like sf0.01 matched any
-      // character, so a dead process's root for a DIFFERENT dataset
-      // could be swept); the optional k segment keeps pre-round-12
-      // roots sweepable, and a dead pid's root is swept whatever its
-      // nlist dial was.
-      val sibling = (java.util.regex.Pattern.quote(
-        s"graft_ivfadc_${new java.io.File(d).getName}_${pathTag}_") +
-        "(?:k\\d+(?:t2)?_)?p(\\d+)(\\.build)?").r
-      Option(root.getParentFile.listFiles()).foreach(_.foreach { f =>
-        f.getName match {
-          case sibling(pid, _) if pid.toLong != ProcessHandle.current.pid &&
-            ProcessHandle.of(pid.toLong).isEmpty =>
-            rmTree(f)
-          case _ => ()
-        }
-      })
-      val sp = stage.getAbsolutePath
       val e64 = emb(s, d)
       // trainers fit on the bounded sample (trainSample — all-pass at
       // driver SFs, iters·cap·k² work instead of iters·N·k at scale);
@@ -616,11 +563,8 @@ object VectorOps {
         .join(rCodes, Seq("vec_id"))
         .join(oCodes, Seq("vec_id"))
         .write.mode("overwrite").partitionBy("cell").parquet(s"$sp/codes")
-      if (root.exists()) rmTree(root)  // same pid re-ran after a memo-less restart
-      java.nio.file.Files.move(stage.toPath, root.toPath,
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-      root.getAbsolutePath
-    })
+    }
+  }
 
   /** The IVFADC serving tail shared by the corpus-probe (q263) and
     * external-query (q286) tiers — nprobe=4 probe against the stored

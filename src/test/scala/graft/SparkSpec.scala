@@ -3,21 +3,12 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared session base: one lazy SparkSession per suite, configured the
-  * same way as Verify/Bench (UTC, nanos-as-long, small shuffle count).
+/** Shared session base: one lazy SparkSession per suite, in the
+  * harnesses' posture ([[Sessions.local]]) so plan pins audit the
+  * configuration that actually runs.
   */
 trait SparkSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    // Same adaptive hash-build posture as Verify/Bench so plan pins
-    // audit the configuration that actually runs.
-    .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "16m")
-    .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold", "16m")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = Sessions.local(4)
 
   def sf(name: String) = s"/root/testdata/$name"
   val sf001 = "/root/testdata/sf0.001"

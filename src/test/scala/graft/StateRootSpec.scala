@@ -1,0 +1,81 @@
+package graft
+
+import java.io.File
+import java.nio.file.Files
+import org.scalatest.funsuite.AnyFunSuite
+
+/** The stored-state root discipline ([[StateRoot.ensure]]) with a tiny
+  * file-writing build and no Spark: memo, failure, sweep and publish.
+  */
+class StateRootSpec extends AnyFunSuite {
+  private val tmp = new File(sys.props("java.io.tmpdir"))
+  private val pid = ProcessHandle.current.pid
+  // above Linux's largest pid_max (2^22): no such process can exist
+  private val deadPid = 4194305L
+
+  /** A fresh data dir (unique path → unique md5 tag and memo key). */
+  private def dataDir(): String =
+    Files.createTempDirectory("stateroot").resolve("sf0.01").toString
+
+  private def counted(n: java.util.concurrent.atomic.AtomicInteger)(sp: String): Unit = {
+    n.incrementAndGet()
+    Files.writeString(new File(sp, "rel").toPath, "bits")
+    ()
+  }
+
+  test("a second ensure in the same JVM returns the published root without rebuilding") {
+    val d = dataDir()
+    val n = new java.util.concurrent.atomic.AtomicInteger()
+    val root = StateRoot.ensure("spec", d)(counted(n))
+    assert(StateRoot.ensure("spec", d)(counted(n)) === root)
+    assert(n.get === 1)
+    assert(new File(root).getName === StateRoot.prefix("spec", d) + s"p$pid")
+    assert(new File(root, "rel").isFile, "the build's relation was not published")
+    assert(!new File(root + ".build").exists, "staging dir survived a completed build")
+  }
+
+  test("a throwing build reaches the caller, leaves no root, and the next call rebuilds") {
+    val d = dataDir()
+    val root = new File(tmp, StateRoot.prefix("spec", d) + s"p$pid")
+    val e = intercept[IllegalStateException] {
+      StateRoot.ensure("spec", d) { sp =>
+        Files.writeString(new File(sp, "half").toPath, "partial")
+        throw new IllegalStateException("build died")
+      }
+    }
+    assert(e.getMessage === "build died")
+    assert(!root.exists, "a failed build published a root")
+    assert(!new File(root.getPath + ".build").exists, "a failed build left its stage")
+    val n = new java.util.concurrent.atomic.AtomicInteger()
+    assert(StateRoot.ensure("spec", d)(counted(n)) === root.getAbsolutePath)
+    assert(n.get === 1)
+    assert(!new File(root, "half").exists, "the failed build's bits were published")
+  }
+
+  test("the sweep removes only dead-pid roots of the same kind and dataset") {
+    assert(ProcessHandle.of(deadPid).isEmpty)
+    val livePid = ProcessHandle.current.parent.get.pid
+    val d = dataDir()
+    val pre = StateRoot.prefix("canon", d)
+    def mk(name: String): File = {
+      val f = new File(tmp, name); new File(f, "rel").mkdirs(); f
+    }
+    val deadRoot = mk(pre + s"p$deadPid")
+    val deadStage = mk(pre + s"p$deadPid.build")
+    val deadDialRoot = mk(pre + s"k12t2_p$deadPid")
+    val liveRoot = mk(pre + s"p$livePid")
+    val otherKind = mk(StateRoot.prefix("ivfadc", d) + s"k12_p$deadPid")
+    // differs from sf0.01 only where it has a '.' — the regex-quoting case
+    val dotted = mk(pre.replace("sf0.01", "sf0x01") + s"p$deadPid")
+    try {
+      StateRoot.ensure("canon", d)(counted(new java.util.concurrent.atomic.AtomicInteger()))
+      assert(!deadRoot.exists && !deadStage.exists && !deadDialRoot.exists,
+        "a dead pid's root or stage survived the sweep")
+      assert(liveRoot.exists, "a live pid's root was swept")
+      assert(otherKind.exists, "a root of another kind was swept")
+      assert(dotted.exists, "a root of another dataset was swept ('.' matched unquoted)")
+    } finally Seq(liveRoot, otherKind, dotted).foreach { f =>
+      new File(f, "rel").delete(); f.delete()
+    }
+  }
+}
