@@ -162,8 +162,8 @@ object Dedup {
     *  - `bands/`  — yesterday's LSH band index (doc_id, band, bh) —
     *    MinHash(128)+LSH(32×4) over the old corpus, so tonight's
     *    ingest sketches ONLY its delta and probes these rows;
-    *  - the q303 containment index: `grams/`, `gsizes/`, `vocab/`,
-    *    `vmeta/`, `gramsid/`, `gprefix/` (see below).
+    *  - the q303 containment index: `gsizes/`, `vocab/`, `vmeta/`,
+    *    `gramsid/`, `gprefix/` (see below).
     *
     * Root, memo, sweep and publish are [[graft.StateRoot]]'s. The bits
     * are deterministic (md5 minhash, exact verify), so rebuilds are
@@ -182,21 +182,17 @@ object Dedup {
         .write.mode("overwrite").parquet(s"$sp/labels")
       TextSim.lshBands(TextSim.minhashSignatureNative(oldDocs, 128, 3), 32, 4)
         .write.mode("overwrite").parquet(s"$sp/bands")
-      // containment-audit state (q303): the old corpus's gram index,
-      // per-doc sizes, gram dfs, and df-ranked prefixes at q140's 9/10
-      // threshold. The written grams file doubles as the checkpoint
-      // for its derivations (sizes, vocabulary) — reading state we
-      // are writing anyway beats re-exploding the corpus; no serve
-      // reads it. The stored prefix order is the OLD corpus's df
-      // order; tonight's delta shifts dfs, but the prefix-filter lemma
-      // holds for ANY fixed per-doc order (if the container misses all
-      // L prefix grams, overlap ≤ sz − L < t — pigeonhole, order-free),
-      // so stale prefixes stay COMPLETE and only affect candidate
-      // cost, which the exact verify absorbs.
-      TextSim.shingles(oldDocs, 3)
-        .write.mode("overwrite").parquet(s"$sp/grams")
-      val shOldW = s.read.parquet(s"$sp/grams")
-      shOldW.groupBy(col("doc_id")).agg(count(lit(1)).as("sz"))
+      // containment-audit state (q303): the old corpus's gid index,
+      // per-doc sizes, gram dictionary and prefixes at q140's 9/10
+      // threshold, all derived from one checkpointed explode. The
+      // stored prefix order is the OLD corpus's df order; tonight's
+      // delta shifts dfs, but the prefix-filter lemma holds for ANY
+      // fixed per-doc order (if the container misses all L prefix
+      // grams, overlap ≤ sz − L < t — pigeonhole, order-free), so
+      // stale prefixes stay COMPLETE and only affect candidate cost,
+      // which the exact verify absorbs.
+      val shOld = TextSim.shingles(oldDocs, 3).localCheckpoint(true)
+      shOld.groupBy(col("doc_id")).agg(count(lit(1)).as("sz"))
         .write.mode("overwrite").parquet(s"$sp/gsizes")
       val szOldW = s.read.parquet(s"$sp/gsizes")
       // The gram dfs are STATE, so the nightly serve merges
@@ -207,24 +203,17 @@ object Dedup {
       // (df asc, gram asc) rank: the stored prefix ORDER and a 4-byte
       // join key at once, so gramsid/ and gprefix/ store
       // (doc_id, gid) and the serve's joins shuffle ints.
-      gramVocab(shOldW).write.mode("overwrite").parquet(s"$sp/vocab")
+      gramVocab(shOld).write.mode("overwrite").parquet(s"$sp/vocab")
       val vocabW = s.read.parquet(s"$sp/vocab")
       // 1-row dictionary high-water mark: the serve extends the
       // dictionary for unseen delta grams from maxgid without scanning
       // the vocabulary.
       vocabW.agg(max(col("gid")).as("maxgid")).coalesce(1)
         .write.mode("overwrite").parquet(s"$sp/vmeta")
-      shOldW.join(vocabW.select(col("g"), col("gid")), "g")
+      shOld.join(vocabW.select(col("g"), col("gid")), "g")
         .select(col("doc_id"), col("gid"))
         .write.mode("overwrite").parquet(s"$sp/gramsid")
-      val gidsW = s.read.parquet(s"$sp/gramsid")
-      // gid order IS the (df asc, gram asc) order, so the stored
-      // prefix derives from gramsid alone.
-      val wDocOld = Window.partitionBy(col("doc_id")).orderBy(col("gid"))
-      gidsW
-        .withColumn("rk", row_number().over(wDocOld).cast("long"))
-        .join(szOldW, "doc_id")
-        .filter(col("rk") <= col("sz") - expr("(9 * sz + 9) div 10") + 1)
+      prefixRows(s.read.parquet(s"$sp/gramsid"), szOldW, 9, 10, col("gid"))
         .select(col("doc_id"), col("gid"))
         .write.mode("overwrite").parquet(s"$sp/gprefix")
     }
@@ -324,141 +313,88 @@ object Dedup {
     * (q128b) for a belt-and-braces production config; the two dials
     * are independent.
     *
-    * Plan: gram-df agg (gram-keyed), df join back (gram-keyed), per-doc
-    * rank window (doc-keyed — doc_id is high-cardinality, so a plain
-    * window is the right tool, not ScalableRank), prefix-vs-index join
-    * (gram-keyed), pair-keyed verify joins. Every shuffle is on a
-    * high-cardinality key.
+    * Plan: the [[gramIds]] dictionary rank, per-doc rank window over
+    * gid (doc-keyed — doc_id is high-cardinality, so a plain window is
+    * the right tool, not ScalableRank), prefix-vs-index join
+    * (gid-keyed), pair-keyed verify joins. Every shuffle is on a
+    * high-cardinality int key. Dictionary-encoding measured a wash at
+    * sf0.1 (6.82 → 7.23 s, cpus=32, fresh JVM, min of 2 — the rank
+    * chain's fixed cost ≈ the string savings at toy scale) and a 36%
+    * win at 10× where the verify bytes dominate (q140, the same
+    * candidate+verify shape: 149.0 → 95.2 s, cpus=8, same day).
     */
-  /** Prefix-filter candidate pairs (id_a = potential contained, id_b =
-    * potential container): the complete-by-pigeonhole candidate set of
-    * [[containmentPairsPrefix]], shared with the sketched estimator
-    * tier (q136). `sh`/`sizes` are the distinct-shingle relation and
-    * per-doc shingle counts.
-    */
-  def prefixCandidates(sh: DataFrame, sizes: DataFrame, thrNum: Int,
-                       thrDen: Int): DataFrame = {
-    val gdf = sh.groupBy(col("g")).agg(count(lit(1)).as("gdf"))
-    val wDoc = Window.partitionBy(col("doc_id")).orderBy(col("gdf"), col("g"))
-    val prefix = sh.join(gdf, "g")
-      .withColumn("rk", row_number().over(wDoc).cast("long"))
-      .join(sizes, "doc_id")
-      // L = sz − ceil(sz·thrNum/thrDen) + 1, all exact integers
-      .filter(col("rk") <=
-        col("sz") - expr(s"($thrNum * sz + ${thrDen - 1}) div $thrDen") + 1)
-      .select(col("doc_id"), col("g"))
-    prefix.select(col("doc_id").as("id_a"), col("g"))
-      .join(sh.select(col("doc_id").as("id_b"), col("g")), "g")
-      .filter(col("id_a") =!= col("id_b"))
-      .select(col("id_a"), col("id_b")).distinct()
-  }
-
-  /** [[prefixCandidates]] over the dictionary-encoded shingle relation
-    * (doc_id, gid) from [[gramIds]] — gid IS the (df asc, gram asc)
-    * order, so the prefix is the rank window over gid alone and every
-    * candidate join shuffles 4-byte ints instead of gram strings
-    * (round-17, guide §2.3 "narrower types"). Same candidate set as
-    * the string form by construction (identical order, identical L).
-    */
-  private[graft] def prefixCandidatesId(shg: DataFrame, sizes: DataFrame,
-      thrNum: Int, thrDen: Int): DataFrame = {
-    val wDoc = Window.partitionBy(col("doc_id")).orderBy(col("gid"))
-    val prefix = shg
-      .withColumn("rk", row_number().over(wDoc).cast("long"))
-      .join(sizes, "doc_id")
-      // L = sz − ceil(sz·thrNum/thrDen) + 1, all exact integers
-      .filter(col("rk") <=
-        col("sz") - expr(s"($thrNum * sz + ${thrDen - 1}) div $thrDen") + 1)
-      .select(col("doc_id"), col("gid"))
-    prefix.select(col("doc_id").as("id_a"), col("gid"))
-      .join(shg.select(col("doc_id").as("id_b"), col("gid")), "gid")
-      .filter(col("id_a") =!= col("id_b"))
-      .select(col("id_a"), col("id_b")).distinct()
-  }
-
   def containmentPairsPrefix(docs: DataFrame, n: Int, thrNum: Int,
                              thrDen: Int): DataFrame = {
     val sh = TextSim.shingles(docs, n)
     val sizes = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("sz"))
-    // Round-17 (guide §2.3): dictionary-encode once (gramIds — the
-    // jaccardPairsPrefix discipline), so the candidate AND verify
-    // joins — the tier's dominant cost — shuffle ints. gid rank =
-    // (gdf, g) order, so candidates are identical to the string form
-    // and intersection counts are bijection-invariant: same output,
-    // same oracle. Measured: a wash at sf0.1 (6.82 → 7.23 s, cpus=32,
-    // fresh JVM, min of 2 — the rank chain's fixed cost ≈ the string
-    // savings at toy scale) and a 36% win at 10× where the verify
-    // bytes dominate (q140, the same candidate+verify shape:
-    // 149.0 → 95.2 s, cpus=8, same day).
     val shg = gramIds(sh)
-    val cand = prefixCandidatesId(shg, sizes, thrNum, thrDen)
-    val inter = cand
-      .join(shg.select(col("doc_id").as("id_a"), col("gid")), "id_a")
-      .join(shg.select(col("doc_id").as("id_b"), col("gid")), Seq("id_b", "gid"))
+    containmentVerify(prefixCandidates(shg, sizes, thrNum, thrDen), shg, sizes,
+      thrNum, thrDen)
+  }
+
+  /** The rows inside each doc's prefix: (doc_id, gid, sz, rk) where rk
+    * is the doc's 1-based rank under `order` and rk ≤ L = sz −
+    * ⌈sz·thrNum/thrDen⌉ + 1 — the one copy of the prefix length. `shg`
+    * holds (doc_id, gid) plus the `order` columns, `sizes` (doc_id,
+    * sz). Any fixed per-doc order is complete for containment (the
+    * pigeonhole in [[containmentPairsPrefix]]); the symmetric Jaccard
+    * lemma in [[jaccardPairsPrefix]] needs one global order.
+    */
+  private[graft] def prefixRows(shg: DataFrame, sizes: DataFrame, thrNum: Int,
+                                thrDen: Int, order: Column*): DataFrame = {
+    val wDoc = Window.partitionBy(col("doc_id")).orderBy(order: _*)
+    shg
+      .withColumn("rk", row_number().over(wDoc).cast("long"))
+      .join(sizes, "doc_id")
+      // ⌈x/y⌉ = (x + y − 1) div y: all exact integers
+      .filter(col("rk") <=
+        col("sz") - expr(s"($thrNum * sz + ${thrDen - 1}) div $thrDen") + 1)
+      .select(col("doc_id"), col("gid"), col("sz"), col("rk"))
+  }
+
+  /** Prefix-filter candidate pairs (id_a = potential contained, id_b =
+    * potential container) over the dictionary-encoded shingles
+    * (doc_id, gid) of [[gramIds]]: each doc's prefix in gid order — gid
+    * IS the (df asc, gram asc) order — joined to the full index.
+    * Complete by pigeonhole ([[containmentPairsPrefix]]); shared by
+    * q135, the delta-cut tier q140 and the sketched estimator q136.
+    */
+  def prefixCandidates(shg: DataFrame, sizes: DataFrame, thrNum: Int,
+                       thrDen: Int): DataFrame =
+    prefixRows(shg, sizes, thrNum, thrDen, col("gid"))
+      .select(col("doc_id").as("id_a"), col("gid"))
+      .join(shg.select(col("doc_id").as("id_b"), col("gid")), "gid")
+      .filter(col("id_a") =!= col("id_b"))
+      .select(col("id_a"), col("id_b")).distinct()
+
+  /** Exact containment verify of candidate pairs (id_a, id_b) over a
+    * gid index `idx` (doc_id, gid) and its sizes (doc_id, sz): the
+    * pair-keyed gid joins count |A∩B|, exact integers gate
+    * |A∩B|·thrDen ≥ |A|·thrNum, and the output is q128's
+    * (contained_id, container_id, cont_bp), id-ordered. Backs q135,
+    * q140 (cut-filtered candidates) and q303 (stored ∪ delta index).
+    *
+    * An array_intersect verify was tried on q303 and REVERTED
+    * (round-15, measured): the candidate relation's dup-heavy sorted
+    * pairs compress so well that AQE's compressed-vs-raw comparison
+    * elected IT as a shuffled-hash BUILD side against the tiny per-doc
+    * array relation — a 512 MB raw build per task at 10× (the
+    * compressed-map-bytes trap, manifesting as a join-side
+    * choice rather than a conversion). The explode form keeps the
+    * candidate relation on the streamed side of every join.
+    */
+  private[graft] def containmentVerify(cand: DataFrame, idx: DataFrame,
+      sizes: DataFrame, thrNum: Int, thrDen: Int): DataFrame =
+    cand
+      .join(idx.select(col("doc_id").as("id_a"), col("gid")), "id_a")
+      .join(idx.select(col("doc_id").as("id_b"), col("gid")), Seq("id_b", "gid"))
       .groupBy(col("id_a"), col("id_b")).agg(count(lit(1)).as("inter"))
-    inter
       .join(sizes.select(col("doc_id").as("id_a"), col("sz").as("sz_a")), "id_a")
       .filter(col("inter") * thrDen >= col("sz_a") * thrNum)
       .select(col("id_a").as("contained_id"), col("id_b").as("container_id"),
         expr("(10000 * inter) div sz_a").as("cont_bp"))
       .orderBy(col("contained_id"), col("container_id"))
-  }
 
-  /** EXACT all-pairs Jaccard via SYMMETRIC (prefix ⋈ prefix) df-ordered
-    * prefix filtering — the round-12 verdict's de-quadratic of the last
-    * two all-pairs plans (q61/q67). Same relation as
-    * [[TextSim.jaccardPairs]] by PROOF, not by recall argument, so the
-    * DuckDB oracles are unchanged:
-    *
-    * Completeness (the classic prefix-filtering lemma, Chaudhuri et
-    * al. / Xiao et al., smallest-common-token form): fix the (df asc,
-    * gram asc) global order; for doc X let L_X = |X| − ⌈t·|X|⌉ + 1.
-    * If J(A,B) ≥ t then |A∩B| ≥ t·|A∪B| ≥ t·max(|A|,|B|), an integer,
-    * so m := |A∩B| ≥ ⌈t·|A|⌉ and ≥ ⌈t·|B|⌉. Let c be the FIRST common
-    * gram in the order: A has ≥ m−1 grams after c, so c sits at
-    * position ≤ |A| − m + 1 ≤ L_A — inside A's prefix; symmetrically
-    * inside B's. So every qualifying pair collides on a gram in BOTH
-    * prefixes, and the exact shingle-join verify reproduces the
-    * all-pairs relation identically.
-    *
-    * Three exact pruning tiers, then an exact verify (the full PPJoin
-    * discipline — Xiao/Wang/Lin/Yu, distributed the Vernica/Carey/Li
-    * way):
-    *
-    *  1. LENGTH: J ≥ t ⇒ min(|A|,|B|)·thrDen ≥ max(|A|,|B|)·thrNum —
-    *     exact integers, pushed into the candidate join condition.
-    *  2. POSITIONAL: per candidate pair count the prefix collisions k
-    *     and the LAST collision's per-doc ranks (ra, rb). Every
-    *     uncounted common gram ranks after the last collision in the
-    *     shared global order (if it ranked before, it would sit inside
-    *     both prefixes and be counted), so
-    *     inter ≤ k + min(|A|−ra, |B|−rb); prune when that bound misses
-    *     the TIGHT overlap requirement α = ⌈(|A|+|B|)·thrNum /
-    *     (thrNum+thrDen)⌉ (from J ≥ t ⇔ inter·(thrNum+thrDen) ≥
-    *     thrNum·(|A|+|B|)). Measured at 10× sf0.1: 26.8M → 6.6M
-    *     candidates, all true pairs kept (they must be — the bound is
-    *     a theorem).
-    *  3. VERIFY: per-doc gram ARRAYS (one row per doc, built once)
-    *     joined to the surviving pairs, exact |A∩B| via
-    *     array_intersect — never the cand×grams explode (measured
-    *     spill-bound at 10×: 6.6M pairs × ~75 grams of per-pair gram
-    *     rows is the old shape's cost, reborn).
-    *
-    * Cost shape: the all-pairs join's Σ_g m_g² over FULL gram
-    * frequencies (quadratic in stop-gram collisions — the measured
-    * 6.7×/9.9× 10×-decade rows) becomes Σ_g pf_g² over PREFIX
-    * frequencies — and the rarest-first order concentrates prefixes
-    * where m_g is small (the one-sided prefix ⋈ full-index form used
-    * by the asymmetric containment tiers keeps a Σ pf_g·m_g term and
-    * measured pathologically at 10×; the symmetric lemma above is
-    * exactly what licenses pruning BOTH sides for Jaccard, which
-    * containment semantics cannot). Threshold is exact-rational
-    * (thrNum/thrDen); the verify's double compare uses
-    * thrNum.toDouble/thrDen, the same IEEE value as the literal the
-    * old tier passed, and inter/(n1+n2−inter) is the identical
-    * long/long→double division, so the rounded digit can never
-    * disagree with [[TextSim.jaccardPairs]].
-    */
   /** The one int-gid dictionary rank: `df`'s columns plus `gid` =
     * `offset` + the 1-based row number over `order` (a unique total
     * order). Ranking rides ScalableRank (range-partitioned, never a
@@ -513,14 +449,7 @@ object Dedup {
     */
   private[graft] def jaccardPrefixCandidates(shg: DataFrame, sizes: DataFrame,
       thrNum: Int, thrDen: Int): DataFrame = {
-    val wDoc = Window.partitionBy(col("doc_id")).orderBy(col("gid"))
-    val prefix = shg
-      .withColumn("rk", row_number().over(wDoc).cast("long"))
-      .join(sizes, "doc_id")
-      // L = sz − ceil(sz·thrNum/thrDen) + 1, all exact integers
-      .filter(col("rk") <=
-        col("sz") - expr(s"($thrNum * sz + ${thrDen - 1}) div $thrDen") + 1)
-      .select(col("doc_id"), col("gid"), col("sz"), col("rk"))
+    val prefix = prefixRows(shg, sizes, thrNum, thrDen, col("gid"))
     prefix
       .select(col("doc_id").as("id1"), col("gid"),
         col("sz").as("n1"), col("rk").as("rk1"))
@@ -540,6 +469,61 @@ object Dedup {
       .select(col("id1"), col("id2"), col("n1"), col("n2"))
   }
 
+  /** EXACT all-pairs Jaccard via SYMMETRIC (prefix ⋈ prefix) df-ordered
+    * prefix filtering — the round-12 de-quadratic of the last
+    * two all-pairs plans (q61/q67). Same relation as
+    * [[TextSim.jaccardPairs]] by PROOF, not by recall argument, so the
+    * DuckDB oracles are unchanged:
+    *
+    * Completeness (the classic prefix-filtering lemma, Chaudhuri et
+    * al. / Xiao et al., smallest-common-token form): fix the (df asc,
+    * gram asc) global order; for doc X let L_X = |X| − ⌈t·|X|⌉ + 1.
+    * If J(A,B) ≥ t then |A∩B| ≥ t·|A∪B| ≥ t·max(|A|,|B|), an integer,
+    * so m := |A∩B| ≥ ⌈t·|A|⌉ and ≥ ⌈t·|B|⌉. Let c be the FIRST common
+    * gram in the order: A has ≥ m−1 grams after c, so c sits at
+    * position ≤ |A| − m + 1 ≤ L_A — inside A's prefix; symmetrically
+    * inside B's. So every qualifying pair collides on a gram in BOTH
+    * prefixes, and the exact shingle-join verify reproduces the
+    * all-pairs relation identically.
+    *
+    * Three exact pruning tiers, then an exact verify (the full PPJoin
+    * discipline — Xiao/Wang/Lin/Yu, distributed the Vernica/Carey/Li
+    * way):
+    *
+    *  1. LENGTH: J ≥ t ⇒ min(|A|,|B|)·thrDen ≥ max(|A|,|B|)·thrNum —
+    *     exact integers, pushed into the candidate join condition.
+    *  2. POSITIONAL: per candidate pair count the prefix collisions k
+    *     and the LAST collision's per-doc ranks (ra, rb). Every
+    *     uncounted common gram ranks after the last collision in the
+    *     shared global order (if it ranked before, it would sit inside
+    *     both prefixes and be counted), so
+    *     inter ≤ k + min(|A|−ra, |B|−rb); prune when that bound misses
+    *     the TIGHT overlap requirement α = ⌈(|A|+|B|)·thrNum /
+    *     (thrNum+thrDen)⌉ (from J ≥ t ⇔ inter·(thrNum+thrDen) ≥
+    *     thrNum·(|A|+|B|)). Measured at 10× sf0.1: 26.8M → 6.6M
+    *     candidates, all true pairs kept (they must be — the bound is
+    *     a theorem).
+    *  3. VERIFY: per-doc gram ARRAYS (one row per doc, built once)
+    *     joined to the surviving pairs, exact |A∩B| via
+    *     array_intersect — never the cand×grams explode (measured
+    *     spill-bound at 10×: 6.6M pairs × ~75 grams of per-pair gram
+    *     rows is the old shape's cost, reborn).
+    *
+    * Cost shape: the all-pairs join's Σ_g m_g² over FULL gram
+    * frequencies (quadratic in stop-gram collisions — the measured
+    * 6.7×/9.9× 10×-decade rows) becomes Σ_g pf_g² over PREFIX
+    * frequencies — and the rarest-first order concentrates prefixes
+    * where m_g is small (the one-sided prefix ⋈ full-index form used
+    * by the asymmetric containment tiers keeps a Σ pf_g·m_g term and
+    * measured pathologically at 10×; the symmetric lemma above is
+    * exactly what licenses pruning BOTH sides for Jaccard, which
+    * containment semantics cannot). Threshold is exact-rational
+    * (thrNum/thrDen); the verify's double compare uses
+    * thrNum.toDouble/thrDen, the same IEEE value as the literal the
+    * old tier passed, and inter/(n1+n2−inter) is the identical
+    * long/long→double division, so the rounded digit can never
+    * disagree with [[TextSim.jaccardPairs]].
+    */
   def jaccardPairsPrefix(sh: DataFrame, thrNum: Int, thrDen: Int): DataFrame = {
     val sizes = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("sz"))
     val shg = gramIds(sh)
@@ -577,7 +561,7 @@ object Dedup {
     * Why this beats exact verify when containers are BOOKS: q135's
     * verify joins materialize |A|+|B| gram rows per pair — a 1e6-gram
     * container explodes every pair it appears in. Here B's grams are
-    * only the build side of a hash join keyed on (id_b, gram): probe
+    * only the build side of a hash join keyed on (id_b, gid): probe
     * volume is |cand|·k rows regardless of |B|. Candidates still come
     * from [[prefixCandidates]] (complete by pigeonhole), so the only
     * approximation is the estimate itself; the gate sits `gateBp`
@@ -590,17 +574,20 @@ object Dedup {
                         gateBp: Int): DataFrame = {
     val sh = TextSim.shingles(docs, n)
     val sizes = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("sz"))
+    // encoded once, keeping g beside gid: the sketch hashes the gram
+    // string, every join keys on gid
+    val enc = sh.join(gramVocab(sh).select(col("g"), col("gid")), "g")
+    val shg = enc.select(col("doc_id"), col("gid"))
     val wDoc = Window.partitionBy(col("doc_id"))
       .orderBy(col("h"), col("g"))
-    val sketch = sh
+    val sketch = enc
       .withColumn("h", conv(substring(md5(col("g")), 1, 15), 16, 10).cast("long"))
       .withColumn("hr", row_number().over(wDoc))
       .filter(col("hr") <= k)
-      .select(col("doc_id").as("id_a"), col("g"))
-    val cand = prefixCandidates(sh, sizes, 9, 10)
-    val m = cand
+      .select(col("doc_id").as("id_a"), col("gid"))
+    val m = prefixCandidates(shg, sizes, 9, 10)
       .join(sketch, "id_a")
-      .join(sh.select(col("doc_id").as("id_b"), col("g")), Seq("id_b", "g"))
+      .join(shg.select(col("doc_id").as("id_b"), col("gid")), Seq("id_b", "gid"))
       .groupBy(col("id_a"), col("id_b")).agg(count(lit(1)).as("m"))
     m
       .join(sizes.select(col("doc_id").as("id_a"), col("sz").as("sz_a")), "id_a")
@@ -942,25 +929,15 @@ object Dedup {
       val cutDf = docs.agg(expr("(4 * max(doc_id)) div 5").as("cut"))
       val sh = TextSim.shingles(docs, 3)
       val sizes = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("sz"))
-      // Round-17 (guide §2.3): dictionary-encoded like q135/q303 —
-      // identical candidates (gid rank = (gdf, g) order), bijection-
-      // invariant verify counts, same oracle. Measured (10×, cpus=8,
-      // fresh JVM, min of 2, same day): 149.0 → 95.2 s.
+      // Dictionary-encoded like q135/q303 (round-17).
+      // Measured (10×, cpus=8, fresh JVM, min of 2, same day):
+      // 149.0 → 95.2 s.
       val shg = gramIds(sh)
-      val cand = prefixCandidatesId(shg, sizes, 9, 10)
+      val cand = prefixCandidates(shg, sizes, 9, 10)
         .crossJoin(broadcast(cutDf))
         .filter(col("id_a") > col("cut") || col("id_b") > col("cut"))
         .drop("cut")
-      val inter = cand
-        .join(shg.select(col("doc_id").as("id_a"), col("gid")), "id_a")
-        .join(shg.select(col("doc_id").as("id_b"), col("gid")), Seq("id_b", "gid"))
-        .groupBy(col("id_a"), col("id_b")).agg(count(lit(1)).as("inter"))
-      inter
-        .join(sizes.select(col("doc_id").as("id_a"), col("sz").as("sz_a")), "id_a")
-        .filter(col("inter") * 10 >= col("sz_a") * 9)
-        .select(col("id_a").as("contained_id"), col("id_b").as("container_id"),
-          expr("(10000 * inter) div sz_a").as("cont_bp"))
-        .orderBy(col("contained_id"), col("container_id"))
+      containmentVerify(cand, shg, sizes, 9, 10)
     }),
 
     // q140's PRODUCTION shape (round-15, the last member of the
@@ -1046,12 +1023,7 @@ object Dedup {
         .select(col("doc_id"), col("gid"), col("gdf"))
       val deltaIdx = shDeltaId.select(col("doc_id"), col("gid"))
       val allIdx = gidsOld.unionByName(deltaIdx)
-      val wDoc = Window.partitionBy(col("doc_id")).orderBy(col("gdf"), col("gid"))
-      val pfDelta = shDeltaId
-        .withColumn("rk", row_number().over(wDoc).cast("long"))
-        .join(szDelta, "doc_id")
-        .filter(col("rk") <= col("sz") - expr("(9 * sz + 9) div 10") + 1)
-        .select(col("doc_id"), col("gid"))
+      val pfDelta = prefixRows(shDeltaId, szDelta, 9, 10, col("gdf"), col("gid"))
       val candA = pfDelta.select(col("doc_id").as("id_a"), col("gid"))
         .join(allIdx.select(col("doc_id").as("id_b"), col("gid")), "gid")
       val candB = pfOld.select(col("doc_id").as("id_a"), col("gid"))
@@ -1059,28 +1031,7 @@ object Dedup {
       val cand = candA.unionByName(candB)
         .filter(col("id_a") =!= col("id_b"))
         .select(col("id_a"), col("id_b")).distinct()
-      val szAll = szOld.unionByName(szDelta)
-      // verify in q140's shape (pair-keyed gram joins + count), over
-      // gids. An array_intersect variant was tried and REVERTED
-      // (round-15, measured): the candidate relation's dup-heavy
-      // sorted pairs compress so well that AQE's compressed-vs-raw
-      // comparison elected IT as a shuffled-hash BUILD side against
-      // the tiny per-doc array relation — a 512 MB raw build per task
-      // at 10× (the CLAUDE.md compressed-map-bytes trap, manifesting
-      // as a join-side choice rather than a conversion). The explode
-      // form keeps the candidate relation on the streamed side of
-      // every join, matching the inline q140's measured decade
-      // behavior.
-      val inter = cand
-        .join(allIdx.select(col("doc_id").as("id_a"), col("gid")), "id_a")
-        .join(allIdx.select(col("doc_id").as("id_b"), col("gid")), Seq("id_b", "gid"))
-        .groupBy(col("id_a"), col("id_b")).agg(count(lit(1)).as("inter"))
-      inter
-        .join(szAll.select(col("doc_id").as("id_a"), col("sz").as("sz_a")), "id_a")
-        .filter(col("inter") * 10 >= col("sz_a") * 9)
-        .select(col("id_a").as("contained_id"), col("id_b").as("container_id"),
-          expr("(10000 * inter) div sz_a").as("cont_bp"))
-        .orderBy(col("contained_id"), col("container_id"))
+      containmentVerify(cand, allIdx, szOld.unionByName(szDelta), 9, 10)
     }),
 
     // Cross-source leakage matrix: how many verified near-dup pairs

@@ -131,4 +131,38 @@ class CliSpec extends SparkSpec {
     val parts = new java.io.File(out).listFiles.count(_.getName.startsWith("part-"))
     assert(parts === 1)
   }
+
+  test("a failing query exits the CLI process non-zero and leaves no output") {
+    // The whole process, as a shell sees it: the child JVM runs main
+    // on the test classpath against a fresh on-disk Derby database.
+    // User APP owns the one schema a fresh database has, so the error
+    // is the missing table (42X05), not a missing schema (42Y07).
+    import scala.jdk.CollectionConverters._
+    val tmp = java.nio.file.Files.createTempDirectory("graft-cli-fail")
+    val out = tmp.resolve("out").toFile
+    val stderr = tmp.resolve("stderr.txt").toFile
+    val javaBin = new java.io.File(
+      new java.io.File(sys.props("java.home"), "bin"), "java").getAbsolutePath
+    val jvmArgs = java.lang.management.ManagementFactory
+      .getRuntimeMXBean.getInputArguments.asScala.toSeq
+    val cmd = Seq(javaBin) ++ jvmArgs ++ Seq("-Xmx1g",
+      "-cp", sys.props("java.class.path"), "graft.Mysql2ParquetMain",
+      s"--url=jdbc:derby:${tmp.resolve("db")};create=true", "--user=APP", "--password=pw",
+      "--database=db", "--query=SELECT * FROM no_such_table", s"--parquet=$out")
+    val pb = new ProcessBuilder(cmd.asJava)
+      .directory(tmp.toFile)
+      .redirectOutput(ProcessBuilder.Redirect.DISCARD)
+      .redirectError(stderr)
+    pb.environment().put("SPARK_MASTER", "local[1]")
+    val proc = pb.start()
+    val exited = proc.waitFor(180, java.util.concurrent.TimeUnit.SECONDS)
+    if (!exited) proc.destroyForcibly().waitFor()
+    assert(exited, "the CLI did not exit within 180 s")
+    assert(proc.exitValue() !== 0)
+    val err = new String(java.nio.file.Files.readAllBytes(stderr.toPath))
+    assert(err.contains("42X05"), s"no Derby SQLState 42X05 on stderr:\n$err")
+    val left = Option(out.list()).toSeq.flatten
+      .filter(f => f == "_SUCCESS" || f.startsWith("part-"))
+    assert(left.isEmpty, s"a failed export left $left in $out")
+  }
 }

@@ -612,9 +612,12 @@ class DedupSpec extends SparkSpec {
     // output must STILL equal q67's from-scratch recompute row for
     // row, and the state root must carry all three relations.
     val root = new java.io.File(Dedup.ensureCanonState(spark, sf001))
-    Seq("meta", "labels", "bands", "grams", "gsizes", "gprefix").foreach(dir =>
+    Seq("meta", "labels", "bands", "gsizes", "vocab", "vmeta", "gramsid",
+      "gprefix").foreach(dir =>
       assert(new java.io.File(root, dir).isDirectory,
         s"state root missing $dir/"))
+    assert(!new java.io.File(root, "grams").exists,
+      "no serve reads a string grams/ relation, so the build writes none")
     val served = Dedup.queries("q299_canonical_serve_stored")(spark, sf001)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val full = Dedup.queries("q67_neardup_components")(spark, sf001)
