@@ -566,109 +566,145 @@ object VectorOps {
     }
   }
 
-  /** The IVFADC serving tail shared by the corpus-probe (q263) and
-    * external-query (q286) tiers — nprobe=4 probe against the stored
-    * centroids, DPP-pruned candidate fetch from the cell-partitioned
-    * codes, broadcast ADC tables from the stored RESIDUAL codebooks
-    * (round-13: the production tiers now rank by the residual codes —
-    * FAISS's by_residual=true serving path; q260/q261 keep the
-    * raw-encoding ablation), exact re-rank of the ≤50 shortlist by
-    * id-fetch. The residual dq tables are per (query, PROBED CELL) —
-    * the query's residual wrt each probed centroid — |Q|·nprobe·16
-    * rows per subspace, still broadcast (the q264 shape).
-    *
-    * `q0` carries (q_id, qv, qn) and must be CHECKPOINTED by the
-    * caller (it is referenced from the probes, the 4 dq tables, the
-    * re-rank, and the DPP subqueries the codes scans host). probes
-    * itself must stay a LAZY plan: its pr <= 4 filter is the
-    * selective predicate Spark's partition-pruning rule looks for on
-    * the filtering side — checkpointing it into an opaque RDD kills
-    * the dynamic pruning (measured: the codes scan reverts to reading
-    * every cell). `selfExclude` drops the query's own corpus row —
-    * meaningless for external queries, which have none.
-    *
-    * `opq = true` (q294) serves the OPQ-rotated residual encoding:
-    * the stored rotation (rot/) rotates the query's per-probed-cell
-    * residual through ONE extra graft_matvec before the dq slices,
-    * the lookup tables build from ocodebooks/, and the ADC joins key
-    * on o0..o3 — everything else (probe ranking, DPP-pruned cell
-    * reads, 50-shortlist exact re-rank) is byte-for-byte the plain
-    * path.
+  /** The corpus query relation of the stored-index tiers: rows
+    * vec_id < 5 as (q_id, qv, qn), CHECKPOINTED — it is referenced
+    * from the probes, the lookup tables, the re-rank and the DPP
+    * subqueries the codes scans host, so ONE embeddings probe-read
+    * serves every use.
     */
-  private def ivfadcServe(s: SparkSession, d: String, q0: DataFrame,
-                          selfExclude: Boolean, opq: Boolean = false): DataFrame = {
+  private def corpusQueries(s: SparkSession, d: String): DataFrame =
+    T.embeddings(s, d).filter(col("vec_id") < 5)
+      .select(col("vec_id").as("q_id"), col("embedding").as("qv"))
+      .withColumn("qn", sqrt(expr("graft_dot(qv, qv)")))
+      .localCheckpoint(true)
+
+  /** The IVF probe ranking: each query's nprobe=4 nearest stored
+    * centroids by cosine, ties broken on cell. `q0` carries
+    * (q_id, qv, qn). The result stays a LAZY plan: on the side that
+    * feeds the codes scan, projected to (q_id, cell), its pr <= 4
+    * filter is the selective predicate Spark's partition-pruning rule
+    * looks for — checkpointing it into an opaque RDD kills the
+    * dynamic pruning (measured: the codes scan reverts to reading
+    * every cell).
+    */
+  private def probeCells(q0: DataFrame, cents: DataFrame): DataFrame =
+    q0.crossJoin(broadcast(cents))
+      .withColumn("ccos", dot("qv", "cv") / (col("qn") * col("cn")))
+      .withColumn("pr", row_number().over(
+        Window.partitionBy(col("q_id")).orderBy(col("ccos").desc, col("cell"))))
+      .filter(col("pr") <= 4)
+
+  /** The PQ_M per-subspace ADC lookup tables, each broadcast: for
+    * every `src` row (keyed by `keys`), the squared L2 distance from
+    * the subspace slice of `qExpr` to each codeword of `cbs`, as
+    * (keys…, <enc><sb>, d<sb>) — |keys|·16 rows per subspace however
+    * large the corpus.
+    */
+  private def adcTables(src: DataFrame, keys: Seq[String], qExpr: String,
+                        cbs: DataFrame, enc: String): Seq[DataFrame] =
+    (0 until PQ_M).map { sb =>
+      broadcast(src
+        .select(keys.map(col) :+ expr(s"slice($qExpr, ${PQ_D * sb + 1}, $PQ_D)").as("qs"): _*)
+        .crossJoin(broadcast(cbs.filter(col("sub") === sb)
+          .select(col("cell").cast("byte").as(s"$enc$sb"), col("cv").as("cw"))))
+        .select(keys.map(col) ++ Seq(col(s"$enc$sb"),
+          expr("graft_dot(qs, qs) - 2 * graft_dot(qs, cw) + graft_dot(cw, cw)")
+            .as(s"d$sb")): _*))
+    }
+
+  /** The ADC join: each candidate row picks its table row per
+    * subspace (on the `keys` it carries plus its code) and scores the
+    * FIXED-ORDER d0+d1+d2+d3 sum, never a per-pair float reduction
+    * whose order could drift — so candidates with equal codes read
+    * identical table rows and tie exactly. A full-corpus scan carries
+    * no q_id: its first table join supplies it. Output
+    * (q_id, id2, adc).
+    */
+  private def adcScores(cand: DataFrame, dqs: Seq[DataFrame], keys: Seq[String],
+                        enc: String): DataFrame =
+    dqs.zipWithIndex.foldLeft(cand) { case (acc, (dq, sb)) =>
+      acc.join(dq, keys.filter(k => acc.columns.contains(k)) :+ s"$enc$sb")
+    }.select(col("q_id"), col("vec_id").as("id2"), expr("d0 + d1 + d2 + d3").as("adc"))
+
+  /** The IVFADC candidates behind every stored-index tier:
+    * the nprobe=4 probe against the stored centroids, the DPP-pruned
+    * fetch from the cell-partitioned codes, and the ADC scores over
+    * the probed cells, (q_id, id2, adc). `q0` is a [[corpusQueries]]-
+    * shaped relation (CHECKPOINTED by the caller). `enc` picks the
+    * stored encoding the ADC reads — the code columns and codebooks:
+    *  - "c": raw codes/codebooks/, tables per query from qv (the
+    *    q261 ablation);
+    *  - "r": residual r0..r3/rcodebooks/ (FAISS's by_residual=true
+    *    serving path), tables per (query, PROBED CELL) from the
+    *    query's residual qv − cv wrt that centroid;
+    *  - "o": OPQ-rotated residual o0..o3/ocodebooks/ — the stored
+    *    rotation (rot/) rotates that residual through ONE extra
+    *    graft_matvec, |Q|·nprobe matvecs, never a corpus-sized one.
+    * `selfExclude` drops the query's own corpus row — meaningless for
+    * external queries, which have none.
+    *
+    * Also returns the per-query candidate count (q_id, n_cand) as a
+    * partial-aggregable groupBy(q_id), never count(1) OVER
+    * (PARTITION BY q_id): that full-frame window escapes the
+    * WindowGroupLimit prune and funnels each query's ENTIRE candidate
+    * set through one task (the round-11 verdict's scale finding),
+    * while the groupBy combines map-side. It counts the fetched
+    * candidates before the ADC join, which drops none (every code has
+    * a row in every table). Both consumers of the candidate fetch
+    * keep the lazy probe filter, so both codes scans stay DPP-pruned
+    * to the probed cells (plan-pinned; a checkpoint here would kill
+    * the pruning).
+    */
+  private def ivfadcCandidates(s: SparkSession, d: String, q0: DataFrame,
+                               selfExclude: Boolean, enc: String): (DataFrame, DataFrame) = {
     val root = ensureIvfadcIndex(s, d)
-    val centsStored = s.read.parquet(s"$root/centroids")
-    val rcbs = s.read.parquet(
-      s"$root/${if (opq) "ocodebooks" else "rcodebooks"}")
-    val codes = s.read.parquet(s"$root/codes")
-    val base = T.embeddings(s, d).select(col("vec_id"), col("embedding").as("v"))
-    val wProbe = Window.partitionBy(col("q_id")).orderBy(col("ccos").desc, col("cell"))
-    val probes = broadcast(q0.crossJoin(broadcast(centsStored))
-      .withColumn("ccos", dot("qv", "cv") / (col("qn") * col("cn")))
-      .withColumn("pr", row_number().over(wProbe))
-      .filter(col("pr") <= 4)
-      .select(col("q_id"), col("cell")))
-    // the probe relation that also carries the query vector and the
-    // probed centroid — feeds ONLY the broadcast residual dq tables
-    // (kept separate from `probes` so the DPP-filtering side stays
-    // the minimal (q_id, cell) projection)
-    val probesC0 = q0.crossJoin(broadcast(centsStored))
-      .withColumn("ccos", dot("qv", "cv") / (col("qn") * col("cn")))
-      .withColumn("pr", row_number().over(wProbe))
-      .filter(col("pr") <= 4)
-      .select(col("q_id"), col("qv"), col("cell"), col("cv"))
-    // OPQ path: the stored rotation flattens to the row-major dyadic
-    // matrix (the q288 idiom) and rides the broadcast probe relation —
-    // |Q|·nprobe matvecs total, never a corpus-sized rotation.
-    val probesC =
-      if (!opq) probesC0
-      else probesC0.crossJoin(broadcast(s.read.parquet(s"$root/rot")
-        .agg(array_sort(collect_list(struct(col("i"), col("j"), col("q")))).as("rs"))
-        .select(expr(s"transform(rs, x -> CAST(x.q AS DOUBLE) / $PCA_SCALE.0)")
-          .as("rflat"))))
-    val qrExpr = if (opq) "graft_matvec(rflat, graft_sub(qv, cv))"
-                 else "graft_sub(qv, cv)"
-    val cp = if (opq) "o" else "r"
-    val joined = codes.join(probes, Seq("cell"))
+    val cents = s.read.parquet(s"$root/centroids")
+    val cbs = s.read.parquet(s"$root/${if (enc == "c") "" else enc}codebooks")
+    // the DPP-filtering side stays the minimal (q_id, cell) projection;
+    // the residual tables read a separate instance that also carries
+    // the query vector and the probed centroid
+    val probes = broadcast(probeCells(q0, cents).select(col("q_id"), col("cell")))
+    val probesC = probeCells(q0, cents).select(col("q_id"), col("qv"), col("cell"), col("cv"))
+    // the relation the lookup tables read, its keys, the query vector
+    val (src, keys, qExpr) = enc match {
+      case "c" => (q0, Seq("q_id"), "qv")
+      case "r" => (probesC, Seq("q_id", "cell"), "graft_sub(qv, cv)")
+      case "o" =>
+        // the stored rotation flattens to the row-major dyadic matrix
+        // (the q288 idiom) and rides the broadcast probe relation
+        val rflat = s.read.parquet(s"$root/rot")
+          .agg(array_sort(collect_list(struct(col("i"), col("j"), col("q")))).as("rs"))
+          .select(expr(s"transform(rs, x -> CAST(x.q AS DOUBLE) / $PCA_SCALE.0)")
+            .as("rflat"))
+        (probesC.crossJoin(broadcast(rflat)), Seq("q_id", "cell"),
+          "graft_matvec(rflat, graft_sub(qv, cv))")
+    }
+    // ONE cell-joined scan carries vec_id AND the codes — a separate
+    // codes read joined on vec_id would scan every cell partition
+    val joined = s.read.parquet(s"$root/codes").join(probes, Seq("cell"))
     val cand0 = if (selfExclude) joined.filter(col("q_id") =!= col("vec_id"))
                 else joined
-    val dqs = (0 until PQ_M).map { sb =>
-      broadcast(probesC
-        .select(col("q_id"), col("cell"),
-          expr(s"slice($qrExpr, ${PQ_D * sb + 1}, $PQ_D)").as("qs"))
-        .crossJoin(broadcast(rcbs.filter(col("sub") === sb)
-          .select(col("cell").cast("byte").as(s"$cp$sb"), col("cv").as("cw"))))
-        .select(col("q_id"), col("cell"), col(s"$cp$sb"),
-          expr("graft_dot(qs, qs) - 2 * graft_dot(qs, cw) + graft_dot(cw, cw)")
-            .as(s"d$sb")))
-    }
-    // n_cand is a partial-aggregable groupBy(q_id).count joined back
-    // BROADCAST (round-12, the round-11 verdict's scale finding: the
-    // old count(1) OVER (PARTITION BY q_id) was a full-frame window —
-    // deliberately outside the WindowGroupLimit prune — that funneled
-    // each query's ENTIRE candidate set through one task; the groupBy
-    // combines map-side, so no task ever holds a query's candidates).
-    // Output is bit-identical: both count the same post-ADC-join rows.
-    // The candidate relation is consumed twice (count + rank) — both
-    // branches keep the lazy `probes` filter, so both codes scans stay
-    // DPP-pruned to the probed cells (plan-pinned; a checkpoint here
-    // would kill the pruning, the q263 localCheckpoint rule).
+    (adcScores(cand0, adcTables(src, keys, qExpr, cbs, enc), keys, enc),
+     cand0.groupBy(col("q_id")).agg(count(lit(1)).as("n_cand")))
+  }
+
+  /** The IVFADC serving tier (q263 corpus probes, q286 external
+    * queries, q294 on the OPQ-rotated residual store): the
+    * [[ivfadcCandidates]] scores, the 50-deep ADC shortlist, its exact
+    * re-rank by id-fetch (≤50 vectors per query) and the top-5
+    * readout with the per-query scan count.
+    */
+  private def ivfadcServe(s: SparkSession, d: String, q0: DataFrame,
+                          selfExclude: Boolean, enc: String): DataFrame = {
+    val (candAdc, nCand) = ivfadcCandidates(s, d, q0, selfExclude, enc)
     val wAdc = Window.partitionBy(col("q_id")).orderBy(col("adc"), col("id2"))
-    val candAdc = cand0.join(dqs(0), Seq("q_id", "cell", s"${cp}0"))
-      .join(dqs(1), Seq("q_id", "cell", s"${cp}1"))
-      .join(dqs(2), Seq("q_id", "cell", s"${cp}2"))
-      .join(dqs(3), Seq("q_id", "cell", s"${cp}3"))
-      .select(col("q_id"), col("vec_id").as("id2"),
-        expr("d0 + d1 + d2 + d3").as("adc"))
-    val nCand = candAdc.groupBy(col("q_id")).agg(count(lit(1)).as("n_cand"))
     val short50 = candAdc
       .withColumn("rn", row_number().over(wAdc))
       .filter(col("rn") <= 50)
       .join(broadcast(nCand), Seq("q_id"))
       .select(col("q_id"), col("id2"), col("n_cand"))
     val qq = broadcast(q0.withColumn("qq", expr("graft_dot(qv, qv)")))
-    val c = base.select(col("vec_id").as("id2"), col("v").as("v2"))
+    val c = T.embeddings(s, d).select(col("vec_id").as("id2"), col("embedding").as("v2"))
     val wEx = Window.partitionBy(col("q_id")).orderBy(col("d2"), col("id2"))
     c.join(broadcast(short50.join(qq, Seq("q_id"))), Seq("id2"))
       .withColumn("d2",
@@ -679,6 +715,62 @@ object VectorOps {
               col("id2").as("neighbor_id"), round(col("d2"), 4).as("l2_4"))
       .orderBy(col("q_id"), col("rn"))
   }
+
+  /** The recall tail of every ADC audit (q260, q261, q264, q266,
+    * q288, q295): rank the scored candidates (q_id, id2, adc) by
+    * (adc, id2), keep the ADC top-5 and the 50-shortlist, re-rank the
+    * shortlist exactly in RAW space, and count both tiers' overlap
+    * with the exact top-5 of the corpus queries vec_id < 5 (self
+    * excluded). The IVF tiers' per-query candidate count `nCand`
+    * (q_id, n_cand), when given, leads the summary.
+    */
+  private def adcRecall(s: SparkSession, d: String, cand: DataFrame,
+                        nCand: Option[DataFrame] = None): DataFrame = {
+    val wAdc = Window.partitionBy(col("q_id")).orderBy(col("adc"), col("id2"))
+    val ranked = cand.withColumn("rn", row_number().over(wAdc))
+    val topAdc = ranked.filter(col("rn") <= 5).select(col("q_id"), col("id2"))
+    val short50 = ranked.filter(col("rn") <= 50).select(col("q_id"), col("id2"))
+    val ef = T.embeddings(s, d).select(col("vec_id"), col("embedding").as("v"))
+      .withColumn("sq", expr("graft_dot(v, v)"))
+    val q = broadcast(ef.filter(col("vec_id") < 5)
+      .select(col("vec_id").as("q_id"), col("v").as("qv"), col("sq").as("qq")))
+    val c = ef.select(col("vec_id").as("id2"), col("v").as("v2"), col("sq").as("s2"))
+    val wEx = Window.partitionBy(col("q_id")).orderBy(col("d2"), col("id2"))
+    val topEx = q.join(c, col("q_id") =!= col("id2"))
+      .withColumn("d2", expr("qq - 2 * graft_dot(qv, v2) + s2"))
+      .withColumn("rn", row_number().over(wEx))
+      .filter(col("rn") <= 5)
+      .select(col("q_id").as("fq"), col("id2").as("fid"))
+    // two-stage tier: exact distances on the 50-deep shortlist only
+    val rerank = c.join(broadcast(short50.join(broadcast(q), Seq("q_id"))),
+        Seq("id2"))
+      .withColumn("d2", expr("qq - 2 * graft_dot(qv, v2) + s2"))
+      .withColumn("rn", row_number().over(wEx))
+      .filter(col("rn") <= 5).select(col("q_id"), col("id2"))
+    def overlap(top: DataFrame, n: String) =
+      top.join(broadcast(topEx),
+          col("q_id") === col("fq") && col("id2") === col("fid"), "left")
+        .groupBy(col("q_id")).agg(count(col("fid")).as(n))
+    val ovAdc = overlap(topAdc, "n_overlap_adc")
+    nCand.fold(ovAdc)(_.join(ovAdc, Seq("q_id")))
+      .join(overlap(rerank, "n_overlap_rerank"), Seq("q_id"))
+      .select(Seq(col("q_id")) ++ nCand.map(_ => col("n_cand")) ++ Seq(
+        col("n_overlap_adc"), (col("n_overlap_adc") * 2000).as("recall_adc_bp"),
+        col("n_overlap_rerank"),
+        (col("n_overlap_rerank") * 2000).as("recall_rerank_bp")): _*)
+      .orderBy(col("q_id"))
+  }
+
+  /** The full-corpus PQ recall audit (q260 over the stored raw
+    * encoding, q266/q288 over codes trained on a rotated corpus):
+    * per-query raw lookup tables from `q0` (q_id, qv), ADC over every
+    * code row of `codes` (self excluded), then the [[adcRecall]] tail.
+    */
+  private def pqScanRecall(s: SparkSession, d: String, q0: DataFrame,
+                           codes: DataFrame, cbs: DataFrame): DataFrame =
+    adcRecall(s, d,
+      adcScores(codes, adcTables(q0, Seq("q_id"), "qv", cbs, "c"), Seq("q_id"), "c")
+        .filter(col("q_id") =!= col("id2")))
 
   /** Newton–Schulz iterations for the OPQ Procrustes step (q287) —
     * fixed count. With the ε·R0 completion lifting σ_min to ~0.06
@@ -844,60 +936,10 @@ object VectorOps {
     * whatever the rotation is).
     */
   private def adcRecallOverRotated(s: SparkSession, d: String, er: DataFrame): DataFrame = {
-    val slices = pqSubSlices(er)
     val erT = trainSample(er, T.embeddings(s, d).count(), PQ_K)
     val cbF = kmeansCentroidsFused(erT, pqSubSlices(erT), k = PQ_K, iters = PQ_ITERS)
-    val codes = pqCodesFused(slices, cbF)
-    val q0 = er.filter(col("vec_id") < 5)
-      .select(col("vec_id").as("q_id"), col("v").as("qv0"))
-    val dqs = (0 until PQ_M).map { sb =>
-      broadcast(q0
-        .select(col("q_id"),
-          expr(s"slice(qv0, ${PQ_D * sb + 1}, $PQ_D)").as("qs"))
-        .crossJoin(broadcast(cbF.filter(col("sub") === sb)
-          .select(col("cell").cast("byte").as(s"c$sb"), col("cv"))))
-        .select(col("q_id"), col(s"c$sb"),
-          expr("graft_dot(qs, qs) - 2 * graft_dot(qs, cv) + graft_dot(cv, cv)")
-            .as(s"d$sb")))
-    }
-    val cand = codes.join(dqs(0), Seq("c0"))
-      .join(dqs(1), Seq("q_id", "c1"))
-      .join(dqs(2), Seq("q_id", "c2"))
-      .join(dqs(3), Seq("q_id", "c3"))
-      .filter(col("q_id") =!= col("vec_id"))
-      .select(col("q_id"), col("vec_id").as("id2"),
-        expr("d0 + d1 + d2 + d3").as("adc"))
-    val wAdc = Window.partitionBy(col("q_id")).orderBy(col("adc"), col("id2"))
-    val ranked = cand.withColumn("rn", row_number().over(wAdc))
-    val topAdc = ranked.filter(col("rn") <= 5).select(col("q_id"), col("id2"))
-    val short50 = ranked.filter(col("rn") <= 50).select(col("q_id"), col("id2"))
-    val base = T.embeddings(s, d).select(col("vec_id"), col("embedding").as("v"))
-    val ef = base.withColumn("sq", expr("graft_dot(v, v)"))
-    val q = broadcast(ef.filter(col("vec_id") < 5)
-      .select(col("vec_id").as("q_id"), col("v").as("qv"), col("sq").as("qq")))
-    val c = ef.select(col("vec_id").as("id2"), col("v").as("v2"), col("sq").as("s2"))
-    val wEx = Window.partitionBy(col("q_id")).orderBy(col("d2"), col("id2"))
-    val topEx = q.join(c, col("q_id") =!= col("id2"))
-      .withColumn("d2", expr("qq - 2 * graft_dot(qv, v2) + s2"))
-      .withColumn("rn", row_number().over(wEx))
-      .filter(col("rn") <= 5)
-      .select(col("q_id").as("fq"), col("id2").as("fid"))
-    val rerank = c.join(broadcast(short50.join(broadcast(q), Seq("q_id"))),
-        Seq("id2"))
-      .withColumn("d2", expr("qq - 2 * graft_dot(qv, v2) + s2"))
-      .withColumn("rn", row_number().over(wEx))
-      .filter(col("rn") <= 5).select(col("q_id"), col("id2"))
-    def overlap(top: DataFrame, n: String) =
-      top.join(broadcast(topEx),
-          col("q_id") === col("fq") && col("id2") === col("fid"), "left")
-        .groupBy(col("q_id")).agg(count(col("fid")).as(n))
-    overlap(topAdc, "n_overlap_adc")
-      .join(overlap(rerank, "n_overlap_rerank"), Seq("q_id"))
-      .select(col("q_id"),
-        col("n_overlap_adc"), (col("n_overlap_adc") * 2000).as("recall_adc_bp"),
-        col("n_overlap_rerank"),
-        (col("n_overlap_rerank") * 2000).as("recall_rerank_bp"))
-      .orderBy(col("q_id"))
+    val q0 = er.filter(col("vec_id") < 5).select(col("vec_id").as("q_id"), col("v").as("qv"))
+    pqScanRecall(s, d, q0, pqCodesFused(pqSubSlices(er), cbF), cbF)
   }
 
   val queries: Map[String, Q] = Map(
@@ -1438,61 +1480,8 @@ object VectorOps {
       // stored index IS their audited output), so the oracle is
       // unchanged.
       val root = ensureIvfadcIndex(s, d)
-      val cbs = s.read.parquet(s"$root/codebooks")
-      val codes = s.read.parquet(s"$root/codes")
-        .select(col("vec_id"), col("c0"), col("c1"), col("c2"), col("c3"))
-      val base = T.embeddings(s, d).select(col("vec_id"), col("embedding").as("v"))
-      val q0 = base.filter(col("vec_id") < 5)
-        .select(col("vec_id").as("q_id"), col("v").as("qv0"))
-        .localCheckpoint(true)
-      val dqs = (0 until PQ_M).map { sb =>
-        broadcast(q0
-          .select(col("q_id"),
-            expr(s"slice(qv0, ${PQ_D * sb + 1}, $PQ_D)").as("qv"))
-          .crossJoin(broadcast(cbs.filter(col("sub") === sb)
-            .select(col("cell").cast("byte").as(s"c$sb"), col("cv"))))
-          .select(col("q_id"), col(s"c$sb"),
-            expr("graft_dot(qv, qv) - 2 * graft_dot(qv, cv) + graft_dot(cv, cv)")
-              .as(s"d$sb")))
-      }
-      val cand = codes.join(dqs(0), Seq("c0"))
-        .join(dqs(1), Seq("q_id", "c1"))
-        .join(dqs(2), Seq("q_id", "c2"))
-        .join(dqs(3), Seq("q_id", "c3"))
-        .filter(col("q_id") =!= col("vec_id"))
-        .select(col("q_id"), col("vec_id").as("id2"),
-          expr("d0 + d1 + d2 + d3").as("adc"))
-      val wAdc = Window.partitionBy(col("q_id")).orderBy(col("adc"), col("id2"))
-      val ranked = cand.withColumn("rn", row_number().over(wAdc))
-      val topAdc = ranked.filter(col("rn") <= 5).select(col("q_id"), col("id2"))
-      val short50 = ranked.filter(col("rn") <= 50).select(col("q_id"), col("id2"))
-      val ef = base.withColumn("sq", expr("graft_dot(v, v)"))
-      val q = broadcast(ef.filter(col("vec_id") < 5)
-        .select(col("vec_id").as("q_id"), col("v").as("qv"), col("sq").as("qq")))
-      val c = ef.select(col("vec_id").as("id2"), col("v").as("v2"), col("sq").as("s2"))
-      val wEx = Window.partitionBy(col("q_id")).orderBy(col("d2"), col("id2"))
-      val topEx = q.join(c, col("q_id") =!= col("id2"))
-        .withColumn("d2", expr("qq - 2 * graft_dot(qv, v2) + s2"))
-        .withColumn("rn", row_number().over(wEx))
-        .filter(col("rn") <= 5)
-        .select(col("q_id").as("fq"), col("id2").as("fid"))
-      // two-stage tier: exact distances on the 50-deep shortlist only
-      val rerank = c.join(broadcast(short50.join(broadcast(q), Seq("q_id"))),
-          Seq("id2"))
-        .withColumn("d2", expr("qq - 2 * graft_dot(qv, v2) + s2"))
-        .withColumn("rn", row_number().over(wEx))
-        .filter(col("rn") <= 5).select(col("q_id"), col("id2"))
-      def overlap(top: DataFrame, n: String) =
-        top.join(broadcast(topEx),
-            col("q_id") === col("fq") && col("id2") === col("fid"), "left")
-          .groupBy(col("q_id")).agg(count(col("fid")).as(n))
-      overlap(topAdc, "n_overlap_adc")
-        .join(overlap(rerank, "n_overlap_rerank"), Seq("q_id"))
-        .select(col("q_id"),
-          col("n_overlap_adc"), (col("n_overlap_adc") * 2000).as("recall_adc_bp"),
-          col("n_overlap_rerank"),
-          (col("n_overlap_rerank") * 2000).as("recall_rerank_bp"))
-        .orderBy(col("q_id"))
+      pqScanRecall(s, d, corpusQueries(s, d), s.read.parquet(s"$root/codes"),
+        s.read.parquet(s"$root/codebooks"))
     }),
 
     // IVFADC — the canonical production ANN layout (the FAISS
@@ -1507,78 +1496,13 @@ object VectorOps {
     // IVF tier actually pruned to.
     "q261_ivfadc_recall" -> ((s, d) => {
       graft.functions.VectorKernels.ensureRegistered(s)
-      // serves from the stored index (round-9 follow-up, like q263/
-      // q264): centroids, cell assignment, codebooks and codes all
-      // read from q262's files — only the probe ranking and the dq
-      // lookup tables compute. Bits identical; oracle unchanged.
-      val root = ensureIvfadcIndex(s, d)
-      val centsStored = s.read.parquet(s"$root/centroids")
-      val cbs = s.read.parquet(s"$root/codebooks")
-      val stored = s.read.parquet(s"$root/codes")
-      val base = T.embeddings(s, d).select(col("vec_id"), col("embedding").as("v"))
-      val q0 = base.filter(col("vec_id") < 5)
-        .select(col("vec_id").as("q_id"), col("v").as("qv"))
-        .withColumn("qn", sqrt(expr("graft_dot(qv, qv)")))
-        .localCheckpoint(true)
-      val wProbe = Window.partitionBy(col("q_id")).orderBy(col("ccos").desc, col("cell"))
-      val probes = broadcast(q0.crossJoin(broadcast(centsStored))
-        .withColumn("ccos", dot("qv", "cv") / (col("qn") * col("cn")))
-        .withColumn("pr", row_number().over(wProbe))
-        .filter(col("pr") <= 4)
-        .select(col("q_id"), col("cell")))
-      val dqs = (0 until PQ_M).map { sb =>
-        broadcast(q0
-          .select(col("q_id"),
-            expr(s"slice(qv, ${PQ_D * sb + 1}, $PQ_D)").as("qs"))
-          .crossJoin(broadcast(cbs.filter(col("sub") === sb)
-            .select(col("cell").cast("byte").as(s"c$sb"), col("cv"))))
-          .select(col("q_id"), col(s"c$sb"),
-            expr("graft_dot(qs, qs) - 2 * graft_dot(qs, cv) + graft_dot(cv, cv)")
-              .as(s"d$sb")))
-      }
-      // ONE cell-joined scan carries vec_id AND the codes (the q263
-      // shape) — a separate codes read joined on vec_id would scan
-      // every cell partition, defeating the pruning
-      val cand0 = stored.join(probes, Seq("cell"))
-        .filter(col("q_id") =!= col("vec_id"))
-      val cand = cand0
-        .join(dqs(0), Seq("q_id", "c0"))
-        .join(dqs(1), Seq("q_id", "c1"))
-        .join(dqs(2), Seq("q_id", "c2"))
-        .join(dqs(3), Seq("q_id", "c3"))
-        .select(col("q_id"), col("vec_id").as("id2"),
-          expr("d0 + d1 + d2 + d3").as("adc"))
-      val nCand = cand0.groupBy(col("q_id")).agg(count(lit(1)).as("n_cand"))
-      val wAdc = Window.partitionBy(col("q_id")).orderBy(col("adc"), col("id2"))
-      val ranked = cand.withColumn("rn", row_number().over(wAdc))
-      val topAdc = ranked.filter(col("rn") <= 5).select(col("q_id"), col("id2"))
-      val short50 = ranked.filter(col("rn") <= 50).select(col("q_id"), col("id2"))
-      val ef = base.withColumn("sq", expr("graft_dot(v, v)"))
-      val q = broadcast(ef.filter(col("vec_id") < 5)
-        .select(col("vec_id").as("q_id"), col("v").as("qv"), col("sq").as("qq")))
-      val c = ef.select(col("vec_id").as("id2"), col("v").as("v2"), col("sq").as("s2"))
-      val wEx = Window.partitionBy(col("q_id")).orderBy(col("d2"), col("id2"))
-      val topEx = q.join(c, col("q_id") =!= col("id2"))
-        .withColumn("d2", expr("qq - 2 * graft_dot(qv, v2) + s2"))
-        .withColumn("rn", row_number().over(wEx))
-        .filter(col("rn") <= 5)
-        .select(col("q_id").as("fq"), col("id2").as("fid"))
-      val rerank = c.join(broadcast(short50.join(broadcast(q), Seq("q_id"))),
-          Seq("id2"))
-        .withColumn("d2", expr("qq - 2 * graft_dot(qv, v2) + s2"))
-        .withColumn("rn", row_number().over(wEx))
-        .filter(col("rn") <= 5).select(col("q_id"), col("id2"))
-      def overlap(top: DataFrame, n: String) =
-        top.join(broadcast(topEx),
-            col("q_id") === col("fq") && col("id2") === col("fid"), "left")
-          .groupBy(col("q_id")).agg(count(col("fid")).as(n))
-      nCand.join(overlap(topAdc, "n_overlap_adc"), Seq("q_id"))
-        .join(overlap(rerank, "n_overlap_rerank"), Seq("q_id"))
-        .select(col("q_id"), col("n_cand"),
-          col("n_overlap_adc"), (col("n_overlap_adc") * 2000).as("recall_adc_bp"),
-          col("n_overlap_rerank"),
-          (col("n_overlap_rerank") * 2000).as("recall_rerank_bp"))
-        .orderBy(col("q_id"))
+      // serves from the stored index (round-9 follow-up): centroids,
+      // cell assignment, codebooks and codes all read from q262's
+      // files — only the probe ranking and the dq lookup tables
+      // compute. Bits identical; oracle unchanged.
+      val (cand, nCand) =
+        ivfadcCandidates(s, d, corpusQueries(s, d), selfExclude = true, "c")
+      adcRecall(s, d, cand, Some(nCand))
     }),
 
     // LSH bucket audit — q118's promotion twin: the 8-bit
@@ -1650,17 +1574,7 @@ object VectorOps {
     // stored bits, then the same probe/ADC/re-rank tail.
     "q263_ivfadc_query" -> ((s, d) => {
       graft.functions.VectorKernels.ensureRegistered(s)
-      // q0 (5 rows) is referenced from many operators (probes, 4 dq
-      // tables, the re-rank, and the DPP subqueries the codes scans
-      // host) — localCheckpoint it so ONE embeddings probe-read serves
-      // every use (see ivfadcServe for why probes stays lazy).
-      val q0 = T.embeddings(s, d)
-        .select(col("vec_id"), col("embedding").as("v"))
-        .filter(col("vec_id") < 5)
-        .select(col("vec_id").as("q_id"), col("v").as("qv"))
-        .withColumn("qn", sqrt(expr("graft_dot(qv, qv)")))
-        .localCheckpoint(true)
-      ivfadcServe(s, d, q0, selfExclude = true)
+      ivfadcServe(s, d, corpusQueries(s, d), selfExclude = true, "r")
     }),
 
     // IVFADC over an ARBITRARY EXTERNAL query set (round-11 reach —
@@ -1692,7 +1606,7 @@ object VectorOps {
             "i -> CAST((id * 31 + i * 17) % 13 - 6 AS DOUBLE) / 8.0)").as("qv"))
         .withColumn("qn", sqrt(expr("graft_dot(qv, qv)")))
         .localCheckpoint(true)
-      ivfadcServe(s, d, q0, selfExclude = false)
+      ivfadcServe(s, d, q0, selfExclude = false, "r")
     }),
 
     // Residual-encoded IVFADC RECALL AUDIT (round-9 reach; since
@@ -1714,86 +1628,16 @@ object VectorOps {
     "q264_ivfadc_residual" -> ((s, d) => {
       graft.functions.VectorKernels.ensureRegistered(s)
       // serves ENTIRELY from the stored index (round-13): the residual
-      // codebooks and residual codes are index citizens now (the build
-      // trains them — see ensureIvfadcIndex), so this tier reads them
-      // back like q260 reads the raw ones, instead of re-running the
-      // residual Lloyd chains per query. Bits are identical either way
-      // (the stored index is the audited chain output), so the oracle
-      // is unchanged. What computes here: the probe ranking, the
+      // codebooks and residual codes are index citizens (the build
+      // trains them — see ensureIvfadcIndex), so no residual Lloyd
+      // chain runs per query. Bits are identical either way (the
+      // stored index is the audited chain output), so the oracle is
+      // unchanged. What computes here: the probe ranking, the
       // per-(query, probed-cell) residual dq tables, and the recall
       // summary against the exact top-5.
-      val root = ensureIvfadcIndex(s, d)
-      val centsStored = s.read.parquet(s"$root/centroids")
-      val stored = s.read.parquet(s"$root/codes")
-      val cbF = s.read.parquet(s"$root/rcodebooks")
-      val base = T.embeddings(s, d).select(col("vec_id"), col("embedding").as("v"))
-      val q0 = base.filter(col("vec_id") < 5)
-        .select(col("vec_id").as("q_id"), col("v").as("qv"))
-        .withColumn("qn", sqrt(expr("graft_dot(qv, qv)")))
-        .localCheckpoint(true)
-      val wProbe = Window.partitionBy(col("q_id")).orderBy(col("ccos").desc, col("cell"))
-      val probes = broadcast(q0.crossJoin(broadcast(centsStored))
-        .withColumn("ccos", dot("qv", "cv") / (col("qn") * col("cn")))
-        .withColumn("pr", row_number().over(wProbe))
-        .filter(col("pr") <= 4)
-        .select(col("q_id"), col("qv"), col("cell"), col("cv")))
-      val rdqs = (0 until PQ_M).map { sb =>
-        broadcast(probes
-          .select(col("q_id"), col("cell"),
-            expr(s"slice(graft_sub(qv, cv), ${PQ_D * sb + 1}, $PQ_D)").as("qs"))
-          .crossJoin(broadcast(cbF.filter(col("sub") === sb)
-            .select(col("cell").cast("byte").as(s"c$sb"), col("cv").as("cw"))))
-          .select(col("q_id"), col("cell"), col(s"c$sb"),
-            expr("graft_dot(qs, qs) - 2 * graft_dot(qs, cw) + graft_dot(cw, cw)")
-              .as(s"d$sb")))
-      }
-      // ONE cell-joined scan carries vec_id AND the residual codes
-      // (the q263 shape — a separate codes read joined on vec_id
-      // would scan every cell partition, defeating the pruning)
-      val cand0 = stored
-        .join(probes.select(col("q_id"), col("cell")), Seq("cell"))
-        .filter(col("q_id") =!= col("vec_id"))
-        .select(col("q_id"), col("cell"), col("vec_id"),
-          col("r0").as("c0"), col("r1").as("c1"),
-          col("r2").as("c2"), col("r3").as("c3"))
-      val nCand = cand0.groupBy(col("q_id")).agg(count(lit(1)).as("n_cand"))
-      val cand = cand0
-        .join(rdqs(0), Seq("q_id", "cell", "c0"))
-        .join(rdqs(1), Seq("q_id", "cell", "c1"))
-        .join(rdqs(2), Seq("q_id", "cell", "c2"))
-        .join(rdqs(3), Seq("q_id", "cell", "c3"))
-        .select(col("q_id"), col("vec_id").as("id2"),
-          expr("d0 + d1 + d2 + d3").as("adc"))
-      val wAdc = Window.partitionBy(col("q_id")).orderBy(col("adc"), col("id2"))
-      val ranked = cand.withColumn("rn", row_number().over(wAdc))
-      val topAdc = ranked.filter(col("rn") <= 5).select(col("q_id"), col("id2"))
-      val short50 = ranked.filter(col("rn") <= 50).select(col("q_id"), col("id2"))
-      val ef = base.withColumn("sq", expr("graft_dot(v, v)"))
-      val q = broadcast(ef.filter(col("vec_id") < 5)
-        .select(col("vec_id").as("q_id"), col("v").as("qv2"), col("sq").as("qq")))
-      val c = ef.select(col("vec_id").as("id2"), col("v").as("v2"), col("sq").as("s2"))
-      val wEx = Window.partitionBy(col("q_id")).orderBy(col("d2"), col("id2"))
-      val topEx = q.join(c, col("q_id") =!= col("id2"))
-        .withColumn("d2", expr("qq - 2 * graft_dot(qv2, v2) + s2"))
-        .withColumn("rn", row_number().over(wEx))
-        .filter(col("rn") <= 5)
-        .select(col("q_id").as("fq"), col("id2").as("fid"))
-      val rerank = c.join(broadcast(short50.join(broadcast(q), Seq("q_id"))),
-          Seq("id2"))
-        .withColumn("d2", expr("qq - 2 * graft_dot(qv2, v2) + s2"))
-        .withColumn("rn", row_number().over(wEx))
-        .filter(col("rn") <= 5).select(col("q_id"), col("id2"))
-      def overlap(top: DataFrame, n: String) =
-        top.join(broadcast(topEx),
-            col("q_id") === col("fq") && col("id2") === col("fid"), "left")
-          .groupBy(col("q_id")).agg(count(col("fid")).as(n))
-      nCand.join(overlap(topAdc, "n_overlap_adc"), Seq("q_id"))
-        .join(overlap(rerank, "n_overlap_rerank"), Seq("q_id"))
-        .select(col("q_id"), col("n_cand"),
-          col("n_overlap_adc"), (col("n_overlap_adc") * 2000).as("recall_adc_bp"),
-          col("n_overlap_rerank"),
-          (col("n_overlap_rerank") * 2000).as("recall_rerank_bp"))
-        .orderBy(col("q_id"))
+      val (cand, nCand) =
+        ivfadcCandidates(s, d, corpusQueries(s, d), selfExclude = true, "r")
+      adcRecall(s, d, cand, Some(nCand))
     }),
 
     // RR-PQ codebook census — PQ trained on the ROTATED corpus (the
@@ -1921,8 +1765,8 @@ object VectorOps {
         .orderBy(col("cell"))
     }),
 
-    // OPQ-rotated-residual QUERY tier (q263's twin on the o-encoding):
-    // identical probe → DPP-pruned cell read → ADC → bounded exact
+    // OPQ-rotated-residual QUERY tier (q263 on the o-encoding): the
+    // same probe → DPP-pruned cell read → ADC → bounded exact
     // re-rank layout; the ONLY addition is one graft_matvec per
     // (query, probed cell) — the stored rotation applied to the
     // query's residual before the dq slices (codes were rotated at
@@ -1931,17 +1775,11 @@ object VectorOps {
     // columns of the SAME cell-partitioned codes files.
     "q294_opq_ivfadc_query" -> ((s, d) => {
       graft.functions.VectorKernels.ensureRegistered(s)
-      val q0 = T.embeddings(s, d)
-        .select(col("vec_id"), col("embedding").as("v"))
-        .filter(col("vec_id") < 5)
-        .select(col("vec_id").as("q_id"), col("v").as("qv"))
-        .withColumn("qn", sqrt(expr("graft_dot(qv, qv)")))
-        .localCheckpoint(true)
-      ivfadcServe(s, d, q0, selfExclude = true, opq = true)
+      ivfadcServe(s, d, corpusQueries(s, d), selfExclude = true, "o")
     }),
 
-    // OPQ-rotated-residual RECALL audit (q264's twin on the
-    // o-encoding — the honest measurement the composition exists
+    // OPQ-rotated-residual RECALL audit (q264 on the o-encoding —
+    // the honest measurement the composition exists
     // for, published next to the unrotated store's q264 relation):
     // ADC-shortlist and 50-deep-re-rank overlap against the exact
     // top-5, served entirely from the stored o-bits. On the
@@ -1953,81 +1791,9 @@ object VectorOps {
     // comparison.
     "q295_opq_residual_recall" -> ((s, d) => {
       graft.functions.VectorKernels.ensureRegistered(s)
-      val root = ensureIvfadcIndex(s, d)
-      val centsStored = s.read.parquet(s"$root/centroids")
-      val stored = s.read.parquet(s"$root/codes")
-      val cbF = s.read.parquet(s"$root/ocodebooks")
-      val rflat = broadcast(s.read.parquet(s"$root/rot")
-        .agg(array_sort(collect_list(struct(col("i"), col("j"), col("q")))).as("rs"))
-        .select(expr(s"transform(rs, x -> CAST(x.q AS DOUBLE) / $PCA_SCALE.0)")
-          .as("rflat")))
-      val base = T.embeddings(s, d).select(col("vec_id"), col("embedding").as("v"))
-      val q0 = base.filter(col("vec_id") < 5)
-        .select(col("vec_id").as("q_id"), col("v").as("qv"))
-        .withColumn("qn", sqrt(expr("graft_dot(qv, qv)")))
-        .localCheckpoint(true)
-      val wProbe = Window.partitionBy(col("q_id")).orderBy(col("ccos").desc, col("cell"))
-      val probes = broadcast(q0.crossJoin(broadcast(centsStored))
-        .withColumn("ccos", dot("qv", "cv") / (col("qn") * col("cn")))
-        .withColumn("pr", row_number().over(wProbe))
-        .filter(col("pr") <= 4)
-        .select(col("q_id"), col("qv"), col("cell"), col("cv"))
-        .crossJoin(rflat))
-      val rdqs = (0 until PQ_M).map { sb =>
-        broadcast(probes
-          .select(col("q_id"), col("cell"),
-            expr(s"slice(graft_matvec(rflat, graft_sub(qv, cv)), " +
-              s"${PQ_D * sb + 1}, $PQ_D)").as("qs"))
-          .crossJoin(broadcast(cbF.filter(col("sub") === sb)
-            .select(col("cell").cast("byte").as(s"c$sb"), col("cv").as("cw"))))
-          .select(col("q_id"), col("cell"), col(s"c$sb"),
-            expr("graft_dot(qs, qs) - 2 * graft_dot(qs, cw) + graft_dot(cw, cw)")
-              .as(s"d$sb")))
-      }
-      val cand0 = stored
-        .join(probes.select(col("q_id"), col("cell")), Seq("cell"))
-        .filter(col("q_id") =!= col("vec_id"))
-        .select(col("q_id"), col("cell"), col("vec_id"),
-          col("o0").as("c0"), col("o1").as("c1"),
-          col("o2").as("c2"), col("o3").as("c3"))
-      val nCand = cand0.groupBy(col("q_id")).agg(count(lit(1)).as("n_cand"))
-      val cand = cand0
-        .join(rdqs(0), Seq("q_id", "cell", "c0"))
-        .join(rdqs(1), Seq("q_id", "cell", "c1"))
-        .join(rdqs(2), Seq("q_id", "cell", "c2"))
-        .join(rdqs(3), Seq("q_id", "cell", "c3"))
-        .select(col("q_id"), col("vec_id").as("id2"),
-          expr("d0 + d1 + d2 + d3").as("adc"))
-      val wAdc = Window.partitionBy(col("q_id")).orderBy(col("adc"), col("id2"))
-      val ranked = cand.withColumn("rn", row_number().over(wAdc))
-      val topAdc = ranked.filter(col("rn") <= 5).select(col("q_id"), col("id2"))
-      val short50 = ranked.filter(col("rn") <= 50).select(col("q_id"), col("id2"))
-      val ef = base.withColumn("sq", expr("graft_dot(v, v)"))
-      val q = broadcast(ef.filter(col("vec_id") < 5)
-        .select(col("vec_id").as("q_id"), col("v").as("qv2"), col("sq").as("qq")))
-      val c = ef.select(col("vec_id").as("id2"), col("v").as("v2"), col("sq").as("s2"))
-      val wEx = Window.partitionBy(col("q_id")).orderBy(col("d2"), col("id2"))
-      val topEx = q.join(c, col("q_id") =!= col("id2"))
-        .withColumn("d2", expr("qq - 2 * graft_dot(qv2, v2) + s2"))
-        .withColumn("rn", row_number().over(wEx))
-        .filter(col("rn") <= 5)
-        .select(col("q_id").as("fq"), col("id2").as("fid"))
-      val rerank = c.join(broadcast(short50.join(broadcast(q), Seq("q_id"))),
-          Seq("id2"))
-        .withColumn("d2", expr("qq - 2 * graft_dot(qv2, v2) + s2"))
-        .withColumn("rn", row_number().over(wEx))
-        .filter(col("rn") <= 5).select(col("q_id"), col("id2"))
-      def overlap(top: DataFrame, n: String) =
-        top.join(broadcast(topEx),
-            col("q_id") === col("fq") && col("id2") === col("fid"), "left")
-          .groupBy(col("q_id")).agg(count(col("fid")).as(n))
-      nCand.join(overlap(topAdc, "n_overlap_adc"), Seq("q_id"))
-        .join(overlap(rerank, "n_overlap_rerank"), Seq("q_id"))
-        .select(col("q_id"), col("n_cand"),
-          col("n_overlap_adc"), (col("n_overlap_adc") * 2000).as("recall_adc_bp"),
-          col("n_overlap_rerank"),
-          (col("n_overlap_rerank") * 2000).as("recall_rerank_bp"))
-        .orderBy(col("q_id"))
+      val (cand, nCand) =
+        ivfadcCandidates(s, d, corpusQueries(s, d), selfExclude = true, "o")
+      adcRecall(s, d, cand, Some(nCand))
     }),
 
     // Incremental IVFADC index ADD (round-14 — the missing member of
@@ -2911,8 +2677,8 @@ object VectorOps {
     * under prefix `r`, sharing init16's md5 seed ORDER while the seed
     * VECTORS come from the source relation. The per-source dq CTE is
     * only meaningful for raw-vector chains (a residual query distance
-    * is per PROBED CELL, built separately in q264's oracle); it is
-    * simply never referenced there.
+    * is per PROBED CELL, built by [[ivfadcCandSql]]); it is simply
+    * never referenced there.
     */
   private def pqChainSqlFrom(sb: Int, src: String, pfx: String,
       cntSql: String = "(SELECT count(*) FROM embeddings)"): String = {
@@ -3009,88 +2775,42 @@ object VectorOps {
        |       JOIN r2gf g2 USING (vec_id) JOIN r3gf g3 USING (vec_id)
        |)""".stripMargin
 
-  /** The IVFADC serving-tail SQL shared by the q263 and q286 oracles
-    * (the exact mirror of [[ivfadcServe]], residual-encoded since
-    * round 13): expects a `qe(q_id, i, v)` query CTE plus the
-    * e/ivf/residual chain bodies in scope. Norms, probe ranking,
-    * candidate fetch (optionally self-excluded), per-(query, probed
-    * cell) residual ADC tables built from qe − probed centroid, the
-    * 50-shortlist, exact re-rank, top-5 readout.
+  /** The corpus query relation of the stored-index oracles (the
+    * mirror of [[corpusQueries]]).
     */
-  private def ivfadcTailSql(exclude: Boolean): String =
-    s"""qn AS (SELECT q_id, sqrt(sum(v*v)) AS nrm FROM qe GROUP BY 1),
-       |cnn AS (SELECT cell, sqrt(sum(cv*cv)) AS cn FROM c4 GROUP BY 1),
-       |ccos AS (
-       |  SELECT q.q_id, c.cell, sum(q.v * c.cv) AS dot
-       |  FROM qe q JOIN c4 c ON q.i = c.i GROUP BY 1, 2
-       |), pr AS (
-       |  SELECT q_id, cell FROM (
-       |    SELECT ccos.q_id, ccos.cell, row_number() OVER (
-       |        PARTITION BY ccos.q_id
-       |        ORDER BY ccos.dot/(nq.nrm*cnn.cn) DESC, ccos.cell) AS pr
-       |    FROM ccos JOIN qn nq ON ccos.q_id = nq.q_id
-       |              JOIN cnn ON ccos.cell = cnn.cell)
-       |  WHERE pr <= 4
-       |), qr AS MATERIALIZED (
-       |  SELECT pr.q_id, pr.cell, q.i, q.v - c.cv AS v
-       |  FROM pr JOIN qe q ON q.q_id = pr.q_id
-       |       JOIN c4 c ON c.cell = pr.cell AND c.i = q.i
-       |),
-       |${(0 until PQ_M).map(sb =>
-           s"""rdq$sb AS (
-              |  SELECT qr.q_id, qr.cell, c.cell AS code,
-              |         sum(qr.v*qr.v) - 2*sum(qr.v*c.cv) + sum(c.cv*c.cv) AS d
-              |  FROM qr JOIN r${sb}c$PQ_ITERS c ON qr.i = c.i
-              |  GROUP BY 1, 2, 3
-              |)""".stripMargin).mkString(",\n")},
-       |cand0 AS (
-       |  SELECT pr.q_id, g5.vec_id, g5.cell
-       |  FROM pr JOIN g5 ON pr.cell = g5.cell
-       |  ${if (exclude) "WHERE g5.vec_id <> pr.q_id" else ""}
-       |), nc AS (SELECT q_id, CAST(count(*) AS BIGINT) AS n_cand
-       |          FROM cand0 GROUP BY 1),
-       |cand AS (
-       |  SELECT cd.q_id, cd.vec_id AS id2,
-       |         d0.d + d1.d + d2.d + d3.d AS adc
-       |  FROM cand0 cd JOIN rcodes ON cd.vec_id = rcodes.vec_id
-       |  JOIN rdq0 d0 ON d0.q_id = cd.q_id AND d0.cell = cd.cell AND rcodes.r0 = d0.code
-       |  JOIN rdq1 d1 ON d1.q_id = cd.q_id AND d1.cell = cd.cell AND rcodes.r1 = d1.code
-       |  JOIN rdq2 d2 ON d2.q_id = cd.q_id AND d2.cell = cd.cell AND rcodes.r2 = d2.code
-       |  JOIN rdq3 d3 ON d3.q_id = cd.q_id AND d3.cell = cd.cell AND rcodes.r3 = d3.code
-       |), tr50 AS (
-       |  SELECT q_id, id2 FROM (
-       |    SELECT q_id, id2, row_number() OVER (
-       |      PARTITION BY q_id ORDER BY adc, id2) AS rn FROM cand)
-       |  WHERE rn <= 50
-       |), sq AS (SELECT vec_id, sum(v*v) AS s FROM e GROUP BY 1),
-       |qsq AS (SELECT q_id, sum(v*v) AS s FROM qe GROUP BY 1),
-       |dt AS (
-       |  SELECT a.q_id, b.vec_id AS id2, sum(a.v*b.v) AS dot
-       |  FROM qe a JOIN e b ON a.i = b.i GROUP BY 1, 2
-       |), trr AS (
-       |  SELECT q_id, id2, d2, row_number() OVER (
-       |      PARTITION BY q_id ORDER BY d2, id2) AS rn
-       |  FROM (
-       |    SELECT dt.q_id, dt.id2, sa.s - 2*dt.dot + sb.s AS d2
-       |    FROM tr50 JOIN dt ON tr50.q_id = dt.q_id AND tr50.id2 = dt.id2
-       |         JOIN qsq sa ON dt.q_id = sa.q_id
-       |         JOIN sq sb ON dt.id2 = sb.vec_id)
-       |)
-       |SELECT trr.q_id, nc.n_cand, trr.rn, trr.id2 AS neighbor_id,
-       |       round(trr.d2, 4) AS l2_4
-       |FROM trr JOIN nc ON trr.q_id = nc.q_id
-       |WHERE trr.rn <= 5
-       |ORDER BY trr.q_id, trr.rn""".stripMargin
+  private val corpusQeSql = "qe AS (SELECT vec_id AS q_id, i, v FROM e WHERE vec_id < 5)"
 
-  /** [[ivfadcTailSql]]'s twin for the OPQ-rotated-residual tier
-    * (q294): identical probe ranking / candidate fetch / 50-shortlist
-    * exact re-rank; what changes is ONE extra CTE — the query's
-    * per-probed-cell residual rotated by the stored R (qrr = R·qr,
-    * the search-time graft_matvec) — and the dq/ADC joins keying on
-    * the o-chains' codebooks and codes. Expects qe plus the
-    * e/ivf/residual/[[oChainBody]] bodies in scope.
+  /** The IVFADC probe, candidate fetch and ADC scores as SQL (the
+    * mirror of [[ivfadcCandidates]], the same `enc` switch): expects a
+    * `qe(q_id, i, v)` query CTE, e/c4/g5 and the chains plus code
+    * pivot of the encoding in scope — raw s-chains with `codes`,
+    * residual [[rChainBody]] (rcodes), OPQ-rotated [[oChainBody]]
+    * (ocodes). Defines norms and the probe ranking `pr`, the
+    * per-encoding lookup tables (per query from qe; per (query,
+    * probed cell) from the residual qr = qe − probed centroid, or its
+    * rotation qrr = R·qr), the optionally self-excluded candidates
+    * `cand0`, their count `nc`, and `cand(q_id, id2, adc)`.
     */
-  private def ivfadcTailSqlOpq(exclude: Boolean): String =
+  private def ivfadcCandSql(enc: String, exclude: Boolean): String = {
+    val (qx, keys, cb) = enc match {
+      case "c" => ("qe", Seq("q_id"), "s")
+      case "r" => ("qr", Seq("q_id", "cell"), "r")
+      case "o" => ("qrr", Seq("q_id", "cell"), "o")
+    }
+    val codes = if (enc == "c") "codes" else s"${enc}codes"
+    val qr =
+      s""", qr AS MATERIALIZED (
+         |  SELECT pr.q_id, pr.cell, q.i, q.v - c.cv AS v
+         |  FROM pr JOIN qe q ON q.q_id = pr.q_id
+         |       JOIN c4 c ON c.cell = pr.cell AND c.i = q.i
+         |)""".stripMargin
+    val qrr =
+      s""", qrr AS MATERIALIZED (
+         |  SELECT qr.q_id, qr.cell, r.i,
+         |         sum((CAST(r.q AS DOUBLE) / $PCA_SCALE.0) * qr.v) AS v
+         |  FROM ns$OPQ_NS_ITERS r JOIN qr ON qr.i = r.j
+         |  GROUP BY 1, 2, 3
+         |)""".stripMargin
     s"""qn AS (SELECT q_id, sqrt(sum(v*v)) AS nrm FROM qe GROUP BY 1),
        |cnn AS (SELECT cell, sqrt(sum(cv*cv)) AS cn FROM c4 GROUP BY 1),
        |ccos AS (
@@ -3104,22 +2824,13 @@ object VectorOps {
        |    FROM ccos JOIN qn nq ON ccos.q_id = nq.q_id
        |              JOIN cnn ON ccos.cell = cnn.cell)
        |  WHERE pr <= 4
-       |), qr AS MATERIALIZED (
-       |  SELECT pr.q_id, pr.cell, q.i, q.v - c.cv AS v
-       |  FROM pr JOIN qe q ON q.q_id = pr.q_id
-       |       JOIN c4 c ON c.cell = pr.cell AND c.i = q.i
-       |), qrr AS MATERIALIZED (
-       |  SELECT qr.q_id, qr.cell, r.i,
-       |         sum((CAST(r.q AS DOUBLE) / $PCA_SCALE.0) * qr.v) AS v
-       |  FROM ns$OPQ_NS_ITERS r JOIN qr ON qr.i = r.j
-       |  GROUP BY 1, 2, 3
-       |),
+       |)${if (enc == "c") "" else qr}${if (enc == "o") qrr else ""},
        |${(0 until PQ_M).map(sb =>
-           s"""odq$sb AS (
-              |  SELECT qrr.q_id, qrr.cell, c.cell AS code,
-              |         sum(qrr.v*qrr.v) - 2*sum(qrr.v*c.cv) + sum(c.cv*c.cv) AS d
-              |  FROM qrr JOIN o${sb}c$PQ_ITERS c ON qrr.i = c.i
-              |  GROUP BY 1, 2, 3
+           s"""${enc}dq$sb AS (
+              |  SELECT ${keys.map(k => s"$qx.$k").mkString(", ")}, c.cell AS code,
+              |         sum($qx.v*$qx.v) - 2*sum($qx.v*c.cv) + sum(c.cv*c.cv) AS d
+              |  FROM $qx JOIN $cb${sb}c$PQ_ITERS c ON $qx.i = c.i
+              |  GROUP BY ${(1 to keys.size + 1).mkString(", ")}
               |)""".stripMargin).mkString(",\n")},
        |cand0 AS (
        |  SELECT pr.q_id, g5.vec_id, g5.cell
@@ -3130,12 +2841,19 @@ object VectorOps {
        |cand AS (
        |  SELECT cd.q_id, cd.vec_id AS id2,
        |         d0.d + d1.d + d2.d + d3.d AS adc
-       |  FROM cand0 cd JOIN ocodes ON cd.vec_id = ocodes.vec_id
-       |  JOIN odq0 d0 ON d0.q_id = cd.q_id AND d0.cell = cd.cell AND ocodes.o0 = d0.code
-       |  JOIN odq1 d1 ON d1.q_id = cd.q_id AND d1.cell = cd.cell AND ocodes.o1 = d1.code
-       |  JOIN odq2 d2 ON d2.q_id = cd.q_id AND d2.cell = cd.cell AND ocodes.o2 = d2.code
-       |  JOIN odq3 d3 ON d3.q_id = cd.q_id AND d3.cell = cd.cell AND ocodes.o3 = d3.code
-       |), tr50 AS (
+       |  FROM cand0 cd JOIN $codes ON cd.vec_id = $codes.vec_id
+       |${(0 until PQ_M).map(sb =>
+           s"  JOIN ${enc}dq$sb d$sb ON ${keys.map(k => s"d$sb.$k = cd.$k").mkString(" AND ")}" +
+             s" AND $codes.$enc$sb = d$sb.code").mkString("\n")}
+       |)""".stripMargin
+  }
+
+  /** The IVFADC serving-tier SQL of the q263, q286 and q294 oracles
+    * (the mirror of [[ivfadcServe]]): [[ivfadcCandSql]], then the
+    * 50-shortlist, its exact re-rank and the top-5 readout.
+    */
+  private def ivfadcTailSql(enc: String, exclude: Boolean): String =
+    s"""${ivfadcCandSql(enc, exclude)}, tr50 AS (
        |  SELECT q_id, id2 FROM (
        |    SELECT q_id, id2, row_number() OVER (
        |      PARTITION BY q_id ORDER BY adc, id2) AS rn FROM cand)
@@ -3275,27 +2993,26 @@ object VectorOps {
        |       JOIN o2gf g2 USING (vec_id) JOIN o3gf g3 USING (vec_id)
        |)""".stripMargin
 
-  /** The rotated-space ADC recall tail shared by the q266 and q288
-    * oracles (the SQL mirror of [[adcRecallOverRotated]]): expects
-    * the `$pfx{sb}gf` code and `$pfx{sb}dq` query-distance CTEs plus
-    * raw `e` in scope; exact reference and re-rank in raw space.
+  /** The per-vector code pivot of the `$pfx` PQ chains, as `codes`
+    * (vec_id, c0..c3).
     */
-  private def rotAdcTailSql(pfx: String): String =
+  private def pqCodesSql(pfx: String): String =
     s"""codes AS (
        |  SELECT g0.vec_id, g0.cell AS c0, g1.cell AS c1,
        |         g2.cell AS c2, g3.cell AS c3
        |  FROM ${pfx}0gf g0 JOIN ${pfx}1gf g1 USING (vec_id)
        |       JOIN ${pfx}2gf g2 USING (vec_id) JOIN ${pfx}3gf g3 USING (vec_id)
-       |), cand AS (
-       |  SELECT d0.q_id, codes.vec_id AS id2,
-       |         d0.d + d1.d + d2.d + d3.d AS adc
-       |  FROM codes
-       |  JOIN ${pfx}0dq d0 ON codes.c0 = d0.cell
-       |  JOIN ${pfx}1dq d1 ON d1.q_id = d0.q_id AND codes.c1 = d1.cell
-       |  JOIN ${pfx}2dq d2 ON d2.q_id = d0.q_id AND codes.c2 = d2.cell
-       |  JOIN ${pfx}3dq d3 ON d3.q_id = d0.q_id AND codes.c3 = d3.cell
-       |  WHERE codes.vec_id <> d0.q_id
-       |), rk AS (
+       |)""".stripMargin
+
+  /** The recall tail of every ADC audit oracle (the mirror of
+    * [[adcRecall]]): expects `cand(q_id, id2, adc)` and raw `e` in
+    * scope, plus `nc(q_id, n_cand)` when `nCand`. Ranks by
+    * (adc, id2), keeps the ADC top-5 and the 50-shortlist, re-ranks
+    * the shortlist exactly in raw space, and counts both tiers'
+    * overlap with the exact top-5 of queries vec_id < 5.
+    */
+  private def adcRecallSql(nCand: Boolean): String =
+    s"""rk AS (
        |  SELECT q_id, id2, row_number() OVER (
        |    PARTITION BY q_id ORDER BY adc, id2) AS rn FROM cand
        |), ta AS (SELECT q_id, id2 FROM rk WHERE rn <= 5),
@@ -3332,12 +3049,31 @@ object VectorOps {
        |  FROM trr LEFT JOIN te ON trr.q_id = te.q_id AND trr.id2 = te.id2
        |  GROUP BY 1
        |)
-       |SELECT ova.q_id, n_overlap_adc,
+       |SELECT ova.q_id,${if (nCand) " nc.n_cand," else ""} n_overlap_adc,
        |       CAST(n_overlap_adc * 2000 AS BIGINT) AS recall_adc_bp,
        |       n_overlap_rerank,
        |       CAST(n_overlap_rerank * 2000 AS BIGINT) AS recall_rerank_bp
-       |FROM ova JOIN ovr ON ova.q_id = ovr.q_id
+       |FROM ova JOIN ovr ON ova.q_id = ovr.q_id${if (nCand) " JOIN nc ON nc.q_id = ova.q_id" else ""}
        |ORDER BY ova.q_id""".stripMargin
+
+  /** The full-corpus PQ recall oracle of q260 (raw, prefix s), q266
+    * (H·D-rotated, t) and q288 (OPQ-rotated, o) — the mirror of
+    * [[pqScanRecall]]: expects the `$pfx{sb}gf` code and
+    * `$pfx{sb}dq` query-distance CTEs plus raw `e` in scope; ADC over
+    * every code row (self excluded), then the [[adcRecallSql]] tail —
+    * exact reference and re-rank in raw space.
+    */
+  private def rotAdcTailSql(pfx: String): String =
+    s"""${pqCodesSql(pfx)}, cand AS (
+       |  SELECT d0.q_id, codes.vec_id AS id2,
+       |         d0.d + d1.d + d2.d + d3.d AS adc
+       |  FROM codes
+       |  JOIN ${pfx}0dq d0 ON codes.c0 = d0.cell
+       |  JOIN ${pfx}1dq d1 ON d1.q_id = d0.q_id AND codes.c1 = d1.cell
+       |  JOIN ${pfx}2dq d2 ON d2.q_id = d0.q_id AND codes.c2 = d2.cell
+       |  JOIN ${pfx}3dq d3 ON d3.q_id = d0.q_id AND codes.c3 = d3.cell
+       |  WHERE codes.vec_id <> d0.q_id
+       |), ${adcRecallSql(nCand = false)}""".stripMargin
 
   /** The LSH signature substrate as a WITH-chain: the 8×64 fixed-seed
     * plane constants as full-precision %.17E literals (DOUBLE-lexed in
@@ -3707,63 +3443,7 @@ object VectorOps {
     // are bit-equal on both engines.
     "q260_pq_adc_recall" ->
       s"""$pqPrefixCte,
-         |codes AS (
-         |  SELECT g0.vec_id, g0.cell AS c0, g1.cell AS c1,
-         |         g2.cell AS c2, g3.cell AS c3
-         |  FROM s0gf g0 JOIN s1gf g1 USING (vec_id)
-         |       JOIN s2gf g2 USING (vec_id) JOIN s3gf g3 USING (vec_id)
-         |), cand AS (
-         |  SELECT d0.q_id, codes.vec_id AS id2,
-         |         d0.d + d1.d + d2.d + d3.d AS adc
-         |  FROM codes
-         |  JOIN s0dq d0 ON codes.c0 = d0.cell
-         |  JOIN s1dq d1 ON d1.q_id = d0.q_id AND codes.c1 = d1.cell
-         |  JOIN s2dq d2 ON d2.q_id = d0.q_id AND codes.c2 = d2.cell
-         |  JOIN s3dq d3 ON d3.q_id = d0.q_id AND codes.c3 = d3.cell
-         |  WHERE codes.vec_id <> d0.q_id
-         |), rk AS (
-         |  SELECT q_id, id2, row_number() OVER (
-         |    PARTITION BY q_id ORDER BY adc, id2) AS rn FROM cand
-         |), ta AS (SELECT q_id, id2 FROM rk WHERE rn <= 5),
-         |tr50 AS (SELECT q_id, id2 FROM rk WHERE rn <= 50),
-         |sq AS (SELECT vec_id, sum(v*v) AS s FROM e GROUP BY 1),
-         |dt AS (
-         |  SELECT a.vec_id AS q_id, b.vec_id AS id2, sum(a.v*b.v) AS dot
-         |  FROM e a JOIN e b ON a.i = b.i AND a.vec_id < 5
-         |                    AND b.vec_id <> a.vec_id
-         |  GROUP BY 1, 2
-         |), te AS (
-         |  SELECT q_id, id2 FROM (
-         |    SELECT dt.q_id, dt.id2, row_number() OVER (
-         |      PARTITION BY dt.q_id
-         |      ORDER BY sa.s - 2*dt.dot + sb.s, dt.id2) AS rn
-         |    FROM dt JOIN sq sa ON dt.q_id = sa.vec_id
-         |            JOIN sq sb ON dt.id2 = sb.vec_id)
-         |  WHERE rn <= 5
-         |), trr AS (
-         |  SELECT q_id, id2 FROM (
-         |    SELECT dt.q_id, dt.id2, row_number() OVER (
-         |      PARTITION BY dt.q_id
-         |      ORDER BY sa.s - 2*dt.dot + sb.s, dt.id2) AS rn
-         |    FROM tr50 JOIN dt ON tr50.q_id = dt.q_id AND tr50.id2 = dt.id2
-         |              JOIN sq sa ON dt.q_id = sa.vec_id
-         |              JOIN sq sb ON dt.id2 = sb.vec_id)
-         |  WHERE rn <= 5
-         |), ova AS (
-         |  SELECT ta.q_id, CAST(count(te.id2) AS BIGINT) AS n_overlap_adc
-         |  FROM ta LEFT JOIN te ON ta.q_id = te.q_id AND ta.id2 = te.id2
-         |  GROUP BY 1
-         |), ovr AS (
-         |  SELECT trr.q_id, CAST(count(te.id2) AS BIGINT) AS n_overlap_rerank
-         |  FROM trr LEFT JOIN te ON trr.q_id = te.q_id AND trr.id2 = te.id2
-         |  GROUP BY 1
-         |)
-         |SELECT ova.q_id, n_overlap_adc,
-         |       CAST(n_overlap_adc * 2000 AS BIGINT) AS recall_adc_bp,
-         |       n_overlap_rerank,
-         |       CAST(n_overlap_rerank * 2000 AS BIGINT) AS recall_rerank_bp
-         |FROM ova JOIN ovr ON ova.q_id = ovr.q_id
-         |ORDER BY ova.q_id""".stripMargin,
+         |${rotAdcTailSql("s")}""".stripMargin,
 
     // IVFADC: q66's probe chain + q259's code chains composed, all
     // replayed.
@@ -3771,80 +3451,10 @@ object VectorOps {
       s"""WITH $eCteBody,
          |$ivfChainBodyStored,
          |$pqChainBody,
-         |vn AS (SELECT vec_id, sqrt(sum(v*v)) AS nrm FROM e GROUP BY 1),
-         |cnn AS (SELECT cell, sqrt(sum(cv*cv)) AS cn FROM c4 GROUP BY 1),
-         |ccos AS (
-         |  SELECT e.vec_id AS q_id, c.cell, sum(e.v * c.cv) AS dot
-         |  FROM e JOIN c4 c ON e.i = c.i WHERE e.vec_id < 5 GROUP BY 1, 2
-         |), pr AS (
-         |  SELECT q_id, cell FROM (
-         |    SELECT ccos.q_id, ccos.cell, row_number() OVER (
-         |        PARTITION BY ccos.q_id
-         |        ORDER BY ccos.dot/(nq.nrm*cnn.cn) DESC, ccos.cell) AS pr
-         |    FROM ccos JOIN vn nq ON ccos.q_id = nq.vec_id
-         |              JOIN cnn ON ccos.cell = cnn.cell)
-         |  WHERE pr <= 4
-         |), codes AS (
-         |  SELECT g0.vec_id, g0.cell AS c0, g1.cell AS c1,
-         |         g2.cell AS c2, g3.cell AS c3
-         |  FROM s0gf g0 JOIN s1gf g1 USING (vec_id)
-         |       JOIN s2gf g2 USING (vec_id) JOIN s3gf g3 USING (vec_id)
-         |), cand0 AS (
-         |  SELECT pr.q_id, g5.vec_id FROM pr JOIN g5 ON pr.cell = g5.cell
-         |  WHERE g5.vec_id <> pr.q_id
-         |), cand AS (
-         |  SELECT cd.q_id, cd.vec_id AS id2,
-         |         d0.d + d1.d + d2.d + d3.d AS adc
-         |  FROM cand0 cd JOIN codes ON cd.vec_id = codes.vec_id
-         |  JOIN s0dq d0 ON d0.q_id = cd.q_id AND codes.c0 = d0.cell
-         |  JOIN s1dq d1 ON d1.q_id = cd.q_id AND codes.c1 = d1.cell
-         |  JOIN s2dq d2 ON d2.q_id = cd.q_id AND codes.c2 = d2.cell
-         |  JOIN s3dq d3 ON d3.q_id = cd.q_id AND codes.c3 = d3.cell
-         |), nc AS (SELECT q_id, CAST(count(*) AS BIGINT) AS n_cand
-         |          FROM cand0 GROUP BY 1),
-         |rk AS (
-         |  SELECT q_id, id2, row_number() OVER (
-         |    PARTITION BY q_id ORDER BY adc, id2) AS rn FROM cand
-         |), ta AS (SELECT q_id, id2 FROM rk WHERE rn <= 5),
-         |tr50 AS (SELECT q_id, id2 FROM rk WHERE rn <= 50),
-         |sq AS (SELECT vec_id, sum(v*v) AS s FROM e GROUP BY 1),
-         |dt AS (
-         |  SELECT a.vec_id AS q_id, b.vec_id AS id2, sum(a.v*b.v) AS dot
-         |  FROM e a JOIN e b ON a.i = b.i AND a.vec_id < 5
-         |                    AND b.vec_id <> a.vec_id
-         |  GROUP BY 1, 2
-         |), te AS (
-         |  SELECT q_id, id2 FROM (
-         |    SELECT dt.q_id, dt.id2, row_number() OVER (
-         |      PARTITION BY dt.q_id
-         |      ORDER BY sa.s - 2*dt.dot + sb.s, dt.id2) AS rn
-         |    FROM dt JOIN sq sa ON dt.q_id = sa.vec_id
-         |            JOIN sq sb ON dt.id2 = sb.vec_id)
-         |  WHERE rn <= 5
-         |), trr AS (
-         |  SELECT q_id, id2 FROM (
-         |    SELECT dt.q_id, dt.id2, row_number() OVER (
-         |      PARTITION BY dt.q_id
-         |      ORDER BY sa.s - 2*dt.dot + sb.s, dt.id2) AS rn
-         |    FROM tr50 JOIN dt ON tr50.q_id = dt.q_id AND tr50.id2 = dt.id2
-         |              JOIN sq sa ON dt.q_id = sa.vec_id
-         |              JOIN sq sb ON dt.id2 = sb.vec_id)
-         |  WHERE rn <= 5
-         |), ova AS (
-         |  SELECT ta.q_id, CAST(count(te.id2) AS BIGINT) AS n_overlap_adc
-         |  FROM ta LEFT JOIN te ON ta.q_id = te.q_id AND ta.id2 = te.id2
-         |  GROUP BY 1
-         |), ovr AS (
-         |  SELECT trr.q_id, CAST(count(te.id2) AS BIGINT) AS n_overlap_rerank
-         |  FROM trr LEFT JOIN te ON trr.q_id = te.q_id AND trr.id2 = te.id2
-         |  GROUP BY 1
-         |)
-         |SELECT nc.q_id, nc.n_cand, n_overlap_adc,
-         |       CAST(n_overlap_adc * 2000 AS BIGINT) AS recall_adc_bp,
-         |       n_overlap_rerank,
-         |       CAST(n_overlap_rerank * 2000 AS BIGINT) AS recall_rerank_bp
-         |FROM nc JOIN ova ON nc.q_id = ova.q_id JOIN ovr ON nc.q_id = ovr.q_id
-         |ORDER BY nc.q_id""".stripMargin,
+         |${pqCodesSql("s")},
+         |$corpusQeSql,
+         |${ivfadcCandSql("c", exclude = true)},
+         |${adcRecallSql(nCand = true)}""".stripMargin,
 
     // q118's signature substrate (see lshChainCte for the embedded
     // plane constants).
@@ -3927,15 +3537,15 @@ object VectorOps {
          |$ivfChainBodyStored,
          |$residCteBody,
          |$rChainBody,
-         |qe AS (SELECT vec_id AS q_id, i, v FROM e WHERE vec_id < 5),
-         |${ivfadcTailSql(exclude = true)}""".stripMargin,
+         |$corpusQeSql,
+         |${ivfadcTailSql("r", exclude = true)}""".stripMargin,
 
     // External-query IVFADC: the qe relation is generated from the
     // same exact integer/dyadic formula as the Spark side (no corpus
     // read, no libm), the index bits replay through the shared chains,
-    // and the tail mirrors q263 minus the self-exclusion. The residual
-    // dq tables build inline from qe − probed centroid (the chain
-    // fragment's own dq CTE is hardwired to corpus probes).
+    // and the tail is q263's minus the self-exclusion. The residual
+    // dq tables build from qe − probed centroid (the chain fragment's
+    // own dq CTE is hardwired to corpus probes).
     "q286_ivfadc_external_query" ->
       s"""WITH $eCteBody,
          |$ivfChainBodyStored,
@@ -3947,7 +3557,7 @@ object VectorOps {
          |  FROM generate_series(0, ${EXTQ_N - 1}) t(q_id)
          |       CROSS JOIN generate_series(1, 64) s(i)
          |),
-         |${ivfadcTailSql(exclude = false)}""".stripMargin,
+         |${ivfadcTailSql("r", exclude = false)}""".stripMargin,
 
     // Residual IVFADC: the residual relation er is a pure function of
     // the replayed IVF chain; the residual PQ chains reuse the SAME
@@ -3956,100 +3566,11 @@ object VectorOps {
     "q264_ivfadc_residual" ->
       s"""WITH $eCteBody,
          |$ivfChainBodyStored,
-         |er AS MATERIALIZED (
-         |  SELECT e.vec_id, e.i, e.v - c.cv AS v
-         |  FROM e JOIN g5 USING (vec_id)
-         |       JOIN c4 c ON c.cell = g5.cell AND c.i = e.i
-         |),
-         |$init16Cte,
-         |${(0 until PQ_M).map(sb => pqChainSqlFrom(sb, "er", "r")).mkString(",\n")},
-         |vn AS (SELECT vec_id, sqrt(sum(v*v)) AS nrm FROM e GROUP BY 1),
-         |cnn AS (SELECT cell, sqrt(sum(cv*cv)) AS cn FROM c4 GROUP BY 1),
-         |ccos AS (
-         |  SELECT e.vec_id AS q_id, c.cell, sum(e.v * c.cv) AS dot
-         |  FROM e JOIN c4 c ON e.i = c.i WHERE e.vec_id < 5 GROUP BY 1, 2
-         |), pr AS (
-         |  SELECT q_id, cell FROM (
-         |    SELECT ccos.q_id, ccos.cell, row_number() OVER (
-         |        PARTITION BY ccos.q_id
-         |        ORDER BY ccos.dot/(nq.nrm*cnn.cn) DESC, ccos.cell) AS pr
-         |    FROM ccos JOIN vn nq ON ccos.q_id = nq.vec_id
-         |              JOIN cnn ON ccos.cell = cnn.cell)
-         |  WHERE pr <= 4
-         |), qr AS MATERIALIZED (
-         |  SELECT pr.q_id, pr.cell, e.i, e.v - c.cv AS v
-         |  FROM pr JOIN e ON e.vec_id = pr.q_id
-         |       JOIN c4 c ON c.cell = pr.cell AND c.i = e.i
-         |),
-         |${(0 until PQ_M).map(sb =>
-             s"""rdq$sb AS (
-                |  SELECT qr.q_id, qr.cell, c.cell AS code,
-                |         sum(qr.v*qr.v) - 2*sum(qr.v*c.cv) + sum(c.cv*c.cv) AS d
-                |  FROM qr JOIN r${sb}c$PQ_ITERS c ON qr.i = c.i
-                |  GROUP BY 1, 2, 3
-                |)""".stripMargin).mkString(",\n")},
-         |codes AS (
-         |  SELECT g0.vec_id, g0.cell AS c0, g1.cell AS c1,
-         |         g2.cell AS c2, g3.cell AS c3
-         |  FROM r0gf g0 JOIN r1gf g1 USING (vec_id)
-         |       JOIN r2gf g2 USING (vec_id) JOIN r3gf g3 USING (vec_id)
-         |), cand0 AS (
-         |  SELECT pr.q_id, g5.vec_id, g5.cell
-         |  FROM pr JOIN g5 ON pr.cell = g5.cell
-         |  WHERE g5.vec_id <> pr.q_id
-         |), nc AS (SELECT q_id, CAST(count(*) AS BIGINT) AS n_cand
-         |          FROM cand0 GROUP BY 1),
-         |cand AS (
-         |  SELECT cd.q_id, cd.vec_id AS id2,
-         |         d0.d + d1.d + d2.d + d3.d AS adc
-         |  FROM cand0 cd JOIN codes ON cd.vec_id = codes.vec_id
-         |  JOIN rdq0 d0 ON d0.q_id = cd.q_id AND d0.cell = cd.cell AND codes.c0 = d0.code
-         |  JOIN rdq1 d1 ON d1.q_id = cd.q_id AND d1.cell = cd.cell AND codes.c1 = d1.code
-         |  JOIN rdq2 d2 ON d2.q_id = cd.q_id AND d2.cell = cd.cell AND codes.c2 = d2.code
-         |  JOIN rdq3 d3 ON d3.q_id = cd.q_id AND d3.cell = cd.cell AND codes.c3 = d3.code
-         |), rk AS (
-         |  SELECT q_id, id2, row_number() OVER (
-         |    PARTITION BY q_id ORDER BY adc, id2) AS rn FROM cand
-         |), ta AS (SELECT q_id, id2 FROM rk WHERE rn <= 5),
-         |tr50 AS (SELECT q_id, id2 FROM rk WHERE rn <= 50),
-         |sq AS (SELECT vec_id, sum(v*v) AS s FROM e GROUP BY 1),
-         |dt AS (
-         |  SELECT a.vec_id AS q_id, b.vec_id AS id2, sum(a.v*b.v) AS dot
-         |  FROM e a JOIN e b ON a.i = b.i AND a.vec_id < 5
-         |                    AND b.vec_id <> a.vec_id
-         |  GROUP BY 1, 2
-         |), te AS (
-         |  SELECT q_id, id2 FROM (
-         |    SELECT dt.q_id, dt.id2, row_number() OVER (
-         |      PARTITION BY dt.q_id
-         |      ORDER BY sa.s - 2*dt.dot + sb.s, dt.id2) AS rn
-         |    FROM dt JOIN sq sa ON dt.q_id = sa.vec_id
-         |            JOIN sq sb ON dt.id2 = sb.vec_id)
-         |  WHERE rn <= 5
-         |), trr AS (
-         |  SELECT q_id, id2 FROM (
-         |    SELECT dt.q_id, dt.id2, row_number() OVER (
-         |      PARTITION BY dt.q_id
-         |      ORDER BY sa.s - 2*dt.dot + sb.s, dt.id2) AS rn
-         |    FROM tr50 JOIN dt ON tr50.q_id = dt.q_id AND tr50.id2 = dt.id2
-         |              JOIN sq sa ON dt.q_id = sa.vec_id
-         |              JOIN sq sb ON dt.id2 = sb.vec_id)
-         |  WHERE rn <= 5
-         |), ova AS (
-         |  SELECT ta.q_id, CAST(count(te.id2) AS BIGINT) AS n_overlap_adc
-         |  FROM ta LEFT JOIN te ON ta.q_id = te.q_id AND ta.id2 = te.id2
-         |  GROUP BY 1
-         |), ovr AS (
-         |  SELECT trr.q_id, CAST(count(te.id2) AS BIGINT) AS n_overlap_rerank
-         |  FROM trr LEFT JOIN te ON trr.q_id = te.q_id AND trr.id2 = te.id2
-         |  GROUP BY 1
-         |)
-         |SELECT nc.q_id, nc.n_cand, n_overlap_adc,
-         |       CAST(n_overlap_adc * 2000 AS BIGINT) AS recall_adc_bp,
-         |       n_overlap_rerank,
-         |       CAST(n_overlap_rerank * 2000 AS BIGINT) AS recall_rerank_bp
-         |FROM nc JOIN ova ON nc.q_id = ova.q_id JOIN ovr ON nc.q_id = ovr.q_id
-         |ORDER BY nc.q_id""".stripMargin,
+         |$residCteBody,
+         |$rChainBody,
+         |$corpusQeSql,
+         |${ivfadcCandSql("r", exclude = true)},
+         |${adcRecallSql(nCand = true)}""".stripMargin,
 
     // OPQ-rotated-residual build census: the full composition
     // replayed — IVF chain (dial-routed g5), residuals, the q287 OPQ
@@ -4079,10 +3600,10 @@ object VectorOps {
          |$residCteBody,
          |$init16Cte,
          |$oChainBody,
-         |qe AS (SELECT vec_id AS q_id, i, v FROM e WHERE vec_id < 5),
-         |${ivfadcTailSqlOpq(exclude = true)}""".stripMargin,
+         |$corpusQeSql,
+         |${ivfadcTailSql("o", exclude = true)}""".stripMargin,
 
-    // OPQ-rotated-residual recall audit: q264's oracle shape with the
+    // OPQ-rotated-residual recall audit: the q264 composition on the
     // o-chains — the query residual rotates (qrr) before the dq
     // tables, codes come from the o-pivot, exact reference and
     // re-rank stay in raw space.
@@ -4092,93 +3613,9 @@ object VectorOps {
          |$residCteBody,
          |$init16Cte,
          |$oChainBody,
-         |vn AS (SELECT vec_id, sqrt(sum(v*v)) AS nrm FROM e GROUP BY 1),
-         |cnn AS (SELECT cell, sqrt(sum(cv*cv)) AS cn FROM c4 GROUP BY 1),
-         |ccos AS (
-         |  SELECT e.vec_id AS q_id, c.cell, sum(e.v * c.cv) AS dot
-         |  FROM e JOIN c4 c ON e.i = c.i WHERE e.vec_id < 5 GROUP BY 1, 2
-         |), pr AS (
-         |  SELECT q_id, cell FROM (
-         |    SELECT ccos.q_id, ccos.cell, row_number() OVER (
-         |        PARTITION BY ccos.q_id
-         |        ORDER BY ccos.dot/(nq.nrm*cnn.cn) DESC, ccos.cell) AS pr
-         |    FROM ccos JOIN vn nq ON ccos.q_id = nq.vec_id
-         |              JOIN cnn ON ccos.cell = cnn.cell)
-         |  WHERE pr <= 4
-         |), qr AS MATERIALIZED (
-         |  SELECT pr.q_id, pr.cell, e.i, e.v - c.cv AS v
-         |  FROM pr JOIN e ON e.vec_id = pr.q_id
-         |       JOIN c4 c ON c.cell = pr.cell AND c.i = e.i
-         |), qrr AS MATERIALIZED (
-         |  SELECT qr.q_id, qr.cell, r.i,
-         |         sum((CAST(r.q AS DOUBLE) / $PCA_SCALE.0) * qr.v) AS v
-         |  FROM ns$OPQ_NS_ITERS r JOIN qr ON qr.i = r.j
-         |  GROUP BY 1, 2, 3
-         |),
-         |${(0 until PQ_M).map(sb =>
-             s"""odq$sb AS (
-                |  SELECT qrr.q_id, qrr.cell, c.cell AS code,
-                |         sum(qrr.v*qrr.v) - 2*sum(qrr.v*c.cv) + sum(c.cv*c.cv) AS d
-                |  FROM qrr JOIN o${sb}c$PQ_ITERS c ON qrr.i = c.i
-                |  GROUP BY 1, 2, 3
-                |)""".stripMargin).mkString(",\n")},
-         |cand0 AS (
-         |  SELECT pr.q_id, g5.vec_id, g5.cell
-         |  FROM pr JOIN g5 ON pr.cell = g5.cell
-         |  WHERE g5.vec_id <> pr.q_id
-         |), nc AS (SELECT q_id, CAST(count(*) AS BIGINT) AS n_cand
-         |          FROM cand0 GROUP BY 1),
-         |cand AS (
-         |  SELECT cd.q_id, cd.vec_id AS id2,
-         |         d0.d + d1.d + d2.d + d3.d AS adc
-         |  FROM cand0 cd JOIN ocodes ON cd.vec_id = ocodes.vec_id
-         |  JOIN odq0 d0 ON d0.q_id = cd.q_id AND d0.cell = cd.cell AND ocodes.o0 = d0.code
-         |  JOIN odq1 d1 ON d1.q_id = cd.q_id AND d1.cell = cd.cell AND ocodes.o1 = d1.code
-         |  JOIN odq2 d2 ON d2.q_id = cd.q_id AND d2.cell = cd.cell AND ocodes.o2 = d2.code
-         |  JOIN odq3 d3 ON d3.q_id = cd.q_id AND d3.cell = cd.cell AND ocodes.o3 = d3.code
-         |), rk AS (
-         |  SELECT q_id, id2, row_number() OVER (
-         |    PARTITION BY q_id ORDER BY adc, id2) AS rn FROM cand
-         |), ta AS (SELECT q_id, id2 FROM rk WHERE rn <= 5),
-         |tr50 AS (SELECT q_id, id2 FROM rk WHERE rn <= 50),
-         |sq AS (SELECT vec_id, sum(v*v) AS s FROM e GROUP BY 1),
-         |dt AS (
-         |  SELECT a.vec_id AS q_id, b.vec_id AS id2, sum(a.v*b.v) AS dot
-         |  FROM e a JOIN e b ON a.i = b.i AND a.vec_id < 5
-         |                    AND b.vec_id <> a.vec_id
-         |  GROUP BY 1, 2
-         |), te AS (
-         |  SELECT q_id, id2 FROM (
-         |    SELECT dt.q_id, dt.id2, row_number() OVER (
-         |      PARTITION BY dt.q_id
-         |      ORDER BY sa.s - 2*dt.dot + sb.s, dt.id2) AS rn
-         |    FROM dt JOIN sq sa ON dt.q_id = sa.vec_id
-         |            JOIN sq sb ON dt.id2 = sb.vec_id)
-         |  WHERE rn <= 5
-         |), trr AS (
-         |  SELECT q_id, id2 FROM (
-         |    SELECT dt.q_id, dt.id2, row_number() OVER (
-         |      PARTITION BY dt.q_id
-         |      ORDER BY sa.s - 2*dt.dot + sb.s, dt.id2) AS rn
-         |    FROM tr50 JOIN dt ON tr50.q_id = dt.q_id AND tr50.id2 = dt.id2
-         |              JOIN sq sa ON dt.q_id = sa.vec_id
-         |              JOIN sq sb ON dt.id2 = sb.vec_id)
-         |  WHERE rn <= 5
-         |), ova AS (
-         |  SELECT ta.q_id, CAST(count(te.id2) AS BIGINT) AS n_overlap_adc
-         |  FROM ta LEFT JOIN te ON ta.q_id = te.q_id AND ta.id2 = te.id2
-         |  GROUP BY 1
-         |), ovr AS (
-         |  SELECT trr.q_id, CAST(count(te.id2) AS BIGINT) AS n_overlap_rerank
-         |  FROM trr LEFT JOIN te ON trr.q_id = te.q_id AND trr.id2 = te.id2
-         |  GROUP BY 1
-         |)
-         |SELECT nc.q_id, nc.n_cand, n_overlap_adc,
-         |       CAST(n_overlap_adc * 2000 AS BIGINT) AS recall_adc_bp,
-         |       n_overlap_rerank,
-         |       CAST(n_overlap_rerank * 2000 AS BIGINT) AS recall_rerank_bp
-         |FROM nc JOIN ova ON nc.q_id = ova.q_id JOIN ovr ON nc.q_id = ovr.q_id
-         |ORDER BY nc.q_id""".stripMargin,
+         |$corpusQeSql,
+         |${ivfadcCandSql("o", exclude = true)},
+         |${adcRecallSql(nCand = true)}""".stripMargin,
 
     // Incremental add: yesterday's frozen state replayed from scratch
     // over the OLD subset (its own init/nlist/train-sample draws, all
@@ -4331,8 +3768,7 @@ object VectorOps {
     // RR-PQ ADC recall: rotated-space codes + dq tables (the t-chains'
     // own dq CTE — queries rotate through the same closed form),
     // raw-space exact reference and re-rank (isometry: identical
-    // ranks). q260's tail verbatim, t-prefixed code/dq sources
-    // (shared with the q288 oracle via [[rotAdcTailSql]]).
+    // ranks) through [[rotAdcTailSql]] over the t-prefixed chains.
     "q266_rrpq_adc_recall" ->
       s"""WITH $eCteBody,
          |$rotCteBody,

@@ -1061,8 +1061,8 @@ class PlanAuditSpec extends SparkSpec {
     import org.apache.spark.sql.execution.window.WindowGroupLimitExec
     Seq("q260_pq_adc_recall", "q261_ivfadc_recall", "q263_ivfadc_query",
         "q264_ivfadc_residual", "q266_rrpq_adc_recall",
-        "q286_ivfadc_external_query", "q294_opq_ivfadc_query",
-        "q295_opq_residual_recall").foreach { qn =>
+        "q286_ivfadc_external_query", "q288_opq_adc_recall",
+        "q294_opq_ivfadc_query", "q295_opq_residual_recall").foreach { qn =>
       val limits = physical(qn).collect { case w: WindowGroupLimitExec => w }
       assert(limits.nonEmpty, s"$qn: expected a WindowGroupLimit prune")
     }
@@ -1078,8 +1078,9 @@ class PlanAuditSpec extends SparkSpec {
     // window left on the serving path is an ORDERED one (the
     // rank/shortlist windows, all group-limit prunable).
     import org.apache.spark.sql.execution.window.WindowExec
-    Seq("q263_ivfadc_query", "q286_ivfadc_external_query",
-        "q294_opq_ivfadc_query").foreach { qn =>
+    Seq("q261_ivfadc_recall", "q263_ivfadc_query", "q264_ivfadc_residual",
+        "q286_ivfadc_external_query", "q294_opq_ivfadc_query",
+        "q295_opq_residual_recall").foreach { qn =>
       physical(qn).collect { case w: WindowExec => w }.foreach { w =>
         assert(w.orderSpec.nonEmpty,
           s"$qn: full-frame (unordered) window on the serving path: $w")

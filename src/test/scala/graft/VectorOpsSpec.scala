@@ -808,9 +808,13 @@ class VectorOpsSpec extends SparkSpec {
     // re-rank selects from a superset of the ADC top-5, so any
     // exact-top-5 member the ADC found survives re-ranking)
     val rows = VectorOps.queries("q295_opq_residual_recall")(spark, sf001).collect()
-      .map(r => (r.getLong(0), r.getLong(2), r.getLong(3), r.getLong(4), r.getLong(5)))
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
+        r.getLong(4), r.getLong(5)))
     assert(rows.map(_._1).toSeq === (0L to 4L))
-    rows.foreach { case (q, na, ra, nr, rr) =>
+    rows.foreach { case (q, nc, na, ra, nr, rr) =>
+      // the q261/q264 probe tier — identical exact scan counts
+      assert(nc === expectedIvfScan(q),
+        s"query $q scanned $nc, probe replay expects ${expectedIvfScan(q)}")
       assert(na >= 0L && na <= 5L && nr >= 0L && nr <= 5L)
       assert(ra === na * 2000 && rr === nr * 2000)
       assert(nr >= na, s"query $q: rerank overlap $nr < ADC overlap $na")
