@@ -57,13 +57,60 @@ object Dedup {
        |WHERE CAST(p.inter AS DOUBLE)/(s1.n + s2.n - p.inter) >= $thr
        |ORDER BY id1, id2""".stripMargin
 
-  /** DuckDB side of the exact containment relation (asymmetric
-    * overlap over distinct 3-gram shingles) — shared by q128 (exact
-    * tier) and q128b (df-capped production tier; cap ≫ every gram's
-    * df on the test corpora, so capped ≡ exact here).
+  /** `pr AS (…)`: the exact 0.8 Jaccard pair relation as a CTE — the
+    * opening of every oracle over the exact pair graph.
     */
-  private val containmentOracle: String =
-    """WITH t AS (
+  private val pairCte: String =
+    s"""pr AS (
+       |${jaccardOracle("0.8").linesIterator.map("  " + _).mkString("\n")}
+       |)""".stripMargin
+
+  /** The exact canonical-label closure, opening a `WITH RECURSIVE`:
+    * `pr`, its symmetric edges `e(a, b)`, the transitive `reach(a, b)`
+    * and `canon(doc_id, canonical_id BIGINT)` = min over self ∪
+    * reachable. `canon` holds only docs in some pair; a singleton is
+    * its own canonical, so readers coalesce to doc_id.
+    */
+  private val canonCtes: String =
+    s"""$pairCte, e(a, b) AS (
+       |  SELECT id1, id2 FROM pr UNION SELECT id2, id1 FROM pr
+       |), reach(a, b) AS (
+       |  SELECT a, b FROM e
+       |  UNION
+       |  SELECT r.a, e.b FROM reach r JOIN e ON r.b = e.a
+       |), canon AS (
+       |  SELECT a AS doc_id, CAST(least(a, min(b)) AS BIGINT) AS canonical_id
+       |  FROM reach GROUP BY a
+       |)""".stripMargin
+
+  /** The canonical labels themselves — the from-scratch full-graph
+    * recompute that q67 (exact components), q69 (LSH-fed), q213
+    * (inline incremental fold) and q299 (stored-state fold) must all
+    * equal.
+    */
+  private val canonicalOracle: String =
+    s"""WITH RECURSIVE $canonCtes
+       |SELECT doc_id, canonical_id FROM canon ORDER BY doc_id""".stripMargin
+
+  /** The exact 0.8 pair graph restricted to pairs whose LARGER id is in
+    * the newest-fifth delta (id2 is always the newer doc, so this is
+    * exactly "pairs involving the new batch") — q101's inline tier and
+    * q302's stored-band serve produce this one relation.
+    */
+  private val deltaPairsOracle: String =
+    s"""WITH $pairCte, cut AS (
+       |  SELECT (4 * CAST(max(doc_id) AS BIGINT)) // 5 AS cut FROM documents
+       |)
+       |SELECT p.id1, p.id2, p.jaccard
+       |FROM pr p, cut
+       |WHERE p.id2 > cut.cut
+       |ORDER BY p.id1, p.id2""".stripMargin
+
+  /** Distinct 3-gram shingle sets `t, sh(doc_id, g), sizes(doc_id, sz)`
+    * — the base every containment oracle starts from.
+    */
+  private val gramSetCtes: String =
+    """t AS (
       |  SELECT doc_id, string_split(text,' ') AS ws FROM documents
       |), sh AS (
       |  SELECT DISTINCT doc_id,
@@ -74,16 +121,79 @@ object Dedup {
       |  WHERE len(ws) >= 3
       |), sizes AS (
       |  SELECT doc_id, count(*) AS sz FROM sh GROUP BY 1
-      |), ov AS (
-      |  SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS n_inter
-      |  FROM sh a JOIN sh b ON a.g = b.g AND a.doc_id <> b.doc_id
-      |  GROUP BY 1, 2
-      |)
-      |SELECT id_a AS contained_id, id_b AS container_id,
-      |       (10000 * n_inter) // sz AS cont_bp
-      |FROM ov JOIN sizes ON id_a = sizes.doc_id
-      |WHERE n_inter * 10 >= sz * 9
-      |ORDER BY contained_id, container_id""".stripMargin
+      |)""".stripMargin
+
+  /** [[gramSetCtes]] plus the all-pairs gram overlap `ov(id_a, id_b,
+    * n_inter)`.
+    */
+  private val gramOverlapCtes: String =
+    s"""$gramSetCtes, ov AS (
+       |  SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS n_inter
+       |  FROM sh a JOIN sh b ON a.g = b.g AND a.doc_id <> b.doc_id
+       |  GROUP BY 1, 2
+       |)""".stripMargin
+
+  /** DuckDB side of the exact containment relation (asymmetric
+    * overlap over distinct 3-gram shingles) — shared by q128 (exact
+    * tier) and q128b (df-capped production tier; cap ≫ every gram's
+    * df on the test corpora, so capped ≡ exact here).
+    */
+  private val containmentOracle: String =
+    s"""WITH $gramOverlapCtes
+       |SELECT id_a AS contained_id, id_b AS container_id,
+       |       (10000 * n_inter) // sz AS cont_bp
+       |FROM ov JOIN sizes ON id_a = sizes.doc_id
+       |WHERE n_inter * 10 >= sz * 9
+       |ORDER BY contained_id, container_id""".stripMargin
+
+  /** The exact containment relation restricted to pairs touching the
+    * newest-fifth delta — q101's oracle discipline for the asymmetric
+    * tier. q140 (inline) and q303 (stored-prefix serve; the prefix
+    * lemma is order-free and the verify exact) produce this relation.
+    */
+  private val deltaContainmentOracle: String =
+    s"""WITH $gramOverlapCtes, cut AS (
+       |  SELECT (4 * max(doc_id)) // 5 AS c FROM documents
+       |)
+       |SELECT id_a AS contained_id, id_b AS container_id,
+       |       (10000 * n_inter) // sz AS cont_bp
+       |FROM ov JOIN sizes ON id_a = sizes.doc_id, cut
+       |WHERE n_inter * 10 >= sz * 9 AND (id_a > cut.c OR id_b > cut.c)
+       |ORDER BY contained_id, container_id""".stripMargin
+
+  /** Incremental label maintenance over the quotient graph: `oldLab`
+    * (doc_id, canonical_id) labels the old corpus, `deltaPairs` (id1,
+    * id2) are the verified pairs touching the delta. Each pair endpoint
+    * is contracted to its old canonical (or itself when unlabelled),
+    * connected components run on that contracted, delta-sized graph,
+    * and every old member and delta endpoint is relabelled through its
+    * old canonical. Cluster minima are preserved, so the result equals
+    * the components of old ∪ delta edges, ordered by doc_id. The
+    * caller decides how `oldLab` and `deltaPairs` are materialized:
+    * both are read by several branches here.
+    */
+  def foldDelta(oldLab: DataFrame, deltaPairs: DataFrame): DataFrame = {
+    val l1 = oldLab.select(col("doc_id").as("id1"), col("canonical_id").as("c1"))
+    val l2 = oldLab.select(col("doc_id").as("id2"), col("canonical_id").as("c2"))
+    val contracted = deltaPairs
+      .join(l1, Seq("id1"), "left_outer")
+      .join(l2, Seq("id2"), "left_outer")
+      .select(coalesce(col("c1"), col("id1")).as("id1"),
+              coalesce(col("c2"), col("id2")).as("id2"))
+      .filter(col("id1") =!= col("id2"))
+    val compM = Components.connectedComponents(contracted)
+      .select(col("doc_id").as("node"), col("canonical_id").as("cf"))
+    val parts = oldLab.select(col("doc_id"))
+      .unionByName(deltaPairs.select(col("id1").as("doc_id")))
+      .unionByName(deltaPairs.select(col("id2").as("doc_id")))
+      .distinct()
+    val withL0 = parts
+      .join(oldLab.withColumnRenamed("canonical_id", "l0"), Seq("doc_id"), "left_outer")
+      .select(col("doc_id"), coalesce(col("l0"), col("doc_id")).as("l0"))
+    withL0.join(compM, withL0("l0") === compM("node"), "left_outer")
+      .select(col("doc_id"), coalesce(col("cf"), col("l0")).as("canonical_id"))
+      .orderBy(col("doc_id"))
+  }
 
   /** Exact-duplicate collapse ahead of the sketch tiers (the
     * mass-duplicate guard): one representative per distinct text, so a
@@ -124,8 +234,8 @@ object Dedup {
     * cluster, and the cluster minimum over representatives IS the global
     * cluster minimum (each rep is its group's min id). LSH misses at the
     * planted-dup similarity are ≪ 1e-6 (same argument that lets q62
-    * share q61's oracle), so this reuses q67's recursive-CTE oracle
-    * verbatim. Every stage is a keyed shuffle or a broadcast — nothing
+    * share q61's oracle), so q69 shares `canonicalOracle` with q67.
+    * Every stage is a keyed shuffle or a broadcast — nothing
     * quadratic remains on this path at 100 TB.
     */
   def canonicalizeLsh(docs: DataFrame): DataFrame = {
@@ -674,7 +784,7 @@ object Dedup {
     // Canonicalization, production tier (round-2 verdict item 1):
     // exact-dup collapse → LSH candidates over representatives → exact
     // verify → components → fan back out. Same relation as q67 (see
-    // canonicalizeLsh), so it reuses q67's oracle verbatim — and it is
+    // canonicalizeLsh), so it shares `canonicalOracle` — and it is
     // the composition a 100 TB pipeline actually runs: no all-pairs
     // subtree anywhere, mass-duplicate clusters collapsed before
     // sketching.
@@ -700,7 +810,7 @@ object Dedup {
       val oldDocs = docs.crossJoin(broadcast(cutDf))
         .filter(col("doc_id") <= col("cut")).drop("cut")
       // old state on the PRODUCTION substrate (exact-collapse + LSH +
-      // verify — q69's path, which shares q67's oracle): the exact
+      // verify — q69's path, on `canonicalOracle` too): the exact
       // all-pairs substrate here was measured 19.5 s at sf0.1 vs 7.6 s
       // for this form, and its Σ m_g² term is the known 100 TB killer.
       // Checkpointed once: FOUR downstream consumers (l1, l2, parts,
@@ -729,26 +839,7 @@ object Dedup {
       val deltaPairs = TextSim.verifyJaccard(cand, shAll, 0.8)
         .select(col("id1"), col("id2"))
         .localCheckpoint(true)
-      val l1 = oldLab.select(col("doc_id").as("id1"), col("canonical_id").as("c1"))
-      val l2 = oldLab.select(col("doc_id").as("id2"), col("canonical_id").as("c2"))
-      val contracted = deltaPairs
-        .join(l1, Seq("id1"), "left_outer")
-        .join(l2, Seq("id2"), "left_outer")
-        .select(coalesce(col("c1"), col("id1")).as("id1"),
-                coalesce(col("c2"), col("id2")).as("id2"))
-        .filter(col("id1") =!= col("id2"))
-      val compM = Components.connectedComponents(contracted)
-        .select(col("doc_id").as("node"), col("canonical_id").as("cf"))
-      val parts = oldLab.select(col("doc_id"))
-        .unionByName(deltaPairs.select(col("id1").as("doc_id")))
-        .unionByName(deltaPairs.select(col("id2").as("doc_id")))
-        .distinct()
-      val withL0 = parts
-        .join(oldLab.withColumnRenamed("canonical_id", "l0"), Seq("doc_id"), "left_outer")
-        .select(col("doc_id"), coalesce(col("l0"), col("doc_id")).as("l0"))
-      withL0.join(compM, withL0("l0") === compM("node"), "left_outer")
-        .select(col("doc_id"), coalesce(col("cf"), col("l0")).as("canonical_id"))
-        .orderBy(col("doc_id"))
+      foldDelta(oldLab, deltaPairs)
     }),
 
     // The PRODUCTION shape of q213 (round-15, r14 verdict item 1):
@@ -761,9 +852,9 @@ object Dedup {
     // sized) graph, fan out. The old corpus is touched only by (a)
     // the stored-file reads and (b) the candidate-restricted shingle
     // verify (left-semi on candidate ids — delta-proportional, never
-    // a corpus re-shingle). Same quotient-graph theorem as q213, so
-    // the oracle is the from-scratch full-graph recompute (q67's),
-    // verbatim — the stored bits are deterministic functions of the
+    // a corpus re-shingle). Same quotient-graph theorem (`foldDelta`)
+    // as q213, so the oracle is the from-scratch full-graph recompute,
+    // `canonicalOracle` — the stored bits are deterministic functions of the
     // raw table, exactly like the q262 index census. The state
     // UPDATE a nightly would write back is this query's own output
     // (labels') plus the delta's bands appended to bands/ — one
@@ -779,26 +870,7 @@ object Dedup {
       // the stored labels are a parquet scan — cheap to re-read, so
       // unlike q213's inline oldLab they are NOT checkpointed (the
       // 4-consumer multiplicity that cost q213 3.6 s is free here)
-      val l1 = oldLab.select(col("doc_id").as("id1"), col("canonical_id").as("c1"))
-      val l2 = oldLab.select(col("doc_id").as("id2"), col("canonical_id").as("c2"))
-      val contracted = deltaPairs
-        .join(l1, Seq("id1"), "left_outer")
-        .join(l2, Seq("id2"), "left_outer")
-        .select(coalesce(col("c1"), col("id1")).as("id1"),
-                coalesce(col("c2"), col("id2")).as("id2"))
-        .filter(col("id1") =!= col("id2"))
-      val compM = Components.connectedComponents(contracted)
-        .select(col("doc_id").as("node"), col("canonical_id").as("cf"))
-      val parts = oldLab.select(col("doc_id"))
-        .unionByName(deltaPairs.select(col("id1").as("doc_id")))
-        .unionByName(deltaPairs.select(col("id2").as("doc_id")))
-        .distinct()
-      val withL0 = parts
-        .join(oldLab.withColumnRenamed("canonical_id", "l0"), Seq("doc_id"), "left_outer")
-        .select(col("doc_id"), coalesce(col("l0"), col("doc_id")).as("l0"))
-      withL0.join(compM, withL0("l0") === compM("node"), "left_outer")
-        .select(col("doc_id"), coalesce(col("cf"), col("l0")).as("canonical_id"))
-        .orderBy(col("doc_id"))
+      foldDelta(oldLab, deltaPairs)
     }),
 
     // q101's PRODUCTION shape (round-15, completing the r14 verdict's
@@ -807,7 +879,7 @@ object Dedup {
     // verified pair relation itself — what a nightly audit log
     // appends. Produces exactly q101's relation (pairs with the
     // newer endpoint in the delta — a pair's larger id is always the
-    // newer doc), so it shares q101's oracle verbatim.
+    // newer doc), so it shares `deltaPairsOracle` with q101.
     "q302_incremental_neardup_stored" -> ((s, d) =>
       storedDeltaVerified(s, d)),
 
@@ -951,7 +1023,7 @@ object Dedup {
     // stored prefixes carry the OLD corpus's df order; the prefix
     // lemma is order-free (see the build comment), so completeness
     // is a theorem and the exact verify reproduces q140's relation
-    // identically — its oracle, verbatim.
+    // identically — both read `deltaContainmentOracle`.
     "q303_incremental_containment_stored" -> ((s, d) => {
       val root = ensureCanonState(s, d)
       val gidsOld = s.read.parquet(s"$root/gramsid")   // (doc_id, gid)
@@ -987,7 +1059,7 @@ object Dedup {
       // invariant under the g↔gid bijection and the prefix lemma is
       // order-free (ANY L grams of A work; the df order only tunes
       // candidate volume), so the output relation is bit-identical —
-      // q140's oracle, verbatim. Measured (10×, cpus=8, fresh JVM,
+      // `deltaContainmentOracle`, as q140. Measured (10×, cpus=8, fresh JVM,
       // min of 2, same day): serve 130.0 → 83.3 s (inline q140 reads
       // 149.0 s that day — the serve is now 1.79× ahead, was 1.15×);
       // at sf0.1 the dictionary chain's fixed cost shows as
@@ -1483,40 +1555,15 @@ object Dedup {
     // exact-by-pigeonhole prefix tier — same relation, zero recall argument
     "q138_neardup_prefix" -> jaccardOracle("0.8"),
 
-    // Exact pair graph at 0.8 restricted to pairs whose LARGER id is
-    // in the delta (id2 is always the newer doc, so this is exactly
-    // "pairs involving the new batch").
-    "q101_incremental_neardup" ->
-      s"""WITH pr AS (
-         |${jaccardOracle("0.8").linesIterator.map("  " + _).mkString("\n")}
-         |), cut AS (
-         |  SELECT (4 * CAST(max(doc_id) AS BIGINT)) // 5 AS cut FROM documents
-         |)
-         |SELECT p.id1, p.id2, p.jaccard
-         |FROM pr p, cut
-         |WHERE p.id2 > cut.cut
-         |ORDER BY p.id1, p.id2""".stripMargin,
-
+    "q101_incremental_neardup" -> deltaPairsOracle,
     // The stored-band serve produces q101's relation exactly (the
-    // stored bands are deterministic functions of the raw table) —
-    // q101's oracle, verbatim.
-    "q302_incremental_neardup_stored" ->
-      s"""WITH pr AS (
-         |${jaccardOracle("0.8").linesIterator.map("  " + _).mkString("\n")}
-         |), cut AS (
-         |  SELECT (4 * CAST(max(doc_id) AS BIGINT)) // 5 AS cut FROM documents
-         |)
-         |SELECT p.id1, p.id2, p.jaccard
-         |FROM pr p, cut
-         |WHERE p.id2 > cut.cut
-         |ORDER BY p.id1, p.id2""".stripMargin,
+    // stored bands are deterministic functions of the raw table).
+    "q302_incremental_neardup_stored" -> deltaPairsOracle,
 
     // Exact pair graph at 0.8 (same CTE base), rolled up to the
     // source-pair matrix.
     "q247_dedup_transitivity" ->
-      s"""WITH pr AS (
-         |${jaccardOracle("0.8").linesIterator.map("  " + _).mkString("\n")}
-         |), e AS (SELECT id1 AS a, id2 AS b FROM pr),
+      s"""WITH $pairCte, e AS (SELECT id1 AS a, id2 AS b FROM pr),
          |deg AS (
          |  SELECT n, CAST(count(*) AS BIGINT) AS d
          |  FROM (SELECT a AS n FROM e UNION ALL SELECT b AS n FROM e)
@@ -1540,9 +1587,7 @@ object Dedup {
          |ORDER BY agg.n_nodes""".stripMargin,
 
     "q96_source_leakage" ->
-      s"""WITH pr AS (
-         |${jaccardOracle("0.8").linesIterator.map("  " + _).mkString("\n")}
-         |)
+      s"""WITH $pairCte
          |SELECT least(d1.source, d2.source) AS src_a,
          |       greatest(d1.source, d2.source) AS src_b,
          |       count(*) AS n_pairs
@@ -1555,18 +1600,7 @@ object Dedup {
     // Canonical ids from the exact recursive closure, split on the
     // canonical key with q86/q100's md5 expression.
     "q109_leakage_safe_split" ->
-      s"""WITH RECURSIVE pr AS (
-         |${jaccardOracle("0.8").linesIterator.map("  " + _).mkString("\n")}
-         |), e(a, b) AS (
-         |  SELECT id1, id2 FROM pr UNION SELECT id2, id1 FROM pr
-         |), reach(a, b) AS (
-         |  SELECT a, b FROM e
-         |  UNION
-         |  SELECT r.a, e.b FROM reach r JOIN e ON r.b = e.a
-         |), canon AS (
-         |  SELECT a AS doc_id, CAST(least(a, min(b)) AS BIGINT) AS canonical_id
-         |  FROM reach GROUP BY a
-         |)
+      s"""WITH RECURSIVE $canonCtes
          |SELECT d.doc_id,
          |       coalesce(c.canonical_id, d.doc_id) AS split_key,
          |       CASE WHEN CAST(('0x' || substr(md5(CAST(coalesce(c.canonical_id, d.doc_id) AS VARCHAR)), 1, 8)) AS BIGINT) % 100 < 80 THEN 'train'
@@ -1576,18 +1610,7 @@ object Dedup {
          |ORDER BY d.doc_id""".stripMargin,
 
     "q120_source_dup_rate" ->
-      s"""WITH RECURSIVE pr AS (
-         |${jaccardOracle("0.8").linesIterator.map("  " + _).mkString("\n")}
-         |), e(a, b) AS (
-         |  SELECT id1, id2 FROM pr UNION SELECT id2, id1 FROM pr
-         |), reach(a, b) AS (
-         |  SELECT a, b FROM e
-         |  UNION
-         |  SELECT r.a, e.b FROM reach r JOIN e ON r.b = e.a
-         |), lab AS (
-         |  SELECT a AS doc_id, least(a, min(b)) AS canonical_id
-         |  FROM reach GROUP BY a
-         |)
+      s"""WITH RECURSIVE $canonCtes
          |SELECT d.source, count(*) AS n_docs,
          |       CAST(sum(CASE WHEN l.canonical_id IS NOT NULL
          |                      AND l.canonical_id <> d.doc_id
@@ -1595,25 +1618,14 @@ object Dedup {
          |       (10000 * CAST(sum(CASE WHEN l.canonical_id IS NOT NULL
          |                               AND l.canonical_id <> d.doc_id
          |                         THEN 1 ELSE 0 END) AS BIGINT)) // count(*) AS dup_bp
-         |FROM documents d LEFT JOIN lab l ON d.doc_id = l.doc_id
+         |FROM documents d LEFT JOIN canon l ON d.doc_id = l.doc_id
          |GROUP BY d.source ORDER BY d.source""".stripMargin,
 
     "q190_cluster_representatives" ->
-      s"""WITH RECURSIVE pr AS (
-         |${jaccardOracle("0.8").linesIterator.map("  " + _).mkString("\n")}
-         |), e(a, b) AS (
-         |  SELECT id1, id2 FROM pr UNION SELECT id2, id1 FROM pr
-         |), reach(a, b) AS (
-         |  SELECT a, b FROM e
-         |  UNION
-         |  SELECT r.a, e.b FROM reach r JOIN e ON r.b = e.a
-         |), lab AS (
-         |  SELECT a AS doc_id, least(a, min(b)) AS canonical_id
-         |  FROM reach GROUP BY a
-         |), m AS (
+      s"""WITH RECURSIVE $canonCtes, m AS (
          |  SELECT coalesce(l.canonical_id, d.doc_id) AS cluster_id, d.doc_id,
          |         CAST(len(string_split(d.text, ' ')) AS BIGINT) AS n_tok
-         |  FROM documents d LEFT JOIN lab l ON d.doc_id = l.doc_id
+         |  FROM documents d LEFT JOIN canon l ON d.doc_id = l.doc_id
          |)
          |SELECT cluster_id, count(*) AS n_members,
          |       arg_max(doc_id, n_tok * 100000000 - doc_id) AS rep_doc_id,
@@ -1622,25 +1634,14 @@ object Dedup {
          |ORDER BY cluster_id""".stripMargin,
 
     "q189_dedup_token_savings" ->
-      s"""WITH RECURSIVE pr AS (
-         |${jaccardOracle("0.8").linesIterator.map("  " + _).mkString("\n")}
-         |), e(a, b) AS (
-         |  SELECT id1, id2 FROM pr UNION SELECT id2, id1 FROM pr
-         |), reach(a, b) AS (
-         |  SELECT a, b FROM e
-         |  UNION
-         |  SELECT r.a, e.b FROM reach r JOIN e ON r.b = e.a
-         |), lab AS (
-         |  SELECT a AS doc_id, least(a, min(b)) AS canonical_id
-         |  FROM reach GROUP BY a
-         |), dt AS (
+      s"""WITH RECURSIVE $canonCtes, dt AS (
          |  SELECT d.source,
          |         CAST(len(string_split(d.text, ' ')) AS BIGINT) AS n_tok,
          |         CASE WHEN l.canonical_id IS NOT NULL
          |               AND l.canonical_id <> d.doc_id
          |              THEN CAST(len(string_split(d.text, ' ')) AS BIGINT)
          |              ELSE 0 END AS dup_tok
-         |  FROM documents d LEFT JOIN lab l ON d.doc_id = l.doc_id
+         |  FROM documents d LEFT JOIN canon l ON d.doc_id = l.doc_id
          |)
          |SELECT source,
          |       CAST(sum(n_tok) AS BIGINT) AS tok_total,
@@ -1650,102 +1651,32 @@ object Dedup {
          |FROM dt GROUP BY source ORDER BY source""".stripMargin,
 
     "q115_dedup_cluster_histogram" ->
-      s"""WITH RECURSIVE pr AS (
-         |${jaccardOracle("0.8").linesIterator.map("  " + _).mkString("\n")}
-         |), e(a, b) AS (
-         |  SELECT id1, id2 FROM pr UNION SELECT id2, id1 FROM pr
-         |), reach(a, b) AS (
-         |  SELECT a, b FROM e
-         |  UNION
-         |  SELECT r.a, e.b FROM reach r JOIN e ON r.b = e.a
-         |), lab AS (
-         |  SELECT a AS doc_id, least(a, min(b)) AS canonical_id
-         |  FROM reach GROUP BY a
-         |), cs AS (
+      s"""WITH RECURSIVE $canonCtes, cs AS (
          |  SELECT coalesce(l.canonical_id, d.doc_id) AS canon, count(*) AS cluster_size
-         |  FROM documents d LEFT JOIN lab l ON d.doc_id = l.doc_id
+         |  FROM documents d LEFT JOIN canon l ON d.doc_id = l.doc_id
          |  GROUP BY 1
          |)
          |SELECT cluster_size, count(*) AS n_clusters,
          |       CAST(sum(cluster_size) AS BIGINT) AS n_docs
          |FROM cs GROUP BY cluster_size ORDER BY cluster_size""".stripMargin,
 
-    // Transitive closure over the exact pair graph via recursive CTE;
-    // canonical = min over self ∪ reachable. q69 (the LSH-fed
+    // The exact canonical labels (canonicalOracle). q69 (the LSH-fed
     // production composition) produces the identical relation — exact
     // twins are Jaccard-1.0 pairs and LSH misses at the 0.8 threshold
-    // are ≪ 1e-6 — so it shares this oracle verbatim.
-    "q69_neardup_canonical_lsh" ->
-      s"""WITH RECURSIVE pr AS (
-         |${jaccardOracle("0.8").linesIterator.map("  " + _).mkString("\n")}
-         |), e(a, b) AS (
-         |  SELECT id1, id2 FROM pr UNION SELECT id2, id1 FROM pr
-         |), reach(a, b) AS (
-         |  SELECT a, b FROM e
-         |  UNION
-         |  SELECT r.a, e.b FROM reach r JOIN e ON r.b = e.a
-         |)
-         |SELECT a AS doc_id, CAST(least(a, min(b)) AS BIGINT) AS canonical_id
-         |FROM reach GROUP BY a ORDER BY doc_id""".stripMargin,
-
-    "q67_neardup_components" ->
-      s"""WITH RECURSIVE pr AS (
-         |${jaccardOracle("0.8").linesIterator.map("  " + _).mkString("\n")}
-         |), e(a, b) AS (
-         |  SELECT id1, id2 FROM pr UNION SELECT id2, id1 FROM pr
-         |), reach(a, b) AS (
-         |  SELECT a, b FROM e
-         |  UNION
-         |  SELECT r.a, e.b FROM reach r JOIN e ON r.b = e.a
-         |)
-         |SELECT a AS doc_id, CAST(least(a, min(b)) AS BIGINT) AS canonical_id
-         |FROM reach GROUP BY a ORDER BY doc_id""".stripMargin,
-
-    // The stored-state serve tier produces the same relation as the
-    // inline incremental path (the stored bits are deterministic
-    // functions of the raw table) — q67's oracle, verbatim.
-    "q299_canonical_serve_stored" ->
-      s"""WITH RECURSIVE pr AS (
-         |${jaccardOracle("0.8").linesIterator.map("  " + _).mkString("\n")}
-         |), e(a, b) AS (
-         |  SELECT id1, id2 FROM pr UNION SELECT id2, id1 FROM pr
-         |), reach(a, b) AS (
-         |  SELECT a, b FROM e
-         |  UNION
-         |  SELECT r.a, e.b FROM reach r JOIN e ON r.b = e.a
-         |)
-         |SELECT a AS doc_id, CAST(least(a, min(b)) AS BIGINT) AS canonical_id
-         |FROM reach GROUP BY a ORDER BY doc_id""".stripMargin,
-
-    // The incremental path must equal the from-scratch full-graph
-    // recompute — so its oracle IS q67's, verbatim.
-    "q213_incremental_components" ->
-      s"""WITH RECURSIVE pr AS (
-         |${jaccardOracle("0.8").linesIterator.map("  " + _).mkString("\n")}
-         |), e(a, b) AS (
-         |  SELECT id1, id2 FROM pr UNION SELECT id2, id1 FROM pr
-         |), reach(a, b) AS (
-         |  SELECT a, b FROM e
-         |  UNION
-         |  SELECT r.a, e.b FROM reach r JOIN e ON r.b = e.a
-         |)
-         |SELECT a AS doc_id, CAST(least(a, min(b)) AS BIGINT) AS canonical_id
-         |FROM reach GROUP BY a ORDER BY doc_id""".stripMargin,
+    // are ≪ 1e-6. The incremental path (q213) and the stored-state
+    // serve (q299; the stored bits are deterministic functions of the
+    // raw table) must equal the from-scratch full-graph recompute.
+    "q69_neardup_canonical_lsh" -> canonicalOracle,
+    "q67_neardup_components" -> canonicalOracle,
+    "q299_canonical_serve_stored" -> canonicalOracle,
+    "q213_incremental_components" -> canonicalOracle,
 
     // The capstone oracle: the stages' own oracles composed — exact
     // pair graph → transitive dropped set → clean → mixture rates →
     // md5 cut → md5 split → per-split packing cumsum.
     "q100_training_manifest" ->
-      s"""WITH RECURSIVE pr AS (
-         |${jaccardOracle("0.8").linesIterator.map("  " + _).mkString("\n")}
-         |), e(a, b) AS (
-         |  SELECT id1, id2 FROM pr UNION SELECT id2, id1 FROM pr
-         |), reach(a, b) AS (
-         |  SELECT a, b FROM e
-         |  UNION
-         |  SELECT r.a, e.b FROM reach r JOIN e ON r.b = e.a
-         |), dropped AS (
-         |  SELECT a AS doc_id FROM reach GROUP BY a HAVING least(a, min(b)) <> a
+      s"""WITH RECURSIVE $canonCtes, dropped AS (
+         |  SELECT doc_id FROM canon WHERE canonical_id <> doc_id
          |), clean AS (
          |  SELECT doc_id, source, text FROM documents
          |  WHERE length(text) BETWEEN 100 AND 2000
@@ -1788,16 +1719,8 @@ object Dedup {
          |FROM pk ORDER BY doc_id""".stripMargin,
 
     "q68_corpus_clean" ->
-      s"""WITH RECURSIVE pr AS (
-         |${jaccardOracle("0.8").linesIterator.map("  " + _).mkString("\n")}
-         |), e(a, b) AS (
-         |  SELECT id1, id2 FROM pr UNION SELECT id2, id1 FROM pr
-         |), reach(a, b) AS (
-         |  SELECT a, b FROM e
-         |  UNION
-         |  SELECT r.a, e.b FROM reach r JOIN e ON r.b = e.a
-         |), dropped AS (
-         |  SELECT a AS doc_id FROM reach GROUP BY a HAVING least(a, min(b)) <> a
+      s"""WITH RECURSIVE $canonCtes, dropped AS (
+         |  SELECT doc_id FROM canon WHERE canonical_id <> doc_id
          |)
          |SELECT doc_id, lang, source FROM documents
          |WHERE length(text) BETWEEN 100 AND 2000
@@ -1835,7 +1758,7 @@ object Dedup {
 
     // Asymmetric containment over distinct 3-gram shingles; the
     // threshold and the emitted basis points are exact integers.
-    // q128b (df-capped production tier) shares this oracle verbatim:
+    // q128b (df-capped production tier) shares `containmentOracle`:
     // no gram in the test corpora exceeds the 64-doc cap, so the
     // capped gram set IS the full gram set (measured: max df 7 at
     // sf0.01, 25 at sf0.1) — the same oracle-sharing argument as
@@ -1847,60 +1770,8 @@ object Dedup {
     // a recall argument.
     "q135_containment_prefix" -> containmentOracle,
 
-    // The exact containment relation restricted to pairs touching the
-    // newest-fifth delta — q101's oracle discipline for the
-    // asymmetric tier.
-    "q140_incremental_containment" ->
-      """WITH t AS (
-        |  SELECT doc_id, string_split(text,' ') AS ws FROM documents
-        |), sh AS (
-        |  SELECT DISTINCT doc_id,
-        |         ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2] AS g
-        |  FROM (SELECT doc_id, ws,
-        |               unnest(generate_series(1, greatest(len(ws) - 2, 0))) AS i
-        |        FROM t)
-        |  WHERE len(ws) >= 3
-        |), sizes AS (
-        |  SELECT doc_id, count(*) AS sz FROM sh GROUP BY 1
-        |), ov AS (
-        |  SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS n_inter
-        |  FROM sh a JOIN sh b ON a.g = b.g AND a.doc_id <> b.doc_id
-        |  GROUP BY 1, 2
-        |), cut AS (
-        |  SELECT (4 * max(doc_id)) // 5 AS c FROM documents
-        |)
-        |SELECT id_a AS contained_id, id_b AS container_id,
-        |       (10000 * n_inter) // sz AS cont_bp
-        |FROM ov JOIN sizes ON id_a = sizes.doc_id, cut
-        |WHERE n_inter * 10 >= sz * 9 AND (id_a > cut.c OR id_b > cut.c)
-        |ORDER BY contained_id, container_id""".stripMargin,
-
-    // The stored-prefix serve produces q140's relation exactly (the
-    // prefix lemma is order-free, the verify exact) — q140's oracle.
-    "q303_incremental_containment_stored" ->
-      """WITH t AS (
-        |  SELECT doc_id, string_split(text,' ') AS ws FROM documents
-        |), sh AS (
-        |  SELECT DISTINCT doc_id,
-        |         ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2] AS g
-        |  FROM (SELECT doc_id, ws,
-        |               unnest(generate_series(1, greatest(len(ws) - 2, 0))) AS i
-        |        FROM t)
-        |  WHERE len(ws) >= 3
-        |), sizes AS (
-        |  SELECT doc_id, count(*) AS sz FROM sh GROUP BY 1
-        |), ov AS (
-        |  SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS n_inter
-        |  FROM sh a JOIN sh b ON a.g = b.g AND a.doc_id <> b.doc_id
-        |  GROUP BY 1, 2
-        |), cut AS (
-        |  SELECT (4 * max(doc_id)) // 5 AS c FROM documents
-        |)
-        |SELECT id_a AS contained_id, id_b AS container_id,
-        |       (10000 * n_inter) // sz AS cont_bp
-        |FROM ov JOIN sizes ON id_a = sizes.doc_id, cut
-        |WHERE n_inter * 10 >= sz * 9 AND (id_a > cut.c OR id_b > cut.c)
-        |ORDER BY contained_id, container_id""".stripMargin,
+    "q140_incremental_containment" -> deltaContainmentOracle,
+    "q303_incremental_containment_stored" -> deltaContainmentOracle,
 
     // Alignment-free first-occurrence-keeps: rn>1 over (doc_id, pos)
     // per window hash IS Spark's min-struct rule.
@@ -1948,18 +1819,7 @@ object Dedup {
     // md5 hashes, same prefix candidates, same all-integer basis
     // points — approximate relation, bit-exact oracle.
     "q136_containment_sketch" ->
-      """WITH t AS (
-        |  SELECT doc_id, string_split(text,' ') AS ws FROM documents
-        |), sh AS (
-        |  SELECT DISTINCT doc_id,
-        |         ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2] AS g
-        |  FROM (SELECT doc_id, ws,
-        |               unnest(generate_series(1, greatest(len(ws) - 2, 0))) AS i
-        |        FROM t)
-        |  WHERE len(ws) >= 3
-        |), sizes AS (
-        |  SELECT doc_id, count(*) AS sz FROM sh GROUP BY 1
-        |), sk AS (
+      s"""WITH $gramSetCtes, sk AS (
         |  SELECT doc_id AS id_a, g FROM (
         |    SELECT doc_id, g,
         |           row_number() OVER (
@@ -1995,9 +1855,7 @@ object Dedup {
 
     // Exact 0.8 pair graph restricted to cross-language endpoints.
     "q130_crosslang_pairs" ->
-      s"""WITH pr AS (
-         |${jaccardOracle("0.8").linesIterator.map("  " + _).mkString("\n")}
-         |)
+      s"""WITH $pairCte
          |SELECT p.id1, p.id2, d1.lang AS lang1, d2.lang AS lang2, p.jaccard
          |FROM pr p JOIN documents d1 ON p.id1 = d1.doc_id
          |          JOIN documents d2 ON p.id2 = d2.doc_id
@@ -2007,23 +1865,12 @@ object Dedup {
     // q113's gate expressions + q120's canonical dup accounting,
     // rolled into the one-row-per-source card.
     "q131_data_card" ->
-      s"""WITH RECURSIVE pr AS (
-         |${jaccardOracle("0.8").linesIterator.map("  " + _).mkString("\n")}
-         |), e(a, b) AS (
-         |  SELECT id1, id2 FROM pr UNION SELECT id2, id1 FROM pr
-         |), reach(a, b) AS (
-         |  SELECT a, b FROM e
-         |  UNION
-         |  SELECT r.a, e.b FROM reach r JOIN e ON r.b = e.a
-         |), lab AS (
-         |  SELECT a AS doc_id, least(a, min(b)) AS canonical_id
-         |  FROM reach GROUP BY a
-         |), dup AS (
+      s"""WITH RECURSIVE $canonCtes, dup AS (
          |  SELECT d.source,
          |         CAST(sum(CASE WHEN l.canonical_id IS NOT NULL
          |                        AND l.canonical_id <> d.doc_id
          |                  THEN 1 ELSE 0 END) AS BIGINT) AS n_dups
-         |  FROM documents d LEFT JOIN lab l ON d.doc_id = l.doc_id
+         |  FROM documents d LEFT JOIN canon l ON d.doc_id = l.doc_id
          |  GROUP BY 1
          |), w AS (
          |  SELECT doc_id, source, lang, count(*) AS n_words,
@@ -2054,18 +1901,7 @@ object Dedup {
     // The q109 canonical map + one cluster-size rollup and the
     // exact-integer inverse weight.
     "q284_soft_dedup" ->
-      s"""WITH RECURSIVE pr AS (
-         |${jaccardOracle("0.8").linesIterator.map("  " + _).mkString("\n")}
-         |), e(a, b) AS (
-         |  SELECT id1, id2 FROM pr UNION SELECT id2, id1 FROM pr
-         |), reach(a, b) AS (
-         |  SELECT a, b FROM e
-         |  UNION
-         |  SELECT r.a, e.b FROM reach r JOIN e ON r.b = e.a
-         |), canon AS (
-         |  SELECT a AS doc_id, CAST(least(a, min(b)) AS BIGINT) AS canonical_id
-         |  FROM reach GROUP BY a
-         |), lab AS (
+      s"""WITH RECURSIVE $canonCtes, lab AS (
          |  SELECT d.doc_id, coalesce(c.canonical_id, d.doc_id) AS canonical_id
          |  FROM documents d LEFT JOIN canon c ON d.doc_id = c.doc_id
          |), szs AS (

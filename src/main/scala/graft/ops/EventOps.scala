@@ -2,7 +2,7 @@ package graft.ops
 
 import graft.T
 import graft.functions.ScalableRank
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -20,25 +20,22 @@ import org.apache.spark.sql.functions._
 object EventOps {
   type Q = (SparkSession, String) => DataFrame
 
+  /** Day index of `ts` from 2024-01-01, the events' first day. */
+  private val eventDay: Column = datediff(to_date(col("ts")), lit("2024-01-01").cast("date"))
+  /** Exact integer cents of `value` (the q149-proven round(value·100)). */
+  private val eventCents: Column = expr("CAST(round(value * 100) AS BIGINT)")
+
   val queries: Map[String, Q] = Map(
     // Gap-based sessionization (30 min): lag → new-session flag →
     // running sum = session id → per-session rollup. Epochs are floored
     // to whole seconds in BOTH engines (unix_timestamp ≡ floor(epoch)).
-    "q74_sessionize" -> ((s, d) => {
-      val wOrd = Window.partitionBy(col("user_id")).orderBy(col("ep"), col("event_id"))
-      val wRun = wOrd.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      T.events(s, d)
-        .withColumn("ep", unix_timestamp(col("ts")))
-        .withColumn("new_s",
-          when(lag(col("ep"), 1).over(wOrd).isNull ||
-               col("ep") - lag(col("ep"), 1).over(wOrd) > 1800, 1).otherwise(0))
-        .withColumn("session_id", sum(col("new_s")).over(wRun))
+    "q74_sessionize" -> ((s, d) =>
+      sessionTagged(T.events(s, d))
         .groupBy(col("user_id"), col("session_id"))
         .agg(count(lit(1)).as("n_events"),
              (max(col("ep")) - min(col("ep"))).as("dur_s"),
              round(sum(col("value")), 2).as("session_value"))
-        .orderBy(col("user_id"), col("session_id"))
-    }),
+        .orderBy(col("user_id"), col("session_id"))),
 
     // Tumbling 1-hour event-time windows via Spark's window() — the
     // same construct the streaming path uses; batch-equivalent of a
@@ -69,15 +66,10 @@ object EventOps {
     // before purchases at equal timestamps (kind 0 < 1) so ties are
     // inclusive, matching ASOF >= semantics.
     "q77_asof_join" -> ((s, d) => {
-      val ev = T.events(s, d)
-      val clicks = ev.filter(col("event_type") === "click")
-        .select(col("user_id"), col("ts"), lit(0).as("kind"), lit(-1L).as("event_id"))
-      val purchases = ev.filter(col("event_type") === "purchase")
-        .select(col("user_id"), col("ts"), lit(1).as("kind"), col("event_id"))
       val w = Window.partitionBy(col("user_id"))
         .orderBy(col("ts"), col("kind"), col("event_id"))
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      clicks.unionByName(purchases)
+      clickPurchaseUnion(T.events(s, d))
         .withColumn("last_click_ts", max(when(col("kind") === 0, col("ts"))).over(w))
         .filter(col("kind") === 1)
         .select(col("event_id"), col("user_id"), col("ts").as("purchase_ts"),
@@ -155,8 +147,8 @@ object EventOps {
     "q149_resample_interpolate" -> ((s, d) => {
       val daily = T.events(s, d)
         .select(col("user_id"),
-          datediff(to_date(col("ts")), lit("2024-01-01").cast("date")).cast("long").as("day"),
-          expr("CAST(round(value * 100) AS BIGINT)").as("cents"))
+          eventDay.cast("long").as("day"),
+          eventCents.as("cents"))
         .groupBy(col("user_id"), col("day"))
         .agg(expr("CAST((sum(cents) * 100) DIV count(*) AS BIGINT)").as("v"))
       resampleInterpolate(daily).orderBy(col("user_id"), col("day"))
@@ -508,8 +500,7 @@ object EventOps {
     "q194_rolling_actives" -> ((s, d) => {
       val ud = T.events(s, d)
         .select(col("user_id"),
-          datediff(to_date(col("ts")), lit("2024-01-01").cast("date"))
-            .cast("long").as("day"))
+          eventDay.cast("long").as("day"))
         .distinct()
       val dau = ud.groupBy(col("day")).agg(count(lit(1)).as("dau"))
       // sequence(day, day+6) is always ascending (stop ≥ start), so
@@ -589,11 +580,7 @@ object EventOps {
     // CASE expression because DuckDB's sign() returns INT while
     // Spark's signum() returns DOUBLE.
     "q201_trend_mk" -> ((s, d) => {
-      val daily = T.events(s, d)
-        .select(col("event_type"),
-          datediff(to_date(col("ts")), lit("2024-01-01").cast("date"))
-            .cast("long").as("day"))
-        .groupBy(col("event_type"), col("day")).agg(count(lit(1)).as("c"))
+      val daily = dailyCounts(T.events(s, d))
       val a = daily.select(col("event_type").as("et"), col("day").as("d1"), col("c").as("c1"))
       val b = daily.select(col("event_type").as("et2"), col("day").as("d2"), col("c").as("c2"))
       a.join(b, col("et") === col("et2") && col("d1") < col("d2"))
@@ -650,7 +637,7 @@ object EventOps {
         .select(col("user_id"),
           expr("CAST(floor(datediff(to_date(ts), date'2024-01-01')" +
             " / CAST(7 AS DOUBLE)) AS BIGINT)").as("wk"),
-          expr("CAST(round(value * 100) AS BIGINT)").as("cents"))
+          eventCents.as("cents"))
         .join(cohort, "user_id")
         .groupBy(col("cohort_wk"), (col("wk") - col("cohort_wk")).as("week_offset"))
         .agg(count(lit(1)).as("n_purchases"), sum(col("cents")).as("rev_cents"))
@@ -671,14 +658,7 @@ object EventOps {
     // answer is its max and the earliest instant attaining it — the
     // capacity number an ops team sizes against.
     "q223_peak_concurrency" -> ((s, d) => {
-      val wOrd = Window.partitionBy(col("user_id")).orderBy(col("ep"), col("event_id"))
-      val wRun = wOrd.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      val sess = T.events(s, d)
-        .withColumn("ep", unix_timestamp(col("ts")))
-        .withColumn("new_s",
-          when(lag(col("ep"), 1).over(wOrd).isNull ||
-               col("ep") - lag(col("ep"), 1).over(wOrd) > 1800, 1).otherwise(0))
-        .withColumn("session_id", sum(col("new_s")).over(wRun))
+      val sess = sessionTagged(T.events(s, d))
         .groupBy(col("user_id"), col("session_id"))
         .agg(min(col("ep")).as("t0"), max(col("ep")).as("t1"))
       val deltas = sess.select(col("t0").as("t"), lit(1L).as("d"))
@@ -704,15 +684,10 @@ object EventOps {
     // and kind ordered DESC so a click at the purchase instant counts.
     // Still zero join operators.
     "q224_asof_forward" -> ((s, d) => {
-      val ev = T.events(s, d)
-      val clicks = ev.filter(col("event_type") === "click")
-        .select(col("user_id"), col("ts"), lit(0).as("kind"), lit(-1L).as("event_id"))
-      val purchases = ev.filter(col("event_type") === "purchase")
-        .select(col("user_id"), col("ts"), lit(1).as("kind"), col("event_id"))
       val w = Window.partitionBy(col("user_id"))
         .orderBy(col("ts"), col("kind").desc, col("event_id"))
         .rowsBetween(Window.currentRow, Window.unboundedFollowing)
-      clicks.unionByName(purchases)
+      clickPurchaseUnion(T.events(s, d))
         .withColumn("next_click_ts", min(when(col("kind") === 0, col("ts"))).over(w))
         .filter(col("kind") === 1)
         .select(col("event_id"), col("user_id"), col("ts").as("purchase_ts"),
@@ -737,18 +712,8 @@ object EventOps {
     // counts divide r1 by u1·p1 first (losing < u1·p1 cents, still
     // reported in the residual) or switch the images to ppm shares —
     // documented not built, the test SFs stay ≤ ~1e14.
-    "q252_metric_waterfall" -> ((s, d) => {
-      val p = T.events(s, d).filter(col("event_type") === "purchase")
-        .select(col("user_id"),
-          (datediff(to_date(col("ts")), lit("2024-01-01").cast("date")) < 15).as("is_a"),
-          expr("CAST(round(value * 100) AS BIGINT)").as("cents"))
-        .groupBy(col("is_a"))
-        .agg(countDistinct(col("user_id")).as("u"),
-             count(lit(1)).as("p"), sum(col("cents")).as("r"))
-      val a = p.filter(col("is_a")).select(col("u").as("u1"), col("p").as("p1"), col("r").as("r1"))
-      val b = p.filter(!col("is_a")).select(col("u").as("u2"), col("p").as("p2"), col("r").as("r2"))
-      a.crossJoin(b)
-        .withColumn("delta_cents", col("r2") - col("r1"))
+    "q252_metric_waterfall" -> ((s, d) =>
+      periodPair(T.events(s, d))
         .withColumn("t_users", expr("((u2 - u1) * r1) div u1"))
         .withColumn("t_freq", expr("((p2 * u1 - p1 * u2) * r1) div (u1 * p1)"))
         .withColumn("t_value", expr("(r2 * p1 - r1 * p2) div p1"))
@@ -757,8 +722,7 @@ object EventOps {
         .select(col("u1"), col("p1"), col("r1"), col("u2"), col("p2"), col("r2"),
           col("delta_cents"), col("t_users"), col("t_freq"), col("t_value"),
           col("residual_cents"))
-        .orderBy(col("u1"))
-    }),
+        .orderBy(col("u1"))),
 
     // Metric waterfall, PRODUCTION tier (round-9: the scale-safe dial
     // q252's envelope note documented, now built — the q241 pattern of
@@ -778,18 +742,8 @@ object EventOps {
     // product dies at ~1e6 users × 1e7 purchases. Same two
     // partial-aggregable rollups; the ppm images ship as columns so a
     // review can see the quantization it paid.
-    "q252b_waterfall_ppm" -> ((s, d) => {
-      val p = T.events(s, d).filter(col("event_type") === "purchase")
-        .select(col("user_id"),
-          (datediff(to_date(col("ts")), lit("2024-01-01").cast("date")) < 15).as("is_a"),
-          expr("CAST(round(value * 100) AS BIGINT)").as("cents"))
-        .groupBy(col("is_a"))
-        .agg(countDistinct(col("user_id")).as("u"),
-             count(lit(1)).as("p"), sum(col("cents")).as("r"))
-      val a = p.filter(col("is_a")).select(col("u").as("u1"), col("p").as("p1"), col("r").as("r1"))
-      val b = p.filter(!col("is_a")).select(col("u").as("u2"), col("p").as("p2"), col("r").as("r2"))
-      a.crossJoin(b)
-        .withColumn("delta_cents", col("r2") - col("r1"))
+    "q252b_waterfall_ppm" -> ((s, d) =>
+      periodPair(T.events(s, d))
         .withColumn("ru_ppm", expr("(u2 * 1000000) div u1"))
         .withColumn("rp_ppm", expr("(p2 * 1000000) div p1"))
         .withColumn("t_users", expr("((ru_ppm - 1000000) * r1) div 1000000"))
@@ -800,8 +754,7 @@ object EventOps {
         .select(col("u1"), col("p1"), col("r1"), col("u2"), col("p2"), col("r2"),
           col("delta_cents"), col("ru_ppm"), col("rp_ppm"),
           col("t_users"), col("t_freq"), col("t_value"), col("residual_cents"))
-        .orderBy(col("u1"))
-    }),
+        .orderBy(col("u1"))),
 
     // Leakage-safe supervised-label construction — the step that turns
     // an event log into a churn/retention training set: features from
@@ -819,10 +772,9 @@ object EventOps {
     // one LEFT semi-shaped join against the outcome actives.
     "q251_churn_labels" -> ((s, d) => {
       val ev = T.events(s, d).select(col("user_id"),
-        datediff(to_date(col("ts")), lit("2024-01-01").cast("date"))
-          .cast("long").as("day"),
+        eventDay.cast("long").as("day"),
         (col("event_type") === "purchase").cast("long").as("isp"),
-        expr("CAST(round(value * 100) AS BIGINT)").as("cents"))
+        eventCents.as("cents"))
       val feat = ev.filter(col("day") <= 20)
         .groupBy(col("user_id"))
         .agg(count(lit(1)).as("n_events_obs"),
@@ -855,8 +807,7 @@ object EventOps {
     "q250_lag_features" -> ((s, d) => {
       val daily = T.events(s, d)
         .select(col("user_id"),
-          datediff(to_date(col("ts")), lit("2024-01-01").cast("date"))
-            .cast("long").as("day"))
+          eventDay.cast("long").as("day"))
         .groupBy(col("user_id"), col("day")).agg(count(lit(1)).as("n_day"))
       val wOrd = Window.partitionBy(col("user_id")).orderBy(col("day"))
       val wRange = wOrd.rangeBetween(-7, -1)
@@ -885,19 +836,8 @@ object EventOps {
     // at that scale publish U/(n_a·n_b) ppm images instead (the z
     // stat, which is what the monitor consumes, survives unchanged) —
     // documented not built; every test SF stays ≤ ~1e13.
-    "q246_mann_whitney" -> ((s, d) => {
-      val cells = T.events(s, d)
-        .select(col("event_type"),
-          (datediff(to_date(col("ts")), lit("2024-01-01").cast("date")) < 15).as("is_a"),
-          expr("CAST(round(value * 100) AS BIGINT)").as("cents"))
-        .groupBy(col("event_type"), col("cents"))
-        .agg(sum(when(col("is_a"), 1L).otherwise(0L)).as("na"),
-             sum(when(!col("is_a"), 1L).otherwise(0L)).as("nb"))
-        .withColumn("cnt", col("na") + col("nb"))
-      val run = graft.functions.ScalableRank.withRunningSum(cells,
-        Seq("event_type"), Seq(col("cents")), col("cnt"), 32)
-      run
-        .withColumn("midrank2", lit(2L) * (col("rsum") - col("cnt")) + col("cnt") + 1L)
+    "q246_mann_whitney" -> ((s, d) =>
+      centsMidranks(T.events(s, d))
         .groupBy(col("event_type"))
         .agg(sum(col("na")).as("n_a"), sum(col("nb")).as("n_b"),
              sum(col("na") * col("midrank2")).as("r1x2"),
@@ -917,8 +857,7 @@ object EventOps {
         .select(col("event_type"), col("n_a"), col("n_b"), col("u1x2"),
           col("z_milli"),
           when(abs(col("z_milli")) >= 1960, 1L).otherwise(0L).as("sig_05"))
-        .orderBy(col("event_type"))
-    }),
+        .orderBy(col("event_type"))),
 
     // Mann–Whitney U, PRODUCTION ppm tier (round-9: q246's envelope
     // note built as its own dial). The exact tier's 2·R1 and 2·U1
@@ -932,19 +871,8 @@ object EventOps {
     // correctly-rounded IEEE doubles, so it is UNCHANGED from q246
     // (spec-asserted equal). DuckDB mirrors the decimals with its
     // native 128-bit HUGEINT; only BIGINT columns ship.
-    "q246b_mwu_ppm" -> ((s, d) => {
-      val cells = T.events(s, d)
-        .select(col("event_type"),
-          (datediff(to_date(col("ts")), lit("2024-01-01").cast("date")) < 15).as("is_a"),
-          expr("CAST(round(value * 100) AS BIGINT)").as("cents"))
-        .groupBy(col("event_type"), col("cents"))
-        .agg(sum(when(col("is_a"), 1L).otherwise(0L)).as("na"),
-             sum(when(!col("is_a"), 1L).otherwise(0L)).as("nb"))
-        .withColumn("cnt", col("na") + col("nb"))
-      val run = graft.functions.ScalableRank.withRunningSum(cells,
-        Seq("event_type"), Seq(col("cents")), col("cnt"), 32)
-      run
-        .withColumn("midrank2", lit(2L) * (col("rsum") - col("cnt")) + col("cnt") + 1L)
+    "q246b_mwu_ppm" -> ((s, d) =>
+      centsMidranks(T.events(s, d))
         .groupBy(col("event_type"))
         .agg(sum(col("na")).as("n_a"), sum(col("nb")).as("n_b"),
              sum(expr("CAST(na AS DECIMAL(38,0)) * midrank2")).as("r1x2d"),
@@ -966,8 +894,7 @@ object EventOps {
         .select(col("event_type"), col("n_a"), col("n_b"), col("u_ppm"),
           col("z_milli"),
           when(abs(col("z_milli")) >= 1960, 1L).otherwise(0L).as("sig_05"))
-        .orderBy(col("event_type"))
-    }),
+        .orderBy(col("event_type"))),
 
     // Capture–recapture population estimate (Lincoln–Petersen +
     // Chapman) — "how many distinct users are there" WITHOUT a global
@@ -1022,8 +949,7 @@ object EventOps {
     "q242_sequential_ab" -> ((s, d) => {
       val ev = T.events(s, d)
         .select(col("user_id"),
-          datediff(to_date(col("ts")), lit("2024-01-01").cast("date"))
-            .cast("long").as("day"),
+          eventDay.cast("long").as("day"),
           (col("event_type") === "purchase").cast("long").as("isp"))
       val horizon = ev.agg(max(col("day")).as("hmax"))
       val perUserDay = ev.groupBy(col("user_id"), col("day"))
@@ -1069,40 +995,15 @@ object EventOps {
     // is ≤ types×25 rows (the value range, not the corpus, sets it);
     // at 100 TB row counts the integer images switch to ppm shares
     // first — the q219 split-sums trade, documented not built.
-    "q241_emd_drift" -> ((s, d) => {
-      val cells = T.events(s, d)
-        .select(col("event_type").as("ec"),
-          (datediff(to_date(col("ts")), lit("2024-01-01").cast("date")) < 15).as("is_a"),
-          expr("CAST(round(value * 100) AS BIGINT) div 2000").as("cbin"))
-        .groupBy(col("ec"), col("cbin"))
-        .agg(sum(when(col("is_a"), 1L).otherwise(0L)).as("na"),
-             sum(when(!col("is_a"), 1L).otherwise(0L)).as("nb"))
-      // dense bin axis per type: a bin empty in BOTH periods still
-      // spans width over which the CDF gap persists — skipping it
-      // would undercount the area
-      val dense = cells.groupBy(col("ec").as("et"))
-        .agg(min(col("cbin")).as("b0"), max(col("cbin")).as("b1"))
-        .select(col("et"), explode(expr("sequence(b0, b1)")).as("bin"))
-      val filled = dense
-        .join(cells, col("et") === col("ec") && col("bin") === col("cbin"), "left")
-        .select(col("et"), col("bin"),
-          coalesce(col("na"), lit(0L)).as("na"),
-          coalesce(col("nb"), lit(0L)).as("nb"))
-      val w = Window.partitionBy(col("et")).orderBy(col("bin"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      filled
-        .withColumn("cuma", sum(col("na")).over(w))
-        .withColumn("cumb", sum(col("nb")).over(w))
-        .withColumn("ta", sum(col("na")).over(Window.partitionBy(col("et"))))
-        .withColumn("tb", sum(col("nb")).over(Window.partitionBy(col("et"))))
+    "q241_emd_drift" -> ((s, d) =>
+      binCdfs(T.events(s, d))
         .groupBy(col("et").as("event_type"))
         .agg(max(col("ta")).as("n_a"), max(col("tb")).as("n_b"),
              count(lit(1)).as("n_bins"),
              sum(abs(col("cuma") * col("tb") - col("cumb") * col("ta"))).as("sd"))
         .select(col("event_type"), col("n_a"), col("n_b"), col("n_bins"),
           expr("(2000 * 100 * sd) div (n_a * n_b)").as("emd_centicents"))
-        .orderBy(col("event_type"))
-    }),
+        .orderBy(col("event_type"))),
 
     // EMD drift, PRODUCTION ppm tier (round-9: q241's envelope note
     // built as its own dial, the q252b pattern). The exact tier's
@@ -1115,29 +1016,8 @@ object EventOps {
     // (2·bins+1)·width·100/1e6 centi-cents of the exact tier
     // (≈ 10 centi-cents at 25 bins — spec-asserted against q241).
     // Same dense-bin window shape; oracle mirrors with //.
-    "q241b_emd_ppm" -> ((s, d) => {
-      val cells = T.events(s, d)
-        .select(col("event_type").as("ec"),
-          (datediff(to_date(col("ts")), lit("2024-01-01").cast("date")) < 15).as("is_a"),
-          expr("CAST(round(value * 100) AS BIGINT) div 2000").as("cbin"))
-        .groupBy(col("ec"), col("cbin"))
-        .agg(sum(when(col("is_a"), 1L).otherwise(0L)).as("na"),
-             sum(when(!col("is_a"), 1L).otherwise(0L)).as("nb"))
-      val dense = cells.groupBy(col("ec").as("et"))
-        .agg(min(col("cbin")).as("b0"), max(col("cbin")).as("b1"))
-        .select(col("et"), explode(expr("sequence(b0, b1)")).as("bin"))
-      val filled = dense
-        .join(cells, col("et") === col("ec") && col("bin") === col("cbin"), "left")
-        .select(col("et"), col("bin"),
-          coalesce(col("na"), lit(0L)).as("na"),
-          coalesce(col("nb"), lit(0L)).as("nb"))
-      val w = Window.partitionBy(col("et")).orderBy(col("bin"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      filled
-        .withColumn("cuma", sum(col("na")).over(w))
-        .withColumn("cumb", sum(col("nb")).over(w))
-        .withColumn("ta", sum(col("na")).over(Window.partitionBy(col("et"))))
-        .withColumn("tb", sum(col("nb")).over(Window.partitionBy(col("et"))))
+    "q241b_emd_ppm" -> ((s, d) =>
+      binCdfs(T.events(s, d))
         .withColumn("sa_ppm", expr("(cuma * 1000000) div ta"))
         .withColumn("sb_ppm", expr("(cumb * 1000000) div tb"))
         .groupBy(col("et").as("event_type"))
@@ -1147,8 +1027,7 @@ object EventOps {
         .select(col("event_type"), col("n_a"), col("n_b"), col("n_bins"),
           col("sd_ppm"),
           expr("(2000 * 100 * sd_ppm) div 1000000").as("emd_centicents_ppm"))
-        .orderBy(col("event_type"))
-    }),
+        .orderBy(col("event_type"))),
 
     // Differential-privacy sensitivity audit — the contribution-
     // bounding report a DP release calibrates against: per event_type,
@@ -1162,7 +1041,7 @@ object EventOps {
     "q237_dp_sensitivity" -> ((s, d) => {
       val per = T.events(s, d)
         .select(col("event_type"), col("user_id"),
-          expr("CAST(round(value * 100) AS BIGINT)").as("cents"))
+          eventCents.as("cents"))
         .groupBy(col("event_type"), col("user_id"))
         .agg(count(lit(1)).as("n_u"), sum(col("cents")).as("c_u"))
       per.groupBy(col("event_type"))
@@ -1196,7 +1075,7 @@ object EventOps {
           to_date(col("ts")).as("day"),
           col("event_id"),
           expr("unix_micros(ts)").as("ep_us"),
-          expr("CAST(round(value * 100) AS BIGINT)").as("cents"))
+          eventCents.as("cents"))
         .withColumn("hold_us",
           coalesce(lead(col("ep_us"), 1).over(w) - col("ep_us"), lit(0L)))
         .groupBy(col("user_id"), col("day"))
@@ -1231,8 +1110,8 @@ object EventOps {
     "q232_psi_drift" -> ((s, d) => {
       val ev = T.events(s, d)
         .select(col("event_type"), col("event_id"),
-          (datediff(to_date(col("ts")), lit("2024-01-01").cast("date")) < 15).as("is_a"),
-          expr("CAST(round(value * 100) AS BIGINT)").as("cents"))
+          (eventDay < 15).as("is_a"),
+          eventCents.as("cents"))
       val ranked = graft.functions.ScalableRank
         .withRanks(ev.filter(col("is_a")), Seq("event_type"),
           Seq(col("cents"), col("event_id")), Seq(col("cents"), col("event_id")), 32)
@@ -1279,8 +1158,7 @@ object EventOps {
     "q225_autocorrelation" -> ((s, d) => {
       val daily = T.events(s, d)
         .select(col("event_type"),
-          datediff(to_date(col("ts")), lit("2024-01-01").cast("date"))
-            .cast("long").as("day"))
+          eventDay.cast("long").as("day"))
         .groupBy(col("event_type"), col("day"))
         .agg(count(lit(1)).cast("double").as("c"))
       val a = daily.select(col("event_type").as("et"), col("day").as("d1"), col("c").as("c1"))
@@ -1304,12 +1182,7 @@ object EventOps {
     // Same scale posture as q225: one partial-aggregable pass over
     // events, then a bounded days² pairs relation per type.
     "q226_theilsen" -> ((s, d) => {
-      val daily = T.events(s, d)
-        .select(col("event_type"),
-          datediff(to_date(col("ts")), lit("2024-01-01").cast("date"))
-            .cast("long").as("day"))
-        .groupBy(col("event_type"), col("day"))
-        .agg(count(lit(1)).as("c"))
+      val daily = dailyCounts(T.events(s, d))
       val a = daily.select(col("event_type").as("et"), col("day").as("d1"), col("c").as("c1"))
       val b = daily.select(col("event_type").as("et2"), col("day").as("d2"), col("c").as("c2"))
       a.join(b, col("et") === col("et2") && col("d1") < col("d2"))
@@ -1337,12 +1210,7 @@ object EventOps {
     // corpus scale (the time axis doesn't grow with SF) — the
     // low-cardinality-window rule is about data that scales, not this.
     "q229_seasonal_decomp" -> ((s, d) => {
-      val daily = T.events(s, d)
-        .select(col("event_type"),
-          datediff(to_date(col("ts")), lit("2024-01-01").cast("date"))
-            .cast("long").as("day"))
-        .groupBy(col("event_type"), col("day"))
-        .agg(count(lit(1)).as("c"))
+      val daily = dailyCounts(T.events(s, d))
       val w = Window.partitionBy(col("event_type")).orderBy(col("day"))
         .rangeBetween(-3, 3)
       val tr = daily
@@ -1374,7 +1242,7 @@ object EventOps {
       val ev = T.events(s, d).filter(col("event_type") === "purchase")
         .select(col("user_id"),
           expr("CAST(datediff(to_date(ts), date'2024-01-01') AS BIGINT)").as("day"),
-          expr("CAST(round(value * 100) AS BIGINT)").as("cents"))
+          eventCents.as("cents"))
       val mx = ev.agg(max(col("day")).as("mxd"))
       ev.crossJoin(broadcast(mx))
         .withColumn("age_wk", expr("least((mxd - day) div 7, 62)"))
@@ -1441,8 +1309,7 @@ object EventOps {
     "q206_new_vs_returning" -> ((s, d) => {
       val ud = T.events(s, d)
         .select(col("user_id"),
-          datediff(to_date(col("ts")), lit("2024-01-01").cast("date"))
-            .cast("long").as("day"))
+          eventDay.cast("long").as("day"))
         .distinct()
       val fd = ud.groupBy(col("user_id")).agg(min(col("day")).as("fday"))
       ud.join(fd, "user_id")
@@ -1464,11 +1331,7 @@ object EventOps {
     // quantization, never a product of raw sums, so every intermediate
     // stays int64 at 100 TB event counts.
     "q209_dow_profile" -> ((s, d) => {
-      val daily = T.events(s, d)
-        .select(col("event_type"),
-          datediff(to_date(col("ts")), lit("2024-01-01").cast("date"))
-            .cast("long").as("day"))
-        .groupBy(col("event_type"), col("day")).agg(count(lit(1)).as("c"))
+      val daily = dailyCounts(T.events(s, d))
       val perDow = daily.withColumn("dow", pmod(col("day"), lit(7L)))
         .groupBy(col("event_type"), col("dow"))
         .agg(count(lit(1)).as("n_days"), sum(col("c")).as("n_events"))
@@ -1484,6 +1347,106 @@ object EventOps {
     })
   )
 
+  /** The 30-minute session rule over an events relation: `ep` is the
+    * whole-second epoch (unix_timestamp ≡ floor(epoch) in both engines),
+    * `new_s` flags an event whose gap to the user's previous one
+    * exceeds 1800 s, and `session_id` is the running count of those
+    * flags per user. One user-keyed shuffle; both windows share its
+    * sort.
+    */
+  private def sessionTagged(ev: DataFrame): DataFrame = {
+    val wOrd = Window.partitionBy(col("user_id")).orderBy(col("ep"), col("event_id"))
+    val wRun = wOrd.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    ev.withColumn("ep", unix_timestamp(col("ts")))
+      .withColumn("new_s",
+        when(lag(col("ep"), 1).over(wOrd).isNull ||
+             col("ep") - lag(col("ep"), 1).over(wOrd) > 1800, 1).otherwise(0))
+      .withColumn("session_id", sum(col("new_s")).over(wRun))
+  }
+
+  /** Clicks (kind 0, event_id −1) and purchases (kind 1) as one tagged
+    * union (user_id, ts, kind, event_id) — the single relation the
+    * as-of joins (q77, q224) window over instead of joining.
+    */
+  private def clickPurchaseUnion(ev: DataFrame): DataFrame = {
+    val clicks = ev.filter(col("event_type") === "click")
+      .select(col("user_id"), col("ts"), lit(0).as("kind"), lit(-1L).as("event_id"))
+    val purchases = ev.filter(col("event_type") === "purchase")
+      .select(col("user_id"), col("ts"), lit(1).as("kind"), col("event_id"))
+    clicks.unionByName(purchases)
+  }
+
+  /** The two monitoring periods' purchase rollups (days 0–14 vs the
+    * rest) as one row: distinct buyers u, purchases p and exact cents
+    * r per period — (u1, p1, r1, u2, p2, r2) — plus delta_cents. The
+    * waterfalls' input (q252, q252b); one partial-aggregable pass.
+    */
+  private def periodPair(ev: DataFrame): DataFrame = {
+    val p = ev.filter(col("event_type") === "purchase")
+      .select(col("user_id"), (eventDay < 15).as("is_a"), eventCents.as("cents"))
+      .groupBy(col("is_a"))
+      .agg(countDistinct(col("user_id")).as("u"),
+           count(lit(1)).as("p"), sum(col("cents")).as("r"))
+    val a = p.filter(col("is_a")).select(col("u").as("u1"), col("p").as("p1"), col("r").as("r1"))
+    val b = p.filter(!col("is_a")).select(col("u").as("u2"), col("p").as("p2"), col("r").as("r2"))
+    a.crossJoin(b)
+      .withColumn("delta_cents", col("r2") - col("r1"))
+  }
+
+  /** Mann–Whitney rank input (q246, q246b): per (event_type, cents)
+    * value the period counts na, nb and cnt, the running count `rsum`
+    * over cents (ScalableRank — the relation is bounded by the cents
+    * domain) and the integer twice-midrank 2·(rsum − cnt) + cnt + 1.
+    */
+  private def centsMidranks(ev: DataFrame): DataFrame = {
+    val cells = ev
+      .select(col("event_type"), (eventDay < 15).as("is_a"), eventCents.as("cents"))
+      .groupBy(col("event_type"), col("cents"))
+      .agg(sum(when(col("is_a"), 1L).otherwise(0L)).as("na"),
+           sum(when(!col("is_a"), 1L).otherwise(0L)).as("nb"))
+      .withColumn("cnt", col("na") + col("nb"))
+    graft.functions.ScalableRank.withRunningSum(cells,
+        Seq("event_type"), Seq(col("cents")), col("cnt"), 32)
+      .withColumn("midrank2", lit(2L) * (col("rsum") - col("cnt")) + col("cnt") + 1L)
+  }
+
+  /** Both periods' CDFs over a dense $20 bin axis per event_type (q241,
+    * q241b): (et, bin, na, nb) with zero-filled empty bins — a bin
+    * empty in BOTH periods still spans width over which the CDF gap
+    * persists, so skipping it would undercount the area — plus the
+    * running counts cuma, cumb and the period totals ta, tb.
+    */
+  private def binCdfs(ev: DataFrame): DataFrame = {
+    val cells = ev
+      .select(col("event_type").as("ec"), (eventDay < 15).as("is_a"),
+        call_function("div", eventCents, lit(2000)).as("cbin"))
+      .groupBy(col("ec"), col("cbin"))
+      .agg(sum(when(col("is_a"), 1L).otherwise(0L)).as("na"),
+           sum(when(!col("is_a"), 1L).otherwise(0L)).as("nb"))
+    val dense = cells.groupBy(col("ec").as("et"))
+      .agg(min(col("cbin")).as("b0"), max(col("cbin")).as("b1"))
+      .select(col("et"), explode(expr("sequence(b0, b1)")).as("bin"))
+    val filled = dense
+      .join(cells, col("et") === col("ec") && col("bin") === col("cbin"), "left")
+      .select(col("et"), col("bin"),
+        coalesce(col("na"), lit(0L)).as("na"),
+        coalesce(col("nb"), lit(0L)).as("nb"))
+    val w = Window.partitionBy(col("et")).orderBy(col("bin"))
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    filled
+      .withColumn("cuma", sum(col("na")).over(w))
+      .withColumn("cumb", sum(col("nb")).over(w))
+      .withColumn("ta", sum(col("na")).over(Window.partitionBy(col("et"))))
+      .withColumn("tb", sum(col("nb")).over(Window.partitionBy(col("et"))))
+  }
+
+  /** Daily event counts per type, (event_type, day, c) — the series
+    * q201, q209, q226 and q229 analyse; one partial-aggregable pass.
+    */
+  private def dailyCounts(ev: DataFrame): DataFrame =
+    ev.select(col("event_type"), eventDay.cast("long").as("day"))
+      .groupBy(col("event_type"), col("day")).agg(count(lit(1)).as("c"))
+
   /** Entry/exit segmentation of q74's sessions plus the bounce-rate
     * and dwell rollup per entry type — the landing-page diagnostic
     * next to sessionize/funnel. Same 30-min-gap session assignment as
@@ -1493,18 +1456,10 @@ object EventOps {
     * single sort; the rollup is ≤ |types| rows of exact-integer rates.
     */
   private def sessionBounce(ev: DataFrame): DataFrame = {
-    val wOrd = Window.partitionBy(col("user_id")).orderBy(col("ep"), col("event_id"))
-    val wRun = wOrd.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val tagged = ev
-      .withColumn("ep", unix_timestamp(col("ts")))
-      .withColumn("new_s",
-        when(lag(col("ep"), 1).over(wOrd).isNull ||
-             col("ep") - lag(col("ep"), 1).over(wOrd) > 1800, 1).otherwise(0))
-      .withColumn("session_id", sum(col("new_s")).over(wRun))
     val wSess = Window.partitionBy(col("user_id"), col("session_id"))
       .orderBy(col("ep"), col("event_id"))
       .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    tagged
+    sessionTagged(ev)
       .withColumn("entry_type", first(col("event_type")).over(wSess))
       .withColumn("exit_type", last(col("event_type")).over(wSess))
       .groupBy(col("user_id"), col("session_id"))
@@ -1623,22 +1578,136 @@ object EventOps {
         sum(when(col("t_click").isNotNull, 1).otherwise(0)).as("n_signup_click"),
         sum(when(col("t_purchase").isNotNull, 1).otherwise(0)).as("n_full_funnel"))
 
+  /** Oracle day index of `ts` from 2024-01-01. */
+  private val daySql = "datediff('day', DATE '2024-01-01', CAST(ts AS DATE))"
+  /** Oracle exact integer cents of `value`. */
+  private val centsSql = "CAST(round(value * 100) AS BIGINT)"
+
+  /** The 30-minute session rule as CTEs `e, m, s`: per event user_id,
+    * event_id, the `carry` columns, the whole-second epoch ep, the
+    * new-session flag (gap to the user's previous event over 1800 s) and
+    * session_id, the running count of those flags per user.
+    */
+  private def sessionCtes(carry: String*): String = {
+    val c = carry.map(_ + ", ").mkString
+    s"""e AS (
+       |  SELECT user_id, event_id, ${c}CAST(floor(epoch(ts)) AS BIGINT) AS ep
+       |  FROM events
+       |), m AS (
+       |  SELECT user_id, event_id, ${c}ep,
+       |    CASE WHEN lag(ep) OVER w IS NULL OR ep - lag(ep) OVER w > 1800
+       |         THEN 1 ELSE 0 END AS new_s
+       |  FROM e WINDOW w AS (PARTITION BY user_id ORDER BY ep, event_id)
+       |), s AS (
+       |  SELECT user_id, event_id, ${c}ep,
+       |    CAST(sum(new_s) OVER (PARTITION BY user_id ORDER BY ep, event_id
+       |         ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS session_id
+       |  FROM m
+       |)""".stripMargin
+  }
+
+  /** The ordered signup → click → purchase funnel as CTEs `w1, w2, w3,
+    * u`: per user t_signup (earliest signup), t_click (first click
+    * strictly after it) and t_purchase (first purchase strictly after
+    * that click).
+    */
+  private val funnelCtes: String =
+    """w1 AS (
+      |  SELECT user_id, event_type, ts,
+      |    min(CASE WHEN event_type = 'signup' THEN ts END)
+      |      OVER (PARTITION BY user_id) AS t_signup
+      |  FROM events
+      |), w2 AS (
+      |  SELECT *, min(CASE WHEN event_type = 'click' AND ts > t_signup THEN ts END)
+      |      OVER (PARTITION BY user_id) AS t_click
+      |  FROM w1
+      |), w3 AS (
+      |  SELECT *, min(CASE WHEN event_type = 'purchase' AND ts > t_click THEN ts END)
+      |      OVER (PARTITION BY user_id) AS t_purchase
+      |  FROM w2
+      |), u AS (
+      |  SELECT user_id, max(t_signup) AS t_signup, max(t_click) AS t_click,
+      |         max(t_purchase) AS t_purchase
+      |  FROM w3 GROUP BY user_id
+      |)""".stripMargin
+
+  /** Daily event counts per type as the CTE `daily(event_type, day, c)`. */
+  private val dailyCte: String =
+    s"""daily AS (
+       |  SELECT event_type,
+       |         CAST($daySql AS BIGINT) AS day,
+       |         CAST(count(*) AS BIGINT) AS c
+       |  FROM events GROUP BY 1, 2
+       |)""".stripMargin
+
+  /** The two periods' purchase rollups as CTEs `p, a(u1, p1, r1),
+    * b(u2, p2, r2)`: distinct buyers, purchases and exact cents for
+    * days 0–14 (a) and the rest (b).
+    */
+  private val periodPairCtes: String =
+    s"""p AS (
+       |  SELECT $daySql < 15 AS is_a,
+       |         CAST(count(DISTINCT user_id) AS BIGINT) AS u,
+       |         CAST(count(*) AS BIGINT) AS pp,
+       |         CAST(sum($centsSql) AS BIGINT) AS r
+       |  FROM events WHERE event_type = 'purchase' GROUP BY 1
+       |), a AS (SELECT u AS u1, pp AS p1, r AS r1 FROM p WHERE is_a),
+       |b AS (SELECT u AS u2, pp AS p2, r AS r2 FROM p WHERE NOT is_a)""".stripMargin
+
+  /** Mann–Whitney rank input as CTEs `cells, run`: per (event_type,
+    * cents) value the period counts na, nb, cnt and the running count
+    * rsum over cents.
+    */
+  private val centsRunCtes: String =
+    s"""cells AS (
+       |  SELECT event_type,
+       |         $centsSql AS cents,
+       |         CAST(sum(CASE WHEN $daySql < 15
+       |                       THEN 1 ELSE 0 END) AS BIGINT) AS na,
+       |         CAST(sum(CASE WHEN $daySql < 15
+       |                       THEN 0 ELSE 1 END) AS BIGINT) AS nb
+       |  FROM events GROUP BY 1, 2
+       |), run AS (
+       |  SELECT event_type, na, nb, na + nb AS cnt,
+       |         CAST(sum(na + nb) OVER (PARTITION BY event_type ORDER BY cents
+       |           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS rsum
+       |  FROM cells
+       |)""".stripMargin
+
+  /** Both periods' CDFs over the dense $20 bin axis per type as CTEs
+    * `cells, c2, rng, dense, filled, cum`: cum holds (et, na, nb, cuma,
+    * cumb, ta, tb) per bin, empty bins zero-filled.
+    */
+  private val binCdfCtes: String =
+    s"""cells AS (
+       |  SELECT event_type AS ec,
+       |         $daySql < 15 AS is_a,
+       |         $centsSql // 2000 AS cbin
+       |  FROM events
+       |), c2 AS (
+       |  SELECT ec, cbin,
+       |         CAST(sum(CASE WHEN is_a THEN 1 ELSE 0 END) AS BIGINT) AS na,
+       |         CAST(sum(CASE WHEN NOT is_a THEN 1 ELSE 0 END) AS BIGINT) AS nb
+       |  FROM cells GROUP BY 1, 2
+       |), rng AS (SELECT ec AS et, min(cbin) AS b0, max(cbin) AS b1 FROM c2 GROUP BY 1),
+       |dense AS (SELECT et, unnest(generate_series(b0, b1)) AS bin FROM rng),
+       |filled AS (
+       |  SELECT d.et, d.bin, coalesce(c2.na, 0) AS na, coalesce(c2.nb, 0) AS nb
+       |  FROM dense d LEFT JOIN c2 ON d.et = c2.ec AND d.bin = c2.cbin
+       |), cum AS (
+       |  SELECT et, na, nb,
+       |    CAST(sum(na) OVER (PARTITION BY et ORDER BY bin
+       |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cuma,
+       |    CAST(sum(nb) OVER (PARTITION BY et ORDER BY bin
+       |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cumb,
+       |    CAST(sum(na) OVER (PARTITION BY et) AS BIGINT) AS ta,
+       |    CAST(sum(nb) OVER (PARTITION BY et) AS BIGINT) AS tb
+       |  FROM filled
+       |)""".stripMargin
+
   val oracle: Map[String, String] = Map(
     "q74_sessionize" ->
-      """WITH e AS (
-        |  SELECT user_id, event_id, value, CAST(floor(epoch(ts)) AS BIGINT) AS ep
-        |  FROM events
-        |), m AS (
-        |  SELECT user_id, event_id, value, ep,
-        |    CASE WHEN lag(ep) OVER w IS NULL OR ep - lag(ep) OVER w > 1800
-        |         THEN 1 ELSE 0 END AS new_s
-        |  FROM e WINDOW w AS (PARTITION BY user_id ORDER BY ep, event_id)
-        |), s AS (
-        |  SELECT user_id, value, ep,
-        |    CAST(sum(new_s) OVER (PARTITION BY user_id ORDER BY ep, event_id
-        |         ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS session_id
-        |  FROM m
-        |)
+      s"""WITH ${sessionCtes("value")}
         |SELECT user_id, session_id, count(*) AS n_events,
         |       max(ep) - min(ep) AS dur_s,
         |       round(sum(value), 2) AS session_value
@@ -1669,24 +1738,7 @@ object EventOps {
         |ORDER BY p.event_id""".stripMargin,
 
     "q85_event_funnel" ->
-      """WITH w1 AS (
-        |  SELECT user_id, event_type, ts,
-        |    min(CASE WHEN event_type = 'signup' THEN ts END)
-        |      OVER (PARTITION BY user_id) AS t_signup
-        |  FROM events
-        |), w2 AS (
-        |  SELECT *, min(CASE WHEN event_type = 'click' AND ts > t_signup THEN ts END)
-        |      OVER (PARTITION BY user_id) AS t_click
-        |  FROM w1
-        |), w3 AS (
-        |  SELECT *, min(CASE WHEN event_type = 'purchase' AND ts > t_click THEN ts END)
-        |      OVER (PARTITION BY user_id) AS t_purchase
-        |  FROM w2
-        |), u AS (
-        |  SELECT user_id, max(t_signup) AS t_signup, max(t_click) AS t_click,
-        |         max(t_purchase) AS t_purchase
-        |  FROM w3 GROUP BY user_id
-        |)
+      s"""WITH $funnelCtes
         |SELECT
         |  CAST(sum(CASE WHEN t_signup   IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_signup,
         |  CAST(sum(CASE WHEN t_click    IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_signup_click,
@@ -1743,10 +1795,10 @@ object EventOps {
         |ORDER BY user_id""".stripMargin,
 
     "q149_resample_interpolate" ->
-      """WITH e AS (
+      s"""WITH e AS (
         |  SELECT user_id,
-        |         CAST(datediff('day', DATE '2024-01-01', CAST(ts AS DATE)) AS BIGINT) AS day,
-        |         CAST(round(value * 100) AS BIGINT) AS cents
+        |         CAST($daySql AS BIGINT) AS day,
+        |         $centsSql AS cents
         |  FROM events
         |), daily AS (
         |  SELECT user_id, day,
@@ -1777,9 +1829,9 @@ object EventOps {
         |FROM f ORDER BY user_id, day""".stripMargin,
 
     "q132_cohort_retention" ->
-      """WITH a AS (
+      s"""WITH a AS (
         |  SELECT DISTINCT user_id,
-        |         CAST(floor(datediff('day', DATE '2024-01-01', CAST(ts AS DATE))
+        |         CAST(floor($daySql
         |                    / 7.0) AS BIGINT) AS wk
         |  FROM events
         |), c AS (
@@ -1791,26 +1843,9 @@ object EventOps {
         |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
 
     "q133_funnel_by_cohort" ->
-      """WITH w1 AS (
-        |  SELECT user_id, event_type, ts,
-        |    min(CASE WHEN event_type = 'signup' THEN ts END)
-        |      OVER (PARTITION BY user_id) AS t_signup
-        |  FROM events
-        |), w2 AS (
-        |  SELECT *, min(CASE WHEN event_type = 'click' AND ts > t_signup THEN ts END)
-        |      OVER (PARTITION BY user_id) AS t_click
-        |  FROM w1
-        |), w3 AS (
-        |  SELECT *, min(CASE WHEN event_type = 'purchase' AND ts > t_click THEN ts END)
-        |      OVER (PARTITION BY user_id) AS t_purchase
-        |  FROM w2
-        |), u AS (
-        |  SELECT user_id, max(t_signup) AS t_signup, max(t_click) AS t_click,
-        |         max(t_purchase) AS t_purchase
-        |  FROM w3 GROUP BY user_id
-        |), c AS (
+      s"""WITH $funnelCtes, c AS (
         |  SELECT user_id,
-        |         min(CAST(floor(datediff('day', DATE '2024-01-01', CAST(ts AS DATE))
+        |         min(CAST(floor($daySql
         |                        / 7.0) AS BIGINT)) AS cohort_wk
         |  FROM events GROUP BY 1
         |), g AS (
@@ -2034,9 +2069,9 @@ object EventOps {
         |ORDER BY decile""".stripMargin,
 
     "q194_rolling_actives" ->
-      """WITH ud AS (
+      s"""WITH ud AS (
         |  SELECT DISTINCT user_id,
-        |    CAST(datediff('day', DATE '2024-01-01', CAST(ts AS DATE)) AS BIGINT) AS day
+        |    CAST($daySql AS BIGINT) AS day
         |  FROM events
         |), dau AS (
         |  SELECT day, CAST(count(*) AS BIGINT) AS dau FROM ud GROUP BY 1
@@ -2095,12 +2130,7 @@ object EventOps {
         |GROUP BY 1 ORDER BY event_type""".stripMargin,
 
     "q201_trend_mk" ->
-      """WITH daily AS (
-        |  SELECT event_type,
-        |         CAST(datediff('day', DATE '2024-01-01', CAST(ts AS DATE)) AS BIGINT) AS day,
-        |         CAST(count(*) AS BIGINT) AS c
-        |  FROM events GROUP BY 1, 2
-        |), p AS (
+      s"""WITH $dailyCte, p AS (
         |  SELECT a.event_type,
         |         CASE WHEN b.c > a.c THEN 1 WHEN b.c < a.c THEN -1 ELSE 0 END AS sgn
         |  FROM daily a JOIN daily b
@@ -2115,23 +2145,7 @@ object EventOps {
         |FROM p GROUP BY 1 ORDER BY event_type""".stripMargin,
 
     "q217_conversion_window" ->
-      """WITH w1 AS (
-        |  SELECT user_id, event_type, ts,
-        |    min(CASE WHEN event_type = 'signup' THEN ts END)
-        |      OVER (PARTITION BY user_id) AS t_signup
-        |  FROM events
-        |), w2 AS (
-        |  SELECT *, min(CASE WHEN event_type = 'click' AND ts > t_signup THEN ts END)
-        |      OVER (PARTITION BY user_id) AS t_click
-        |  FROM w1
-        |), w3 AS (
-        |  SELECT *, min(CASE WHEN event_type = 'purchase' AND ts > t_click THEN ts END)
-        |      OVER (PARTITION BY user_id) AS t_purchase
-        |  FROM w2
-        |), u AS (
-        |  SELECT user_id, max(t_signup) AS t_signup, max(t_purchase) AS t_purchase
-        |  FROM w3 GROUP BY user_id
-        |), f AS (
+      s"""WITH $funnelCtes, f AS (
         |  SELECT
         |    CASE WHEN t_signup IS NOT NULL THEN 1 ELSE 0 END AS su,
         |    CASE WHEN t_purchase IS NOT NULL THEN 1 ELSE 0 END AS cv,
@@ -2148,9 +2162,9 @@ object EventOps {
         |FROM f ORDER BY n_signup""".stripMargin,
 
     "q218_cohort_ltv" ->
-      """WITH co AS (
+      s"""WITH co AS (
         |  SELECT user_id,
-        |         min(CAST(floor(datediff('day', DATE '2024-01-01', CAST(ts AS DATE))
+        |         min(CAST(floor($daySql
         |             / CAST(7 AS DOUBLE)) AS BIGINT)) AS cohort_wk
         |  FROM events GROUP BY 1
         |), cells AS (
@@ -2158,7 +2172,7 @@ object EventOps {
         |         CAST(floor(datediff('day', DATE '2024-01-01', CAST(e.ts AS DATE))
         |             / CAST(7 AS DOUBLE)) AS BIGINT) - co.cohort_wk AS week_offset,
         |         CAST(count(*) AS BIGINT) AS n_purchases,
-        |         CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS rev_cents
+        |         CAST(sum($centsSql) AS BIGINT) AS rev_cents
         |  FROM events e JOIN co ON e.user_id = co.user_id
         |  WHERE e.event_type = 'purchase'
         |  GROUP BY 1, 2
@@ -2169,20 +2183,7 @@ object EventOps {
         |FROM cells ORDER BY cohort_wk, week_offset""".stripMargin,
 
     "q223_peak_concurrency" ->
-      """WITH e AS (
-        |  SELECT user_id, event_id, CAST(floor(epoch(ts)) AS BIGINT) AS ep
-        |  FROM events
-        |), m AS (
-        |  SELECT user_id, event_id, ep,
-        |    CASE WHEN lag(ep) OVER w IS NULL OR ep - lag(ep) OVER w > 1800
-        |         THEN 1 ELSE 0 END AS new_s
-        |  FROM e WINDOW w AS (PARTITION BY user_id ORDER BY ep, event_id)
-        |), s AS (
-        |  SELECT user_id, ep,
-        |    CAST(sum(new_s) OVER (PARTITION BY user_id ORDER BY ep, event_id
-        |         ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS session_id
-        |  FROM m
-        |), sess AS (
+      s"""WITH ${sessionCtes()}, sess AS (
         |  SELECT user_id, session_id, min(ep) AS t0, max(ep) AS t1
         |  FROM s GROUP BY 1, 2
         |), deltas AS (
@@ -2210,14 +2211,7 @@ object EventOps {
         |ORDER BY p.event_id""".stripMargin,
 
     "q252_metric_waterfall" ->
-      """WITH p AS (
-        |  SELECT datediff('day', DATE '2024-01-01', CAST(ts AS DATE)) < 15 AS is_a,
-        |         CAST(count(DISTINCT user_id) AS BIGINT) AS u,
-        |         CAST(count(*) AS BIGINT) AS pp,
-        |         CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS r
-        |  FROM events WHERE event_type = 'purchase' GROUP BY 1
-        |), a AS (SELECT u AS u1, pp AS p1, r AS r1 FROM p WHERE is_a),
-        |b AS (SELECT u AS u2, pp AS p2, r AS r2 FROM p WHERE NOT is_a)
+      s"""WITH $periodPairCtes
         |SELECT u1, p1, r1, u2, p2, r2,
         |       r2 - r1 AS delta_cents,
         |       ((u2 - u1) * r1) // u1 AS t_users,
@@ -2232,14 +2226,7 @@ object EventOps {
     // ppm tier: same rollups; every division is the verified
     // truncate-toward-zero // on both engines.
     "q252b_waterfall_ppm" ->
-      """WITH p AS (
-        |  SELECT datediff('day', DATE '2024-01-01', CAST(ts AS DATE)) < 15 AS is_a,
-        |         CAST(count(DISTINCT user_id) AS BIGINT) AS u,
-        |         CAST(count(*) AS BIGINT) AS pp,
-        |         CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS r
-        |  FROM events WHERE event_type = 'purchase' GROUP BY 1
-        |), a AS (SELECT u AS u1, pp AS p1, r AS r1 FROM p WHERE is_a),
-        |b AS (SELECT u AS u2, pp AS p2, r AS r2 FROM p WHERE NOT is_a),
+      s"""WITH $periodPairCtes,
         |t AS (
         |  SELECT u1, p1, r1, u2, p2, r2,
         |         r2 - r1 AS delta_cents,
@@ -2258,11 +2245,11 @@ object EventOps {
         |ORDER BY u1""".stripMargin,
 
     "q251_churn_labels" ->
-      """WITH ev AS (
+      s"""WITH ev AS (
         |  SELECT user_id,
-        |         CAST(datediff('day', DATE '2024-01-01', CAST(ts AS DATE)) AS BIGINT) AS day,
+        |         CAST($daySql AS BIGINT) AS day,
         |         CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END AS isp,
-        |         CAST(round(value * 100) AS BIGINT) AS cents
+        |         $centsSql AS cents
         |  FROM events
         |), feat AS (
         |  SELECT user_id,
@@ -2283,9 +2270,9 @@ object EventOps {
         |ORDER BY f.user_id""".stripMargin,
 
     "q250_lag_features" ->
-      """WITH daily AS (
+      s"""WITH daily AS (
         |  SELECT user_id,
-        |         CAST(datediff('day', DATE '2024-01-01', CAST(ts AS DATE)) AS BIGINT) AS day,
+        |         CAST($daySql AS BIGINT) AS day,
         |         CAST(count(*) AS BIGINT) AS n_day
         |  FROM events GROUP BY 1, 2
         |)
@@ -2298,20 +2285,7 @@ object EventOps {
         |FROM daily ORDER BY user_id, day""".stripMargin,
 
     "q246_mann_whitney" ->
-      """WITH cells AS (
-        |  SELECT event_type,
-        |         CAST(round(value * 100) AS BIGINT) AS cents,
-        |         CAST(sum(CASE WHEN datediff('day', DATE '2024-01-01', CAST(ts AS DATE)) < 15
-        |                       THEN 1 ELSE 0 END) AS BIGINT) AS na,
-        |         CAST(sum(CASE WHEN datediff('day', DATE '2024-01-01', CAST(ts AS DATE)) < 15
-        |                       THEN 0 ELSE 1 END) AS BIGINT) AS nb
-        |  FROM events GROUP BY 1, 2
-        |), run AS (
-        |  SELECT event_type, na, nb, na + nb AS cnt,
-        |         CAST(sum(na + nb) OVER (PARTITION BY event_type ORDER BY cents
-        |           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS rsum
-        |  FROM cells
-        |), agg AS (
+      s"""WITH $centsRunCtes, agg AS (
         |  SELECT event_type,
         |         CAST(sum(na) AS BIGINT) AS n_a,
         |         CAST(sum(nb) AS BIGINT) AS n_b,
@@ -2343,20 +2317,7 @@ object EventOps {
     // integers, so u_ppm and the double-z agree bit-for-bit. Only
     // BIGINT columns ship (the type audit would flag a HUGEINT).
     "q246b_mwu_ppm" ->
-      """WITH cells AS (
-        |  SELECT event_type,
-        |         CAST(round(value * 100) AS BIGINT) AS cents,
-        |         CAST(sum(CASE WHEN datediff('day', DATE '2024-01-01', CAST(ts AS DATE)) < 15
-        |                       THEN 1 ELSE 0 END) AS BIGINT) AS na,
-        |         CAST(sum(CASE WHEN datediff('day', DATE '2024-01-01', CAST(ts AS DATE)) < 15
-        |                       THEN 0 ELSE 1 END) AS BIGINT) AS nb
-        |  FROM events GROUP BY 1, 2
-        |), run AS (
-        |  SELECT event_type, na, nb, na + nb AS cnt,
-        |         CAST(sum(na + nb) OVER (PARTITION BY event_type ORDER BY cents
-        |           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS rsum
-        |  FROM cells
-        |), agg AS (
+      s"""WITH $centsRunCtes, agg AS (
         |  SELECT event_type,
         |         CAST(sum(na) AS BIGINT) AS n_a,
         |         CAST(sum(nb) AS BIGINT) AS n_b,
@@ -2412,9 +2373,9 @@ object EventOps {
         |FROM agg ORDER BY event_type""".stripMargin,
 
     "q242_sequential_ab" ->
-      """WITH ev AS (
+      s"""WITH ev AS (
         |  SELECT user_id,
-        |         CAST(datediff('day', DATE '2024-01-01', CAST(ts AS DATE)) AS BIGINT) AS day,
+        |         CAST($daySql AS BIGINT) AS day,
         |         CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END AS isp
         |  FROM events
         |), h AS (SELECT max(day) AS hmax FROM ev),
@@ -2456,31 +2417,7 @@ object EventOps {
         |FROM z ORDER BY day""".stripMargin,
 
     "q241_emd_drift" ->
-      """WITH cells AS (
-        |  SELECT event_type AS ec,
-        |         datediff('day', DATE '2024-01-01', CAST(ts AS DATE)) < 15 AS is_a,
-        |         CAST(round(value * 100) AS BIGINT) // 2000 AS cbin
-        |  FROM events
-        |), c2 AS (
-        |  SELECT ec, cbin,
-        |         CAST(sum(CASE WHEN is_a THEN 1 ELSE 0 END) AS BIGINT) AS na,
-        |         CAST(sum(CASE WHEN NOT is_a THEN 1 ELSE 0 END) AS BIGINT) AS nb
-        |  FROM cells GROUP BY 1, 2
-        |), rng AS (SELECT ec AS et, min(cbin) AS b0, max(cbin) AS b1 FROM c2 GROUP BY 1),
-        |dense AS (SELECT et, unnest(generate_series(b0, b1)) AS bin FROM rng),
-        |filled AS (
-        |  SELECT d.et, d.bin, coalesce(c2.na, 0) AS na, coalesce(c2.nb, 0) AS nb
-        |  FROM dense d LEFT JOIN c2 ON d.et = c2.ec AND d.bin = c2.cbin
-        |), cum AS (
-        |  SELECT et, na, nb,
-        |    CAST(sum(na) OVER (PARTITION BY et ORDER BY bin
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cuma,
-        |    CAST(sum(nb) OVER (PARTITION BY et ORDER BY bin
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cumb,
-        |    CAST(sum(na) OVER (PARTITION BY et) AS BIGINT) AS ta,
-        |    CAST(sum(nb) OVER (PARTITION BY et) AS BIGINT) AS tb
-        |  FROM filled
-        |)
+      s"""WITH $binCdfCtes
         |SELECT et AS event_type, max(ta) AS n_a, max(tb) AS n_b,
         |       CAST(count(*) AS BIGINT) AS n_bins,
         |       (2000 * 100 * CAST(sum(abs(cuma * tb - cumb * ta)) AS BIGINT))
@@ -2490,31 +2427,7 @@ object EventOps {
     // ppm tier: same dense-bin window chain; the CDF images floor to
     // ppm shares before any cross-period product.
     "q241b_emd_ppm" ->
-      """WITH cells AS (
-        |  SELECT event_type AS ec,
-        |         datediff('day', DATE '2024-01-01', CAST(ts AS DATE)) < 15 AS is_a,
-        |         CAST(round(value * 100) AS BIGINT) // 2000 AS cbin
-        |  FROM events
-        |), c2 AS (
-        |  SELECT ec, cbin,
-        |         CAST(sum(CASE WHEN is_a THEN 1 ELSE 0 END) AS BIGINT) AS na,
-        |         CAST(sum(CASE WHEN NOT is_a THEN 1 ELSE 0 END) AS BIGINT) AS nb
-        |  FROM cells GROUP BY 1, 2
-        |), rng AS (SELECT ec AS et, min(cbin) AS b0, max(cbin) AS b1 FROM c2 GROUP BY 1),
-        |dense AS (SELECT et, unnest(generate_series(b0, b1)) AS bin FROM rng),
-        |filled AS (
-        |  SELECT d.et, d.bin, coalesce(c2.na, 0) AS na, coalesce(c2.nb, 0) AS nb
-        |  FROM dense d LEFT JOIN c2 ON d.et = c2.ec AND d.bin = c2.cbin
-        |), cum AS (
-        |  SELECT et, na, nb,
-        |    CAST(sum(na) OVER (PARTITION BY et ORDER BY bin
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cuma,
-        |    CAST(sum(nb) OVER (PARTITION BY et ORDER BY bin
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cumb,
-        |    CAST(sum(na) OVER (PARTITION BY et) AS BIGINT) AS ta,
-        |    CAST(sum(nb) OVER (PARTITION BY et) AS BIGINT) AS tb
-        |  FROM filled
-        |), shares AS (
+      s"""WITH $binCdfCtes, shares AS (
         |  SELECT et, ta, tb,
         |         (cuma * 1000000) // ta AS sa_ppm,
         |         (cumb * 1000000) // tb AS sb_ppm
@@ -2528,10 +2441,10 @@ object EventOps {
         |FROM shares GROUP BY 1 ORDER BY event_type""".stripMargin,
 
     "q237_dp_sensitivity" ->
-      """WITH per AS (
+      s"""WITH per AS (
         |  SELECT event_type, user_id,
         |         CAST(count(*) AS BIGINT) AS n_u,
-        |         CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS c_u
+        |         CAST(sum($centsSql) AS BIGINT) AS c_u
         |  FROM events GROUP BY 1, 2
         |)
         |SELECT event_type,
@@ -2546,10 +2459,10 @@ object EventOps {
         |FROM per GROUP BY 1 ORDER BY event_type""".stripMargin,
 
     "q235_twap" ->
-      """WITH g AS (
+      s"""WITH g AS (
         |  SELECT user_id, CAST(ts AS DATE) AS day, event_id,
         |         epoch_us(ts) AS ep_us,
-        |         CAST(round(value * 100) AS BIGINT) AS cents
+        |         $centsSql AS cents
         |  FROM events
         |), h AS (
         |  SELECT user_id, day, event_id, ep_us, cents,
@@ -2570,10 +2483,10 @@ object EventOps {
         |FROM a ORDER BY user_id, day""".stripMargin,
 
     "q232_psi_drift" ->
-      """WITH ev AS (
+      s"""WITH ev AS (
         |  SELECT event_type, event_id,
-        |         datediff('day', DATE '2024-01-01', CAST(ts AS DATE)) < 15 AS is_a,
-        |         CAST(round(value * 100) AS BIGINT) AS cents
+        |         $daySql < 15 AS is_a,
+        |         $centsSql AS cents
         |  FROM events
         |), ranked AS (
         |  SELECT event_type, cents,
@@ -2625,9 +2538,9 @@ object EventOps {
         |GROUP BY 1 ORDER BY event_type""".stripMargin,
 
     "q225_autocorrelation" ->
-      """WITH daily AS (
+      s"""WITH daily AS (
         |  SELECT event_type,
-        |         CAST(datediff('day', DATE '2024-01-01', CAST(ts AS DATE)) AS BIGINT) AS day,
+        |         CAST($daySql AS BIGINT) AS day,
         |         CAST(count(*) AS DOUBLE) AS c
         |  FROM events GROUP BY 1, 2
         |)
@@ -2639,12 +2552,7 @@ object EventOps {
         |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
 
     "q226_theilsen" ->
-      """WITH daily AS (
-        |  SELECT event_type,
-        |         CAST(datediff('day', DATE '2024-01-01', CAST(ts AS DATE)) AS BIGINT) AS day,
-        |         CAST(count(*) AS BIGINT) AS c
-        |  FROM events GROUP BY 1, 2
-        |), p AS (
+      s"""WITH $dailyCte, p AS (
         |  SELECT a.event_type,
         |         CAST(trunc((1000000 * (b.c - a.c)) / CAST(b.day - a.day AS DOUBLE)) AS BIGINT) AS slope_ppm
         |  FROM daily a JOIN daily b
@@ -2660,12 +2568,7 @@ object EventOps {
         |FROM m ORDER BY event_type""".stripMargin,
 
     "q229_seasonal_decomp" ->
-      """WITH daily AS (
-        |  SELECT event_type,
-        |         CAST(datediff('day', DATE '2024-01-01', CAST(ts AS DATE)) AS BIGINT) AS day,
-        |         CAST(count(*) AS BIGINT) AS c
-        |  FROM events GROUP BY 1, 2
-        |), tr AS (
+      s"""WITH $dailyCte, tr AS (
         |  SELECT event_type, day, c,
         |         CASE WHEN count(*) OVER w = 7 THEN sum(c) OVER w / 7.0 END AS trend,
         |         day % 7 AS dow
@@ -2685,10 +2588,10 @@ object EventOps {
         |ORDER BY tr.event_type, tr.day""".stripMargin,
 
     "q221_decayed_value" ->
-      """WITH ev AS (
+      s"""WITH ev AS (
         |  SELECT user_id,
-        |         CAST(datediff('day', DATE '2024-01-01', CAST(ts AS DATE)) AS BIGINT) AS day,
-        |         CAST(round(value * 100) AS BIGINT) AS cents
+        |         CAST($daySql AS BIGINT) AS day,
+        |         $centsSql AS cents
         |  FROM events WHERE event_type = 'purchase'
         |), mx AS (SELECT max(day) AS mxd FROM ev),
         |dc AS (
@@ -2717,23 +2620,7 @@ object EventOps {
         |ORDER BY n_users DESC, path LIMIT 20""".stripMargin,
 
     "q204_time_to_convert" ->
-      """WITH w1 AS (
-        |  SELECT user_id, event_type, ts,
-        |    min(CASE WHEN event_type = 'signup' THEN ts END)
-        |      OVER (PARTITION BY user_id) AS t_signup
-        |  FROM events
-        |), w2 AS (
-        |  SELECT *, min(CASE WHEN event_type = 'click' AND ts > t_signup THEN ts END)
-        |      OVER (PARTITION BY user_id) AS t_click
-        |  FROM w1
-        |), w3 AS (
-        |  SELECT *, min(CASE WHEN event_type = 'purchase' AND ts > t_click THEN ts END)
-        |      OVER (PARTITION BY user_id) AS t_purchase
-        |  FROM w2
-        |), u AS (
-        |  SELECT user_id, max(t_signup) AS t_signup, max(t_purchase) AS t_purchase
-        |  FROM w3 GROUP BY user_id
-        |), dl AS (
+      s"""WITH $funnelCtes, dl AS (
         |  SELECT (epoch_us(t_purchase) - epoch_us(t_signup)) // 1000000 AS delta_s
         |  FROM u WHERE t_signup IS NOT NULL AND t_purchase IS NOT NULL
         |)
@@ -2745,20 +2632,7 @@ object EventOps {
         |FROM dl ORDER BY n_conv""".stripMargin,
 
     "q205_session_bounce" ->
-      """WITH e AS (
-        |  SELECT user_id, event_id, event_type, CAST(floor(epoch(ts)) AS BIGINT) AS ep
-        |  FROM events
-        |), m AS (
-        |  SELECT user_id, event_id, event_type, ep,
-        |    CASE WHEN lag(ep) OVER w IS NULL OR ep - lag(ep) OVER w > 1800
-        |         THEN 1 ELSE 0 END AS new_s
-        |  FROM e WINDOW w AS (PARTITION BY user_id ORDER BY ep, event_id)
-        |), s AS (
-        |  SELECT user_id, event_id, event_type, ep,
-        |    CAST(sum(new_s) OVER (PARTITION BY user_id ORDER BY ep, event_id
-        |         ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS session_id
-        |  FROM m
-        |), fx AS (
+      s"""WITH ${sessionCtes("event_type")}, fx AS (
         |  SELECT user_id, session_id, ep,
         |    first_value(event_type) OVER ws AS entry_type,
         |    last_value(event_type) OVER ws AS exit_type
@@ -2781,9 +2655,9 @@ object EventOps {
         |FROM sess GROUP BY 1 ORDER BY entry_type""".stripMargin,
 
     "q206_new_vs_returning" ->
-      """WITH ud AS (
+      s"""WITH ud AS (
         |  SELECT DISTINCT user_id,
-        |    CAST(datediff('day', DATE '2024-01-01', CAST(ts AS DATE)) AS BIGINT) AS day
+        |    CAST($daySql AS BIGINT) AS day
         |  FROM events
         |), fd AS (
         |  SELECT user_id, min(day) AS fday FROM ud GROUP BY 1
@@ -2797,12 +2671,7 @@ object EventOps {
         |GROUP BY 1 ORDER BY day""".stripMargin,
 
     "q209_dow_profile" ->
-      """WITH daily AS (
-        |  SELECT event_type,
-        |         CAST(datediff('day', DATE '2024-01-01', CAST(ts AS DATE)) AS BIGINT) AS day,
-        |         CAST(count(*) AS BIGINT) AS c
-        |  FROM events GROUP BY 1, 2
-        |), pd AS (
+      s"""WITH $dailyCte, pd AS (
         |  SELECT event_type, day % 7 AS dow,
         |         CAST(count(*) AS BIGINT) AS n_days,
         |         CAST(sum(c) AS BIGINT) AS n_events

@@ -1,6 +1,6 @@
 package graft
 
-import graft.functions.TextSim
+import graft.functions.{Components, TextSim}
 import graft.ops.Dedup
 import org.apache.spark.sql.functions._
 
@@ -604,6 +604,40 @@ class DedupSpec extends SparkSpec {
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(full.nonEmpty, "full graph must contain near-dup pairs at sf0.001")
     assert(inc === full)
+  }
+
+  test("foldDelta equals connected components over the old edges plus the delta pairs") {
+    // old clusters {1,3,5}→1, {2,4}→2, {7,9}→7, {11,14}→11, {12,15}→12
+    // and the untouched singleton 10; the delta pairs:
+    //  (4,5)            merges 1 and 2 through non-canonical members,
+    //                   so canonical 2 falls to 1;
+    //  (3,20)           attaches delta doc 20 through non-canonical 3;
+    //  (14,40) (15,40)  a delta doc bridging 11 and 12 — 12 falls to 11;
+    //  (30,31)          a delta-only pair.
+    val oldLab = Seq((1L, 1L), (3L, 1L), (5L, 1L), (2L, 2L), (4L, 2L),
+      (7L, 7L), (9L, 7L), (11L, 11L), (14L, 11L), (12L, 12L), (15L, 12L),
+      (10L, 10L)).toDF("doc_id", "canonical_id")
+    val deltaPairs = Seq((4L, 5L), (3L, 20L), (14L, 40L), (15L, 40L), (30L, 31L))
+      .toDF("id1", "id2")
+    val folded = Dedup.foldDelta(oldLab, deltaPairs)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+    // the reference: components of the union graph (old member→canonical
+    // edges plus the delta pairs); a doc in no edge is its own canonical
+    val oldEdges = oldLab.filter($"doc_id" =!= $"canonical_id")
+      .select(least($"doc_id", $"canonical_id").as("id1"),
+              greatest($"doc_id", $"canonical_id").as("id2"))
+    val cc = Components.connectedComponents(oldEdges.unionByName(deltaPairs))
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
+    val docs = oldLab.collect().map(_.getLong(0)) ++
+      Seq(4L, 5L, 3L, 20L, 14L, 40L, 15L, 30L, 31L)
+    val expected = docs.distinct.sorted.map(d => (d, cc.getOrElse(d, d))).toSeq
+    assert(folded === expected)
+    val lab = folded.toMap
+    assert(lab(2L) === 1L && lab(4L) === 1L, "the merged cluster kept its larger canonical")
+    assert(lab(20L) === 1L, "a delta doc attached through a non-canonical member")
+    assert(lab(12L) === 11L && lab(15L) === 11L && lab(40L) === 11L)
+    assert(lab(30L) === 30L && lab(31L) === 30L, "a delta-only pair")
+    assert(lab(10L) === 10L && lab(7L) === 7L && lab(9L) === 7L, "untouched old labels moved")
   }
 
   test("stored-state serve tier reproduces the full-graph canonicalization exactly (q299)") {

@@ -78,4 +78,56 @@ class StateRootSpec extends AnyFunSuite {
       new File(f, "rel").delete(); f.delete()
     }
   }
+
+  test("a process killed mid-build leaves a stage the next ensure sweeps, never serves") {
+    import scala.jdk.CollectionConverters._
+    val d = dataDir()
+    val pre = StateRoot.prefix("spec", d)
+    val javaBin = new File(new File(sys.props("java.home"), "bin"), "java").getAbsolutePath
+    val jvmArgs = java.lang.management.ManagementFactory
+      .getRuntimeMXBean.getInputArguments.asScala.toSeq
+    val cmd = Seq(javaBin) ++ jvmArgs ++ Seq("-Xmx128m",
+      "-cp", sys.props("java.class.path"), "graft.StateRootBlockedBuild", d)
+    val proc = new ProcessBuilder(cmd.asJava)
+      .redirectError(ProcessBuilder.Redirect.DISCARD).start()
+    val childPid = proc.pid
+    val stage = new File(tmp, pre + s"p$childPid.build")
+    val childRoot = new File(tmp, pre + s"p$childPid")
+    try {
+      // the child prints one line once its partial stage is on disk
+      val out = new java.io.BufferedReader(new java.io.InputStreamReader(proc.getInputStream))
+      val ready = java.util.concurrent.CompletableFuture.supplyAsync(() => out.readLine())
+      assert(ready.get(120, java.util.concurrent.TimeUnit.SECONDS) === "staged")
+      assert(new File(stage, "half").isFile, "the child's partial stage is not on disk")
+      assert(!childRoot.exists, "a blocked build published its root")
+    } finally {
+      proc.destroyForcibly()
+      assert(proc.waitFor(60, java.util.concurrent.TimeUnit.SECONDS), "the child outlived destroyForcibly")
+    }
+    assert(ProcessHandle.of(childPid).isEmpty)
+    val n = new java.util.concurrent.atomic.AtomicInteger()
+    val root = StateRoot.ensure("spec", d)(counted(n))
+    assert(n.get === 1, "the partial state was served instead of rebuilt")
+    assert(root === new File(tmp, pre + s"p$pid").getAbsolutePath)
+    assert(new File(root, "rel").isFile && !new File(root, "half").exists)
+    assert(!stage.exists, "the killed process's stage survived the sweep")
+    assert(!childRoot.exists)
+    new File(root, "rel").delete(); new File(root).delete()
+  }
+}
+
+/** Child process of the kill test: starts a [[StateRoot.ensure]] build
+  * for the data dir in args(0), writes part of its stage, reports
+  * "staged" on stdout and blocks until it is killed.
+  */
+object StateRootBlockedBuild {
+  def main(args: Array[String]): Unit = {
+    StateRoot.ensure("spec", args(0)) { sp =>
+      Files.writeString(new File(sp, "half").toPath, "partial")
+      println("staged")
+      System.out.flush()
+      Thread.sleep(Long.MaxValue)
+    }
+    ()
+  }
 }
