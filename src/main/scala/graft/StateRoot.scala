@@ -30,7 +30,8 @@ import java.nio.file.{Files, StandardCopyOption}
   *
   * Builds are deterministic, so a rebuild reproduces the same bits.
   * A build must not call [[ensure]] itself (ConcurrentHashMap's
-  * computeIfAbsent forbids recursive updates).
+  * computeIfAbsent forbids recursive updates); neither may a [[phase]]
+  * branch, which runs inside the build.
   */
 object StateRoot {
   private val memo = new java.util.concurrent.ConcurrentHashMap[(String, String), String]()
@@ -76,4 +77,22 @@ object StateRoot {
       } finally rmTree(stage)
       root.getAbsolutePath
     })
+
+  /** Runs independent build branches on their own driver threads (one
+    * per branch) and returns their results in order. It joins every
+    * branch before it returns or throws, so [[ensure]] never deletes a
+    * stage under a live writer; if any branch threw, the first such
+    * branch's own exception is rethrown.
+    */
+  def phase[A](branches: (() => A)*): Seq[A] = {
+    val out = branches.map(_ => new java.util.concurrent.atomic.AtomicReference[Either[Throwable, A]]())
+    val threads = branches.zip(out).zipWithIndex.map { case ((b, o), i) =>
+      val t = new Thread(() => o.set(try Right(b()) catch { case e: Throwable => Left(e) }),
+        s"graft-phase-$i")
+      t.start()
+      t
+    }
+    threads.foreach(_.join())
+    out.map(_.get).map(_.fold(e => throw e, identity))
+  }
 }

@@ -1,6 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 
 /** Connected components over a pair relation — turns the dedup
@@ -73,6 +74,8 @@ object Components {
         .observe(obs, sum(col("__chg")).as("nchg")),
         eager = true)
       changed = Option(obs.get("nchg")).map(_.asInstanceOf[Long]).getOrElse(0L)
+      // `next` is materialized, so the superstep it replaces is dead
+      release(labels)
       labels = next.drop("__chg")
       iter += 1
     }
@@ -80,6 +83,16 @@ object Components {
       s"connected components did not converge in $maxIter supersteps " +
         s"($changed labels still changing) — raise maxIter; returning " +
         "partial labels would mislabel clusters")
+    release(edges)
     labels.select(col("id").as("doc_id"), col("comp").as("canonical_id"))
   }
+
+  /** Drops the local-checkpoint blocks under `df`'s plan. Only for a
+    * caller that owns those checkpoints and will not read `df` again.
+    */
+  private[graft] def release(df: DataFrame): Unit =
+    df.queryExecution.logical.foreach {
+      case r: LogicalRDD => r.rdd.unpersist(blocking = false); ()
+      case _ => ()
+    }
 }

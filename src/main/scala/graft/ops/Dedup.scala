@@ -239,14 +239,29 @@ object Dedup {
     * quadratic remains on this path at 100 TB.
     */
   def canonicalizeLsh(docs: DataFrame): DataFrame = {
-    val shingleWidth = 3
-    val withRep = exactReps(docs, shingleWidth).localCheckpoint(true)
+    val withRep = exactReps(docs, canonWidth).localCheckpoint(true)
     val reps = withRep.filter(col("doc_id") === col("rep_id"))
       .select(col("doc_id"), col("text"))
-    val sh = TextSim.shingles(reps, shingleWidth)
-    val cand = TextSim.bandCandidates(
-      TextSim.lshBands(TextSim.minhashSignatureNative(reps, 128, shingleWidth), 32, 4))
-    val repPairs = TextSim.verifyJaccard(cand, sh, 0.8)
+    labelsFrom(withRep, TextSim.shingles(reps, canonWidth), canonBands(reps))
+  }
+
+  /** Shingle width of the canonicalization: [[exactReps]], the MinHash
+    * signature and the exact verify must agree on it. */
+  private final val canonWidth = 3
+
+  /** MinHash(128) + LSH(32×4) band rows (doc_id, band, bh) of `docs`. */
+  private def canonBands(docs: DataFrame): DataFrame =
+    TextSim.lshBands(TextSim.minhashSignatureNative(docs, 128, canonWidth), 32, 4)
+
+  /** The tail [[canonicalizeLsh]] and the stored `labels/` share:
+    * `withRep` is the checkpointed [[exactReps]] relation, `repSh` and
+    * `repBands` the representatives' shingles and band rows (however
+    * the caller derived them). Band candidates → exact verify at 0.8 →
+    * components → fan-out to every member.
+    */
+  private def labelsFrom(withRep: DataFrame, repSh: DataFrame, repBands: DataFrame): DataFrame = {
+    val cand = TextSim.bandCandidates(repBands)
+    val repPairs = TextSim.verifyJaccard(cand, repSh, 0.8)
       .select(col("id1"), col("id2"))
     val repLabels = Components.connectedComponents(repPairs)
       .select(col("doc_id").as("rep_key"), col("canonical_id").as("rep_canon"))
@@ -266,14 +281,31 @@ object Dedup {
     *
     *  - `meta/`   — the ingest cut (yesterday's max doc_id; here the
     *    q213 convention, oldest 80% by id);
-    *  - `labels/` — yesterday's (doc_id → canonical_id) map, the
-    *    [[canonicalizeLsh]] production composition over the old
-    *    corpus;
+    *  - `labels/` — yesterday's (doc_id → canonical_id) map, equal to
+    *    [[canonicalizeLsh]] over the old corpus;
     *  - `bands/`  — yesterday's LSH band index (doc_id, band, bh) —
     *    MinHash(128)+LSH(32×4) over the old corpus, so tonight's
     *    ingest sketches ONLY its delta and probes these rows;
     *  - the q303 containment index: `gsizes/`, `vocab/`, `vmeta/`,
     *    `gramsid/`, `gprefix/` (see below).
+    *
+    * The build signs and shingles every old doc exactly once, and most
+    * of its cost is job latency, so it runs in three phases, each
+    * [[graft.StateRoot.phase]] joining its branches before the next:
+    *
+    *  1. the cut, one eager checkpoint;
+    *  2. four branches: the `meta/` write, and checkpoints of
+    *     [[exactReps]], of the band rows and of the shingles, each
+    *     over the whole old corpus;
+    *  3. three branches: `labels/` ([[labelsFrom]] over the band rows
+    *     and shingles semi-joined to the representatives — the same
+    *     rows [[canonicalizeLsh]] derives from the representatives
+    *     alone), the `bands/` write, and the containment chain
+    *     `gsizes/ → vocab/ → vmeta/ → gramsid/ → gprefix/`.
+    *
+    * No branch calls [[graft.StateRoot.ensure]]: the branches run
+    * inside this build's `ensure`, which must not recurse. After the
+    * last write the build drops its own checkpoints.
     *
     * Root, memo, sweep and publish are [[graft.StateRoot]]'s. The bits
     * are deterministic (md5 minhash, exact verify), so rebuilds are
@@ -285,48 +317,67 @@ object Dedup {
       val docs = T.documents(s, d)
       val cutDf = docs.agg(expr("(4 * max(doc_id)) div 5").as("cut"))
         .localCheckpoint(true)
-      cutDf.coalesce(1).write.mode("overwrite").parquet(s"$sp/meta")
       val oldDocs = docs.crossJoin(broadcast(cutDf))
         .filter(col("doc_id") <= col("cut")).drop("cut")
-      canonicalizeLsh(oldDocs)
-        .write.mode("overwrite").parquet(s"$sp/labels")
-      TextSim.lshBands(TextSim.minhashSignatureNative(oldDocs, 128, 3), 32, 4)
-        .write.mode("overwrite").parquet(s"$sp/bands")
-      // containment-audit state (q303): the old corpus's gid index,
-      // per-doc sizes, gram dictionary and prefixes at q140's 9/10
-      // threshold, all derived from one checkpointed explode. The
-      // stored prefix order is the OLD corpus's df order; tonight's
-      // delta shifts dfs, but the prefix-filter lemma holds for ANY
-      // fixed per-doc order (if the container misses all L prefix
-      // grams, overlap ≤ sz − L < t — pigeonhole, order-free), so
-      // stale prefixes stay COMPLETE and only affect candidate cost,
-      // which the exact verify absorbs.
-      val shOld = TextSim.shingles(oldDocs, 3).localCheckpoint(true)
-      shOld.groupBy(col("doc_id")).agg(count(lit(1)).as("sz"))
-        .write.mode("overwrite").parquet(s"$sp/gsizes")
-      val szOldW = s.read.parquet(s"$sp/gsizes")
-      // The gram dfs are STATE, so the nightly serve merges
-      // delta counts into stored dfs instead of re-aggregating the
-      // whole index. vocab/ is the [[gramVocab]] dictionary (g, gdf,
-      // gid) over the old corpus — the same function the inline tiers
-      // encode with, so stored ≡ inline by construction. gid is the
-      // (df asc, gram asc) rank: the stored prefix ORDER and a 4-byte
-      // join key at once, so gramsid/ and gprefix/ store
-      // (doc_id, gid) and the serve's joins shuffle ints.
-      gramVocab(shOld).write.mode("overwrite").parquet(s"$sp/vocab")
-      val vocabW = s.read.parquet(s"$sp/vocab")
-      // 1-row dictionary high-water mark: the serve extends the
-      // dictionary for unseen delta grams from maxgid without scanning
-      // the vocabulary.
-      vocabW.agg(max(col("gid")).as("maxgid")).coalesce(1)
-        .write.mode("overwrite").parquet(s"$sp/vmeta")
-      shOld.join(vocabW.select(col("g"), col("gid")), "g")
-        .select(col("doc_id"), col("gid"))
-        .write.mode("overwrite").parquet(s"$sp/gramsid")
-      prefixRows(s.read.parquet(s"$sp/gramsid"), szOldW, 9, 10, col("gid"))
-        .select(col("doc_id"), col("gid"))
-        .write.mode("overwrite").parquet(s"$sp/gprefix")
+      val Seq(_, withRep, bandsOld, shOld) = graft.StateRoot.phase(
+        () => { cutDf.coalesce(1).write.mode("overwrite").parquet(s"$sp/meta"); cutDf },
+        () => exactReps(oldDocs, canonWidth).localCheckpoint(true),
+        () => canonBands(oldDocs).localCheckpoint(true),
+        () => TextSim.shingles(oldDocs, canonWidth).localCheckpoint(true))
+      val repIds = withRep.filter(col("doc_id") === col("rep_id")).select(col("doc_id"))
+      def ofReps(df: DataFrame) = df.join(repIds, Seq("doc_id"), "left_semi")
+      // each branch returns the relation it wrote; its plan holds the
+      // branch's own checkpoints (components, the gid rank)
+      val written = graft.StateRoot.phase(
+        () => {
+          val lab = labelsFrom(withRep, ofReps(shOld), ofReps(bandsOld))
+          lab.write.mode("overwrite").parquet(s"$sp/labels")
+          lab
+        },
+        () => { bandsOld.write.mode("overwrite").parquet(s"$sp/bands"); bandsOld },
+        () => writeContainmentIndex(s, sp, shOld))
+      (Seq(cutDf, withRep, shOld) ++ written).foreach(Components.release)
     }
+
+  /** The q303 containment index of the old corpus from its
+    * checkpointed shingles `shOld`: per-doc sizes, gram dictionary and
+    * prefixes at q140's 9/10 threshold. The stored prefix order is the
+    * OLD corpus's df order; tonight's delta shifts dfs, but the
+    * prefix-filter lemma holds for ANY fixed per-doc order (if the
+    * container misses all L prefix grams, overlap ≤ sz − L < t —
+    * pigeonhole, order-free), so stale prefixes stay COMPLETE and only
+    * affect candidate cost, which the exact verify absorbs. Returns
+    * the written `vocab/` relation, whose gid rank checkpoint is the
+    * caller's to drop.
+    */
+  private def writeContainmentIndex(s: SparkSession, sp: String, shOld: DataFrame): DataFrame = {
+    shOld.groupBy(col("doc_id")).agg(count(lit(1)).as("sz"))
+      .write.mode("overwrite").parquet(s"$sp/gsizes")
+    val szOldW = s.read.parquet(s"$sp/gsizes")
+    // The gram dfs are STATE, so the nightly serve merges
+    // delta counts into stored dfs instead of re-aggregating the
+    // whole index. vocab/ is the [[gramVocab]] dictionary (g, gdf,
+    // gid) over the old corpus — the same function the inline tiers
+    // encode with, so stored ≡ inline by construction. gid is the
+    // (df asc, gram asc) rank: the stored prefix ORDER and a 4-byte
+    // join key at once, so gramsid/ and gprefix/ store
+    // (doc_id, gid) and the serve's joins shuffle ints.
+    val vocab = gramVocab(shOld)
+    vocab.write.mode("overwrite").parquet(s"$sp/vocab")
+    val vocabW = s.read.parquet(s"$sp/vocab")
+    // 1-row dictionary high-water mark: the serve extends the
+    // dictionary for unseen delta grams from maxgid without scanning
+    // the vocabulary.
+    vocabW.agg(max(col("gid")).as("maxgid")).coalesce(1)
+      .write.mode("overwrite").parquet(s"$sp/vmeta")
+    shOld.join(vocabW.select(col("g"), col("gid")), "g")
+      .select(col("doc_id"), col("gid"))
+      .write.mode("overwrite").parquet(s"$sp/gramsid")
+    prefixRows(s.read.parquet(s"$sp/gramsid"), szOldW, 9, 10, col("gid"))
+      .select(col("doc_id"), col("gid"))
+      .write.mode("overwrite").parquet(s"$sp/gprefix")
+    vocab
+  }
 
   /** The delta-touching verified near-dup pair relation served from
     * the STORED band index (shared by q299's components tail and

@@ -20,8 +20,11 @@ import org.apache.spark.sql.functions._
 object EventOps {
   type Q = (SparkSession, String) => DataFrame
 
-  /** Day index of `ts` from 2024-01-01, the events' first day. */
+  /** Day index of `ts` from the events' first day. */
   private val eventDay: Column = datediff(to_date(col("ts")), lit("2024-01-01").cast("date"))
+  /** Week index: floor of day / 7 (`div` and `//` disagree before the
+    * first day). */
+  private val eventWeek: Column = floor(eventDay / 7.0).cast("bigint")
   /** Exact integer cents of `value` (the q149-proven round(value·100)). */
   private val eventCents: Column = expr("CAST(round(value * 100) AS BIGINT)")
 
@@ -178,9 +181,7 @@ object EventOps {
 
     "q132_cohort_retention" -> ((s, d) => {
       val act = T.events(s, d)
-        .select(col("user_id"),
-          expr("CAST(floor(datediff(to_date(ts), date'2024-01-01')" +
-            " / CAST(7 AS DOUBLE)) AS BIGINT)").as("wk"))
+        .select(col("user_id"), eventWeek.as("wk"))
         .distinct()
       val cohort = act.groupBy(col("user_id")).agg(min(col("wk")).as("cohort_wk"))
       act.join(cohort, "user_id")
@@ -201,10 +202,7 @@ object EventOps {
       val ev = T.events(s, d)
       val st = userStages(ev)
       val cohort = ev
-        .select(col("user_id"),
-          // Same explicit floor as q132 (div/`//` disagree pre-epoch).
-          expr("CAST(floor(datediff(to_date(ts), date'2024-01-01')" +
-            " / CAST(7 AS DOUBLE)) AS BIGINT)").as("wk"))
+        .select(col("user_id"), eventWeek.as("wk"))
         .groupBy(col("user_id")).agg(min(col("wk")).as("cohort_wk"))
       st.join(cohort, "user_id")
         .groupBy(col("cohort_wk"))
@@ -629,14 +627,11 @@ object EventOps {
     "q218_cohort_ltv" -> ((s, d) => {
       val ev = T.events(s, d)
       val cohort = ev
-        .select(col("user_id"),
-          expr("CAST(floor(datediff(to_date(ts), date'2024-01-01')" +
-            " / CAST(7 AS DOUBLE)) AS BIGINT)").as("wk"))
+        .select(col("user_id"), eventWeek.as("wk"))
         .groupBy(col("user_id")).agg(min(col("wk")).as("cohort_wk"))
       val cells = ev.filter(col("event_type") === "purchase")
         .select(col("user_id"),
-          expr("CAST(floor(datediff(to_date(ts), date'2024-01-01')" +
-            " / CAST(7 AS DOUBLE)) AS BIGINT)").as("wk"),
+          eventWeek.as("wk"),
           eventCents.as("cents"))
         .join(cohort, "user_id")
         .groupBy(col("cohort_wk"), (col("wk") - col("cohort_wk")).as("week_offset"))
@@ -1241,7 +1236,7 @@ object EventOps {
     "q221_decayed_value" -> ((s, d) => {
       val ev = T.events(s, d).filter(col("event_type") === "purchase")
         .select(col("user_id"),
-          expr("CAST(datediff(to_date(ts), date'2024-01-01') AS BIGINT)").as("day"),
+          eventDay.cast("bigint").as("day"),
           eventCents.as("cents"))
       val mx = ev.agg(max(col("day")).as("mxd"))
       ev.crossJoin(broadcast(mx))
@@ -1578,7 +1573,7 @@ object EventOps {
         sum(when(col("t_click").isNotNull, 1).otherwise(0)).as("n_signup_click"),
         sum(when(col("t_purchase").isNotNull, 1).otherwise(0)).as("n_full_funnel"))
 
-  /** Oracle day index of `ts` from 2024-01-01. */
+  /** Oracle twin of [[eventDay]]. */
   private val daySql = "datediff('day', DATE '2024-01-01', CAST(ts AS DATE))"
   /** Oracle exact integer cents of `value`. */
   private val centsSql = "CAST(round(value * 100) AS BIGINT)"
@@ -2169,7 +2164,7 @@ object EventOps {
         |  FROM events GROUP BY 1
         |), cells AS (
         |  SELECT co.cohort_wk,
-        |         CAST(floor(datediff('day', DATE '2024-01-01', CAST(e.ts AS DATE))
+        |         CAST(floor($daySql
         |             / CAST(7 AS DOUBLE)) AS BIGINT) - co.cohort_wk AS week_offset,
         |         CAST(count(*) AS BIGINT) AS n_purchases,
         |         CAST(sum($centsSql) AS BIGINT) AS rev_cents

@@ -683,6 +683,38 @@ class DedupSpec extends SparkSpec {
     assert(served === inline)
   }
 
+  test("the one-pass build stores canonicalizeLsh's labels and the old corpus's bands, and leaves no checkpoint") {
+    // A private copy of the documents gives the build its own root and
+    // memo key, so this call really builds.
+    val base = java.nio.file.Files.createTempDirectory("canonbuild").toFile
+    val d = new java.io.File(base, "sf0.001").getPath
+    def rmTree(f: java.io.File): Unit = {
+      Option(f.listFiles()).foreach(_.foreach(rmTree)); f.delete(); ()
+    }
+    var root = ""
+    try {
+      T.documents(spark, sf001).write.parquet(s"$d/documents.parquet")
+      val before = spark.sparkContext.getPersistentRDDs.keySet
+      root = Dedup.ensureCanonState(spark, d)
+      val left = spark.sparkContext.getPersistentRDDs.keySet -- before
+      assert(left.isEmpty, s"the build left persisted RDDs $left")
+      val docs = T.documents(spark, d)
+      val cut = spark.read.parquet(s"$root/meta").head().getLong(0)
+      val oldDocs = docs.filter(col("doc_id") <= cut)
+      def same(stored: String, standalone: org.apache.spark.sql.DataFrame): Unit = {
+        val st = spark.read.parquet(s"$root/$stored")
+        assert(st.count() > 0, s"$stored/ is empty")
+        assert(st.exceptAll(standalone).isEmpty && standalone.exceptAll(st).isEmpty,
+          s"$stored/ differs from its standalone composition")
+      }
+      same("labels", Dedup.canonicalizeLsh(oldDocs))
+      same("bands", TextSim.lshBands(TextSim.minhashSignatureNative(oldDocs, 128, 3), 32, 4))
+    } finally {
+      if (root.nonEmpty) rmTree(new java.io.File(root))
+      rmTree(base)
+    }
+  }
+
   test("dedup transitivity: triangle/wedge recount from the exact pair set (q247)") {
     val r = Dedup.queries("q247_dedup_transitivity")(spark, sf001).collect().head
     val pairs = Dedup.queries("q61_neardup_jaccard")(spark, sf001)

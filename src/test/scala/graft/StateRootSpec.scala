@@ -13,9 +13,30 @@ class StateRootSpec extends AnyFunSuite {
   // above Linux's largest pid_max (2^22): no such process can exist
   private val deadPid = 4194305L
 
+  private val made = scala.collection.mutable.Buffer.empty[File]
+
   /** A fresh data dir (unique path → unique md5 tag and memo key). */
-  private def dataDir(): String =
-    Files.createTempDirectory("stateroot").resolve("sf0.01").toString
+  private def dataDir(): String = {
+    val base = Files.createTempDirectory("stateroot").toFile
+    made += base
+    new File(base, "sf0.01").getPath
+  }
+
+  private def rmTree(f: File): Unit = {
+    Option(f.listFiles()).foreach(_.foreach(rmTree)); f.delete(); ()
+  }
+
+  /** Deletes every data dir the test made, and each root or stage of
+    * it under java.io.tmpdir. */
+  override def withFixture(test: NoArgTest) =
+    try super.withFixture(test) finally {
+      val pres = for (b <- made.toSeq; k <- Seq("spec", "canon", "ivfadc"))
+        yield StateRoot.prefix(k, new File(b, "sf0.01").getPath)
+      Option(tmp.listFiles()).foreach(_.filter(f => pres.exists(f.getName.startsWith))
+        .foreach(rmTree))
+      made.foreach(rmTree)
+      made.clear()
+    }
 
   private def counted(n: java.util.concurrent.atomic.AtomicInteger)(sp: String): Unit = {
     n.incrementAndGet()
@@ -50,6 +71,44 @@ class StateRootSpec extends AnyFunSuite {
     assert(StateRoot.ensure("spec", d)(counted(n)) === root.getAbsolutePath)
     assert(n.get === 1)
     assert(!new File(root, "half").exists, "the failed build's bits were published")
+  }
+
+  test("a throwing phase branch is rethrown only after its siblings finish, and nothing is published") {
+    import java.util.concurrent.CountDownLatch
+    import scala.jdk.CollectionConverters._
+    val d = dataDir()
+    val root = new File(tmp, StateRoot.prefix("spec", d) + s"p$pid")
+    val writing = new CountDownLatch(1)
+    val thrown = new CountDownLatch(1)
+    val siblingDone = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val e = intercept[IllegalStateException] {
+      StateRoot.ensure("spec", d) { sp =>
+        StateRoot.phase(
+          () => {
+            writing.await()
+            thrown.countDown()
+            throw new IllegalStateException("branch died")
+          },
+          () => {
+            Files.writeString(new File(sp, "early").toPath, "partial")
+            writing.countDown()
+            thrown.await()
+            Thread.sleep(300)  // still writing after the sibling threw
+            Files.writeString(new File(sp, "late").toPath, "partial")
+            siblingDone.set(true)
+          })
+        ()
+      }
+    }
+    assert(e.getMessage === "branch died", "the caller got a wrapper, not the branch's exception")
+    assert(siblingDone.get, "ensure returned while a sibling branch was still writing")
+    assert(!root.exists, "a failed build published a root")
+    assert(!new File(root.getPath + ".build").exists, "a failed build left its stage")
+    assert(!Thread.getAllStackTraces.keySet.asScala.exists(t =>
+      t.isAlive && t.getName.startsWith("graft-phase-")), "a phase thread outlived the build")
+    val n = new java.util.concurrent.atomic.AtomicInteger()
+    assert(StateRoot.ensure("spec", d)(counted(n)) === root.getAbsolutePath)
+    assert(n.get === 1)
   }
 
   test("the sweep removes only dead-pid roots of the same kind and dataset") {
