@@ -419,7 +419,7 @@ object CorpusOps {
     // join — which therefore only shuffles bloom survivors (true hits
     // + the fpp sliver), not the 100 TB side. No false negatives, so
     // survivors ⊇ true hits and the verify join restores exactness:
-    // output is IDENTICAL to q87 (the oracle is shared verbatim).
+    // output is IDENTICAL to q87, so both read decontamOracle.
     "q142_decontaminate_bloom" -> ((s, d) => {
       BloomKit.ensureRegistered(s)
       val sh = TextSim.shingles(T.documents(s, d), 5)
@@ -2068,6 +2068,62 @@ object CorpusOps {
        |  st -> st.ps)""".stripMargin
   }
 
+  /** The unigram trainers' shared start (q291/q292, q296/q297, q301):
+    * the checkpointed (w, c) vocabulary, the seed counts of every
+    * substring of length ≤ UNI_PL weighted by word count, and the
+    * seed's single chars, which are never pruned. Fails loudly, naming
+    * `entry`, on an empty vocabulary (max() over it is a NULL row) or
+    * on a word longer than UNI_MAXLEN.
+    */
+  private def uniSeed(s: SparkSession, d: String, entry: String)
+      : (DataFrame, DataFrame, DataFrame) = {
+    val words = uniVocab(s, d).localCheckpoint(true)
+    val maxLenRow = words.agg(max(length(col("w")))).head()
+    require(!maxLenRow.isNullAt(0),
+      s"$entry: empty word vocabulary — the corpus produced no words")
+    require(maxLenRow.getInt(0) <= UNI_MAXLEN,
+      s"$entry: max word length ${maxLenRow.getInt(0)} exceeds UNI_MAXLEN=$UNI_MAXLEN " +
+        "— widen the dial (both engines' unrolled DP covers UNI_MAXLEN positions)")
+    val seed = words
+      .select(col("c"), explode(expr(
+        s"""flatten(transform(sequence(1, length(w)), s ->
+           |  transform(sequence(s, least(s + ${UNI_PL - 1}, length(w))), e ->
+           |    substring(w, s, e - s + 1))))""".stripMargin)).as("p"))
+      .groupBy(col("p")).agg(sum(col("c")).as("cnt"))
+      .localCheckpoint(true)
+    (words, seed, seed.filter(length(col("p")) === 1).select(col("p")))
+  }
+
+  /** Piece smoothing: every char at its count + `floor` (coverage —
+    * an unused char must stay segmentable), plus the top UNI_S
+    * multi-char pieces by (cnt desc, p).
+    */
+  private def uniAdjust(chars: DataFrame, counts: DataFrame, floor: Long): DataFrame =
+    chars.join(counts, Seq("p"), "left_outer")
+      .select(col("p"), (coalesce(col("cnt"), lit(0L)) + floor).as("cnt"))
+      .unionByName(counts.filter(length(col("p")) >= 2)
+        .orderBy(col("cnt").desc, col("p")).limit(UNI_S))
+
+  /** The soft chains' step-0 inventory: the seed counts in q20 units,
+    * smoothed with a floor of one unit.
+    */
+  private def uniSoftSeed(chars: DataFrame, seed: DataFrame): DataFrame =
+    uniAdjust(chars, seed.select(col("p"), (col("cnt") * UNI_Q).as("cnt")), UNI_Q)
+      .localCheckpoint(true)
+
+  /** Raw piece probabilities cnt/tot from exact q20 integers, as one
+    * map row `pm`. The total rides the DECIMAL overflow path, and both
+    * engines cast the same exact integer to the same nearest double
+    * before the one division.
+    */
+  private def uniSoftPm(pieces: DataFrame): DataFrame =
+    pieces
+      .crossJoin(broadcast(
+        pieces.agg(sum(col("cnt").cast("decimal(38,0)")).as("tot"))))
+      .select(col("p"),
+        (col("cnt").cast("double") / col("tot").cast("double")).as("pr"))
+      .agg(map_from_entries(collect_list(struct(col("p"), col("pr")))).as("pm"))
+
   /** The shared unigram-LM hard-EM loop state: (per-step piece tables
     * up0..upT with their smoothed counts, per-step segmented vocab
     * relations seg1..segT). The corpus collapses to the (word, count)
@@ -2083,31 +2139,8 @@ object CorpusOps {
     */
   private def unigramChainState(s: SparkSession, d: String)
       : (List[DataFrame], List[DataFrame]) = {
-    val words = uniVocab(s, d).localCheckpoint(true)
-    // r13 ADVICE: max() over an empty vocab returns a NULL row and
-    // getInt would NPE before the intended loud require below —
-    // surface the real failure mode (no words at all) diagnosably.
-    val maxLenRow = words.agg(max(length(col("w")))).head()
-    require(!maxLenRow.isNullAt(0),
-      "unigram trainer: empty word vocabulary — the corpus produced no words")
-    val maxLen = maxLenRow.getInt(0)
-    require(maxLen <= UNI_MAXLEN,
-      s"unigram trainer: max word length $maxLen exceeds UNI_MAXLEN=$UNI_MAXLEN " +
-        "— widen the dial (both engines' unrolled DP covers UNI_MAXLEN positions)")
-    val seed = words
-      .select(col("c"), explode(expr(
-        s"""flatten(transform(sequence(1, length(w)), s ->
-           |  transform(sequence(s, least(s + ${UNI_PL - 1}, length(w))), e ->
-           |    substring(w, s, e - s + 1))))""".stripMargin)).as("p"))
-      .groupBy(col("p")).agg(sum(col("c")).as("cnt"))
-      .localCheckpoint(true)
-    val charSet = seed.filter(length(col("p")) === 1).select(col("p"))
-    def adjust(counts: DataFrame): DataFrame =
-      charSet.join(counts, Seq("p"), "left_outer")
-        .select(col("p"), (coalesce(col("cnt"), lit(0L)) + 1L).as("cnt"))
-        .unionByName(counts.filter(length(col("p")) >= 2)
-          .orderBy(col("cnt").desc, col("p")).limit(UNI_S))
-    var pieces = adjust(seed).localCheckpoint(true)
+    val (words, seed, charSet) = uniSeed(s, d, "unigram trainer (q291/q292)")
+    var pieces = uniAdjust(charSet, seed, 1L).localCheckpoint(true)
     var pieceSteps = List(pieces)
     var segSteps = List.empty[DataFrame]
     for (_ <- 1 to UNI_T) {
@@ -2122,7 +2155,7 @@ object CorpusOps {
       segSteps = segSteps :+ segs
       val usage = segs.select(col("c"), explode(col("seg")).as("p"))
         .groupBy(col("p")).agg(sum(col("c")).as("cnt"))
-      pieces = adjust(usage).localCheckpoint(true)
+      pieces = uniAdjust(charSet, usage, 1L).localCheckpoint(true)
       pieceSteps = pieceSteps :+ pieces
     }
     (pieceSteps, segSteps)
@@ -2238,42 +2271,12 @@ object CorpusOps {
     */
   private def unigramSoftState(s: SparkSession, d: String)
       : (List[DataFrame], List[DataFrame]) = {
-    val words = uniVocab(s, d).localCheckpoint(true)
-    val maxLenRow = words.agg(max(length(col("w")))).head()
-    require(!maxLenRow.isNullAt(0),
-      "unigram soft trainer: empty word vocabulary — the corpus produced no words")
-    require(maxLenRow.getInt(0) <= UNI_MAXLEN,
-      s"unigram soft trainer: max word length ${maxLenRow.getInt(0)} exceeds " +
-        s"UNI_MAXLEN=$UNI_MAXLEN — widen the dial")
-    val seed = words
-      .select(col("c"), explode(expr(
-        s"""flatten(transform(sequence(1, length(w)), s ->
-           |  transform(sequence(s, least(s + ${UNI_PL - 1}, length(w))), e ->
-           |    substring(w, s, e - s + 1))))""".stripMargin)).as("p"))
-      .groupBy(col("p")).agg(sum(col("c")).as("cnt"))
-      .localCheckpoint(true)
-    val charSet = seed.filter(length(col("p")) === 1).select(col("p"))
-    // the hard chain's adjust, in q20 units: chars floor = +1·Q
-    def adjustQ(counts: DataFrame): DataFrame =
-      charSet.join(counts, Seq("p"), "left_outer")
-        .select(col("p"), (coalesce(col("cnt"), lit(0L)) + UNI_Q).as("cnt"))
-        .unionByName(counts.filter(length(col("p")) >= 2)
-          .orderBy(col("cnt").desc, col("p")).limit(UNI_S))
-    var pieces = adjustQ(seed.select(col("p"), (col("cnt") * UNI_Q).as("cnt")))
-      .localCheckpoint(true)
+    val (words, seed, charSet) = uniSeed(s, d, "unigram soft trainer (q296/q297)")
+    var pieces = uniSoftSeed(charSet, seed)
     var pieceSteps = List(pieces)
     var termSteps = List.empty[DataFrame]
     for (_ <- 1 to UNI_T) {
-      // raw probabilities from exact q20 integers; the total rides the
-      // DECIMAL overflow path, and both engines cast the same exact
-      // integer to the same nearest double before the one division
-      val pm = pieces
-        .crossJoin(broadcast(
-          pieces.agg(sum(col("cnt").cast("decimal(38,0)")).as("tot"))))
-        .select(col("p"),
-          (col("cnt").cast("double") / col("tot").cast("double")).as("pr"))
-        .agg(map_from_entries(collect_list(struct(col("p"), col("pr")))).as("pm"))
-      val terms = words.crossJoin(broadcast(pm))
+      val terms = words.crossJoin(broadcast(uniSoftPm(pieces)))
         .withColumn("al", expr(uniSoftAlphaExpr))
         .withColumn("bt", expr(uniSoftBetaExpr))
         .select(explode(expr(uniSoftTermsExpr)).as("t"))
@@ -2282,7 +2285,7 @@ object CorpusOps {
       termSteps = termSteps :+ terms
       val usage = terms.groupBy(col("p"))
         .agg(sum(col("tq").cast("decimal(38,0)")).cast("long").as("cnt"))
-      pieces = adjustQ(usage).localCheckpoint(true)
+      pieces = uniAdjust(charSet, usage, UNI_Q).localCheckpoint(true)
       pieceSteps = pieceSteps :+ pieces
     }
     (pieceSteps, termSteps)
@@ -2360,38 +2363,13 @@ object CorpusOps {
     * that round's cut — the per-step pruned vocab + loss audit trail.
     */
   def unigramPruneLoop(s: SparkSession, d: String): DataFrame = {
-    val words = uniVocab(s, d).localCheckpoint(true)
-    val maxLenRow = words.agg(max(length(col("w")))).head()
-    require(!maxLenRow.isNullAt(0),
-      "unigram prune loop: empty word vocabulary — the corpus produced no words")
-    require(maxLenRow.getInt(0) <= UNI_MAXLEN,
-      s"unigram prune loop: max word length ${maxLenRow.getInt(0)} exceeds " +
-        s"UNI_MAXLEN=$UNI_MAXLEN — widen the dial")
-    val seed = words
-      .select(col("c"), explode(expr(
-        s"""flatten(transform(sequence(1, length(w)), s ->
-           |  transform(sequence(s, least(s + ${UNI_PL - 1}, length(w))), e ->
-           |    substring(w, s, e - s + 1))))""".stripMargin)).as("p"))
-      .groupBy(col("p")).agg(sum(col("c")).as("cnt"))
-      .localCheckpoint(true)
-    val charSet = seed.filter(length(col("p")) === 1).select(col("p"))
-    var pieces = charSet.join(seed, Seq("p"), "left_outer")
-      .select(col("p"), (coalesce(col("cnt"), lit(0L)) * UNI_Q + UNI_Q).as("cnt"))
-      .unionByName(seed.filter(length(col("p")) >= 2)
-        .orderBy(col("cnt").desc, col("p")).limit(UNI_S)
-        .select(col("p"), (col("cnt") * UNI_Q).as("cnt")))
-      .localCheckpoint(true)
+    val (words, seed, charSet) = uniSeed(s, d, "unigram prune loop (q301)")
+    var pieces = uniSoftSeed(charSet, seed)
     var rounds = List.empty[DataFrame]
     uniPruneKeeps.zipWithIndex.foreach { case (kKeep, r0) =>
       val r = r0 + 1
-      val pm = pieces
-        .crossJoin(broadcast(
-          pieces.agg(sum(col("cnt").cast("decimal(38,0)")).as("tot"))))
-        .select(col("p"),
-          (col("cnt").cast("double") / col("tot").cast("double")).as("pr"))
-        .agg(map_from_entries(collect_list(struct(col("p"), col("pr")))).as("pm"))
       // one DP pass feeds BOTH the EM recount (terms) and the loss
-      val withDp = words.crossJoin(broadcast(pm))
+      val withDp = words.crossJoin(broadcast(uniSoftPm(pieces)))
         .withColumn("al", expr(uniSoftAlphaExpr))
         .withColumn("bt", expr(uniSoftBetaExpr))
         .localCheckpoint(true)
@@ -2535,19 +2513,27 @@ object CorpusOps {
   val LR_ETA = 8.0
   val LR_ITERS = 6
 
+  /** One row (doc_id, lang, b) per adjacent word pair of a doc, `b`
+    * its md5-bucket coin in [0, DSIR_B) — the bigram feature that
+    * q270 and q273 count.
+    */
+  private def bigramBuckets(s: SparkSession, d: String): DataFrame = {
+    val tok = T.documents(s, d)
+      .select(col("doc_id"), col("lang"),
+        posexplode(split(col("text"), " ")).as(Seq("i", "w")))
+    val wd = Window.partitionBy(col("doc_id")).orderBy(col("i"))
+    tok.withColumn("w2", lead(col("w"), 1).over(wd))
+      .filter(col("w2").isNotNull)
+      .select(col("doc_id"), col("lang"),
+        (h32(concat(col("w"), lit(" "), col("w2"))) % DSIR_B).as("b"))
+  }
+
   /** q273 feature relation: per-doc NORMALIZED hashed-bigram
     * frequencies (the q270 md5-bucket coin, x = c_db / n_d) plus a
     * constant bias feature at b = −1. Public for the plan audit.
     */
   def lrFeatures(s: SparkSession, d: String): DataFrame = {
-    val tok = T.documents(s, d)
-      .select(col("doc_id"), col("lang"),
-        posexplode(split(col("text"), " ")).as(Seq("i", "w")))
-    val wd = Window.partitionBy(col("doc_id")).orderBy(col("i"))
-    val f = tok.withColumn("w2", lead(col("w"), 1).over(wd))
-      .filter(col("w2").isNotNull)
-      .select(col("doc_id"), col("lang"),
-        (h32(concat(col("w"), lit(" "), col("w2"))) % DSIR_B).as("b"))
+    val f = bigramBuckets(s, d)
     val nd = f.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
     f.groupBy(col("doc_id"), col("lang"), col("b"))
       .agg(count(lit(1)).as("c"))
@@ -2605,14 +2591,7 @@ object CorpusOps {
     * full query.
     */
   def dsirWeighted(s: SparkSession, d: String): DataFrame = {
-    val tok = T.documents(s, d)
-      .select(col("doc_id"), col("lang"),
-        posexplode(split(col("text"), " ")).as(Seq("i", "w")))
-    val wd = Window.partitionBy(col("doc_id")).orderBy(col("i"))
-    val f = tok.withColumn("w2", lead(col("w"), 1).over(wd))
-      .filter(col("w2").isNotNull)
-      .select(col("doc_id"), col("lang"),
-        (h32(concat(col("w"), lit(" "), col("w2"))) % DSIR_B).as("b"))
+    val f = bigramBuckets(s, d)
     // ONE bucket pass serves raw counts, target counts AND the totals
     // (the totals are sums of the B-row relation itself) — the corpus
     // is touched exactly twice: this pass and the per-doc pass below.
@@ -2750,6 +2729,75 @@ object CorpusOps {
       |        FROM documents)
       |)""".stripMargin
 
+  /** q87's decontamination oracle, which q142 shares: per non-bench
+    * doc (id ≥ 20), its 5-gram shingles found in the bench docs
+    * (id < 20) and how many bench docs they come from.
+    */
+  private val decontamOracle =
+    s"""WITH $sh5
+       |SELECT c.doc_id,
+       |       count(DISTINCT c.g) AS n_hit_shingles,
+       |       count(DISTINCT b.doc_id) AS n_bench_docs
+       |FROM sh c JOIN sh b ON c.g = b.g AND b.doc_id < 20 AND c.doc_id >= 20
+       |GROUP BY c.doc_id ORDER BY c.doc_id""".stripMargin
+
+  /** The hashed-feature oracle CTEs, the first `n` of: `dims` (each
+    * word's md5 dimension mod 64), `c` (per-doc dimension counts),
+    * `wt` (the fixed pseudo-random weights) and `lg` (per-doc logit).
+    * q112 uses two, q121 three, q198 and q215 all four.
+    */
+  private def hashedCtes(n: Int): String = Seq(
+    """dims AS (
+      |  SELECT doc_id,
+      |         CAST(('0x' || substr(md5(w), 1, 8)) AS BIGINT) % 64 AS dim
+      |  FROM (SELECT doc_id, unnest(string_split(text,' ')) AS w FROM documents)
+      |)""".stripMargin,
+    """c AS (
+      |  SELECT doc_id, dim, count(*) AS c FROM dims GROUP BY 1, 2
+      |)""".stripMargin,
+    """wt AS (
+      |  SELECT CAST(t.dim AS BIGINT) AS dim,
+      |         (t.dim * 2654435761) % 1997 - 998 AS w
+      |  FROM (SELECT unnest(generate_series(0, 63)) AS dim) t
+      |)""".stripMargin,
+    """lg AS (
+      |  SELECT doc_id, CAST(sum(c.c * wt.w) AS BIGINT) AS logit
+      |  FROM c JOIN wt USING (dim) GROUP BY doc_id
+      |)""".stripMargin).take(n).mkString(", ")
+
+  /** The sqrt-tempered mix oracle CTEs of q188 and q191: tokens per
+    * source `c` and their weights ⌊√n_tok⌋ `w`.
+    */
+  private val sqrtMixCtes =
+    """c AS (
+      |  SELECT source, CAST(sum(len(string_split(text, ' '))) AS BIGINT) AS n_tok
+      |  FROM documents GROUP BY 1
+      |), w AS (
+      |  SELECT source, n_tok,
+      |         CAST(floor(sqrt(CAST(n_tok AS DOUBLE))) AS BIGINT) AS w
+      |  FROM c
+      |)""".stripMargin
+
+  /** The KMV oracle CTEs of q186 and q187: distinct word 3-gram
+    * shingles per source `sh`, their 40-bit md5 hashes `hs`, and the
+    * hash rank within the source `rk`.
+    */
+  private val kmvCtes =
+    """t AS (SELECT source, string_split(text,' ') AS ws FROM documents),
+      |sh AS (
+      |  SELECT DISTINCT source, ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2] AS g
+      |  FROM (SELECT source, ws,
+      |               unnest(generate_series(1, greatest(len(ws) - 2, 0))) AS i
+      |        FROM t)
+      |  WHERE len(ws) >= 3
+      |), hs AS (
+      |  SELECT DISTINCT source, CAST(('0x' || substr(md5(g),1,10)) AS BIGINT) AS h
+      |  FROM sh
+      |), rk AS (
+      |  SELECT source, h, row_number() OVER (PARTITION BY source ORDER BY h) AS rn
+      |  FROM hs
+      |)""".stripMargin
+
   val oracle: Map[String, String] = Map(
     "q152_group_ols" ->
       """WITH cw AS (
@@ -2854,13 +2902,7 @@ object CorpusOps {
         |ORDER BY d.doc_id""".stripMargin,
 
     "q112_feature_hashing" ->
-      """WITH dims AS (
-        |  SELECT doc_id,
-        |         CAST(('0x' || substr(md5(w), 1, 8)) AS BIGINT) % 64 AS dim
-        |  FROM (SELECT doc_id, unnest(string_split(text,' ')) AS w FROM documents)
-        |), c AS (
-        |  SELECT doc_id, dim, count(*) AS c FROM dims GROUP BY 1, 2
-        |)
+      s"""WITH ${hashedCtes(2)}
         |SELECT doc_id, count(*) AS nnz,
         |       md5(string_agg(dim || ':' || c, ',' ORDER BY dim)) AS vec_md5
         |FROM c GROUP BY doc_id ORDER BY doc_id""".stripMargin,
@@ -3027,17 +3069,7 @@ object CorpusOps {
         |GROUP BY source ORDER BY source""".stripMargin,
 
     "q121_quality_classifier" ->
-      """WITH dims AS (
-        |  SELECT doc_id,
-        |         CAST(('0x' || substr(md5(w), 1, 8)) AS BIGINT) % 64 AS dim
-        |  FROM (SELECT doc_id, unnest(string_split(text,' ')) AS w FROM documents)
-        |), c AS (
-        |  SELECT doc_id, dim, count(*) AS c FROM dims GROUP BY 1, 2
-        |), wt AS (
-        |  SELECT CAST(t.dim AS BIGINT) AS dim,
-        |         (t.dim * 2654435761) % 1997 - 998 AS w
-        |  FROM (SELECT unnest(generate_series(0, 63)) AS dim) t
-        |)
+      s"""WITH ${hashedCtes(3)}
         |SELECT doc_id, count(*) AS nnz,
         |       CAST(sum(c.c * wt.w) AS BIGINT) AS logit,
         |       CASE WHEN sum(c.c * wt.w) >= 0 THEN 1 ELSE 0 END AS keep
@@ -3045,20 +3077,7 @@ object CorpusOps {
         |GROUP BY doc_id ORDER BY doc_id""".stripMargin,
 
     "q198_calibration_bins" ->
-      """WITH dims AS (
-        |  SELECT doc_id,
-        |         CAST(('0x' || substr(md5(w), 1, 8)) AS BIGINT) % 64 AS dim
-        |  FROM (SELECT doc_id, unnest(string_split(text,' ')) AS w FROM documents)
-        |), c AS (
-        |  SELECT doc_id, dim, count(*) AS c FROM dims GROUP BY 1, 2
-        |), wt AS (
-        |  SELECT CAST(t.dim AS BIGINT) AS dim,
-        |         (t.dim * 2654435761) % 1997 - 998 AS w
-        |  FROM (SELECT unnest(generate_series(0, 63)) AS dim) t
-        |), lg AS (
-        |  SELECT doc_id, CAST(sum(c.c * wt.w) AS BIGINT) AS logit
-        |  FROM c JOIN wt USING (dim) GROUP BY doc_id
-        |), sc AS (
+      s"""WITH ${hashedCtes(4)}, sc AS (
         |  SELECT lg.doc_id, logit,
         |         CASE WHEN d.n_chars >= 300 THEN 1 ELSE 0 END AS pos
         |  FROM lg JOIN documents d ON lg.doc_id = d.doc_id
@@ -3159,20 +3178,7 @@ object CorpusOps {
         |FROM mv ORDER BY n_docs""".stripMargin,
 
     "q215_threshold_sweep" ->
-      """WITH dims AS (
-        |  SELECT doc_id,
-        |         CAST(('0x' || substr(md5(w), 1, 8)) AS BIGINT) % 64 AS dim
-        |  FROM (SELECT doc_id, unnest(string_split(text,' ')) AS w FROM documents)
-        |), c AS (
-        |  SELECT doc_id, dim, count(*) AS c FROM dims GROUP BY 1, 2
-        |), wt AS (
-        |  SELECT CAST(t.dim AS BIGINT) AS dim,
-        |         (t.dim * 2654435761) % 1997 - 998 AS w
-        |  FROM (SELECT unnest(generate_series(0, 63)) AS dim) t
-        |), lg AS (
-        |  SELECT doc_id, CAST(sum(c.c * wt.w) AS BIGINT) AS logit
-        |  FROM c JOIN wt USING (dim) GROUP BY doc_id
-        |), j AS (
+      s"""WITH ${hashedCtes(4)}, j AS (
         |  SELECT lg.doc_id, logit,
         |         CAST(len(string_split(d.text, ' ')) AS BIGINT) AS n_tok
         |  FROM lg JOIN documents d ON lg.doc_id = d.doc_id
@@ -3294,14 +3300,7 @@ object CorpusOps {
         |FROM gates GROUP BY source ORDER BY source""".stripMargin,
 
     "q191_mix_budget" ->
-      """WITH c AS (
-        |  SELECT source, CAST(sum(len(string_split(text, ' '))) AS BIGINT) AS n_tok
-        |  FROM documents GROUP BY 1
-        |), w AS (
-        |  SELECT source, n_tok,
-        |         CAST(floor(sqrt(CAST(n_tok AS DOUBLE))) AS BIGINT) AS w
-        |  FROM c
-        |), t AS (
+      s"""WITH $sqrtMixCtes, t AS (
         |  SELECT CAST(sum(n_tok) AS BIGINT) // 2 AS budget,
         |         CAST(sum(w) AS BIGINT) AS tot_w
         |  FROM w
@@ -3316,14 +3315,7 @@ object CorpusOps {
         |FROM a ORDER BY source""".stripMargin,
 
     "q188_mix_weights" ->
-      """WITH c AS (
-        |  SELECT source, CAST(sum(len(string_split(text, ' '))) AS BIGINT) AS n_tok
-        |  FROM documents GROUP BY 1
-        |), w AS (
-        |  SELECT source, n_tok,
-        |         CAST(floor(sqrt(CAST(n_tok AS DOUBLE))) AS BIGINT) AS w
-        |  FROM c
-        |), t AS (
+      s"""WITH $sqrtMixCtes, t AS (
         |  SELECT CAST(sum(n_tok) AS BIGINT) AS tot_tok,
         |         CAST(sum(w) AS BIGINT) AS tot_w
         |  FROM w
@@ -3620,23 +3612,11 @@ object CorpusOps {
         |FROM ws LEFT JOIN bs ON ws.doc_id = bs.doc_id
         |ORDER BY ws.doc_id""".stripMargin,
 
-    "q87_decontaminate" ->
-      s"""WITH $sh5
-         |SELECT c.doc_id,
-         |       count(DISTINCT c.g) AS n_hit_shingles,
-         |       count(DISTINCT b.doc_id) AS n_bench_docs
-         |FROM sh c JOIN sh b ON c.g = b.g AND b.doc_id < 20 AND c.doc_id >= 20
-         |GROUP BY c.doc_id ORDER BY c.doc_id""".stripMargin,
+    "q87_decontaminate" -> decontamOracle,
 
-    // The bloom tier is exact after its verify join — q87's oracle,
-    // verbatim (the q62/q138 oracle-sharing argument).
-    "q142_decontaminate_bloom" ->
-      s"""WITH $sh5
-         |SELECT c.doc_id,
-         |       count(DISTINCT c.g) AS n_hit_shingles,
-         |       count(DISTINCT b.doc_id) AS n_bench_docs
-         |FROM sh c JOIN sh b ON c.g = b.g AND b.doc_id < 20 AND c.doc_id >= 20
-         |GROUP BY c.doc_id ORDER BY c.doc_id""".stripMargin,
+    // The bloom tier is exact after its verify join, so it shares
+    // decontamOracle with q87 (the q62/q138 oracle-sharing argument).
+    "q142_decontaminate_bloom" -> decontamOracle,
 
     // Heavy hitters are exact post-verify: the sketch path is invisible
     // to the oracle, which states the definition directly.
@@ -3763,20 +3743,7 @@ object CorpusOps {
         |ORDER BY source, n_tok DESC, label""".stripMargin,
 
     "q186_kmv_distinct" ->
-      """WITH t AS (SELECT source, string_split(text,' ') AS ws FROM documents),
-        |sh AS (
-        |  SELECT DISTINCT source, ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2] AS g
-        |  FROM (SELECT source, ws,
-        |               unnest(generate_series(1, greatest(len(ws) - 2, 0))) AS i
-        |        FROM t)
-        |  WHERE len(ws) >= 3
-        |), hs AS (
-        |  SELECT DISTINCT source, CAST(('0x' || substr(md5(g),1,10)) AS BIGINT) AS h
-        |  FROM sh
-        |), rk AS (
-        |  SELECT source, h, row_number() OVER (PARTITION BY source ORDER BY h) AS rn
-        |  FROM hs
-        |), sk AS (
+      s"""WITH $kmvCtes, sk AS (
         |  SELECT source, count(*) AS n_sk, max(h) AS hk
         |  FROM rk WHERE rn <= 128 GROUP BY 1
         |), ex AS (
@@ -3792,20 +3759,7 @@ object CorpusOps {
         |FROM es ORDER BY source""".stripMargin,
 
     "q187_kmv_overlap" ->
-      """WITH t AS (SELECT source, string_split(text,' ') AS ws FROM documents),
-        |sh AS (
-        |  SELECT DISTINCT source, ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2] AS g
-        |  FROM (SELECT source, ws,
-        |               unnest(generate_series(1, greatest(len(ws) - 2, 0))) AS i
-        |        FROM t)
-        |  WHERE len(ws) >= 3
-        |), hs AS (
-        |  SELECT DISTINCT source, CAST(('0x' || substr(md5(g),1,10)) AS BIGINT) AS h
-        |  FROM sh
-        |), rk AS (
-        |  SELECT source, h, row_number() OVER (PARTITION BY source ORDER BY h) AS rn
-        |  FROM hs
-        |), sk AS (SELECT source, h FROM rk WHERE rn <= 128),
+      s"""WITH $kmvCtes, sk AS (SELECT source, h FROM rk WHERE rn <= 128),
         |srcs AS (SELECT DISTINCT source FROM sk),
         |pairs AS (
         |  SELECT a.source AS s1, b.source AS s2
@@ -3929,16 +3883,7 @@ object CorpusOps {
     // acc[:-2] drops the last element (acc[:-1] would keep it). All
     // arithmetic is exact integers + strings — no float anywhere.
     "q274_bpe_trainer" ->
-      s"""WITH wc AS MATERIALIZED (
-         |  SELECT w, count(*) AS c
-         |  FROM (SELECT unnest(string_split(text, ' ')) AS w FROM documents)
-         |  GROUP BY 1
-         |), bv0 AS MATERIALIZED (
-         |  SELECT c, list_transform(generate_series(1, length(w)),
-         |                           i -> substr(w, CAST(i AS INT), 1)) AS syms
-         |  FROM wc WHERE w <> ''
-         |),
-         |$bpeIterSql
+      s"""WITH $bpeChainSql
          |SELECT step, pa AS merge_left, pb AS merge_right, n_occ
          |FROM (${(1 to BPE_T).map(t => s"SELECT * FROM bp$t").mkString(" UNION ALL ")})
          |ORDER BY step""".stripMargin,
@@ -4067,16 +4012,7 @@ object CorpusOps {
 
     // q274's chain, read out as the per-step corpus token sums.
     "q278_bpe_curve" ->
-      s"""WITH wc AS MATERIALIZED (
-         |  SELECT w, count(*) AS c
-         |  FROM (SELECT unnest(string_split(text, ' ')) AS w FROM documents)
-         |  GROUP BY 1
-         |), bv0 AS MATERIALIZED (
-         |  SELECT c, list_transform(generate_series(1, length(w)),
-         |                           i -> substr(w, CAST(i AS INT), 1)) AS syms
-         |  FROM wc WHERE w <> ''
-         |),
-         |$bpeIterSql
+      s"""WITH $bpeChainSql
          |SELECT step, corpus_tokens FROM (${(0 to BPE_T).map(t =>
               s"SELECT $t AS step, CAST(sum(c * len(syms)) AS BIGINT) AS corpus_tokens FROM bv$t")
               .mkString(" UNION ALL ")})
@@ -4165,29 +4101,8 @@ object CorpusOps {
     * is MATERIALIZED (the CTE-inlining discipline).
     */
   private lazy val uniChainSql: String = {
-    val seedPieces =
-      s"""uw AS MATERIALIZED (
-         |  SELECT w, CAST(count(*) AS BIGINT) AS c, length(w) AS len
-         |  FROM (SELECT unnest(string_split(text, ' ')) AS w FROM documents)
-         |  WHERE w <> '' GROUP BY w
-         |), useed AS MATERIALIZED (
-         |  SELECT p, CAST(sum(c) AS BIGINT) AS cnt FROM (
-         |    SELECT c, substr(w, CAST(s.s AS INT), CAST(e.e - s.s + 1 AS INT)) AS p
-         |    FROM uw
-         |    JOIN generate_series(1, $UNI_MAXLEN) s(s) ON s.s <= uw.len
-         |    JOIN generate_series(1, $UNI_MAXLEN) e(e)
-         |      ON e.e >= s.s AND e.e <= least(s.s + ${UNI_PL - 1}, uw.len)
-         |  ) GROUP BY p
-         |), uchars AS MATERIALIZED (SELECT p FROM useed WHERE length(p) = 1)""".stripMargin
     def pieceStep(t: Int, cntRel: String): String =
-      s"""up$t AS MATERIALIZED (
-         |  SELECT uchars.p AS p, coalesce(n.cnt, 0) + 1 AS cnt
-         |  FROM uchars LEFT JOIN $cntRel n ON uchars.p = n.p
-         |  UNION ALL
-         |  SELECT p, cnt FROM (SELECT p, cnt FROM $cntRel
-         |                      WHERE length(p) >= 2
-         |                      ORDER BY cnt DESC, p LIMIT $UNI_S)
-         |), ulp$t AS MATERIALIZED (
+      s"""${uniAdjustSql(s"up$t", cntRel, 1L)}, ulp$t AS MATERIALIZED (
          |  SELECT p, ln(CAST(cnt AS DOUBLE)) -
          |            ln((SELECT CAST(sum(cnt) AS DOUBLE) FROM up$t)) AS lp
          |  FROM up$t
@@ -4244,52 +4159,52 @@ object CorpusOps {
          |  FROM u${t}seg JOIN uw USING (w) GROUP BY 1
          |)""".stripMargin
     }
-    (Seq(seedPieces, pieceStep(0, "useed")) ++
+    (Seq(uniSeedSql, pieceStep(0, "useed")) ++
       (1 to UNI_T).flatMap(t => Seq(emStep(t), pieceStep(t, s"u${t}n")))
     ).mkString(",\n")
   }
 
-  /** The soft-EM chain (q296/q297) as SQL — the forward-backward DP
-    * unrolled into widening position CTEs whose arithmetic replays
-    * [[uniSoftAlphaExpr]]/[[uniSoftBetaExpr]]/[[uniSoftTermsExpr]]
-    * with the LITERALLY IDENTICAL expression trees: α arms in the
-    * same l-descending order (Spark's inner fold runs s ascending),
-    * β arms l-ascending, absent arms as CASE→0.0 (x + 0.0 = x
-    * bitwise for these non-negative products), the same
-    * ((c·X)/Z)·2^20 association in the term, and floor→BIGINT at the
-    * same point. Both engines evaluate correctly-rounded IEEE binary64
-    * ops on identical inputs in identical order, so the quantized tq
-    * integers agree exactly — no margin argument needed (the spec's
-    * driver replay proves the fixed-order claim independently).
+  /** Oracle twin of [[uniSeed]]: the word vocab `uw`, the seed
+    * substring counts `useed` and the chars `uchars`. Both the hard
+    * chain ([[uniChainSql]]) and the soft chains ([[uniSoftSeedSql]])
+    * start from it.
     */
-  /** The soft-EM seed CTEs (word vocab, substring counts, chars,
-    * usp0) — shared verbatim by the q296/q297 chain and the q301
-    * prune chain.
-    */
-  private lazy val uniSoftSeedSql: String = {
-    val Q = UNI_Q
+  private lazy val uniSeedSql: String =
     s"""uw AS MATERIALIZED (
-         |  SELECT w, CAST(count(*) AS BIGINT) AS c, length(w) AS len
-         |  FROM (SELECT unnest(string_split(text, ' ')) AS w FROM documents)
-         |  WHERE w <> '' GROUP BY w
-         |), useed AS MATERIALIZED (
-         |  SELECT p, CAST(sum(c) AS BIGINT) AS cnt FROM (
-         |    SELECT c, substr(w, CAST(s.s AS INT), CAST(e.e - s.s + 1 AS INT)) AS p
-         |    FROM uw
-         |    JOIN generate_series(1, $UNI_MAXLEN) s(s) ON s.s <= uw.len
-         |    JOIN generate_series(1, $UNI_MAXLEN) e(e)
-         |      ON e.e >= s.s AND e.e <= least(s.s + ${UNI_PL - 1}, uw.len)
-         |  ) GROUP BY p
-         |), uchars AS MATERIALIZED (SELECT p FROM useed WHERE length(p) = 1),
-         |usp0 AS MATERIALIZED (
-         |  SELECT uchars.p AS p, coalesce(n.cnt, 0) * $Q + $Q AS cnt
-         |  FROM uchars LEFT JOIN useed n ON uchars.p = n.p
-         |  UNION ALL
-         |  SELECT p, cnt * $Q AS cnt FROM (SELECT p, cnt FROM useed
-         |                                  WHERE length(p) >= 2
-         |                                  ORDER BY cnt DESC, p LIMIT $UNI_S)
-         |)""".stripMargin
-  }
+       |  SELECT w, CAST(count(*) AS BIGINT) AS c, length(w) AS len
+       |  FROM (SELECT unnest(string_split(text, ' ')) AS w FROM documents)
+       |  WHERE w <> '' GROUP BY w
+       |), useed AS MATERIALIZED (
+       |  SELECT p, CAST(sum(c) AS BIGINT) AS cnt FROM (
+       |    SELECT c, substr(w, CAST(s.s AS INT), CAST(e.e - s.s + 1 AS INT)) AS p
+       |    FROM uw
+       |    JOIN generate_series(1, $UNI_MAXLEN) s(s) ON s.s <= uw.len
+       |    JOIN generate_series(1, $UNI_MAXLEN) e(e)
+       |      ON e.e >= s.s AND e.e <= least(s.s + ${UNI_PL - 1}, uw.len)
+       |  ) GROUP BY p
+       |), uchars AS MATERIALIZED (SELECT p FROM useed WHERE length(p) = 1)""".stripMargin
+
+  /** Oracle twin of [[uniAdjust]]: piece table `name` from the counts
+    * in `cntRel` — chars at count + `floor`, plus the top UNI_S
+    * multi-char pieces by (cnt desc, p).
+    */
+  private def uniAdjustSql(name: String, cntRel: String, floor: Long): String =
+    s"""$name AS MATERIALIZED (
+       |  SELECT uchars.p AS p, coalesce(n.cnt, 0) + $floor AS cnt
+       |  FROM uchars LEFT JOIN $cntRel n ON uchars.p = n.p
+       |  UNION ALL
+       |  SELECT p, cnt FROM (SELECT p, cnt FROM $cntRel
+       |                      WHERE length(p) >= 2
+       |                      ORDER BY cnt DESC, p LIMIT $UNI_S)
+       |)""".stripMargin
+
+  /** The soft chains' seed: [[uniSeedSql]] plus usp0, the oracle twin
+    * of [[uniSoftSeed]]. The q296/q297 chain and the q301 prune chain
+    * both start from it.
+    */
+  private lazy val uniSoftSeedSql: String =
+    uniSeedSql + ",\n" +
+      uniAdjustSql("usp0", s"(SELECT p, cnt * $UNI_Q AS cnt FROM useed)", UNI_Q)
 
   private def uniSoftProbSql(t: Int): String =
     s"""uprob$t AS MATERIALIZED (
@@ -4300,10 +4215,9 @@ object CorpusOps {
 
   /** The forward/backward DP + quantized terms + usage recount for
     * one soft-EM step (the u{t}fa/u{t}fb chains, u{t}fl, u{t}tm,
-    * u{t}n) — shared
-    * verbatim by the q296/q297 chain and the q301 prune chain (which
-    * appends its loss CTEs and replaces the usage-ranked prune with
-    * the loss-ranked one).
+    * u{t}n). The q296/q297 chain follows it with the usage-ranked
+    * [[uniAdjustSql]]; the q301 prune chain with its loss CTEs and the
+    * loss-ranked prune.
     */
   private def uniSoftDpSql(t: Int): String = {
       val Q = UNI_Q
@@ -4369,19 +4283,22 @@ object CorpusOps {
   /** One full q296 EM step: the shared DP block + the usage-ranked
     * piece-table update (chars at usage+Q ∪ top-UNI_S multi by cnt).
     */
-  private def uniSoftEmStepSql(t: Int): String = {
-    val Q = UNI_Q
-    s"""${uniSoftDpSql(t)},
-       |usp$t AS MATERIALIZED (
-       |  SELECT uchars.p AS p, coalesce(n.cnt, 0) + $Q AS cnt
-       |  FROM uchars LEFT JOIN u${t}n n ON uchars.p = n.p
-       |  UNION ALL
-       |  SELECT p, cnt FROM (SELECT p, cnt FROM u${t}n
-       |                      WHERE length(p) >= 2
-       |                      ORDER BY cnt DESC, p LIMIT $UNI_S)
-       |)""".stripMargin
-  }
+  private def uniSoftEmStepSql(t: Int): String =
+    uniSoftDpSql(t) + ",\n" + uniAdjustSql(s"usp$t", s"u${t}n", UNI_Q)
 
+  /** The soft-EM chain (q296/q297) as SQL — the forward-backward DP
+    * unrolled into widening position CTEs whose arithmetic replays
+    * [[uniSoftAlphaExpr]]/[[uniSoftBetaExpr]]/[[uniSoftTermsExpr]]
+    * with the LITERALLY IDENTICAL expression trees: α arms in the
+    * same l-descending order (Spark's inner fold runs s ascending),
+    * β arms l-ascending, absent arms as CASE→0.0 (x + 0.0 = x
+    * bitwise for these non-negative products), the same
+    * ((c·X)/Z)·2^20 association in the term, and floor→BIGINT at the
+    * same point. Both engines evaluate correctly-rounded IEEE binary64
+    * ops on identical inputs in identical order, so the quantized tq
+    * integers agree exactly — no margin argument needed (the spec's
+    * driver replay proves the fixed-order claim independently).
+    */
   private lazy val uniSoftChainSql: String =
     (Seq(uniSoftSeedSql) ++
       (1 to UNI_T).flatMap(t =>
@@ -4480,24 +4397,38 @@ object CorpusOps {
        |)""".stripMargin
   }.mkString(",\n")
 
-  /** The q274 merge steps unrolled (pair argmax → fold rewrite),
-    * mirroring [[bpeMergeChain]] exactly. Both bp$t (the output AND
-    * the rewrite input) and bv$t (next step's input) are multiply
-    * referenced → MATERIALIZED per the CTE-inlining discipline.
+  /** The q274/q278 BPE chain: word counts `wc`, the single-char
+    * symbol lists `bv0`, then the merge steps unrolled (pair argmax →
+    * fold rewrite), mirroring [[bpeMergeChain]] exactly. Both bp$t
+    * (the output AND the rewrite input) and bv$t (next step's input)
+    * are multiply referenced → MATERIALIZED per the CTE-inlining
+    * discipline.
     */
-  private lazy val bpeIterSql: String = (1 to BPE_T).map { t =>
-    val prev = s"bv${t - 1}"
-    s"""bp$t AS MATERIALIZED (
-       |  SELECT $t AS step, pa, pb, CAST(sum(c) AS BIGINT) AS n_occ FROM (
-       |    SELECT c, syms[i] AS pa, syms[i + 1] AS pb
-       |    FROM $prev, unnest(generate_series(1, len(syms) - 1)) AS u(i)
-       |    WHERE len(syms) >= 2)
-       |  GROUP BY 2, 3 ORDER BY n_occ DESC, pa, pb LIMIT 1
-       |), bv$t AS MATERIALIZED (
-       |  SELECT c, list_reduce(list_transform(syms, x -> [x]),
-       |      (acc, x) -> CASE WHEN acc[-1] = p.pa AND x[1] = p.pb
-       |                  THEN acc[:-2] || [p.pa || p.pb] ELSE acc || x END) AS syms
-       |  FROM $prev CROSS JOIN bp$t p
-       |)""".stripMargin
-  }.mkString(",\n")
+  private lazy val bpeChainSql: String = {
+    val steps = (1 to BPE_T).map { t =>
+      val prev = s"bv${t - 1}"
+      s"""bp$t AS MATERIALIZED (
+         |  SELECT $t AS step, pa, pb, CAST(sum(c) AS BIGINT) AS n_occ FROM (
+         |    SELECT c, syms[i] AS pa, syms[i + 1] AS pb
+         |    FROM $prev, unnest(generate_series(1, len(syms) - 1)) AS u(i)
+         |    WHERE len(syms) >= 2)
+         |  GROUP BY 2, 3 ORDER BY n_occ DESC, pa, pb LIMIT 1
+         |), bv$t AS MATERIALIZED (
+         |  SELECT c, list_reduce(list_transform(syms, x -> [x]),
+         |      (acc, x) -> CASE WHEN acc[-1] = p.pa AND x[1] = p.pb
+         |                  THEN acc[:-2] || [p.pa || p.pb] ELSE acc || x END) AS syms
+         |  FROM $prev CROSS JOIN bp$t p
+         |)""".stripMargin
+    }
+    s"""wc AS MATERIALIZED (
+       |  SELECT w, count(*) AS c
+       |  FROM (SELECT unnest(string_split(text, ' ')) AS w FROM documents)
+       |  GROUP BY 1
+       |), bv0 AS MATERIALIZED (
+       |  SELECT c, list_transform(generate_series(1, length(w)),
+       |                           i -> substr(w, CAST(i AS INT), 1)) AS syms
+       |  FROM wc WHERE w <> ''
+       |),
+       |${steps.mkString(",\n")}""".stripMargin
+  }
 }

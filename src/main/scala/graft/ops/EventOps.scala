@@ -1151,11 +1151,7 @@ object EventOps {
     // ratio of co-moments, so the sample/population distinction
     // cancels and round(·,4) absorbs engine summation order.
     "q225_autocorrelation" -> ((s, d) => {
-      val daily = T.events(s, d)
-        .select(col("event_type"),
-          eventDay.cast("long").as("day"))
-        .groupBy(col("event_type"), col("day"))
-        .agg(count(lit(1)).cast("double").as("c"))
+      val daily = dailyCounts(T.events(s, d))
       val a = daily.select(col("event_type").as("et"), col("day").as("d1"), col("c").as("c1"))
       val b = daily.select(col("event_type").as("et2"), col("day").as("d2"), col("c").as("c2"))
       a.join(b, col("et") === col("et2") && (col("d2") - col("d1")).between(1, 7))
@@ -2533,12 +2529,7 @@ object EventOps {
         |GROUP BY 1 ORDER BY event_type""".stripMargin,
 
     "q225_autocorrelation" ->
-      s"""WITH daily AS (
-        |  SELECT event_type,
-        |         CAST($daySql AS BIGINT) AS day,
-        |         CAST(count(*) AS DOUBLE) AS c
-        |  FROM events GROUP BY 1, 2
-        |)
+      s"""WITH $dailyCte
         |SELECT a.event_type, b.day - a.day AS lag,
         |       CAST(count(*) AS BIGINT) AS n_pairs,
         |       round(corr(a.c, b.c), 4) AS acf4

@@ -321,6 +321,18 @@ object GraphOps {
       .select(col("v").as("node"), (-col("m.nl")).as("lab"))
   }
 
+  /** The co-purchase part graph that q185–q248 analyze: one row per
+    * distinct part pair (a, b), a < b, bought in the same order. */
+  private def coPurchaseEdges(s: SparkSession, d: String): DataFrame = {
+    val op = T.lineitem(s, d)
+      .select(col("l_orderkey").as("o"), col("l_partkey").as("p"))
+      .distinct()
+    op.select(col("o"), col("p").as("a"))
+      .join(op.select(col("o").as("o2"), col("p").as("b")),
+        col("o") === col("o2") && col("a") < col("b"))
+      .select(col("a"), col("b")).distinct()
+  }
+
   val queries: Map[String, Q] = Map(
     // Authority scores on the undirected bipartite customer↔supplier
     // trade graph (distinct trading pairs via orders ⋈ lineitem).
@@ -384,16 +396,8 @@ object GraphOps {
     // degree ordering inside triangleStats is what survives scale:
     // without it the densest part's wedge fan-out alone would be
     // quadratic in its basket frequency.
-    "q185_triangles" -> ((s, d) => {
-      val op = T.lineitem(s, d)
-        .select(col("l_orderkey").as("o"), col("l_partkey").as("p"))
-        .distinct()
-      val e = op.select(col("o"), col("p").as("a"))
-        .join(op.select(col("o").as("o2"), col("p").as("b")),
-          col("o") === col("o2") && col("a") < col("b"))
-        .select(col("a"), col("b")).distinct()
-      triangleStats(e)
-    }),
+    "q185_triangles" -> ((s, d) =>
+      triangleStats(coPurchaseEdges(s, d))),
 
     // Degree assortativity of the co-purchase graph — the one-number
     // mixing diagnostic (do hubs link to hubs?) that q185's clustering
@@ -406,13 +410,7 @@ object GraphOps {
     // co-moment agg. The co-moment ratio cancels n, so only
     // round(·,4) touches a float.
     "q234_assortativity" -> ((s, d) => {
-      val op = T.lineitem(s, d)
-        .select(col("l_orderkey").as("o"), col("l_partkey").as("p"))
-        .distinct()
-      val e = op.select(col("o"), col("p").as("a"))
-        .join(op.select(col("o").as("o2"), col("p").as("b")),
-          col("o") === col("o2") && col("a") < col("b"))
-        .select(col("a"), col("b")).distinct()
+      val e = coPurchaseEdges(s, d)
       val dir = e.unionByName(e.select(col("b").as("a"), col("a").as("b")))
       val deg = dir.groupBy(col("a").as("n")).agg(count(lit(1)).as("dg"))
       val nn = deg.agg(count(lit(1)).as("n_nodes"))
@@ -434,16 +432,8 @@ object GraphOps {
     // chain structure so what remains is the densely co-purchased
     // "core catalog" — the graph-cleaning step run before community
     // or embedding passes so hubs-by-accident don't pollute them.
-    "q192_kcore" -> ((s, d) => {
-      val op = T.lineitem(s, d)
-        .select(col("l_orderkey").as("o"), col("l_partkey").as("p"))
-        .distinct()
-      val e = op.select(col("o"), col("p").as("a"))
-        .join(op.select(col("o").as("o2"), col("p").as("b")),
-          col("o") === col("o2") && col("a") < col("b"))
-        .select(col("a"), col("b")).distinct()
-      kcorePeel(e, 3, 3)
-    }),
+    "q192_kcore" -> ((s, d) =>
+      kcorePeel(coPurchaseEdges(s, d), 3, 3)),
 
     // Approximate triangle census — the production dial next to q185's
     // exact tier (the q61→q62 tiering pattern). DOULION (Tsourakakis
@@ -459,17 +449,9 @@ object GraphOps {
     // the exact census dominates a run; variance is Θ(1/(p³·T))-tight
     // for triangle-rich graphs so the estimate tightens as data grows.
     "q185b_triangles_sampled" -> ((s, d) => {
-      val op = T.lineitem(s, d)
-        .select(col("l_orderkey").as("o"), col("l_partkey").as("p"))
-        .distinct()
       val keep = conv(substring(md5(concat_ws(",", col("a"), col("b"))), 1, 8), 16, 10)
         .cast("long") % 4 === 0
-      val e = op.select(col("o"), col("p").as("a"))
-        .join(op.select(col("o").as("o2"), col("p").as("b")),
-          col("o") === col("o2") && col("a") < col("b"))
-        .select(col("a"), col("b")).distinct()
-        .filter(keep)
-      triangleStats(e)
+      triangleStats(coPurchaseEdges(s, d).filter(keep))
         .agg(count(lit(1)).as("n_nodes"),
              expr("CAST(sum(deg) div 2 AS BIGINT)").as("n_edges"),
              expr("CAST(sum(tri) div 3 AS BIGINT)").as("n_tri_sampled"),
@@ -482,31 +464,15 @@ object GraphOps {
     // by the resource-allocation index over md5-capped neighborhoods
     // (cap 32). The recommendation/link-prediction operator a catalog
     // pipeline runs on the same edge relation q185/q192 analyze.
-    "q193_link_prediction" -> ((s, d) => {
-      val op = T.lineitem(s, d)
-        .select(col("l_orderkey").as("o"), col("l_partkey").as("p"))
-        .distinct()
-      val e = op.select(col("o"), col("p").as("a"))
-        .join(op.select(col("o").as("o2"), col("p").as("b")),
-          col("o") === col("o2") && col("a") < col("b"))
-        .select(col("a"), col("b")).distinct()
-      linkPredictionRA(e, cap = 32, topK = 100)
-    }),
+    "q193_link_prediction" -> ((s, d) =>
+      linkPredictionRA(coPurchaseEdges(s, d), cap = 32, topK = 100)),
 
     // Community assignment on the co-purchase part graph: 3 rounds of
     // deterministic neighbor-majority label propagation — the
     // community-structure pass run after q192's core cleaning, before
     // per-community mixing/curation decisions.
-    "q199_label_propagation" -> ((s, d) => {
-      val op = T.lineitem(s, d)
-        .select(col("l_orderkey").as("o"), col("l_partkey").as("p"))
-        .distinct()
-      val e = op.select(col("o"), col("p").as("a"))
-        .join(op.select(col("o").as("o2"), col("p").as("b")),
-          col("o") === col("o2") && col("a") < col("b"))
-        .select(col("a"), col("b")).distinct()
-      labelPropagation(e, 3)
-    }),
+    "q199_label_propagation" -> ((s, d) =>
+      labelPropagation(coPurchaseEdges(s, d), 3)),
 
     // Newman modularity of q199's communities — the number that says
     // whether the partition MEANS anything: Q = Σ_c (e_c/m −
@@ -518,20 +484,13 @@ object GraphOps {
     // q199), one intra-edge count via two label joins keyed on their
     // own endpoint, one community-keyed degree rollup.
     "q248_modularity" -> ((s, d) => {
-      val op = T.lineitem(s, d)
-        .select(col("l_orderkey").as("o"), col("l_partkey").as("p"))
-        .distinct()
       // e feeds FOUR consumers (LP's und, m, intra, und) — unlike
       // q185's thrice-read oriented relation (where recompute measured
       // faster because the downstream wedge join dominated), here the
       // downstream work is small relative to the pair build, and the
       // lazy localCheckpoint measured 8.5 → 5.3 s at sf0.1 (cpus=8,
       // min of 2).
-      val e = op.select(col("o"), col("p").as("a"))
-        .join(op.select(col("o").as("o2"), col("p").as("b")),
-          col("o") === col("o2") && col("a") < col("b"))
-        .select(col("a"), col("b")).distinct()
-        .localCheckpoint(false)
+      val e = coPurchaseEdges(s, d).localCheckpoint(false)
       val lab = labelPropagation(e, 3)
       val m = e.agg(count(lit(1)).as("m"))
       val intra = e
@@ -563,11 +522,85 @@ object GraphOps {
     })
   )
 
+  /** Oracle twin of [[coPurchaseEdges]]: the `op` and `<e>` CTEs. */
+  private def coPurchaseCtes(e: String = "e"): String =
+    s"""op AS (
+       |  SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM lineitem
+       |), $e AS (
+       |  SELECT DISTINCT x.p AS a, y.p AS b
+       |  FROM op x JOIN op y ON x.o = y.o AND x.p < y.p
+       |)""".stripMargin
+
+  /** Both directions of [[coPurchaseCtes]]'s `e`, as (u, v). */
+  private val undCte =
+    """und AS (
+      |  SELECT a AS u, b AS v FROM e UNION ALL SELECT b AS u, a AS v FROM e
+      |)""".stripMargin
+
+  /** Oracle twin of [[labelPropagation]] over `und`: `l0` labels each
+    * node with its own id, `l1`..`l<rounds>` are the argmax rounds. */
+  private def lpCtes(rounds: Int): String =
+    ("l0 AS (\n  SELECT DISTINCT u AS node, u AS lab FROM und\n)" +:
+      (1 to rounds).map(i =>
+        s"""c$i AS (
+           |  SELECT v, lab, count(*) AS cnt FROM und JOIN l${i - 1} ON und.u = l${i - 1}.node
+           |  GROUP BY 1, 2
+           |), l$i AS (
+           |  SELECT v AS node, lab FROM (
+           |    SELECT v, lab, row_number() OVER (
+           |      PARTITION BY v ORDER BY cnt DESC, lab) AS rn FROM c$i)
+           |  WHERE rn = 1
+           |)""".stripMargin)).mkString(", ")
+
+  /** Oracle twin of [[integerPagerank]] over an `edges` CTE (u, v):
+    * `deg`, `ed`, `r0` and the rank rounds `i1`..`i<iters>`. */
+  private def rankCtes(iters: Int): String =
+    ("""deg AS (
+       |  SELECT u, count(*) AS d FROM edges GROUP BY 1
+       |), ed AS (
+       |  SELECT e.u, e.v, d.d FROM edges e JOIN deg d USING (u)
+       |), r0 AS (
+       |  SELECT u AS node, CAST(1000000 AS BIGINT) AS r FROM deg
+       |)""".stripMargin +: (1 to iters).map { i =>
+      val prev = if (i == 1) "r0" else s"i${i - 1}"
+      s"""i$i AS (
+         |  SELECT v AS node, CAST(150000 + (850 * sum(r // d)) // 1000 AS BIGINT) AS r
+         |  FROM ed JOIN $prev ON ed.u = $prev.node GROUP BY v
+         |)""".stripMargin
+    }).mkString(", ")
+
+  /** Oracle twin of [[shortestPaths]] over `e` (u, v, w) from the
+    * seeds `d0`: the relaxation rounds `d1`..`d<hops>`. */
+  private def hopCtes(hops: Int): String =
+    (1 to hops).map { i =>
+      val p = s"d${i - 1}"
+      s"""d$i AS (
+         |  SELECT node, CAST(min(d) AS BIGINT) AS d FROM (
+         |    SELECT node, d FROM $p
+         |    UNION ALL
+         |    SELECT e.v AS node, $p.d + e.w AS d FROM e JOIN $p ON e.u = $p.node
+         |  ) GROUP BY node
+         |)""".stripMargin
+    }.mkString(", ")
+
+  /** Oracle twin of [[kcorePeel]]'s rounds over `e0` (a, b): round i
+    * keeps the edges `e<i>` whose endpoints both have degree ≥ k. */
+  private def peelCtes(k: Int, rounds: Int): String =
+    (1 to rounds).map { i =>
+      val p = s"e${i - 1}"
+      s"""d$i AS (
+         |  SELECT n, count(*) AS d FROM (
+         |    SELECT a AS n FROM $p UNION ALL SELECT b FROM $p) GROUP BY 1
+         |), k$i AS (SELECT n FROM d$i WHERE d >= $k),
+         |e$i AS (
+         |  SELECT a, b FROM $p
+         |  WHERE a IN (SELECT n FROM k$i) AND b IN (SELECT n FROM k$i)
+         |)""".stripMargin
+    }.mkString(", ")
+
   val oracle: Map[String, String] = Map(
     "q234_assortativity" ->
-      """WITH op AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM lineitem),
-        |e AS (SELECT DISTINCT a.p AS a, b.p AS b
-        |      FROM op a JOIN op b ON a.o = b.o AND a.p < b.p),
+      s"""WITH ${coPurchaseCtes()},
         |dir AS (SELECT a, b FROM e UNION ALL SELECT b AS a, a AS b FROM e),
         |deg AS (SELECT a AS n, CAST(count(*) AS BIGINT) AS dg FROM dir GROUP BY 1)
         |SELECT CAST((SELECT count(*) FROM deg) AS BIGINT) AS n_nodes,
@@ -579,33 +612,18 @@ object GraphOps {
         |ORDER BY n_nodes""".stripMargin,
 
     "q163_pagerank" ->
-      """WITH co AS (
+      s"""WITH co AS (
         |  SELECT DISTINCT o_custkey * 2 AS cu, l_suppkey * 2 + 1 AS sv
         |  FROM orders JOIN lineitem ON o_orderkey = l_orderkey
         |), edges AS (
         |  SELECT cu AS u, sv AS v FROM co
         |  UNION ALL
         |  SELECT sv AS u, cu AS v FROM co
-        |), deg AS (
-        |  SELECT u, count(*) AS d FROM edges GROUP BY 1
-        |), ed AS (
-        |  SELECT e.u, e.v, d.d FROM edges e JOIN deg d USING (u)
-        |), r0 AS (
-        |  SELECT u AS node, CAST(1000000 AS BIGINT) AS r FROM deg
-        |), i1 AS (
-        |  SELECT v AS node, CAST(150000 + (850 * sum(r // d)) // 1000 AS BIGINT) AS r
-        |  FROM ed JOIN r0 ON ed.u = r0.node GROUP BY v
-        |), i2 AS (
-        |  SELECT v AS node, CAST(150000 + (850 * sum(r // d)) // 1000 AS BIGINT) AS r
-        |  FROM ed JOIN i1 ON ed.u = i1.node GROUP BY v
-        |), i3 AS (
-        |  SELECT v AS node, CAST(150000 + (850 * sum(r // d)) // 1000 AS BIGINT) AS r
-        |  FROM ed JOIN i2 ON ed.u = i2.node GROUP BY v
-        |)
+        |), ${rankCtes(3)}
         |SELECT node, r FROM i3 ORDER BY node""".stripMargin,
 
     "q177_shortest_paths" ->
-      """WITH co AS (
+      s"""WITH co AS (
         |  SELECT o_custkey * 2 AS cu, l_suppkey * 2 + 1 AS sv, count(*) AS n
         |  FROM orders JOIN lineitem ON o_orderkey = l_orderkey
         |  GROUP BY 1, 2
@@ -617,71 +635,27 @@ object GraphOps {
         |), d0 AS (
         |  SELECT c_custkey * 2 AS node, CAST(0 AS BIGINT) AS d
         |  FROM customer WHERE c_custkey < 10
-        |), d1 AS (
-        |  SELECT node, CAST(min(d) AS BIGINT) AS d FROM (
-        |    SELECT node, d FROM d0
-        |    UNION ALL
-        |    SELECT e.v AS node, d0.d + e.w AS d FROM e JOIN d0 ON e.u = d0.node
-        |  ) GROUP BY node
-        |), d2 AS (
-        |  SELECT node, CAST(min(d) AS BIGINT) AS d FROM (
-        |    SELECT node, d FROM d1
-        |    UNION ALL
-        |    SELECT e.v AS node, d1.d + e.w AS d FROM e JOIN d1 ON e.u = d1.node
-        |  ) GROUP BY node
-        |), d3 AS (
-        |  SELECT node, CAST(min(d) AS BIGINT) AS d FROM (
-        |    SELECT node, d FROM d2
-        |    UNION ALL
-        |    SELECT e.v AS node, d2.d + e.w AS d FROM e JOIN d2 ON e.u = d2.node
-        |  ) GROUP BY node
-        |), d4 AS (
-        |  SELECT node, CAST(min(d) AS BIGINT) AS d FROM (
-        |    SELECT node, d FROM d3
-        |    UNION ALL
-        |    SELECT e.v AS node, d3.d + e.w AS d FROM e JOIN d3 ON e.u = d3.node
-        |  ) GROUP BY node
-        |)
+        |), ${hopCtes(4)}
         |SELECT node, d FROM d4 ORDER BY node""".stripMargin,
 
     "q178_textrank_keywords" ->
-      """WITH t AS (
+      s"""WITH t AS (
         |  SELECT doc_id, string_split(text, ' ') AS ws FROM documents
         |), tok AS (
         |  SELECT doc_id, ws, unnest(generate_series(1, len(ws) - 1)) AS p FROM t
         |), adj AS (
         |  SELECT DISTINCT ws[p] AS a, ws[p + 1] AS b FROM tok
-        |), e AS (
+        |), edges AS (
         |  SELECT DISTINCT u, v FROM (
         |    SELECT a AS u, b AS v FROM adj
         |    UNION ALL
         |    SELECT b AS u, a AS v FROM adj
         |  )
-        |), deg AS (
-        |  SELECT u, count(*) AS d FROM e GROUP BY 1
-        |), ed AS (
-        |  SELECT e.u, e.v, d.d FROM e JOIN deg d USING (u)
-        |), r0 AS (
-        |  SELECT u AS node, CAST(1000000 AS BIGINT) AS r FROM deg
-        |), i1 AS (
-        |  SELECT v AS node, CAST(150000 + (850 * sum(r // d)) // 1000 AS BIGINT) AS r
-        |  FROM ed JOIN r0 ON ed.u = r0.node GROUP BY v
-        |), i2 AS (
-        |  SELECT v AS node, CAST(150000 + (850 * sum(r // d)) // 1000 AS BIGINT) AS r
-        |  FROM ed JOIN i1 ON ed.u = i1.node GROUP BY v
-        |), i3 AS (
-        |  SELECT v AS node, CAST(150000 + (850 * sum(r // d)) // 1000 AS BIGINT) AS r
-        |  FROM ed JOIN i2 ON ed.u = i2.node GROUP BY v
-        |)
+        |), ${rankCtes(3)}
         |SELECT node, r FROM i3 ORDER BY r DESC, node LIMIT 20""".stripMargin,
 
     "q185_triangles" ->
-      """WITH op AS (
-        |  SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM lineitem
-        |), e AS (
-        |  SELECT DISTINCT x.p AS a, y.p AS b
-        |  FROM op x JOIN op y ON x.o = y.o AND x.p < y.p
-        |), deg AS (
+      s"""WITH ${coPurchaseCtes()}, deg AS (
         |  SELECT n, count(*) AS d FROM (
         |    SELECT a AS n FROM e UNION ALL SELECT b AS n FROM e) GROUP BY 1
         |), o AS (
@@ -713,44 +687,13 @@ object GraphOps {
         |ORDER BY node""".stripMargin,
 
     "q192_kcore" ->
-      """WITH op AS (
-        |  SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM lineitem
-        |), e0 AS (
-        |  SELECT DISTINCT x.p AS a, y.p AS b
-        |  FROM op x JOIN op y ON x.o = y.o AND x.p < y.p
-        |), d1 AS (
-        |  SELECT n, count(*) AS d FROM (
-        |    SELECT a AS n FROM e0 UNION ALL SELECT b FROM e0) GROUP BY 1
-        |), k1 AS (SELECT n FROM d1 WHERE d >= 3),
-        |e1 AS (
-        |  SELECT a, b FROM e0
-        |  WHERE a IN (SELECT n FROM k1) AND b IN (SELECT n FROM k1)
-        |), d2 AS (
-        |  SELECT n, count(*) AS d FROM (
-        |    SELECT a AS n FROM e1 UNION ALL SELECT b FROM e1) GROUP BY 1
-        |), k2 AS (SELECT n FROM d2 WHERE d >= 3),
-        |e2 AS (
-        |  SELECT a, b FROM e1
-        |  WHERE a IN (SELECT n FROM k2) AND b IN (SELECT n FROM k2)
-        |), d3 AS (
-        |  SELECT n, count(*) AS d FROM (
-        |    SELECT a AS n FROM e2 UNION ALL SELECT b FROM e2) GROUP BY 1
-        |), k3 AS (SELECT n FROM d3 WHERE d >= 3),
-        |e3 AS (
-        |  SELECT a, b FROM e2
-        |  WHERE a IN (SELECT n FROM k3) AND b IN (SELECT n FROM k3)
-        |)
+      s"""WITH ${coPurchaseCtes("e0")}, ${peelCtes(3, 3)}
         |SELECT n AS node, CAST(count(*) AS BIGINT) AS deg FROM (
         |  SELECT a AS n FROM e3 UNION ALL SELECT b FROM e3) GROUP BY 1
         |ORDER BY node""".stripMargin,
 
     "q185b_triangles_sampled" ->
-      """WITH op AS (
-        |  SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM lineitem
-        |), e0 AS (
-        |  SELECT DISTINCT x.p AS a, y.p AS b
-        |  FROM op x JOIN op y ON x.o = y.o AND x.p < y.p
-        |), e AS (
+      s"""WITH ${coPurchaseCtes("e0")}, e AS (
         |  SELECT a, b FROM e0
         |  WHERE CAST(('0x' || substr(md5(CAST(a AS VARCHAR) || ',' || CAST(b AS VARCHAR)), 1, 8)) AS BIGINT) % 4 = 0
         |), tri AS (
@@ -769,14 +712,7 @@ object GraphOps {
         |ORDER BY n_nodes""".stripMargin,
 
     "q193_link_prediction" ->
-      """WITH op AS (
-        |  SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM lineitem
-        |), e AS (
-        |  SELECT DISTINCT x.p AS a, y.p AS b
-        |  FROM op x JOIN op y ON x.o = y.o AND x.p < y.p
-        |), und AS (
-        |  SELECT a AS u, b AS v FROM e UNION ALL SELECT b AS u, a AS v FROM e
-        |), deg AS (
+      s"""WITH ${coPurchaseCtes()}, $undCte, deg AS (
         |  SELECT u, count(*) AS d FROM und GROUP BY 1
         |), capped AS (
         |  SELECT u AS c, v FROM (
@@ -799,77 +735,11 @@ object GraphOps {
         |ORDER BY ra_ppm DESC, cn DESC, a, b LIMIT 100""".stripMargin,
 
     "q199_label_propagation" ->
-      """WITH op AS (
-        |  SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM lineitem
-        |), e AS (
-        |  SELECT DISTINCT x.p AS a, y.p AS b
-        |  FROM op x JOIN op y ON x.o = y.o AND x.p < y.p
-        |), und AS (
-        |  SELECT a AS u, b AS v FROM e UNION ALL SELECT b AS u, a AS v FROM e
-        |), l0 AS (
-        |  SELECT DISTINCT u AS node, u AS lab FROM und
-        |), c1 AS (
-        |  SELECT v, lab, count(*) AS cnt FROM und JOIN l0 ON und.u = l0.node
-        |  GROUP BY 1, 2
-        |), l1 AS (
-        |  SELECT v AS node, lab FROM (
-        |    SELECT v, lab, row_number() OVER (
-        |      PARTITION BY v ORDER BY cnt DESC, lab) AS rn FROM c1)
-        |  WHERE rn = 1
-        |), c2 AS (
-        |  SELECT v, lab, count(*) AS cnt FROM und JOIN l1 ON und.u = l1.node
-        |  GROUP BY 1, 2
-        |), l2 AS (
-        |  SELECT v AS node, lab FROM (
-        |    SELECT v, lab, row_number() OVER (
-        |      PARTITION BY v ORDER BY cnt DESC, lab) AS rn FROM c2)
-        |  WHERE rn = 1
-        |), c3 AS (
-        |  SELECT v, lab, count(*) AS cnt FROM und JOIN l2 ON und.u = l2.node
-        |  GROUP BY 1, 2
-        |), l3 AS (
-        |  SELECT v AS node, lab FROM (
-        |    SELECT v, lab, row_number() OVER (
-        |      PARTITION BY v ORDER BY cnt DESC, lab) AS rn FROM c3)
-        |  WHERE rn = 1
-        |)
+      s"""WITH ${coPurchaseCtes()}, $undCte, ${lpCtes(3)}
         |SELECT node, lab AS comm FROM l3 ORDER BY node""".stripMargin,
 
     "q248_modularity" ->
-      """WITH op AS (
-        |  SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM lineitem
-        |), e AS (
-        |  SELECT DISTINCT x.p AS a, y.p AS b
-        |  FROM op x JOIN op y ON x.o = y.o AND x.p < y.p
-        |), und AS (
-        |  SELECT a AS u, b AS v FROM e UNION ALL SELECT b AS u, a AS v FROM e
-        |), l0 AS (
-        |  SELECT DISTINCT u AS node, u AS lab FROM und
-        |), c1 AS (
-        |  SELECT v, lab, count(*) AS cnt FROM und JOIN l0 ON und.u = l0.node
-        |  GROUP BY 1, 2
-        |), l1 AS (
-        |  SELECT v AS node, lab FROM (
-        |    SELECT v, lab, row_number() OVER (
-        |      PARTITION BY v ORDER BY cnt DESC, lab) AS rn FROM c1)
-        |  WHERE rn = 1
-        |), c2 AS (
-        |  SELECT v, lab, count(*) AS cnt FROM und JOIN l1 ON und.u = l1.node
-        |  GROUP BY 1, 2
-        |), l2 AS (
-        |  SELECT v AS node, lab FROM (
-        |    SELECT v, lab, row_number() OVER (
-        |      PARTITION BY v ORDER BY cnt DESC, lab) AS rn FROM c2)
-        |  WHERE rn = 1
-        |), c3 AS (
-        |  SELECT v, lab, count(*) AS cnt FROM und JOIN l2 ON und.u = l2.node
-        |  GROUP BY 1, 2
-        |), l3 AS (
-        |  SELECT v AS node, lab FROM (
-        |    SELECT v, lab, row_number() OVER (
-        |      PARTITION BY v ORDER BY cnt DESC, lab) AS rn FROM c3)
-        |  WHERE rn = 1
-        |), mm AS (SELECT CAST(count(*) AS BIGINT) AS m FROM e),
+      s"""WITH ${coPurchaseCtes()}, $undCte, ${lpCtes(3)}, mm AS (SELECT CAST(count(*) AS BIGINT) AS m FROM e),
         |intra AS (
         |  SELECT la.lab AS c, CAST(count(*) AS BIGINT) AS ec
         |  FROM e JOIN l3 la ON e.a = la.node JOIN l3 lb ON e.b = lb.node

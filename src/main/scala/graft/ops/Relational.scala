@@ -166,6 +166,34 @@ object Relational {
       .filter(col("valid_from") <= v && (col("valid_to").isNull || col("valid_to") > v))
       .drop("valid_from", "valid_to", "is_current")
 
+  /** Version v of the deterministic CDC stream over orders that
+    * q146–q249 replay (a real pipeline feeds the binlog instead):
+    * 0 inserts every order; 1 updates keys ending in 3 (status X),
+    * deletes the 7s and inserts the 1s under a fresh key; 2 re-updates
+    * keys ending in 13 (status Y). Rows are (pk, status, total,
+    * version, op). */
+  private def cdcVersion(s: SparkSession, d: String, v: Int): DataFrame = {
+    val o = T.orders(s, d)
+    val m = pmod(col("o_orderkey"), lit(10))
+    v match {
+      case 0 => o.select(
+        col("o_orderkey").as("pk"), col("o_orderstatus").as("status"),
+        col("o_totalprice").as("total"), lit(0L).as("version"), lit("I").as("op"))
+      case 1 => o.filter(m.isin(1, 3, 7)).select(
+        when(m === 1, col("o_orderkey") + 10000000L).otherwise(col("o_orderkey")).as("pk"),
+        when(m === 3, lit("X")).otherwise(col("o_orderstatus")).as("status"),
+        col("o_totalprice").as("total"), lit(1L).as("version"),
+        when(m === 7, lit("D")).when(m === 1, lit("I")).otherwise(lit("U")).as("op"))
+      case 2 => o.filter(pmod(col("o_orderkey"), lit(100)) === 13).select(
+        col("o_orderkey").as("pk"), lit("Y").as("status"),
+        col("o_totalprice").as("total"), lit(2L).as("version"), lit("U").as("op"))
+    }
+  }
+
+  /** All three versions of [[cdcVersion]] as one event stream. */
+  private def cdcStream(s: SparkSession, d: String): DataFrame =
+    (0 to 2).map(cdcVersion(s, d, _)).reduce(_ unionByName _)
+
   val queries: Map[String, Q] = Map(
     // TPC-H Q1-shaped pricing summary: the flagship scan→filter→agg→sort
     // slice (SURVEY.md §7.2). Partial aggregation (map-side combine) is
@@ -259,40 +287,21 @@ object Relational {
       s.sql(recursiveCteSql)
     }),
 
-    // snapshotMerge on a deterministic change batch derived from orders
-    // (m=3 → update, m=7 → delete, m=1 → insert under a fresh key) so
-    // the DuckDB oracle replays it; a real pipeline feeds the binlog
-    // batch instead. Semantics spec'd on planted CDC rows in
-    // Mysql2ParquetSpec; exchange shape pinned in PlanAuditSpec.
-    "q146_snapshot_merge" -> ((s, d) => {
-      val m = pmod(col("o_orderkey"), lit(10))
-      val base = T.orders(s, d).select(
-        col("o_orderkey").as("pk"), col("o_orderstatus").as("status"),
-        col("o_totalprice").as("total"), lit(0L).as("version"), lit("I").as("op"))
-      val delta = T.orders(s, d).filter(m.isin(1, 3, 7)).select(
-        when(m === 1, col("o_orderkey") + 10000000L).otherwise(col("o_orderkey")).as("pk"),
-        when(m === 3, lit("X")).otherwise(col("o_orderstatus")).as("status"),
-        col("o_totalprice").as("total"), lit(1L).as("version"),
-        when(m === 7, lit("D")).when(m === 1, lit("I")).otherwise(lit("U")).as("op"))
-      snapshotMerge(base, delta, "pk", "version", "op").orderBy(col("pk"))
-    }),
+    // snapshotMerge of cdcVersion's first change batch onto its base.
+    // Semantics spec'd on planted CDC rows in Mysql2ParquetSpec;
+    // exchange shape pinned in PlanAuditSpec.
+    "q146_snapshot_merge" -> ((s, d) =>
+      snapshotMerge(cdcVersion(s, d, 0), cdcVersion(s, d, 1), "pk", "version", "op")
+        .orderBy(col("pk"))),
 
     // snapshotDiff between the q146 base snapshot and its compacted
     // result: m=7 keys were deleted (removed), m=3 keys updated
     // (changed), m=1 inserts under fresh keys (added), the rest same —
     // the reconciliation report that validates a replication run.
     "q157_snapshot_diff" -> ((s, d) => {
-      val m = pmod(col("o_orderkey"), lit(10))
-      val before = T.orders(s, d).select(
-        col("o_orderkey").as("pk"), col("o_orderstatus").as("status"),
-        col("o_totalprice").as("total"))
-      val base = before.withColumn("version", lit(0L)).withColumn("op", lit("I"))
-      val delta = T.orders(s, d).filter(m.isin(1, 3, 7)).select(
-        when(m === 1, col("o_orderkey") + 10000000L).otherwise(col("o_orderkey")).as("pk"),
-        when(m === 3, lit("X")).otherwise(col("o_orderstatus")).as("status"),
-        col("o_totalprice").as("total"), lit(1L).as("version"),
-        when(m === 7, lit("D")).when(m === 1, lit("I")).otherwise(lit("U")).as("op"))
-      val after = snapshotMerge(base, delta, "pk", "version", "op")
+      val base = cdcVersion(s, d, 0)
+      val before = base.select(col("pk"), col("status"), col("total"))
+      val after = snapshotMerge(base, cdcVersion(s, d, 1), "pk", "version", "op")
       snapshotDiff(before, after, "pk", Seq("status", "total"))
         .orderBy(col("change_kind"))
     }),
@@ -301,47 +310,19 @@ object Relational {
     // two change batches, so v1 updates/inserts are visible, v1
     // deletes are gone, and v2 re-updates are NOT yet. The oracle
     // replays the interval filter over the same lead() history.
-    "q158_time_travel" -> ((s, d) => {
-      val m = pmod(col("o_orderkey"), lit(10))
-      val base = T.orders(s, d).select(
-        col("o_orderkey").as("pk"), col("o_orderstatus").as("status"),
-        col("o_totalprice").as("total"), lit(0L).as("version"), lit("I").as("op"))
-      val delta1 = T.orders(s, d).filter(m.isin(1, 3, 7)).select(
-        when(m === 1, col("o_orderkey") + 10000000L).otherwise(col("o_orderkey")).as("pk"),
-        when(m === 3, lit("X")).otherwise(col("o_orderstatus")).as("status"),
-        col("o_totalprice").as("total"), lit(1L).as("version"),
-        when(m === 7, lit("D")).when(m === 1, lit("I")).otherwise(lit("U")).as("op"))
-      val delta2 = T.orders(s, d).filter(pmod(col("o_orderkey"), lit(100)) === 13).select(
-        col("o_orderkey").as("pk"), lit("Y").as("status"),
-        col("o_totalprice").as("total"), lit(2L).as("version"), lit("U").as("op"))
-      asOf(scdHistory(base.unionByName(delta1).unionByName(delta2), "pk", "version", "op"), 1L)
+    "q158_time_travel" -> ((s, d) =>
+      asOf(scdHistory(cdcStream(s, d), "pk", "version", "op"), 1L)
         .select(col("pk"), col("status"), round(col("total"), 2).as("total"))
-        .orderBy(col("pk"))
-    }),
+        .orderBy(col("pk"))),
 
-    // scdHistory over a 3-version CDC stream derived from orders: v1
-    // updates keys ending in 3, deletes 7s, inserts fresh 1s (q146's
-    // batch); v2 re-updates keys ending in 13 — giving 3-row chains,
+    // scdHistory over all three versions of cdcStream — 3-row chains,
     // closed intervals, delete-closed intervals and current rows in one
     // result. Oracle replays the same lead() window in DuckDB.
-    "q147_scd2_history" -> ((s, d) => {
-      val m = pmod(col("o_orderkey"), lit(10))
-      val base = T.orders(s, d).select(
-        col("o_orderkey").as("pk"), col("o_orderstatus").as("status"),
-        col("o_totalprice").as("total"), lit(0L).as("version"), lit("I").as("op"))
-      val delta1 = T.orders(s, d).filter(m.isin(1, 3, 7)).select(
-        when(m === 1, col("o_orderkey") + 10000000L).otherwise(col("o_orderkey")).as("pk"),
-        when(m === 3, lit("X")).otherwise(col("o_orderstatus")).as("status"),
-        col("o_totalprice").as("total"), lit(1L).as("version"),
-        when(m === 7, lit("D")).when(m === 1, lit("I")).otherwise(lit("U")).as("op"))
-      val delta2 = T.orders(s, d).filter(pmod(col("o_orderkey"), lit(100)) === 13).select(
-        col("o_orderkey").as("pk"), lit("Y").as("status"),
-        col("o_totalprice").as("total"), lit(2L).as("version"), lit("U").as("op"))
-      scdHistory(base.unionByName(delta1).unionByName(delta2), "pk", "version", "op")
+    "q147_scd2_history" -> ((s, d) =>
+      scdHistory(cdcStream(s, d), "pk", "version", "op")
         .select(col("pk"), col("status"), round(col("total"), 2).as("total"),
           col("valid_from"), col("valid_to"), col("is_current"))
-        .orderBy(col("pk"), col("valid_from"))
-    }),
+        .orderBy(col("pk"), col("valid_from"))),
 
     // Column-profiling / expectations report (the Deequ shape): per
     // column of orders — null count, exact distinct count, typed
@@ -459,20 +440,7 @@ object Relational {
     // whose key has no valid version at v (deleted by then) keeps a
     // NULL status via LEFT join — the rollup counts those explicitly.
     "q249_pit_join" -> ((s, d) => {
-      val m = pmod(col("o_orderkey"), lit(10))
-      val base = T.orders(s, d).select(
-        col("o_orderkey").as("pk"), col("o_orderstatus").as("status"),
-        col("o_totalprice").as("total"), lit(0L).as("version"), lit("I").as("op"))
-      val delta1 = T.orders(s, d).filter(m.isin(1, 3, 7)).select(
-        when(m === 1, col("o_orderkey") + 10000000L).otherwise(col("o_orderkey")).as("pk"),
-        when(m === 3, lit("X")).otherwise(col("o_orderstatus")).as("status"),
-        col("o_totalprice").as("total"), lit(1L).as("version"),
-        when(m === 7, lit("D")).when(m === 1, lit("I")).otherwise(lit("U")).as("op"))
-      val delta2 = T.orders(s, d).filter(pmod(col("o_orderkey"), lit(100)) === 13).select(
-        col("o_orderkey").as("pk"), lit("Y").as("status"),
-        col("o_totalprice").as("total"), lit(2L).as("version"), lit("U").as("op"))
-      val hist = scdHistory(base.unionByName(delta1).unionByName(delta2),
-          "pk", "version", "op")
+      val hist = scdHistory(cdcStream(s, d), "pk", "version", "op")
         .select(col("pk").as("hpk"), col("status"),
           col("valid_from"), col("valid_to"))
       val probes = T.lineitem(s, d).select(col("l_orderkey").as("pk"),
@@ -549,6 +517,35 @@ object Relational {
     })
   )
 
+  /** Oracle twin of [[cdcVersion]]: `base`, `delta1` and, for three
+    * versions, `delta2`, unioned as `u`. */
+  private def cdcCtes(versions: Int): String = {
+    val ctes = Seq(
+      """base AS (
+        |  SELECT o_orderkey AS pk, o_orderstatus AS status,
+        |         o_totalprice AS total, CAST(0 AS BIGINT) AS version, 'I' AS op
+        |  FROM orders
+        |)""".stripMargin,
+      """delta1 AS (
+        |  SELECT CASE WHEN o_orderkey % 10 = 1 THEN o_orderkey + 10000000
+        |              ELSE o_orderkey END AS pk,
+        |         CASE WHEN o_orderkey % 10 = 3 THEN 'X'
+        |              ELSE o_orderstatus END AS status,
+        |         o_totalprice AS total, CAST(1 AS BIGINT) AS version,
+        |         CASE WHEN o_orderkey % 10 = 7 THEN 'D'
+        |              WHEN o_orderkey % 10 = 1 THEN 'I'
+        |              ELSE 'U' END AS op
+        |  FROM orders WHERE o_orderkey % 10 IN (1, 3, 7)
+        |)""".stripMargin,
+      """delta2 AS (
+        |  SELECT o_orderkey AS pk, 'Y' AS status, o_totalprice AS total,
+        |         CAST(2 AS BIGINT) AS version, 'U' AS op
+        |  FROM orders WHERE o_orderkey % 100 = 13
+        |)""".stripMargin).take(versions)
+    val u = ctes.map(c => "SELECT * FROM " + c.takeWhile(_ != ' ')).mkString(" UNION ALL ")
+    (ctes :+ s"u AS (\n  $u\n)").mkString(", ")
+  }
+
   val oracle: Map[String, String] = Map(
     "q01_pricing_summary" ->
       """SELECT l_returnflag, l_linestatus,
@@ -604,23 +601,7 @@ object Relational {
     "q07_in_subquery" -> inSubquerySql,
 
     "q146_snapshot_merge" ->
-      """WITH base AS (
-        |  SELECT o_orderkey AS pk, o_orderstatus AS status,
-        |         o_totalprice AS total, 0 AS version, 'I' AS op
-        |  FROM orders
-        |), delta AS (
-        |  SELECT CASE WHEN o_orderkey % 10 = 1 THEN o_orderkey + 10000000
-        |              ELSE o_orderkey END AS pk,
-        |         CASE WHEN o_orderkey % 10 = 3 THEN 'X'
-        |              ELSE o_orderstatus END AS status,
-        |         o_totalprice AS total, 1 AS version,
-        |         CASE WHEN o_orderkey % 10 = 7 THEN 'D'
-        |              WHEN o_orderkey % 10 = 1 THEN 'I'
-        |              ELSE 'U' END AS op
-        |  FROM orders WHERE o_orderkey % 10 IN (1, 3, 7)
-        |), u AS (
-        |  SELECT * FROM base UNION ALL SELECT * FROM delta
-        |), r AS (
+      s"""WITH ${cdcCtes(2)}, r AS (
         |  SELECT *, row_number() OVER (PARTITION BY pk ORDER BY version DESC) AS rn
         |  FROM u
         |)
@@ -628,31 +609,13 @@ object Relational {
         |ORDER BY pk""".stripMargin,
 
     "q157_snapshot_diff" ->
-      """WITH base AS (
-        |  SELECT o_orderkey AS pk, o_orderstatus AS status,
-        |         o_totalprice AS total, 0 AS version, 'I' AS op
-        |  FROM orders
-        |), delta AS (
-        |  SELECT CASE WHEN o_orderkey % 10 = 1 THEN o_orderkey + 10000000
-        |              ELSE o_orderkey END AS pk,
-        |         CASE WHEN o_orderkey % 10 = 3 THEN 'X'
-        |              ELSE o_orderstatus END AS status,
-        |         o_totalprice AS total, 1 AS version,
-        |         CASE WHEN o_orderkey % 10 = 7 THEN 'D'
-        |              WHEN o_orderkey % 10 = 1 THEN 'I'
-        |              ELSE 'U' END AS op
-        |  FROM orders WHERE o_orderkey % 10 IN (1, 3, 7)
-        |), u AS (
-        |  SELECT * FROM base UNION ALL SELECT * FROM delta
-        |), r AS (
+      s"""WITH ${cdcCtes(2)}, r AS (
         |  SELECT *, row_number() OVER (PARTITION BY pk ORDER BY version DESC) AS rn
         |  FROM u
         |), aft AS (
         |  SELECT pk, status, total FROM r WHERE rn = 1 AND op <> 'D'
-        |), bef AS (
-        |  SELECT o_orderkey AS pk, o_orderstatus AS status, o_totalprice AS total
-        |  FROM orders
-        |), j AS (
+        |), bef AS (SELECT pk, status, total FROM base),
+        |j AS (
         |  SELECT CASE WHEN b.pk IS NULL THEN 'added'
         |              WHEN a.pk IS NULL THEN 'removed'
         |              WHEN b.status IS NOT DISTINCT FROM a.status
@@ -664,27 +627,7 @@ object Relational {
         |ORDER BY change_kind""".stripMargin,
 
     "q158_time_travel" ->
-      """WITH base AS (
-        |  SELECT o_orderkey AS pk, o_orderstatus AS status,
-        |         o_totalprice AS total, CAST(0 AS BIGINT) AS version, 'I' AS op
-        |  FROM orders
-        |), delta1 AS (
-        |  SELECT CASE WHEN o_orderkey % 10 = 1 THEN o_orderkey + 10000000
-        |              ELSE o_orderkey END AS pk,
-        |         CASE WHEN o_orderkey % 10 = 3 THEN 'X'
-        |              ELSE o_orderstatus END AS status,
-        |         o_totalprice AS total, CAST(1 AS BIGINT) AS version,
-        |         CASE WHEN o_orderkey % 10 = 7 THEN 'D'
-        |              WHEN o_orderkey % 10 = 1 THEN 'I'
-        |              ELSE 'U' END AS op
-        |  FROM orders WHERE o_orderkey % 10 IN (1, 3, 7)
-        |), delta2 AS (
-        |  SELECT o_orderkey AS pk, 'Y' AS status, o_totalprice AS total,
-        |         CAST(2 AS BIGINT) AS version, 'U' AS op
-        |  FROM orders WHERE o_orderkey % 100 = 13
-        |), u AS (
-        |  SELECT * FROM base UNION ALL SELECT * FROM delta1 UNION ALL SELECT * FROM delta2
-        |), h AS (
+      s"""WITH ${cdcCtes(3)}, h AS (
         |  SELECT pk, status, round(total, 2) AS total, version AS valid_from,
         |         lead(version) OVER (PARTITION BY pk ORDER BY version) AS valid_to,
         |         op
@@ -696,27 +639,7 @@ object Relational {
         |ORDER BY pk""".stripMargin,
 
     "q147_scd2_history" ->
-      """WITH base AS (
-        |  SELECT o_orderkey AS pk, o_orderstatus AS status,
-        |         o_totalprice AS total, CAST(0 AS BIGINT) AS version, 'I' AS op
-        |  FROM orders
-        |), delta1 AS (
-        |  SELECT CASE WHEN o_orderkey % 10 = 1 THEN o_orderkey + 10000000
-        |              ELSE o_orderkey END AS pk,
-        |         CASE WHEN o_orderkey % 10 = 3 THEN 'X'
-        |              ELSE o_orderstatus END AS status,
-        |         o_totalprice AS total, CAST(1 AS BIGINT) AS version,
-        |         CASE WHEN o_orderkey % 10 = 7 THEN 'D'
-        |              WHEN o_orderkey % 10 = 1 THEN 'I'
-        |              ELSE 'U' END AS op
-        |  FROM orders WHERE o_orderkey % 10 IN (1, 3, 7)
-        |), delta2 AS (
-        |  SELECT o_orderkey AS pk, 'Y' AS status, o_totalprice AS total,
-        |         CAST(2 AS BIGINT) AS version, 'U' AS op
-        |  FROM orders WHERE o_orderkey % 100 = 13
-        |), u AS (
-        |  SELECT * FROM base UNION ALL SELECT * FROM delta1 UNION ALL SELECT * FROM delta2
-        |), h AS (
+      s"""WITH ${cdcCtes(3)}, h AS (
         |  SELECT pk, status, round(total, 2) AS total, version AS valid_from,
         |         lead(version) OVER (PARTITION BY pk ORDER BY version) AS valid_to,
         |         (lead(version) OVER (PARTITION BY pk ORDER BY version) IS NULL
@@ -816,27 +739,7 @@ object Relational {
         |FROM agg ORDER BY nat""".stripMargin,
 
     "q249_pit_join" ->
-      """WITH base AS (
-        |  SELECT o_orderkey AS pk, o_orderstatus AS status,
-        |         o_totalprice AS total, CAST(0 AS BIGINT) AS version, 'I' AS op
-        |  FROM orders
-        |), delta1 AS (
-        |  SELECT CASE WHEN o_orderkey % 10 = 1 THEN o_orderkey + 10000000
-        |              ELSE o_orderkey END AS pk,
-        |         CASE WHEN o_orderkey % 10 = 3 THEN 'X'
-        |              ELSE o_orderstatus END AS status,
-        |         o_totalprice AS total, CAST(1 AS BIGINT) AS version,
-        |         CASE WHEN o_orderkey % 10 = 7 THEN 'D'
-        |              WHEN o_orderkey % 10 = 1 THEN 'I'
-        |              ELSE 'U' END AS op
-        |  FROM orders WHERE o_orderkey % 10 IN (1, 3, 7)
-        |), delta2 AS (
-        |  SELECT o_orderkey AS pk, 'Y' AS status, o_totalprice AS total,
-        |         CAST(2 AS BIGINT) AS version, 'U' AS op
-        |  FROM orders WHERE o_orderkey % 100 = 13
-        |), u AS (
-        |  SELECT * FROM base UNION ALL SELECT * FROM delta1 UNION ALL SELECT * FROM delta2
-        |), h AS (
+      s"""WITH ${cdcCtes(3)}, h AS (
         |  SELECT pk, status, op, version AS valid_from,
         |         lead(version) OVER (PARTITION BY pk ORDER BY version) AS valid_to
         |  FROM u

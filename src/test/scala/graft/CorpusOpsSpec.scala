@@ -1842,6 +1842,22 @@ class CorpusOpsSpec extends SparkSpec {
     }
   }
 
+  test("unigram trainers reject an empty vocabulary and a word longer than UNI_MAXLEN (q291/q296/q301)") {
+    // Each guard names the entry it stops: no NPE from getInt on the
+    // NULL max() row, and no segmentation truncated at UNI_MAXLEN.
+    val trainers = Seq(
+      "q291" -> CorpusOps.unigramTrainer _,
+      "q296" -> CorpusOps.unigramSoftTrainer _,
+      "q301" -> CorpusOps.unigramPruneLoop _)
+    val noWords = stageDocs(Seq((1L, ""), (2L, "  ")))
+    val tooLong = stageDocs(Seq((1L, "ab " + "x" * (CorpusOps.UNI_MAXLEN + 1) + " cd")))
+    for ((dir, why) <- Seq(noWords -> "empty word vocabulary", tooLong -> "exceeds UNI_MAXLEN");
+         (entry, train) <- trainers) {
+      val e = intercept[IllegalArgumentException](train(spark, dir))
+      assert(e.getMessage.contains(why) && e.getMessage.contains(entry), e.getMessage)
+    }
+  }
+
   test("unigram-lm: driver Viterbi replay matches counts + curve, argmax margins wide (q291/q292)") {
     // Independent Scala reimplementation of the hard-EM final step:
     // segment every vocab word under the step-(T-1) inventory with the

@@ -8,7 +8,12 @@ occurs more than once in the same file is repeated, and every kept line
 that falls inside a repeated window is counted once. The script prints
 one "<count> <file>" line per file, largest first, then the total.
 
-Usage: python3 tools/dupscan.py [root]   (default src/main/scala)
+Given a single .scala file instead of a directory, it prints that
+file's count and then one line per repeated block (a run of counted
+lines with no uncounted kept line between them): "<first>-<last>
+<text of the first line>", with 1-based line numbers of the file.
+
+Usage: python3 tools/dupscan.py [root | file.scala]   (default src/main/scala)
 """
 import collections
 import os
@@ -18,23 +23,42 @@ WINDOW = 6
 SKIP = {"{", "}", "(", ")", "})", "),", "},", '"""', '""")'}
 
 
-def repeated_lines(path):
+def repeated_blocks(path):
+    """The repeated blocks of one file as (first, last, text) triples,
+    with 1-based line numbers, plus the number of counted lines."""
     with open(path, encoding="utf-8") as f:
-        lines = [l.strip() for l in f]
-    kept = [l for l in lines if l and l not in SKIP]
+        kept = [(n, l.strip()) for n, l in enumerate(f, 1)]
+    kept = [(n, l) for n, l in kept if l and l not in SKIP]
     wins = collections.defaultdict(list)
     for i in range(len(kept) - WINDOW + 1):
-        wins[tuple(kept[i:i + WINDOW])].append(i)
+        wins[tuple(l for _, l in kept[i:i + WINDOW])].append(i)
     hit = set()
     for starts in wins.values():
         if len(starts) > 1:
             for i in starts:
                 hit.update(range(i, i + WINDOW))
-    return len(hit)
+    blocks = []
+    for i in sorted(hit):
+        if blocks and blocks[-1][1] == i - 1:
+            blocks[-1][1] = i
+        else:
+            blocks.append([i, i])
+    return ([(kept[a][0], kept[b][0], kept[a][1]) for a, b in blocks],
+            len(hit))
+
+
+def repeated_lines(path):
+    return repeated_blocks(path)[1]
 
 
 def main():
     root = sys.argv[1] if len(sys.argv) > 1 else "src/main/scala"
+    if os.path.isfile(root) and root.endswith(".scala"):
+        blocks, n = repeated_blocks(root)
+        print(n, root)
+        for first, last, text in blocks:
+            print(f"  {first}-{last} {text}")
+        return
     counts = []
     for d, _, fs in os.walk(root):
         for f in fs:
