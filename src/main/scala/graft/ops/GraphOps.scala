@@ -584,7 +584,10 @@ object GraphOps {
     }.mkString(", ")
 
   /** Oracle twin of [[kcorePeel]]'s rounds over `e0` (a, b): round i
-    * keeps the edges `e<i>` whose endpoints both have degree ≥ k. */
+    * keeps the edges `e<i>` whose endpoints both have degree ≥ k. The
+    * next round reads `e<i>` three times, so it is MATERIALIZED: DuckDB
+    * inlines it otherwise, and each round multiplies the work of the
+    * one before (sf0.1 ran out of temp space). */
   private def peelCtes(k: Int, rounds: Int): String =
     (1 to rounds).map { i =>
       val p = s"e${i - 1}"
@@ -592,7 +595,7 @@ object GraphOps {
          |  SELECT n, count(*) AS d FROM (
          |    SELECT a AS n FROM $p UNION ALL SELECT b FROM $p) GROUP BY 1
          |), k$i AS (SELECT n FROM d$i WHERE d >= $k),
-         |e$i AS (
+         |e$i AS MATERIALIZED (
          |  SELECT a, b FROM $p
          |  WHERE a IN (SELECT n FROM k$i) AND b IN (SELECT n FROM k$i)
          |)""".stripMargin

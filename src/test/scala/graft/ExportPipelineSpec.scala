@@ -4,7 +4,13 @@ import java.io.{File, IOException}
 import java.sql.{DriverManager, SQLException}
 import scala.collection.mutable
 import scala.jdk.CollectionConverters._
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.Path
 import org.apache.hadoop.mapreduce.TaskAttemptContext
+import org.apache.parquet.column.Encoding
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.metadata.{ColumnChunkMetaData, CompressionCodecName}
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.internal.io.FileNameSpec
 import org.apache.spark.sql.execution.datasources.SQLHadoopMapReduceCommitProtocol
 import org.scalatest.concurrent.Eventually._
@@ -16,7 +22,8 @@ import org.scalatest.time.SpanSugar._
   * that cannot write stops the producers and closes the connections,
   * no failed export leaves a `_SUCCESS`, and no pipeline thread outlives
   * an export. The reference leaves a partial file behind instead
-  * (BASELINE.md).
+  * (BASELINE.md). The written footers show zstd pages, a dictionary kept
+  * only while it stays small, and a session codec that still wins.
   */
 class ExportPipelineSpec extends SparkSpec {
 
@@ -37,6 +44,28 @@ class ExportPipelineSpec extends SparkSpec {
     ps.executeBatch(); c.commit(); ps.close(); c.close()
   }
 
+  private val DictRows = 40000
+
+  /** `D`: a 10-value column and a column of 5,000 distinct 30-character
+    * values (a ~170 KB dictionary), each value repeated so that a
+    * dictionary under parquet-mr's 1 MiB default would pay for itself,
+    * in the whole table and in each of four key ranges.
+    */
+  private lazy val dictSeeded: Unit = {
+    seeded
+    val c = DriverManager.getConnection(dbUrl + ";user=root")
+    c.setAutoCommit(false)
+    c.createStatement().execute("CREATE TABLE d (id BIGINT NOT NULL, k10 VARCHAR(8), k5000 VARCHAR(30))")
+    val ps = c.prepareStatement("INSERT INTO d VALUES (?, ?, ?)")
+    for (i <- 0 until DictRows) {
+      ps.setLong(1, i.toLong)
+      ps.setString(2, s"k${i % 10}")
+      ps.setString(3, f"v${i % 5000}%05d".padTo(30, 'y'))
+      ps.addBatch()
+    }
+    ps.executeBatch(); c.commit(); ps.close(); c.close()
+  }
+
   private def out(): String =
     java.nio.file.Files.createTempDirectory("graft-pipe-out").resolve("t").toString
 
@@ -48,8 +77,8 @@ class ExportPipelineSpec extends SparkSpec {
   }
 
   private val singleFlags = Seq("--compat", "--single-file")
-  private val partitionedFlags = Seq("--partition-column=ID", "--num-partitions=4",
-    "--lower-bound=0", s"--upper-bound=$Rows")
+  private def partitionedFlags(rows: Int) = Seq("--partition-column=ID", "--num-partitions=4",
+    "--lower-bound=0", s"--upper-bound=$rows")
 
   private def pipelineThreads: Set[String] =
     Thread.getAllStackTraces.keySet.asScala.map(_.getName)
@@ -67,6 +96,12 @@ class ExportPipelineSpec extends SparkSpec {
 
   private def partFiles(dir: String): Seq[File] =
     Option(new File(dir).listFiles).toSeq.flatten.filter(_.getName.startsWith("part-"))
+
+  /** The column chunks of every row group in `dir`'s part files. */
+  private def chunks(dir: String): Seq[ColumnChunkMetaData] = partFiles(dir).flatMap { f =>
+    val r = ParquetFileReader.open(HadoopInputFile.fromPath(new Path(f.getPath), new Configuration()))
+    try r.getFooter.getBlocks.asScala.toSeq.flatMap(_.getColumns.asScala) finally r.close()
+  }
 
   /** Every exception in `t`'s cause chain. */
   private def chain(t: Throwable): Seq[Throwable] =
@@ -91,7 +126,7 @@ class ExportPipelineSpec extends SparkSpec {
     // Derby raises 22012 when the row with ID 15000 is fetched, deep
     // into the stream and after many batches have crossed the pipeline.
     val query = "SELECT ID, V, S, 100 / (ID - 15000) AS X FROM T"
-    for (flags <- Seq(singleFlags, partitionedFlags)) {
+    for (flags <- Seq(singleFlags, partitionedFlags(Rows))) {
       val before = openConnections()
       val dir = out()
       val e = intercept[Exception](Mysql2ParquetMain.execute(spark, args(query, dir, flags: _*)))
@@ -105,7 +140,7 @@ class ExportPipelineSpec extends SparkSpec {
     seeded
     spark.conf.set("spark.sql.sources.commitProtocolClass",
       classOf[ExportPipelineSpec.UnwritableCommitProtocol].getName)
-    try for (flags <- Seq(singleFlags, partitionedFlags)) {
+    try for (flags <- Seq(singleFlags, partitionedFlags(Rows))) {
       val before = openConnections()
       val dir = out()
       val e = intercept[Exception](
@@ -136,6 +171,44 @@ class ExportPipelineSpec extends SparkSpec {
     val got = spark.read.parquet(files.head.getPath).collect().map(_.getString(0)).toSeq
     assert(got.size === Rows)
     assert(got === want)
+  }
+
+  test("both paths write zstd pages and keep a dictionary only while it stays small") {
+    dictSeeded
+    val query = "SELECT ID, K10, K5000 FROM D"
+    val want = {
+      val c = DriverManager.getConnection(dbUrl + ";user=root")
+      try {
+        val rs = c.createStatement().executeQuery(query)
+        val b = mutable.ArrayBuffer.empty[Seq[String]]
+        while (rs.next()) b += (1 to 3).map(rs.getString)
+        b.toSeq.sortBy(_.head.toLong)
+      } finally c.close()
+    }
+    for (flags <- Seq(singleFlags, partitionedFlags(DictRows))) {
+      val dir = out()
+      Mysql2ParquetMain.execute(spark, args(query, dir, flags: _*))
+      val cs = chunks(dir)
+      assert(cs.nonEmpty)
+      assert(cs.map(_.getCodec).toSet === Set(CompressionCodecName.ZSTD))
+      def encodings(column: String): Seq[Set[Encoding]] =
+        cs.filter(_.getPath.toDotString == column).map(_.getEncodings.asScala.toSet)
+      assert(encodings("K10").forall(_.contains(Encoding.PLAIN_DICTIONARY)), encodings("K10"))
+      assert(encodings("K5000").forall(e => e.contains(Encoding.PLAIN) &&
+        !e.contains(Encoding.PLAIN_DICTIONARY) && !e.contains(Encoding.RLE_DICTIONARY)), encodings("K5000"))
+      val got = spark.read.parquet(dir).collect().map(_.toSeq.map(String.valueOf)).toSeq
+      assert(got.sortBy(_.head.toLong) === want, flags.mkString(" "))
+    }
+  }
+
+  test("a codec the session sets wins over zstd on both paths") {
+    dictSeeded
+    spark.conf.set("spark.sql.parquet.compression.codec", "snappy")
+    try for (flags <- Seq(singleFlags, partitionedFlags(DictRows))) {
+      val dir = out()
+      Mysql2ParquetMain.execute(spark, args("SELECT ID, K10, K5000 FROM D", dir, flags: _*))
+      assert(chunks(dir).map(_.getCodec).toSet === Set(CompressionCodecName.SNAPPY), flags.mkString(" "))
+    } finally spark.conf.unset("spark.sql.parquet.compression.codec")
   }
 
   test("a task interrupted before it completes still stops and joins its producers") {
